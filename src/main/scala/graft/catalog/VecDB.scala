@@ -328,6 +328,16 @@ class VecDB(spark: SparkSession, root: String) {
     rootPath.resolve(e.filename).resolve("hnsw")
   private def ivfDir(e: TableEntry): Path =
     rootPath.resolve(e.filename).resolve("ivf")
+  /** Serving cacheKey of the pinned and routed HNSW arms: rotates on any
+    * content change — version bumps on delete, nextId on add, `created` on
+    * delete+recreate. */
+  private def hnswKey(e: TableEntry): String =
+    s"${hnswBroadcastKey(e)}n${e.nextId}"
+  /** Serving cacheKey of the broadcast HNSW arms: no nextId, because that
+    * arm tells appends apart by the sidecar's part files and ships only the
+    * new subgraphs ([[graft.operators.Hnsw.searchBroadcast]]). */
+  private def hnswBroadcastKey(e: TableEntry): String =
+    s"${hnswDir(e)}@c${e.created}v${e.version}"
   /** Routing-centroid sidecar of a routed HNSW index (holds `centroids`,
     * the [[graft.operators.Ivf.readModel]] layout). */
   private def routeDir(e: TableEntry): Path =
@@ -635,14 +645,11 @@ class VecDB(spark: SparkSession, root: String) {
     * separating cluster subgraphs (walked only when probed) from delta
     * subgraphs (always walked). 0 when the table is unrouted or the sidecar
     * is missing (degraded ⇒ every subgraph is "delta", i.e. always walked —
-    * matching the unrouted union the search path degrades to). */
+    * matching the unrouted union the search path degrades to). Served from
+    * the sidecar cache: appends and compactions read no parquet for it. */
   private def routedClusterCount(e: TableEntry): Int =
-    if (!e.hnswRouted) 0
-    else {
-      val p = routeDir(e).resolve("centroids")
-      if (!Files.exists(p)) 0
-      else spark.read.parquet(p.toString).count().toInt
-    }
+    if (!e.hnswRouted || !Files.exists(routeDir(e).resolve("centroids"))) 0
+    else cachedRouteModel(e).centroids.length
 
   /** Index-sidecar upkeep shared by [[batchAdd]] and [[addDataFrame]]:
     *
@@ -662,7 +669,9 @@ class VecDB(spark: SparkSession, root: String) {
     *    subgraph-count bookkeeping counts only delta pids (≥ floor): the
     *    cluster subgraphs are the routed layout, not append fragmentation.
     *  - IVF: centroids are fixed after build; new rows are assigned to
-    *    their nearest centroid and appended into the partitioned layout.
+    *    their nearest centroid (model from the sidecar cache, centroid
+    *    broadcast released after the write) and appended into the
+    *    partitioned layout.
     */
   private def appendIndexSidecars(key: String, e: TableEntry, appended: DataFrame): Unit =
     tableLock(key).synchronized {
@@ -689,26 +698,30 @@ class VecDB(spark: SparkSession, root: String) {
         if (prePids + newPids > deltaPidCeiling(floor, preRows + newRows))
           compactHnsw(key)
       } finally idx.unpersist()
+      // the pinned/routed arms' key rotated with nextId: drop exactly the
+      // superseded key's pinned RDD, graphs and codes (a prefix-wide
+      // invalidateCaches would also drop the broadcast arm's state, which
+      // the new subgraph only extends)
+      Hnsw.evictKey(hnswKey(e))
     }
     if (e.ivf.isDefined) {
-      val info = e.ivf.get
-      val model = Ivf.readModel(spark, ivfDir(e).toString, e.dist,
-        info.defaultNProbes)
       val dataPath = ivfDir(e).resolve("data").toString
-      val assigned = Ivf.assign(appended.select(col("id"), col("vec")), model)
-      // appends must match the existing layout's vector encoding (pre-r20
-      // sidecars store array<float> `vec`; r20 builds store f32-binary
-      // `vecb`) — a mixed directory would fail the scan's schema merge.
-      // Layout probed via the cached sidecar listing (ADVICE r20): a bare
-      // spark.read.parquet would re-list + footer-read the kc-wide
-      // partitioned directory on EVERY batchAdd just to test one column
-      val out =
-        if (sidecarDf(dataPath, e).columns.contains("vecb"))
-          assigned.select(col("id"),
-            graft.functions.VectorFunctions.vecToBinary(col("vec"))
-              .as("vecb"), col("cluster"))
-        else assigned
-      out.write.partitionBy("cluster").mode("append").parquet(dataPath)
+      Ivf.withAssigned(appended.select(col("id"), col("vec")),
+          cachedIvfModel(e)) { assigned =>
+        // appends must match the existing layout's vector encoding (pre-r20
+        // sidecars store array<float> `vec`; r20 builds store f32-binary
+        // `vecb`) — a mixed directory would fail the scan's schema merge.
+        // Layout probed via the cached sidecar listing (ADVICE r20): a bare
+        // spark.read.parquet would re-list + footer-read the kc-wide
+        // partitioned directory on EVERY batchAdd just to test one column
+        val out =
+          if (sidecarDf(dataPath, e).columns.contains("vecb"))
+            assigned.select(col("id"),
+              graft.functions.VectorFunctions.vecToBinary(col("vec"))
+                .as("vecb"), col("cluster"))
+          else assigned
+        out.write.partitionBy("cluster").mode("append").parquet(dataPath)
+      }
     }
   }
 
@@ -1423,7 +1436,7 @@ class VecDB(spark: SparkSession, root: String) {
         // probe-pid explode + pid-exact shuffle + zip against the pinned
         // index); same ADC cost gate as the serving arms.
         val idx = sidecarDf(hnswDir(e).toString, e)
-        val ck = Some(s"${hnswDir(e)}@c${e.created}v${e.version}n${e.nextId}")
+        val ck = Some(hnswKey(e))
         val usePq = efOpt.isDefined && pqInfo.isDefined &&
           VecDB.adcWalkEligible(e.dim, pqInfo.get.m, pinned = true)
         val route =
@@ -1471,13 +1484,14 @@ class VecDB(spark: SparkSession, root: String) {
           // flat arms' O(N) ADC scan per batch. Broadcast the index while
           // it fits; pin it across the cluster beyond the gate.
           val idx = sidecarDf(hnswDir(e).toString, e)
-          val ck = Some(s"${hnswDir(e)}@c${e.created}v${e.version}n${e.nextId}")
+          val ck = Some(hnswKey(e))
           // a residual model only scores inside the routed walk (codes are
           // per-cluster shifts) — never the cluster-blind broadcast arm
           if (hnswEligible(e.nextId, e.dim) && !model.residual) {
             lastServedArm = "knn_pq_broadcast"
             Hnsw.searchBroadcastPq(idx, queries, model, k, Some(efv),
-              efConstruction = e.efConstruction, upperBound = ub, cacheKey = ck)
+              efConstruction = e.efConstruction, upperBound = ub,
+              cacheKey = Some(hnswBroadcastKey(e)))
           } else if (e.hnswRouted) {
             lastServedArm = "knn_pq_routed"
             IvfHnsw.searchPinnedPq(idx, cachedRouteModel(e), model, queries,
@@ -1533,10 +1547,7 @@ class VecDB(spark: SparkSession, root: String) {
               s"table '$key': routed SQ sidecar without an IVF index " +
                 "(clearIvfIndex cascades — this brief was edited externally)")
             lastServedArm = "sq_ivf"
-            val ivfModel = sidecarCachedAs[graft.operators.IvfModel](
-              ivfDir(e).resolve("centroids").toString, e)(
-              Ivf.readModel(spark, ivfDir(e).toString, e.dist,
-                e.ivf.get.defaultNProbes))
+            val ivfModel = cachedIvfModel(e)
             // probe-pool-aware budget: the scored pool is ~np·N/kc rows,
             // not the corpus (see Bq.autoCandidates' routed overload)
             val candidates = math.max(k, efOpt.getOrElse(
@@ -1600,10 +1611,7 @@ class VecDB(spark: SparkSession, root: String) {
               s"table '$key': routed BQ sidecar without an IVF index " +
                 "(clearIvfIndex cascades — this brief was edited externally)")
             lastServedArm = "bq_ivf"
-            val ivfModel = sidecarCachedAs[graft.operators.IvfModel](
-              ivfDir(e).resolve("centroids").toString, e)(
-              Ivf.readModel(spark, ivfDir(e).toString, e.dist,
-                e.ivf.get.defaultNProbes))
+            val ivfModel = cachedIvfModel(e)
             // probe-pool-aware budget (see the sq_ivf arm / Bq.autoCandidates)
             val candidates = math.max(k, efOpt.getOrElse(
               Bq.autoCandidates(e.nextId, k, ivfModel.defaultNProbes,
@@ -1727,19 +1735,23 @@ class VecDB(spark: SparkSession, root: String) {
   /** IVF probe path over the partitioned sidecar layout. */
   private def ivfSearch(e: TableEntry, queries: DataFrame, k: Int,
       nProbes: Option[Int], ub: Double): DataFrame = {
-    val info = e.ivf.get
     // model + data listing cached per index generation (r20): the plain
     // IVF arm was the last serve path still paying a centroid parquet
     // read + collect AND a partitioned-layout listing per batch — the
     // SQ/BQ routed arms already served both from the sidecar cache
-    val model = sidecarCachedAs[graft.operators.IvfModel](
-      ivfDir(e).resolve("centroids").toString, e)(
-      Ivf.readModel(spark, ivfDir(e).toString, e.dist,
-        info.defaultNProbes))
     Ivf.searchPartitionedDf(
       sidecarDf(ivfDir(e).resolve("data").toString, e),
-      model, queries, k, nProbes, ub)
+      cachedIvfModel(e), queries, k, nProbes, ub)
   }
+
+  /** The IVF centroid model through the sidecar cache: one parquet read +
+    * collect per index generation, shared by the serve arms and the append
+    * path. */
+  private def cachedIvfModel(e: TableEntry): graft.operators.IvfModel =
+    sidecarCachedAs[graft.operators.IvfModel](
+      ivfDir(e).resolve("centroids").toString, e)(
+      Ivf.readModel(spark, ivfDir(e).toString, e.dist,
+        e.ivf.get.defaultNProbes))
 
   /** HNSW path: the stored sidecar when the whole table is searched; with a
     * metadata pattern (our extension — the reference's `search` takes none)
@@ -1749,11 +1761,11 @@ class VecDB(spark: SparkSession, root: String) {
       k: Int, ef: Option[Int], ub: Double, wholeTable: Boolean): DataFrame =
     if (wholeTable) {
       val idx = sidecarDf(hnswDir(e).toString, e)
-      // rotate on any content change: version bumps on delete, nextId on add
-      val ck = Some(s"${hnswDir(e)}@c${e.created}v${e.version}n${e.nextId}")
+      val ck = Some(hnswKey(e))
       if (hnswEligible(e.nextId, e.dim))
         Hnsw.searchBroadcast(idx, queries, k, ef, e.dist,
-          efConstruction = e.efConstruction, upperBound = ub, cacheKey = ck)
+          efConstruction = e.efConstruction, upperBound = ub,
+          cacheKey = Some(hnswBroadcastKey(e)))
       else if (e.hnswRouted)
         // beyond-broadcast + routed: walk only each query's routeProbes
         // nearest clusters (delta subgraphs always walked)

@@ -24,6 +24,11 @@ object CacheStats {
   /** PQ code-matrix (re)encodes for ADC arms. */
   val codesBuilds = new AtomicLong
   val codesBuildNanos = new AtomicLong
+  /** Index-sidecar rows the broadcast HNSW arms collected to the driver and
+    * broadcast (full and delta ships alike), and the wall time those ships
+    * took. An append that ships its own rows, not the table, shows here. */
+  val indexRowsShipped = new AtomicLong
+  val indexShipNanos = new AtomicLong
 
   /** Total cache-rebuild wall milliseconds (graphs + codes). */
   def rebuildMillis(): Long =

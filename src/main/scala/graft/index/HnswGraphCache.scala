@@ -1,11 +1,16 @@
 package graft.index
 
 /** Executor-local LRU of rebuilt HNSW subgraphs, keyed by (index identity,
-  * partition id). Serving workloads search the same stored index with batch
-  * after batch of queries; without this every batch re-decodes the adjacency
-  * rows and re-allocates the graph. The caller's key must change whenever
-  * the underlying index changes (the catalog keys on table version + row
-  * count, so any add/delete rotates the key and stale graphs age out).
+  * subgraph or partition id). Serving workloads search the same stored index
+  * with batch after batch of queries; without this every batch re-decodes
+  * the adjacency rows and re-allocates the graph. A (key, id) pair must name
+  * one immutable subgraph. The broadcast arm keys on a per-table generation
+  * under which a subgraph never changes: an append adds new pids to the
+  * generation (only those graphs build), while compaction or a rebuild
+  * starts a new generation and evicts the old one
+  * (`graft.operators.BroadcastIndex`). The pinned arms key on table
+  * version + row count, so any add/delete rotates the key; the catalog
+  * evicts the superseded key.
   *
   * Eviction is BYTE-budgeted, not entry-counted (r13 lesson: a 64-entry cap
   * against a 96-entry working set turned interleaved serving reps into a
@@ -103,6 +108,12 @@ object HnswGraphCache {
 
   /** Retained bytes across both graph caches (diagnostics). */
   def currentBytes: Long = cache.currentBytes + groupCache.currentBytes
+
+  /** Drop the entries of exactly `key`, leaving keys it prefixes alone. */
+  def evict(key: String): Unit = {
+    cache.removeIf(_._1 == key)
+    groupCache.removeIf(_._1 == key)
+  }
 
   /** Drop every entry whose key starts with `prefix` — called when a table
     * or sidecar is deleted so rebuilt multi-GB graphs don't outlive their

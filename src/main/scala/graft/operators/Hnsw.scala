@@ -190,7 +190,7 @@ object Hnsw {
   }
 
   /** Typed sidecar row: (pid, local_id, id, vec, level, links). */
-  private type IndexRow = (Int, Int, Long, Array[Float], Int, Array[Array[Int]])
+  private[operators] type IndexRow = (Int, Int, Long, Array[Float], Int, Array[Array[Int]])
 
   /** Driver-side LRU of PINNED index RDDs for [[searchPinned]]: the sidecar
     * exact-partitioned by `pid` (partition i ⇔ subgraph i — a hash
@@ -261,18 +261,23 @@ object Hnsw {
         }
       }
     }
-    bcCache.synchronized {
-      val it = bcCache.entrySet().iterator()
-      while (it.hasNext) {
-        val e = it.next()
-        if (e.getKey.startsWith(prefix)) {
-          e.getValue.unpersist(blocking = false); it.remove()
-        }
-      }
-    }
+    BroadcastIndex.invalidate(prefix)
     pinnedCodesCache.removeIf(_._1.startsWith(prefix))
     pqCodesCache.removeIf(_._1.startsWith(prefix))
     graft.index.HnswGraphCache.invalidate(prefix)
+  }
+
+  /** Evict the serving state of exactly one cacheKey — its pinned RDD
+    * (unpersisted), its executor-local graphs and its PQ code matrices —
+    * and nothing under keys it merely prefixes. The catalog evicts the key
+    * an append superseded; the broadcast state evicts a generation it
+    * replaced. */
+  private[graft] def evictKey(key: String): Unit = {
+    pinnedCache.synchronized(Option(pinnedCache.remove(key)))
+      .foreach(_.unpersist(blocking = false))
+    pinnedCodesCache.removeIf(_._1.startsWith(key + "#pq"))
+    pqCodesCache.removeIf(_._1.startsWith(key + "#pq"))
+    graft.index.HnswGraphCache.evict(key)
   }
 
   /** partition i ⇔ subgraph pid i. */
@@ -862,29 +867,13 @@ object Hnsw {
     * its single-process graph IS an index-in-memory design). Zero
     * shuffles: each task searches every subgraph for its query slice and
     * merges top-k in-task, so per-batch cost is O(Q/cores) graph searches,
-    * not an index scan. With `cacheKey`, repeat batches skip even the
-    * broadcast deserialization (graphs pinned per executor by
-    * [[HnswGraphCache]]; the broadcast is only touched on a cache miss).
+    * not an index scan. With `cacheKey`, the index ships as one broadcast
+    * per subgraph and stays shipped across batches ([[BroadcastIndex]]):
+    * a subgraph is identified by its sidecar part file, so after a catalog
+    * append only the new subgraph is read, broadcast and rebuilt, while the
+    * graphs already pinned per executor by [[HnswGraphCache]] keep serving.
     * For indexes too big to broadcast, use [[searchPinned]].
     */
-  /** Grouped index rows: (pid, nodes sorted by local id). */
-  private type GroupedIndex = Array[(Int, Array[(Long, Array[Float], Int, Array[Array[Int]])])]
-
-  /** Driver-side LRU of index broadcasts keyed by cacheKey: a serving
-    * workload calls [[searchBroadcast]] per query batch, and without this
-    * every batch re-collects and re-ships the whole index. Eviction uses
-    * `unpersist` (lazy, non-blocking), NOT `destroy`: a previously returned
-    * lazy plan may still reference the broadcast, and unpersist lets such
-    * in-flight executions re-fetch from the driver instead of failing. */
-  private val bcCache =
-    new java.util.LinkedHashMap[String, org.apache.spark.broadcast.Broadcast[GroupedIndex]](
-      8, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[String, org.apache.spark.broadcast.Broadcast[GroupedIndex]])
-        : Boolean =
-        if (size() > 16) { e.getValue.unpersist(blocking = false); true } else false
-    }
-
   def searchBroadcast(
       index: DataFrame,
       queries: DataFrame,
@@ -895,110 +884,73 @@ object Hnsw {
       efConstruction: Int = 200,
       upperBound: Double = Double.PositiveInfinity,
       cacheKey: Option[String] = None): DataFrame = {
-    val spark = index.sparkSession
-    import spark.implicits._
-    def collectAndShip(): org.apache.spark.broadcast.Broadcast[GroupedIndex] = {
-      val grouped: GroupedIndex = index
-        .select(col("pid").cast("int"), col("local_id").cast("int"),
-          col("id").cast("long"), col("vec"), col("level").cast("int"),
-          col("links"))
-        .as[(Int, Int, Long, Array[Float], Int, Array[Array[Int]])]
-        .collect()
-        .groupBy(_._1).toArray.sortBy(_._1)
-        .map { case (pid, rows) =>
-          (pid, rows.sortBy(_._2).map(r => (r._3, r._4, r._5, r._6)))
-        }
-      spark.sparkContext.broadcast(grouped)
-    }
-    val bcIdx = cacheKey match {
-      case Some(ck) => bcCache.synchronized {
-        Option(bcCache.get(ck)).getOrElse {
-          val b = collectAndShip(); bcCache.put(ck, b); b
-        }
-      }
-      case None => collectAndShip()
-    }
     val efq = ef.getOrElse(math.max(efConstruction, 2 * m) / 2)
-    val ck = cacheKey
+    broadcastWalk(queries, BroadcastIndex.ship(index, cacheKey), k, upperBound,
+      dist, m, efConstruction) { entries =>
+      qv => (ei, ids, ds) => entries(ei).graph.searchInto(qv, k, efq, ids, ds)
+    }
+  }
 
+  /** The broadcast arms' shared task: rebuild (or fetch) every shipped
+    * subgraph, walk each per query and merge top-k across subgraphs in-task
+    * by ascending (distance, id). `walker` runs once per task over the
+    * graphs and yields, per query vector, the walk of subgraph `ei` into
+    * (ids, distances), returning its hit count. */
+  private def broadcastWalk(
+      queries: DataFrame,
+      shipped: BroadcastIndex.Shipped,
+      k: Int,
+      upperBound: Double,
+      dist: String,
+      m: Int,
+      efConstruction: Int)(
+      walker: Array[HnswGraphCache.Entry] =>
+        Array[Float] => (Int, Array[Int], Array[Double]) => Int): DataFrame = {
+    val spark = queries.sparkSession
+    import spark.implicits._
     val qds = queries
       .select(col("query_id").cast("long"), col("query_vec"))
       .as[(Long, Array[Float])]
     // spread the batch across cores, clamped by the per-task scheduling
     // floor when the batch size is known: see [[QuerySpread]]
-    val out = QuerySpread(qds)
+    QuerySpread(qds)
       .mapPartitions { qit =>
         if (qit.isEmpty) Iterator.empty
         else {
-          def entryFor(i: Int): HnswGraphCache.Entry = {
-            def build: HnswGraphCache.Entry = {
-              val (_, nodes) = bcIdx.value(i)
-              HnswGraphCache.Entry(
-                HnswGraph.fromNodes(nodes(0)._2.length, dist, m, efConstruction,
-                  nodes.iterator.map(n => (n._2, n._3, n._4))),
-                nodes.map(_._1))
-            }
-            ck match {
-              case Some(key) => HnswGraphCache.get(key, bcIdx.value(i)._1)(build)
-              case None => build
-            }
-          }
-          val entries = Array.tabulate(bcIdx.value.length)(entryFor)
+          val entries = shipped.graphs(dist, m, efConstruction)
+          val perQuery = walker(entries)
           // reusable per-task buffers: subgraph hits + bounded global merge
           val subIds = new Array[Int](k)
           val subDs = new Array[Double](k)
-          val bestIds = new Array[Long](k)
-          val bestDs = new Array[Double](k)
+          val st = new TopKState(k, withPayload = false)
           qit.flatMap { case (qid, qv) =>
-            // cross-subgraph merge: ascending (distance, id), capped at k
-            var cnt = 0
+            val walk = perQuery(qv)
+            st.size = 0 // reuse: insert only reads [0, size)
             var ei = 0
             while (ei < entries.length) {
-              val e = entries(ei)
-              val c = e.graph.searchInto(qv, k, efq, subIds, subDs)
+              val c = walk(ei, subIds, subDs)
+              val ids = entries(ei).ids
               var i = 0
               while (i < c) {
-                val d = subDs(i)
-                if (d <= upperBound) {
-                  val id = e.ids(subIds(i))
-                  if (cnt < k || d < bestDs(cnt - 1) ||
-                      (d == bestDs(cnt - 1) && id < bestIds(cnt - 1))) {
-                    var lo = 0; var hi = cnt
-                    while (lo < hi) {
-                      val mid = (lo + hi) >>> 1
-                      if (bestDs(mid) < d || (bestDs(mid) == d && bestIds(mid) < id)) lo = mid + 1
-                      else hi = mid
-                    }
-                    val nShift = math.min(cnt, k - 1) - lo
-                    if (nShift > 0) {
-                      System.arraycopy(bestIds, lo, bestIds, lo + 1, nShift)
-                      System.arraycopy(bestDs, lo, bestDs, lo + 1, nShift)
-                    }
-                    if (lo < k) {
-                      bestIds(lo) = id; bestDs(lo) = d
-                      if (cnt < k) cnt += 1
-                    }
-                  }
-                }
+                if (subDs(i) <= upperBound) st.insert(ids(subIds(i)), subDs(i), null)
                 i += 1
               }
               ei += 1
             }
-            val out = new Array[(Long, Long, Double)](cnt)
+            val out = new Array[(Long, Long, Double)](st.size)
             var i = 0
-            while (i < cnt) { out(i) = (qid, bestIds(i), bestDs(i)); i += 1 }
+            while (i < st.size) { out(i) = (qid, st.ids(i), st.dists(i)); i += 1 }
             out.iterator
           }
         }
       }
       .toDF("query_id", "id", "distance")
-    out
   }
 
   /** Executor-local cache of per-subgraph decoded code matrices for
-    * [[searchBroadcastPq]]: (cacheKey, pid) → (decoded codes n×m, per-node
-    * centroid self-dot sums — cosine only, null for L2). Built once per
-    * (index, model) serving key by re-encoding the subgraph's vectors
+    * [[searchBroadcastPq]]: (generation#pq<model>, pid) → (decoded codes
+    * n×m, per-node centroid self-dot sums — cosine only, null for L2).
+    * Built once per (subgraph, model) by re-encoding the subgraph's vectors
     * (deterministic — identical to decoding the stored code column). */
   private val pqCodesCache: HnswGraphCache.ByteLru[(String, Int), (Array[Byte], Array[Double])] =
     new HnswGraphCache.ByteLru[(String, Int), (Array[Byte], Array[Double])](
@@ -1028,8 +980,6 @@ object Hnsw {
       cacheKey: Option[String] = None): DataFrame = {
     require(!model.residual,
       "residual-trained PqModel requires the routed walk (IvfHnsw.searchPinnedPq)")
-    val spark = index.sparkSession
-    import spark.implicits._
     val dist = model.dist
     val cosine = dist == "cosine"
     val pm = model.m
@@ -1044,145 +994,64 @@ object Hnsw {
     // code matrices for beam selection
     val pqId = java.util.Arrays.deepHashCode(centroids.asInstanceOf[Array[AnyRef]])
 
-    def collectAndShip(): org.apache.spark.broadcast.Broadcast[GroupedIndex] = {
-      val grouped: GroupedIndex = index
-        .select(col("pid").cast("int"), col("local_id").cast("int"),
-          col("id").cast("long"), col("vec"), col("level").cast("int"),
-          col("links"))
-        .as[(Int, Int, Long, Array[Float], Int, Array[Array[Int]])]
-        .collect()
-        .groupBy(_._1).toArray.sortBy(_._1)
-        .map { case (pid, rows) =>
-          (pid, rows.sortBy(_._2).map(r => (r._3, r._4, r._5, r._6)))
-        }
-      spark.sparkContext.broadcast(grouped)
-    }
-    val bcIdx = cacheKey match {
-      case Some(ck) => bcCache.synchronized {
-        Option(bcCache.get(ck)).getOrElse {
-          val b = collectAndShip(); bcCache.put(ck, b); b
-        }
-      }
-      case None => collectAndShip()
-    }
+    val shipped = BroadcastIndex.ship(index, cacheKey)
     val efq = ef.getOrElse(math.max(efConstruction, 2 * m) / 2)
-    val ck = cacheKey
 
-    val qds = queries
-      .select(col("query_id").cast("long"), col("query_vec"))
-      .as[(Long, Array[Float])]
-    QuerySpread(qds)
-      .mapPartitions { qit =>
-        if (qit.isEmpty) Iterator.empty
+    broadcastWalk(queries, shipped, k, upperBound, dist, m, efConstruction) { entries =>
+      def codesFor(i: Int): (Array[Byte], Array[Double]) = {
+        val (pid, bc) = shipped.parts(i)
+        def build: (Array[Byte], Array[Double]) = {
+          val nodes = bc.value
+          val nn = nodes.length
+          val codes = new Array[Byte](nn * pm)
+          val cdRow = if (cosine) new Array[Double](nn) else null
+          var r = 0
+          while (r < nn) {
+            PqKernel.encodeDecodedInto(nodes(r)._2, centroids, groups,
+              cosine, codes, r * pm)
+            if (cosine) {
+              var acc = 0.0
+              var g = 0; var gk = 0; val base = r * pm
+              while (g < pm) {
+                acc += centDot(gk + (codes(base + g) & 0xff)); g += 1; gk += kCent
+              }
+              cdRow(r) = acc
+            }
+            r += 1
+          }
+          (codes, cdRow)
+        }
+        if (shipped.gen == null) build
         else {
-          def entryFor(i: Int): HnswGraphCache.Entry = {
-            def build: HnswGraphCache.Entry = {
-              val (_, nodes) = bcIdx.value(i)
-              HnswGraphCache.Entry(
-                HnswGraph.fromNodes(nodes(0)._2.length, dist, m, efConstruction,
-                  nodes.iterator.map(n => (n._2, n._3, n._4))),
-                nodes.map(_._1))
-            }
-            ck match {
-              case Some(key) => HnswGraphCache.get(key, bcIdx.value(i)._1)(build)
-              case None => build
-            }
-          }
-          def codesFor(i: Int): (Array[Byte], Array[Double]) = {
-            def build: (Array[Byte], Array[Double]) = {
-              val (_, nodes) = bcIdx.value(i)
-              val nn = nodes.length
-              val codes = new Array[Byte](nn * pm)
-              val cdRow = if (cosine) new Array[Double](nn) else null
-              var r = 0
-              while (r < nn) {
-                PqKernel.encodeDecodedInto(nodes(r)._2, centroids, groups,
-                  cosine, codes, r * pm)
-                if (cosine) {
-                  var acc = 0.0
-                  var g = 0; var gk = 0; val base = r * pm
-                  while (g < pm) {
-                    acc += centDot(gk + (codes(base + g) & 0xff)); g += 1; gk += kCent
-                  }
-                  cdRow(r) = acc
-                }
-                r += 1
-              }
-              (codes, cdRow)
-            }
-            ck match {
-              case Some(key) =>
-                val kk = (key + "#pq" + pqId, bcIdx.value(i)._1)
-                pqCodesCache.get(kk).getOrElse {
-                  val e = graft.index.CacheStats.timedCodesBuild(build)
-                  pqCodesCache.put(kk, e, codesBytes(e))
-                  e
-                }
-              case None => build
-            }
-          }
-          val entries = Array.tabulate(bcIdx.value.length)(entryFor)
-          val allCodes = Array.tabulate(bcIdx.value.length)(codesFor)
-          val subIds = new Array[Int](k)
-          val subDs = new Array[Double](k)
-          val bestIds = new Array[Long](k)
-          val bestDs = new Array[Double](k)
-          qit.flatMap { case (qid, qv) =>
-            // float lut: selection-grade precision (winners are exact
-            // re-ranked), half the cache footprint of double
-            val lut = PqKernel.buildLookup(qv, centroids, nBits, dist)
-              .map(_.toFloat)
-            val qn = if (cosine) {
-              var acc = 0.0; var i = 0
-              while (i < qv.length) { acc += qv(i).toDouble * qv(i); i += 1 }
-              math.sqrt(acc)
-            } else 0.0
-            var cnt = 0
-            var ei = 0
-            while (ei < entries.length) {
-              val e = entries(ei)
-              val (codes, cdRow) = allCodes(ei)
-              val distFn: Int => Double = { idx =>
-                val s = PqKernel.adcOne(codes, idx * pm, pm, kCent, lut)
-                if (cosine) 1.0 - s / math.max(math.sqrt(cdRow(idx)) * qn, 1e-10)
-                else s
-              }
-              val c = e.graph.searchFnInto(distFn, qv, k, efq, subIds, subDs)
-              var i = 0
-              while (i < c) {
-                val d = subDs(i)
-                if (d <= upperBound) {
-                  val id = e.ids(subIds(i))
-                  if (cnt < k || d < bestDs(cnt - 1) ||
-                      (d == bestDs(cnt - 1) && id < bestIds(cnt - 1))) {
-                    var lo = 0; var hi = cnt
-                    while (lo < hi) {
-                      val mid = (lo + hi) >>> 1
-                      if (bestDs(mid) < d || (bestDs(mid) == d && bestIds(mid) < id)) lo = mid + 1
-                      else hi = mid
-                    }
-                    val nShift = math.min(cnt, k - 1) - lo
-                    if (nShift > 0) {
-                      System.arraycopy(bestIds, lo, bestIds, lo + 1, nShift)
-                      System.arraycopy(bestDs, lo, bestDs, lo + 1, nShift)
-                    }
-                    if (lo < k) {
-                      bestIds(lo) = id; bestDs(lo) = d
-                      if (cnt < k) cnt += 1
-                    }
-                  }
-                }
-                i += 1
-              }
-              ei += 1
-            }
-            val out = new Array[(Long, Long, Double)](cnt)
-            var i = 0
-            while (i < cnt) { out(i) = (qid, bestIds(i), bestDs(i)); i += 1 }
-            out.iterator
+          val kk = (shipped.gen + "#pq" + pqId, pid)
+          pqCodesCache.get(kk).getOrElse {
+            val e = graft.index.CacheStats.timedCodesBuild(build)
+            pqCodesCache.put(kk, e, codesBytes(e))
+            e
           }
         }
       }
-      .toDF("query_id", "id", "distance")
+      val allCodes = Array.tabulate(entries.length)(codesFor)
+      qv => {
+        // float lut: selection-grade precision (winners are exact
+        // re-ranked), half the cache footprint of double
+        val lut = PqKernel.buildLookup(qv, centroids, nBits, dist)
+          .map(_.toFloat)
+        val qn = if (cosine) {
+          var acc = 0.0; var i = 0
+          while (i < qv.length) { acc += qv(i).toDouble * qv(i); i += 1 }
+          math.sqrt(acc)
+        } else 0.0
+        (ei, ids, ds) => {
+          val (codes, cdRow) = allCodes(ei)
+          val distFn: Int => Double = { idx =>
+            val s = PqKernel.adcOne(codes, idx * pm, pm, kCent, lut)
+            if (cosine) 1.0 - s / math.max(math.sqrt(cdRow(idx)) * qn, 1e-10)
+            else s
+          }
+          entries(ei).graph.searchFnInto(distFn, qv, k, efq, ids, ds)
+        }
+      }
+    }
   }
 }

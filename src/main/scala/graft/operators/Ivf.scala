@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.ml.clustering.KMeans
 import org.apache.spark.ml.functions.array_to_vector
 import org.apache.spark.sql.{Column, DataFrame}
@@ -79,16 +80,28 @@ object Ivf {
     * matrix is broadcast here (r21, guide §2.6/§5): embedded in the
     * expression it was copied into every task binary — ~2 MB/task at
     * kc=512 × d960, the r20 "task of very large size" warnings. */
-  def nearestCentroid(vec: Column, centroids: Array[Array[Float]], dist: String): Column = {
-    val bc = org.apache.spark.sql.SparkSession.active
-      .sparkContext.broadcast(centroids)
-    ColumnShim.column(NearestCentroid(ColumnShim.expression(vec), bc, dist))
-  }
+  def nearestCentroid(vec: Column, centroids: Array[Array[Float]], dist: String): Column =
+    nearestCentroid(vec, org.apache.spark.sql.SparkSession.active
+      .sparkContext.broadcast(centroids), dist)
+
+  /** [[nearestCentroid]] over a broadcast the caller owns (and releases). */
+  def nearestCentroid(vec: Column, centroids: Broadcast[Array[Array[Float]]],
+      dist: String): Column =
+    ColumnShim.column(NearestCentroid(ColumnShim.expression(vec), centroids, dist))
 
   /** B3 — assignment pass: adds a `cluster` column. One full scan, no
     * shuffle; write with `.partitionBy("cluster")` for pruned probes. */
   def assign(base: DataFrame, model: IvfModel, vecCol: String = "vec"): DataFrame =
     base.withColumn("cluster", nearestCentroid(col(vecCol), model.centroids, model.dist))
+
+  /** [[assign]] for one write: `use` runs every action over the assigned
+    * frame, then the centroid broadcast is unpersisted instead of waiting
+    * for the GC to find it (the catalog's append path assigns per call). */
+  def withAssigned[T](base: DataFrame, model: IvfModel)(use: DataFrame => T): T = {
+    val bc = base.sparkSession.sparkContext.broadcast(model.centroids)
+    try use(base.withColumn("cluster", nearestCentroid(col("vec"), bc, model.dist)))
+    finally bc.unpersist(blocking = false)
+  }
 
   /** Train + assign (`IVFIndex::from_vec_set`). */
   def build(
