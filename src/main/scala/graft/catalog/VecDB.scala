@@ -171,7 +171,9 @@ class VecDB(spark: SparkSession, root: String) {
     * cluster-partitioned layout is a per-`read.parquet`-call driver cost
     * (~1.3 s at kc=512, measured); the model loads are 1-3 extra driver
     * jobs per batch: a serving deployment pays both once per index
-    * generation, not once per query batch. Inserting a new stamp evicts
+    * generation, not once per query batch. State an index build fixes
+    * (centroids, layout encoding) is keyed by [[fixedStamp]] instead, which
+    * appends leave alone. Inserting a new stamp evicts
     * the path's older generations; [[invalidateSidecars]] purges a whole
     * table's entries on clear/delete (no retention of dead listings).
     *
@@ -192,15 +194,32 @@ class VecDB(spark: SparkSession, root: String) {
     val g = sidecarGen.getOrDefault(e.filename, 0L)
     s"c${e.created}v${e.version}n${e.nextId}g$g"
   }
+  /** Per-table generation of the state an index build fixes (IVF and
+    * routing centroids, the IVF layout's vector encoding): bumped with
+    * [[sidecarGen]] by every build, clear and delete, but not by appends:
+    * they land new rows under the same centroids, and re-keying on them
+    * would make the next append or search re-read the centroid parquet and
+    * re-list the partitioned layout. */
+  private val fixedGen =
+    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]
+  private def fixedStamp(e: TableEntry): String = {
+    val g = fixedGen.getOrDefault(e.filename, 0L)
+    s"fixed:c${e.created}v${e.version}m$g"
+  }
   /** Bump the table's index generation and purge its cached entries —
-    * called by every index build/clear and by table delete. The purge
-    * prefix ends at a path-separator boundary so a table filename that
-    * prefixes another ('t' vs 't2') never evicts the sibling's entries. */
-  private def invalidateSidecars(filename: String): Unit = {
+    * called by every index build/clear, by table delete and, with
+    * `append`, at the end of every append: that bumps only the listing
+    * generation and keeps the build-fixed entries ([[fixedStamp]]). The
+    * purge prefix ends at a path-separator boundary so a table filename
+    * that prefixes another ('t' vs 't2') never evicts the sibling's
+    * entries. */
+  private def invalidateSidecars(filename: String, append: Boolean = false): Unit = {
     sidecarGen.merge(filename, 1L, (a, b) => a + b)
+    if (!append) fixedGen.merge(filename, 1L, (a, b) => a + b)
     val prefix =
       rootPath.resolve(filename).toString + java.io.File.separator
-    sidecarCached.removeIf(_.startsWith(prefix))
+    sidecarCached.removeIf(k =>
+      k.startsWith(prefix) && !(append && k.contains("@fixed:")))
   }
   /** Driver-memory estimate of a cached sidecar entry. DataFrame entries
     * hold an InMemoryFileIndex (one FileStatus + path per leaf file);
@@ -218,8 +237,16 @@ class VecDB(spark: SparkSession, root: String) {
     case _ => 64L
   }
   private def sidecarCachedAs[T <: AnyRef](path: String, e: TableEntry)
+      (load: => T): T =
+    cachedUnder(path, sidecarStamp(e))(load)
+  /** [[sidecarCachedAs]] for state its index build fixes: appends keep it
+    * cached ([[fixedStamp]]). */
+  private def buildFixedAs[T <: AnyRef](path: String, e: TableEntry)
+      (load: => T): T =
+    cachedUnder(path, fixedStamp(e)) { fixedLoads.incrementAndGet(); load }
+  private def cachedUnder[T <: AnyRef](path: String, stamp: String)
       (load: => T): T = {
-    val key = s"$path@${sidecarStamp(e)}"
+    val key = s"$path@$stamp"
     sidecarCached.get(key) match {
       case Some(v) => v.asInstanceOf[T]
       case None =>
@@ -234,6 +261,8 @@ class VecDB(spark: SparkSession, root: String) {
   /** Cache observability for the eviction spec; not public surface. */
   private[graft] def sidecarCacheEntries: Int = sidecarCached.size
   private[graft] def sidecarCacheBytes: Long = sidecarCached.currentBytes
+  /** Loads of build-fixed state ([[buildFixedAs]] misses); spec observability. */
+  private[graft] val fixedLoads = new java.util.concurrent.atomic.AtomicLong
 
   /** Intra-process guard for every read-modify-write of `tables` +
     * `saveBrief()`. The exclusive `db.lock` only fences OTHER processes; a
@@ -515,7 +544,7 @@ class VecDB(spark: SparkSession, root: String) {
       // cache a mid-append listing (or compactHnsw's pre-swap directory)
       // under the FINAL stamp; bumping the generation at completion means
       // stamps published during the window cannot outlive it
-      invalidateSidecars(e.filename)
+      invalidateSidecars(e.filename, append = true)
     }
   }
 
@@ -618,7 +647,7 @@ class VecDB(spark: SparkSession, root: String) {
           // next reader must re-open the data directory
           invalidateCache(key)
           // close the mutation window (ADVICE r20) — see batchAdd
-          invalidateSidecars(e.filename)
+          invalidateSidecars(e.filename, append = true)
         }
       }
       n
@@ -646,7 +675,7 @@ class VecDB(spark: SparkSession, root: String) {
     * subgraphs (always walked). 0 when the table is unrouted or the sidecar
     * is missing (degraded ⇒ every subgraph is "delta", i.e. always walked —
     * matching the unrouted union the search path degrades to). Served from
-    * the sidecar cache: appends and compactions read no parquet for it. */
+    * the build-fixed cache: appends and compactions read no parquet for it. */
   private def routedClusterCount(e: TableEntry): Int =
     if (!e.hnswRouted || !Files.exists(routeDir(e).resolve("centroids"))) 0
     else cachedRouteModel(e).centroids.length
@@ -711,11 +740,14 @@ class VecDB(spark: SparkSession, root: String) {
         // appends must match the existing layout's vector encoding (pre-r20
         // sidecars store array<float> `vec`; r20 builds store f32-binary
         // `vecb`) — a mixed directory would fail the scan's schema merge.
-        // Layout probed via the cached sidecar listing (ADVICE r20): a bare
-        // spark.read.parquet would re-list + footer-read the kc-wide
-        // partitioned directory on EVERY batchAdd just to test one column
+        // The encoding is fixed by the build, so it is probed once per build
+        // (ADVICE r20): a bare spark.read.parquet would re-list +
+        // footer-read the kc-wide partitioned directory on EVERY batchAdd
+        // just to test one column
+        val binary = buildFixedAs[java.lang.Boolean](s"$dataPath#vecb", e)(
+          java.lang.Boolean.valueOf(sidecarDf(dataPath, e).columns.contains("vecb")))
         val out =
-          if (sidecarDf(dataPath, e).columns.contains("vecb"))
+          if (binary)
             assigned.select(col("id"),
               graft.functions.VectorFunctions.vecToBinary(col("vec"))
                 .as("vecb"), col("cluster"))
@@ -1309,11 +1341,11 @@ class VecDB(spark: SparkSession, root: String) {
   private def loadRouteModel(e: TableEntry): graft.operators.IvfModel =
     Ivf.readModel(spark, routeDir(e).toString, e.dist, e.routeProbes)
 
-  /** [[loadRouteModel]] through the sidecar cache — serve paths only
-    * (r20): the routed HNSW arms paid a centroid parquet read + collect
-    * per batch; one load per index generation is the serving shape. */
+  /** [[loadRouteModel]] through the build-fixed cache (r20): the routed
+    * HNSW arms paid a centroid parquet read + collect per batch; one load
+    * per index build is the serving shape, appends included. */
   private def cachedRouteModel(e: TableEntry): graft.operators.IvfModel =
-    sidecarCachedAs[graft.operators.IvfModel](
+    buildFixedAs[graft.operators.IvfModel](
       routeDir(e).resolve("centroids").toString, e)(loadRouteModel(e))
 
   private def loadPqModel(key: String): PqModel = {
@@ -1744,11 +1776,11 @@ class VecDB(spark: SparkSession, root: String) {
       cachedIvfModel(e), queries, k, nProbes, ub)
   }
 
-  /** The IVF centroid model through the sidecar cache: one parquet read +
-    * collect per index generation, shared by the serve arms and the append
-    * path. */
+  /** The IVF centroid model through the build-fixed cache: one parquet
+    * read + collect per index build, shared by the serve arms and the
+    * append path. */
   private def cachedIvfModel(e: TableEntry): graft.operators.IvfModel =
-    sidecarCachedAs[graft.operators.IvfModel](
+    buildFixedAs[graft.operators.IvfModel](
       ivfDir(e).resolve("centroids").toString, e)(
       Ivf.readModel(spark, ivfDir(e).toString, e.dist,
         e.ivf.get.defaultNProbes))

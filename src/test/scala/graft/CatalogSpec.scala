@@ -475,6 +475,51 @@ class CatalogSpec extends SparkTestBase {
     db.close()
   }
 
+  test("appends keep the IVF and routing centroids cached; a rebuild reloads them") {
+    // centroids are fixed by the build: an append lands rows under them,
+    // so neither the append path nor the next search may re-read them —
+    // while the appended rows must still be found (listings do refresh)
+    val root = Files.createTempDirectory(
+      java.nio.file.Paths.get("target"), "vecdb_test").toString
+    val db = new VecDB(spark, root)
+    val rnd = new scala.util.Random(47)
+    val vecs = (0 until 60).map(_ => Array.fill(8)(rnd.nextFloat()))
+    Seq("v", "r").foreach { t =>
+      db.createTableIfNotExists(t, 8, "l2sqr")
+      db.batchAdd(t, vecs, vecs.indices.map(i => Map("i" -> i.toString)))
+    }
+    db.buildIvfIndex("v", k = 4, defaultNProbes = 4)
+    db.buildIvfHnswIndex("r", kClusters = 4, defaultNProbes = 4,
+      trainProportion = Some(0.5))
+    db.broadcastGateBytes = Some(1L) // "r" dispatch takes the routed arm
+    // "v": ef = 4 = nProbes, exhaustive IVF; "r": full probes + ef = 200
+    def find(t: String, v: Array[Float]): (Map[String, String], Double) = {
+      val hit = db.search(t, v, 1, ef = Some(if (t == "v") 4 else 200))
+      assert(db.lastServedArm == (if (t == "v") "ivf" else "hnsw"))
+      hit.head
+    }
+    def appendAndFind(j: Int): Unit = Seq("v", "r").foreach { t =>
+      val v = Array.fill(8)(5f + j)
+      db.add(t, v, Map("i" -> s"new$j"))
+      val (meta, d) = find(t, v)
+      assert(meta("i") == s"new$j" && d < 1e-6, t)
+    }
+    try {
+      appendAndFind(0) // first search of each table loads its centroids
+      val loads = db.fixedLoads.get
+      (1 to 3).foreach(appendAndFind)
+      assert(db.fixedLoads.get == loads,
+        s"appends re-read centroids: ${db.fixedLoads.get - loads} loads")
+      // a rebuild fixes new centroids: the stale model must not serve
+      db.clearIvfIndex("v")
+      db.buildIvfIndex("v", k = 2, defaultNProbes = 2)
+      val (meta, d) = find("v", vecs(7))
+      assert(meta("i") == "7" && d < 1e-6)
+      assert(db.fixedLoads.get > loads)
+    } finally db.broadcastGateBytes = None
+    db.close()
+  }
+
   test("broadcast gates are byte-based: high-dim big tables are ineligible") {
     // rows × dim decides, not rows alone — the row gate let a 1M × d960
     // index (~4 GB of vectors) through the broadcast path
