@@ -3,8 +3,9 @@
 
     python3 scripts/vecbench_ab.py --parent HEAD~1 --workload serve_rw_d384 -n 10
 
-Checks out the parent rev and the change (default HEAD) as detached
-`git worktree`s under --workdir (default /tmp), then runs N pairs of
+Extracts the committed files of the parent rev and of the change (default
+HEAD) with `git archive` into directories under --workdir (default /tmp),
+then runs N pairs of
 `vecbench/run.py`, one JVM at a time, the parent first in pairs 0, 2, ...
 and the change first in pairs 1, 3, ..., so a drift of the host over time
 hits both sides alike. Each run's seed is --seed0 + pair index; both sides of a
@@ -15,11 +16,12 @@ many pairs the change won (ties count for neither side) and a verdict: a
 gain needs at least nine tenths of the pairs won and a median difference
 larger than the parent's own quartile spread; a loss is the same rule with
 the sides swapped. Raw results go to <workdir>/vecbench_ab_<stamp>.jsonl.
-The worktrees are removed at the end unless --keep is given.
+The extracted trees are removed at the end unless --keep is given.
 """
 import argparse
 import json
 import os
+import shutil
 import statistics
 import subprocess
 import sys
@@ -88,7 +90,7 @@ def main():
                     help="run length (BENCHMARK.json run_seconds)")
     ap.add_argument("--trace", choices=["0", "1"], default="0")
     ap.add_argument("--workdir", default="/tmp")
-    ap.add_argument("--keep", action="store_true", help="keep the worktrees")
+    ap.add_argument("--keep", action="store_true", help="keep the extracted trees")
     a = ap.parse_args()
 
     with open(os.path.join(ROOT, "BENCHMARK.json")) as fh:
@@ -99,7 +101,9 @@ def main():
     for side, rev in (("parent", a.parent), ("change", a.change)):
         sha = git("rev-parse", "--verify", rev + "^{commit}")
         path = os.path.join(a.workdir, f"vecbench_ab_{stamp}_{side}")
-        git("worktree", "add", "--detach", path, sha)
+        os.makedirs(path)
+        subprocess.run(f"git archive {sha} | tar -x -C {path}", shell=True,
+                       cwd=ROOT, check=True)
         trees[side] = path
         print(f"[ab] {side}: {rev} = {sha[:10]} at {path}", file=sys.stderr)
 
@@ -124,8 +128,7 @@ def main():
     finally:
         if not a.keep:
             for path in trees.values():
-                subprocess.run(["git", "worktree", "remove", "--force", path],
-                               cwd=ROOT, stdout=subprocess.DEVNULL)
+                shutil.rmtree(path, ignore_errors=True)
 
     ok = [(p, c) for p, c in zip(results["parent"], results["change"])
           if "metrics" in p and "metrics" in c]

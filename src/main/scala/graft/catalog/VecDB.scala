@@ -10,6 +10,7 @@ import org.json4s.jackson.Serialization
 
 import graft.operators.{Bq, Hnsw, Ivf, IvfHnsw, Knn, Pq, PqModel, Search, Sq, TopK}
 import graft.functions.VectorFunctions
+import graft.index.CacheStats
 
 /** PQ sidecar parameters recorded in the catalog. `residual` marks a
   * quantizer trained on IVF residuals ([[graft.operators.IvfHnsw
@@ -209,18 +210,22 @@ class VecDB(spark: SparkSession, root: String) {
   /** Bump the table's index generation and purge its cached entries —
     * called by every index build/clear, by table delete and, with
     * `append`, at the end of every append: that bumps only the listing
-    * generation and keeps the build-fixed entries ([[fixedStamp]]). The
-    * purge prefix ends at a path-separator boundary so a table filename
-    * that prefixes another ('t' vs 't2') never evicts the sibling's
-    * entries. */
+    * generation and keeps the build-fixed entries ([[fixedStamp]]) and the
+    * packed part-file meta ([[metaParts]]: an append adds files and changes
+    * none). The purge prefix ends at a path-separator boundary so a table
+    * filename that prefixes another ('t' vs 't2') never evicts the
+    * sibling's entries. */
   private def invalidateSidecars(filename: String, append: Boolean = false): Unit = {
     sidecarGen.merge(filename, 1L, (a, b) => a + b)
     if (!append) fixedGen.merge(filename, 1L, (a, b) => a + b)
-    val prefix =
-      rootPath.resolve(filename).toString + java.io.File.separator
-    sidecarCached.removeIf(k =>
-      k.startsWith(prefix) && !(append && k.contains("@fixed:")))
+    sidecarCached.removeIf(k => k.startsWith(tablePrefix(filename)) &&
+      !(append && (k.contains("@fixed:") || k.contains(MetaStamp))))
   }
+  /** Key marker of a packed part-file meta entry ([[metaParts]]), followed
+    * by the table's `created` stamp. */
+  private val MetaStamp = "@meta:c"
+  private def tablePrefix(filename: String): String =
+    rootPath.resolve(filename).toString + java.io.File.separator
   /** Driver-memory estimate of a cached sidecar entry. DataFrame entries
     * hold an InMemoryFileIndex (one FileStatus + path per leaf file);
     * model entries hold their primitive arrays. */
@@ -234,6 +239,7 @@ class VecDB(spark: SparkSession, root: String) {
       64L + m.centroids.iterator.map(g =>
         32L + g.iterator.map(c => 32L + 4L * c.length).sum).sum
     case Some(m: Bq.BqModel) => 64L + 8L * m.dim
+    case m: MetaPart => m.bytes
     case _ => 64L
   }
   private def sidecarCachedAs[T <: AnyRef](path: String, e: TableEntry)
@@ -1428,10 +1434,14 @@ class VecDB(spark: SparkSession, root: String) {
     * ascending (distance, id) per query.
     *
     * Serving regime (batch within [[serveMaxQueries]]): broadcast/pinned
-    * arms, then an O(hits) point-lookup metadata attach — winner ids are
-    * pushed into the table scan as an `id IN (...)` filter (parquet
-    * row-group pruning), NOT a full-table scan per batch. Oversized
-    * batches take the declarative driver-unbounded shapes end to end. */
+    * arms run and their winners are collected before this returns; each
+    * winner's meta comes from the driver-side part-file cache
+    * ([[attachMeta]], [[metaParts]]), and the result is a local relation,
+    * so collecting it launches no Spark job. A search after an append reads
+    * only the appended part files' meta; a table whose packed meta exceeds
+    * the sidecar budget reloads the evicted files on a miss. Oversized
+    * batches take the declarative driver-unbounded shapes end to end,
+    * metadata included (a distributed join against the table). */
   def searchBatch(key: String, queries: DataFrame, k: Int,
       ef: Option[Int] = None, upperBound: Option[Double] = None,
       pattern: Map[String, String] = Map.empty): DataFrame = {
@@ -1449,10 +1459,11 @@ class VecDB(spark: SparkSession, root: String) {
     // serve-path table read through the sidecar cache (r20): `table(key)`
     // re-lists the data directory per call; the stamp folds
     // (version, nextId) so any rewrite/append rotates the listing.
-    // An explicit cacheTable() still takes priority.
-    val data = cached.getOrElse(key,
-      sidecarCachedAs[DataFrame](dataDir(e), e)(
-        spark.read.schema(dataSchema(e.dim)).parquet(dataDir(e))))
+    // An explicit cacheTable() still takes priority for the scans; the
+    // metadata attach always reads the listing (its part files).
+    val listing = sidecarCachedAs[DataFrame](dataDir(e), e)(
+      spark.read.schema(dataSchema(e.dim)).parquet(dataDir(e)))
+    val data = cached.getOrElse(key, listing)
     val filtered = data.filter(Search.metaPattern(pattern, col("meta")))
     val serveable = queryBatchServeable(queries)
     // serving-shape broadcast paths for in-memory-sized tables, declarative
@@ -1712,7 +1723,9 @@ class VecDB(spark: SparkSession, root: String) {
           Knn.exact(filtered, queries, k, e.dist, upperBound = ub)
         }
     }
-    attachMeta(filtered, hits, pointLookup = serveable)
+    if (serveable) attachMeta(e, listing, hits)
+    else filtered.select(col("id"), col("meta")).join(hits, "id")
+      .select(col("query_id"), col("id"), col("distance"), col("meta"))
   }
 
   /** Output schema of [[searchBatch]]. */
@@ -1722,42 +1735,75 @@ class VecDB(spark: SparkSession, root: String) {
     StructField("distance", DoubleType, nullable = false),
     StructField("meta", MapType(StringType, StringType), nullable = true)))
 
-  /** J2 — metadata attach. Serving regime: the winner set (≤ Q·k rows) is
-    * already driver-sized, so collect it and push the winner ids INTO the
-    * table scan as an `id IN (...)` filter — parquet row-group pruning
-    * makes this an O(hits) point lookup (the reference's positional
-    * `metadata_vec_table.rs:210-211` lookup, re-expressed for a columnar
-    * store), where the old broadcast-join shape re-scanned the whole table
-    * per batch. Beyond [[MetaLookupMaxIds]] distinct winners (or outside
-    * the serving regime) a plain distributed join serves instead — at that
-    * scale the scan amortizes over the batch and the driver must not hold
-    * the winner set. */
-  private def attachMeta(filtered: DataFrame, hits: DataFrame,
-      pointLookup: Boolean): DataFrame = {
-    lazy val joined = filtered.select(col("id"), col("meta"))
-      .join(hits, "id")
-      .select(col("query_id"), col("id"), col("distance"), col("meta"))
-    if (!pointLookup) joined
-    else {
-      val rows = hits.select(col("query_id").cast("long"),
-        col("id").cast("long"), col("distance").cast("double")).collect()
-      val ids = rows.map(_.getLong(1)).distinct
-      if (rows.isEmpty)
-        spark.createDataFrame(new java.util.ArrayList[Row](), searchOutSchema)
-      else if (ids.length > VecDB.MetaLookupMaxIds)
-        joined
-      else {
-        val hitsLocal = spark.createDataFrame(
-          java.util.Arrays.asList(rows: _*), StructType(searchOutSchema.take(3)))
-        val meta = filtered
-          .filter(col("id").isInCollection(ids.map(Long.box).toSeq))
-          .select(col("id"), col("meta"))
-        // broadcast the looked-up meta rows (≤ ids, tiny): a left join can
-        // only build its right side
-        hitsLocal.join(broadcast(meta), Seq("id"), "left")
-          .select(col("query_id"), col("id"), col("distance"), col("meta"))
+  /** J2 — metadata attach of the serving regime: the reference's
+    * positional lookup (`metadata_vec_table.rs:210-211`) over a driver-side
+    * cache of the table's packed part-file meta ([[metaParts]]). The winners
+    * (≤ Q·k rows) are collected and the result is built on the driver as a
+    * local relation in (query_id, distance, id) order, so the caller's
+    * `collect()` launches no Spark job. A winner no part file holds keeps
+    * null meta. */
+  private def attachMeta(e: TableEntry, listing: DataFrame,
+      hits: DataFrame): DataFrame = {
+    val rows = hits.select(col("query_id").cast("long"),
+      col("id").cast("long"), col("distance").cast("double")).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+      .sortBy { case (q, id, d) => (q, d, id) }(
+        Ordering.Tuple3(Ordering.Long, Ordering.Double.TotalOrdering, Ordering.Long))
+    val parts = if (rows.isEmpty) Array.empty[MetaPart] else metaParts(e, listing)
+    def metaOf(id: Long): Map[String, String] = {
+      var p = 0
+      while (p < parts.length) {
+        val i = parts(p).indexOf(id)
+        if (i >= 0) return parts(p).meta(i)
+        p += 1
       }
+      null
     }
+    val out = rows.map { case (q, id, d) => Row(q, id, d, metaOf(id)) }
+    spark.createDataFrame(java.util.Arrays.asList(out: _*), searchOutSchema)
+  }
+
+  /** Packed meta of every data part file in `listing`: resident entries
+    * from the sidecar cache, the missing files' `(id, meta)` read in one
+    * job. Part files never change once written, so an entry is keyed by
+    * its file and lives as long as the file: an append adds files and
+    * loads only those (append invalidation keeps these entries), a
+    * delete's rewrite lists new files under a new version directory, and
+    * a load drops the entries of files the listing no longer holds. Table
+    * delete and index builds/clears purge them with the rest of the table's
+    * entries; the `created` stamp fences a recreated namesake.
+    *
+    * Residency is bounded by the sidecar budget ([[sidecarCached]]): the
+    * packed meta of a table larger than the budget reloads on a miss, one
+    * scan job of the evicted files per search. The entries loaded by this
+    * call are held here, so the answer never depends on residency. */
+  private def metaParts(e: TableEntry, listing: DataFrame): Array[MetaPart] = {
+    val files = listing.inputFiles
+    val names = files.map(f => f.substring(f.lastIndexOf('/') + 1))
+    val keys = names.map(n => s"${Paths.get(dataDir(e), n)}$MetaStamp${e.created}")
+    val parts = keys.map(k => sidecarCached.get(k).orNull.asInstanceOf[MetaPart])
+    val missing = parts.indices.filter(parts(_) == null)
+    if (missing.nonEmpty) {
+      val t0 = System.nanoTime()
+      val loaded = spark.read.schema(dataSchema(e.dim))
+        .parquet(missing.map(files(_)): _*)
+        .select(col("_metadata.file_name"), col("id"),
+          map_keys(col("meta")), map_values(col("meta")))
+        .collect()
+      val byFile = loaded.groupBy(_.getString(0))
+      missing.foreach { i =>
+        val part = MetaPart(byFile.getOrElse(names(i), Array.empty[Row]).toSeq
+          .map(r => (r.getLong(1), r.getSeq[String](2), r.getSeq[String](3))))
+        parts(i) = part
+        sidecarCached.put(keys(i), part, part.bytes)
+      }
+      val live = keys.toSet
+      sidecarCached.removeIf(k => k.startsWith(tablePrefix(e.filename)) &&
+        k.contains(MetaStamp) && !live.contains(k))
+      CacheStats.metaRowsLoaded.addAndGet(loaded.length)
+      CacheStats.metaLoadNanos.addAndGet(System.nanoTime() - t0)
+    }
+    parts
   }
 
   /** Row bound for the broadcast-QUERIES flat paths (nothing table-sized is
@@ -1818,11 +1864,12 @@ class VecDB(spark: SparkSession, root: String) {
       upperBound: Option[Double] = None): Seq[(Map[String, String], Double)] = {
     import spark.implicits._
     val q = Seq((0L, query)).toDF("query_id", "query_vec")
-    searchBatch(key, q, k, ef, upperBound)
-      .orderBy("distance", "id")
-      .collect()
-      .map(r => (Option(r.getAs[Map[String, String]]("meta")).getOrElse(Map.empty),
-        r.getAs[Double]("distance")))
+    searchBatch(key, q, k, ef, upperBound).collect()
+      .map(r => (r.getAs[Double]("distance"), r.getAs[Long]("id"),
+        Option(r.getAs[Map[String, String]]("meta")).getOrElse(Map.empty)))
+      .sortBy(r => (r._1, r._2))(
+        Ordering.Tuple2(Ordering.Double.TotalOrdering, Ordering.Long))
+      .map(r => (r._3, r._1))
       .toSeq
   }
 
@@ -1935,12 +1982,6 @@ object VecDB {
     * declarative driver-unbounded shapes. `-Dgraft.serve.max.queries`. */
   private[graft] def ServeMaxQueries: Long =
     sys.props.get("graft.serve.max.queries").map(_.toLong).getOrElse(100000L)
-
-  /** Distinct-winner-id ceiling for the point-lookup metadata attach: past
-    * it the `id IN (...)` predicate stops being a cheap pushed filter and a
-    * plain distributed join wins. `-Dgraft.meta.lookup.max.ids`. */
-  private[graft] def MetaLookupMaxIds: Int =
-    sys.props.get("graft.meta.lookup.max.ids").map(_.toInt).getOrElse(65536)
 
   /** Cost gate for the HNSW+PQ combined traversal (`knn_pq`): the ADC walk
     * scores a node with m DEPENDENT lookup-adds into the per-query LUT,

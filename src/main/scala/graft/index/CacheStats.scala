@@ -29,6 +29,11 @@ object CacheStats {
     * took. An append that ships its own rows, not the table, shows here. */
   val indexRowsShipped = new AtomicLong
   val indexShipNanos = new AtomicLong
+  /** Data rows whose `(id, meta)` the catalog's metadata attach read into
+    * its driver-side part-file cache, and the wall time those loads took.
+    * A search after an append loads the appended rows, not the table. */
+  val metaRowsLoaded = new AtomicLong
+  val metaLoadNanos = new AtomicLong
 
   /** Total cache-rebuild wall milliseconds (graphs + codes). */
   def rebuildMillis(): Long =

@@ -545,8 +545,10 @@ object GraftSqlTopK {
           nullable = false)))
       val qdf = spark.createDataFrame(
         java.util.Arrays.asList(taken: _*), schema)
+      // the winners are driver-sized (≤ nq·k): dedupe them here, not in a
+      // distinct() job over what the search already collected
       val ids = e.searchBatch(spark, qdf, k, efHint)
-        .select("id").distinct().collect().map(_.getLong(0))
+        .select("id").collect().map(_.getLong(0)).distinct
       if (ids.isEmpty) return None
       lastFired = Some(("batch", efHint))
       // splice the union prune above the vector leaf (reference identity:

@@ -1032,7 +1032,7 @@ class CatalogSpec extends SparkTestBase {
       s"recreated table served stale results: $afterHits")
   }
 
-  test("serving metadata attach is a pushed id point-lookup, not a full scan") {
+  test("serving metadata attach: collecting a search runs no Spark job and scans no file") {
     import spark.implicits._
     val db = freshDb()
     db.createTableIfNotExists("t", 4, "l2sqr")
@@ -1042,19 +1042,30 @@ class CatalogSpec extends SparkTestBase {
     db.buildHnswIndex("t")
     val queries = vecs.take(3).zipWithIndex
       .map { case (v, i) => (i.toLong, v) }.toDF("query_id", "query_vec")
+    db.searchBatch("t", queries, k = 4, ef = Some(200)).collect() // warm
     val out = db.searchBatch("t", queries, k = 4, ef = Some(200))
-    // correctness: every hit carries its row's metadata
-    val got = out.select(col("query_id"), col("id"),
-        col("meta")("i").as("i")).collect()
-    assert(got.length == 12)
-    got.foreach(r => assert(r.getString(2) == r.getLong(1).toString))
-    // plan: the meta scan must carry a pushed id filter (row-group pruned
-    // point lookup), not a full-table scan per serving batch (the plan is
-    // AQE-wrapped, so assert on the final physical plan's scan description)
+    // the winners and their meta are resolved before searchBatch returns:
+    // the caller's collect must not launch a job (a meta scan, a join)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.graftshim.ListenerDrain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    val got = try {
+      val rows = out.collect()
+      org.apache.spark.graftshim.ListenerDrain(spark.sparkContext)
+      rows
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(jobs.get == 0, s"collecting the search result ran ${jobs.get} jobs")
     val planStr = out.queryExecution.executedPlan.toString
-    assert(planStr.contains("PushedFilters: [In(id") ||
-      planStr.contains("PushedFilters: [IsNotNull(id), In(id"),
-      s"meta scan has no pushed id filter:\n$planStr")
+    assert(!planStr.contains("FileScan") && planStr.contains("LocalTableScan"),
+      s"search result is not a local relation:\n$planStr")
+    // correctness: every hit carries its row's metadata
+    assert(got.length == 12)
+    got.foreach(r => assert(
+      r.getAs[Map[String, String]]("meta")("i") == r.getAs[Long]("id").toString))
   }
 
   test("concurrent creates with colliding sanitized names never cross-delete data") {
