@@ -545,8 +545,7 @@ object GraftSqlTopK {
           nullable = false)))
       val qdf = spark.createDataFrame(
         java.util.Arrays.asList(taken: _*), schema)
-      // the winners are driver-sized (≤ nq·k): dedupe them here, not in a
-      // distinct() job over what the search already collected
+      // the winners are driver-sized (≤ nq·k): dedupe without a Spark job
       val ids = e.searchBatch(spark, qdf, k, efHint)
         .select("id").collect().map(_.getLong(0)).distinct
       if (ids.isEmpty) return None
