@@ -398,7 +398,7 @@ object SparkEntry {
     // oracle CAN express as constants: per query, (a) exactly k hits came
     // back, (b) recall vs the exact-KNN twin meets the bound (ef=64 over
     // m=8 measures ≥ 4/5 per query at every shipped SF; the bound is 3/5
-    // — tools/PqSearchProbe swept the margin), and
+    // — a per-SF recall sweep set the margin), and
     // (c) ranked distances dominate the exact ranking — a theorem for any
     // exact-re-ranked subset (j-th smallest of a subset ≥ j-th smallest of
     // the full set), so `false` would prove the re-rank broken.

@@ -1954,11 +1954,11 @@ object VecDB {
     * ~8k rows per cluster, floored at 16 so routing always prunes, capped
     * at 65536 (past ~500M rows cells grow again so the centroid sidecar
     * stays driver-trivial at ≤256 MB for d960 — documented trade, not a
-    * cliff). The r20 sizing (was ~50k rows/cell): BuildKcProbe on a
-    * 4M-density 1M fixture measured 31k rows/cell building at 2,279
-    * rows/s vs 7,208 at 7.8k rows/cell (3.2× — denser cells make every
-    * insert's beam score more near-coincident candidates, the InsertProbe
-    * attribution) with np1 recall IMPROVING (0.9568 → 0.9627); pushing to
+    * cliff). The r20 sizing (was ~50k rows/cell): a 4M-density 1M
+    * fixture measured 31k rows/cell building at 2,279 rows/s vs 7,208 at
+    * 7.8k rows/cell (3.2× — denser cells make every insert's beam score
+    * more near-coincident candidates, per the r19 insert-stage timing)
+    * with np1 recall IMPROVING (0.9568 → 0.9627); pushing to
     * 2k rows/cell gains nothing further (route k-means cost) and drops
     * np1 recall to 0.81. Reference anchor: kc is a free parameter of the
     * IVF construction (`ivf_index.rs:64-107`); constant rows/cell keeps
@@ -1987,21 +1987,21 @@ object VecDB {
     * scores a node with m DEPENDENT lookup-adds into the per-query LUT,
     * while the plain walk scores it with one pipelined SIMD pass over dim
     * floats. Measured on this engine at the reference default m = dim/3
-    * (d960/m320, BENCH_r9 + AdcBench r11): the float walk is faster in the
-    * cache-resident broadcast regime (388 vs 559 ns/eval at 10k×960) and
-    * at kernel parity in the RAM-bound pinned regime (700 vs 668) — at
-    * higher recall, so the wide-code traversal never wins. The combined
-    * traversal therefore only engages when codes are enough narrower than
-    * the vector, and the crossover is REGIME-DEPENDENT (AdcBench r11,
-    * random-access evals):
+    * (d960/m320, BENCH_r9 + the r11 ADC kernel timing): the float walk is
+    * faster in the cache-resident broadcast regime (388 vs 559 ns/eval at
+    * 10k×960) and at kernel parity in the RAM-bound pinned regime (700 vs
+    * 668) — at higher recall, so the wide-code traversal never wins. The
+    * combined traversal therefore only engages when codes are enough
+    * narrower than the vector, and the crossover is REGIME-DEPENDENT (r11
+    * kernel timing, random-access evals):
     *
     *  - broadcast (cache-resident) regime: float 388 ns/eval; ADC wins
     *    from m ≤ dim/8 (m=120: 199 ns) — ratio 8,
     *    `-Dgraft.adc.walk.ratio`;
     *  - pinned/routed (RAM-bound) regime: float 700 ns/eval (random
     *    3.8 KB rows from a working set past LLC); ADC wins already from
-    *    m ≤ dim/6 (m=160: 419 ns, 1.7×) — ratio 6,
-    *    `-Dgraft.adc.walk.ratio.pinned`. End-to-end (BENCH_r11, 1M×960
+    *    m ≤ dim/6 (m=160: 419 ns, 1.7×) — ratio 6 (or
+    *    `-Dgraft.adc.walk.ratio` when set). End-to-end (BENCH_r11, 1M×960
     *    rank-48 fixture, routed np1): the m=160 ADC walk serves 3334 q/s
     *    at recall 0.769 vs the plain walk's 2553 q/s at 0.773 — the
     *    reference's own HNSW+PQ > HNSW ordering, reproduced. (Quality at
@@ -2009,7 +2009,7 @@ object VecDB {
     *    quantization-hostile and favor wider beams — the quantizer choice
     *    is the caller's, as in the reference.)
     *
-    * Re-validated r12 (WalkProbe, rank-48 d960 @50k, single thread) after
+    * Re-validated r12 (walk timing, rank-48 d960 @50k, single thread) after
     * the envelope re-rank cut the ef-sized scalar-double resort from both
     * arms: the crossover shape is unchanged — plain 1415 q/s at ef=120 vs
     * ADC m=320 1203 (wide codes still lose), m=160 2100 and m=120 2597 at
@@ -2025,9 +2025,7 @@ object VecDB {
     sys.props.get("graft.adc.walk.ratio").map(_.toInt).getOrElse(8)
 
   private[graft] def AdcWalkRatioPinned: Int =
-    sys.props.get("graft.adc.walk.ratio.pinned").map(_.toInt)
-      .orElse(sys.props.get("graft.adc.walk.ratio").map(_.toInt))
-      .getOrElse(6)
+    sys.props.get("graft.adc.walk.ratio").map(_.toInt).getOrElse(6)
 
   private[graft] def adcWalkEligible(dim: Int, m: Int,
       pinned: Boolean = false): Boolean =
@@ -2036,7 +2034,6 @@ object VecDB {
   /** Slack factor for the serve-gate byte estimate: an estimate past the
     * budget but within this factor triggers one bounded count probe
     * instead of silently routing a possibly-small batch to the
-    * declarative arms. `-Dgraft.serve.gate.probe.slack`. */
-  private[graft] def GateProbeSlack: Int =
-    sys.props.get("graft.serve.gate.probe.slack").map(_.toInt).getOrElse(10)
+    * declarative arms. */
+  private[graft] val GateProbeSlack: Int = 10
 }

@@ -32,7 +32,7 @@ object VecDistanceKind {
   *    (length = 4 × dim), the r20 rerank-base layout: parquet decodes one
   *    byte blob per row (a single copy) where `array<float>` pays
   *    per-element assembly, the measured bound of the float-heavy rerank
-  *    rows (tools/VecDecodeProbe). Reads go through Platform.getFloat —
+  *    rows (r20 decode timing). Reads go through Platform.getFloat —
   *    alignment-free and little-endian on every supported JVM target.
   *
   * Semantics replicated from the reference:

@@ -35,10 +35,6 @@ object CacheStats {
   val metaRowsLoaded = new AtomicLong
   val metaLoadNanos = new AtomicLong
 
-  /** Total cache-rebuild wall milliseconds (graphs + codes). */
-  def rebuildMillis(): Long =
-    (graphBuildNanos.get + codesBuildNanos.get) / 1000000L
-
   @inline def timedGraphBuild[T](build: => T): T = {
     val t0 = System.nanoTime()
     try build finally {

@@ -152,7 +152,8 @@ final class HnswGraph(
     * (dot-only fma vs sub+fma) on the insert hot path, the reference's
     * own build trick (`hnsw_index.rs:136-141`). Search-time traversal
     * keeps the direct kernels (and results are exact-rescored anyway);
-    * r19 InsertProbe measured beam = 81-75% of build CPU. 8 B/row. */
+    * r19 insert-stage timing measured beam = 81-75% of build CPU.
+    * 8 B/row. */
   private var norms = new Array[Double](256)
   private var n = 0
   private val vecLevel = new IntList(256)
@@ -162,16 +163,6 @@ final class HnswGraph(
   private var enterPoint = -1
 
   def size: Int = n
-
-  // ---- build-phase attribution (r19, verdict #5) -------------------------
-  // Per-graph nanosecond split of [[add]]: beam = greedy descent +
-  // per-level ef_construction searches (distance-eval bound), connect =
-  // heuristic selection + bidirectional link fix-up (distBetween +
-  // list surgery). Plain longs — a graph builds single-threaded — read by
-  // tools/InsertProbe and the build-stage reporters; two nanoTime calls
-  // per level per insert, noise next to the ~10^2 d960 evals they bracket.
-  var statBeamNs: Long = 0L
-  var statConnectNs: Long = 0L
 
   /** Approximate retained heap bytes (packed-vector capacity + adjacency
     * capacities + headers) — the budget unit [[HnswGraphCache]] evicts by.
@@ -493,7 +484,6 @@ final class HnswGraph(
       enterLevel = level; enterPoint = idx
       return idx
     }
-    var t0 = System.nanoTime()
     // the cached-norm build identity: this row's norm was just appended
     val qNorm = if (isCosine) Double.NaN else norms(idx)
     var curP =
@@ -503,9 +493,7 @@ final class HnswGraph(
     while (lv >= 0) {
       val candidates = searchOnLevel(curP, lv, efConstruction, vec, qNorm)
       curP = candidates.firstIdx
-      val t1 = System.nanoTime(); statBeamNs += t1 - t0
       connectNewLinks(idx, lv, candidates)
-      t0 = System.nanoTime(); statConnectNs += t0 - t1
       lv -= 1
     }
     if (level > enterLevel) { enterLevel = level; enterPoint = idx }
@@ -672,7 +660,7 @@ object HnswGraph {
     * >20×, but for cosine at d≈960 the absolute term (~2.3e-4) covers
     * normalized-dot cancellation error by only ~2-4×. Fixture changes that
     * introduce large-magnitude coordinates should re-validate via
-    * HnswSpec's envelope A/B and WalkProbe's full-rerank arm. */
+    * HnswSpec's envelope A/B. */
   @inline private[index] def envRel(dim: Int): Double = 1e-3 + dim * 2.4e-7
   @inline private[index] def envAbs(dim: Int): Double = 1e-6 + dim * 2.4e-7
 

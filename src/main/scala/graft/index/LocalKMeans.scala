@@ -47,7 +47,7 @@ object LocalKMeans {
     * accumulation stays sequential in index order. The fit's hot loops
     * are O(n·k·dim) driver-side work that scaled superlinearly with the
     * build (kc grows with N): single-threaded they were the dominant
-    * term of the 4M route stage (r17 verdict Wrong #1; tools/RouteProbe
+    * term of the 4M route stage (r17 verdict Wrong #1, by route-stage
     * attribution). */
   private def parForeach(n: Int)(f: Int => Unit): Unit =
     java.util.stream.IntStream.range(0, n).parallel()

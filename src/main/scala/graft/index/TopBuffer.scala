@@ -22,7 +22,7 @@ package graft.index
   *    element. The r16 bounded max-heap paid an O(log k) random-access
   *    sift per admit — ~k·ln(rows/k) admits per query, each a cache
   *    miss across a 32 KB heap, measured at ~10× the hamming arithmetic
-  *    on the nq10k coarse pass (KernelMicro). Amortized tighten cost is
+  *    on the nq10k coarse pass (kernel timing). Amortized tighten cost is
   *    O(cap) per k appends ≈ O(1) per offered row.
   *
   * Both layouts keep exactly the k smallest elements under strict

@@ -114,7 +114,7 @@ object Bq extends Serializable {
     * above degenerates — at kc=512, np=1, N=1M it reranks c=2000 of a
     * ~1953-row pool, i.e. the sketch prunes nothing and the rerank join
     * dominates the serving cost. Budget = 2/3 of the probed pool,
-    * measured on the kc512 bench grid (tools/CandProbe: recall 1.000 at
+    * measured on the kc512 bench grid (candidate sweep: recall 1.000 at
     * pool·2/3 and at pool/2+24; 0.999 at pool/2; 0.97 at 0.44·pool;
     * 0.80 at pool/4 — the knee sits just under pool/2, and 2/3 clears it
     * with a full band of margin), floored at 10·k and never above the
@@ -237,7 +237,7 @@ object Bq extends Serializable {
     * the 15-word (d960, the reference dim) unrolled variant: query words
     * pinned in registers, the integer admission bound in a register, one
     * TopBuffer hot for the whole run. Returns the updated bound.
-    * (tools/KernelMicro: 20-22 ns/pair vs 67-73 for the r17 row-outer
+    * (kernel timing: 20-22 ns/pair vs 67-73 for the r17 row-outer
     * loop whose per-pair cost was bound-array loads + query tuple derefs
     * + a cold buffer touch.) */
   private def scanRun15(rowsFlat: Array[Long], ids: Array[Long],
@@ -338,7 +338,7 @@ object Bq extends Serializable {
     // standard tie-break bit for bit. QUERY-OUTER blocked loop (r18): the
     // r17 row-outer loop paid ~67 ns/pair — streaming the query-word
     // array, a bounds array and a random buffer per (row, query) — while
-    // the arithmetic floor is ~15 ns/pair (tools/KernelMicro). Buffering
+    // the arithmetic floor is ~15 ns/pair (kernel timing). Buffering
     // ~4 MB of rows and looping queries OUTER keeps one query's words and
     // its admission bound in registers and ONE TopBuffer hot per sweep:
     // measured 20-31 ns/pair (15-word unroll / generic), 2.8× on the
@@ -504,8 +504,8 @@ object Bq extends Serializable {
     val approxPerPart = CoarseMerge.approxPerPart(coarseSelect, qs.length,
       packed, k, candidates)
     // coarse is chunked under the task-memory gate; the rerank runs ONCE
-    // over the unioned winners. Per-chunk rerank was measured (r18,
-    // tools/DistProbe at nq10k × c2000 over 1M×960) and REJECTED for the
+    // over the unioned winners. Per-chunk rerank was measured (r18, at
+    // nq10k × c2000 over 1M×960) and REJECTED for the
     // flat path: the winner side is 16 B/row while the float base is
     // ~3.8 KB/row, so shrinking the winner join by the chunk factor while
     // re-scanning the full base per chunk trades ~300 MB of join input

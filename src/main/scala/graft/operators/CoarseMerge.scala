@@ -81,12 +81,9 @@ private[graft] object CoarseMerge {
     * the caller ships one. Pure physical routing: the same (id, code,
     * cluster) rows scan under the same per-query probe restriction, so
     * results are bit-identical. The probe union is driver-known BEFORE
-    * any scan, so the decision costs nothing. Override with
-    * `-Dgraft.coarse.coverage.flat.threshold` (volatile for specs);
+    * any scan, so the decision costs nothing. Volatile for specs;
     * > 1.0 disables. */
-  @volatile var coverageFlatThreshold: Double =
-    sys.props.get("graft.coarse.coverage.flat.threshold").map(_.toDouble)
-      .getOrElse(0.5)
+  @volatile var coverageFlatThreshold: Double = 0.5
 
   /** Scan arm the last coverage-dispatched chunk took on THIS thread
     * ("partitioned" | "flat"; "" before any dispatched call) —
@@ -122,22 +119,9 @@ private[graft] object CoarseMerge {
     * distances over the pool, so result quality degrades only by
     * pool-membership (graded: recall ≥ floor + domination). Callers in
     * "auto" mode switch over at this many queries; small batches keep
-    * exact selection bit-for-bit. Override with
-    * `-Dgraft.coarse.approx.nq.threshold`; Int.MaxValue disables. */
-  @volatile var approxNqThreshold: Int =
-    sys.props.get("graft.coarse.approx.nq.threshold").map(_.toInt)
-      .getOrElse(4096)
-
-  /** Per-partition-cap multiplier for the approximate selection modes
-    * (calibration dial for the `approx_budget_sweep` bench section and a
-    * production knob): cap = max(k, ⌈mult × candidates/P⌉). 1.0 keeps the
-    * pool ≈ nq × candidates; > 1 buys recall margin with per-task slots;
-    * < 1 trades recall for state. Override with
-    * `-Dgraft.coarse.approx.cap.mult` (volatile for the sweep — toggle
-    * sequentially, it is process-wide). */
-  @volatile var approxCapMult: Double =
-    sys.props.get("graft.coarse.approx.cap.mult").map(_.toDouble)
-      .getOrElse(1.0)
+    * exact selection bit-for-bit. Volatile for specs; Int.MaxValue
+    * disables. */
+  @volatile var approxNqThreshold: Int = 4096
 
   /** Does `mode` resolve to approximate selection at this batch size?
     * `"approx"` always, `"auto"` at ≥ [[approxNqThreshold]] queries,
@@ -152,12 +136,12 @@ private[graft] object CoarseMerge {
     }
 
   /** Per-partition buffer cap for an ACTIVE approximate selection over
-    * `scan`: max(k, ⌈[[approxCapMult]] × candidates/P⌉) with P the scan's
-    * actual partition count — the pool stays ≈ nq × candidates rows while
-    * every partition can still surface a full final top-k on its own. */
+    * `scan`: max(k, ⌈candidates/P⌉) with P the scan's actual partition
+    * count — the pool stays ≈ nq × candidates rows while every partition
+    * can still surface a full final top-k on its own. */
   private[graft] def capFor(scan: DataFrame, k: Int, candidates: Int): Int = {
     val p = math.max(1, scan.rdd.getNumPartitions)
-    math.max(k, math.ceil(approxCapMult * candidates / p).toInt)
+    math.max(k, math.ceil(candidates.toDouble / p).toInt)
   }
 
   /** Resolve a coarse-selection mode string to the per-partition buffer
@@ -178,11 +162,9 @@ private[graft] object CoarseMerge {
     * the distributed aggregate it replaces — measured on the 1M BQ rerank
     * (nq=1000 × c=2000 = 2M winners: agg 106 q/s vs merge 79). Merge is
     * for SMALL-batch × large-budget serving, where the aggregate's
-    * P × nq × k partial-row shuffle is pure overhead. Override with
-    * `-Dgraft.coarse.merge.max.rows`. */
-  @volatile var maxRows: Long =
-    sys.props.get("graft.coarse.merge.max.rows").map(_.toLong)
-      .getOrElse(1L << 20)
+    * P × nq × k partial-row shuffle is pure overhead. Volatile for
+    * specs. */
+  @volatile var maxRows: Long = 1L << 20
 
   /** Driver-merge pays only past the heap threshold — below it the partial
     * row volume is small and the aggregate path's shuffle is cheaper than
@@ -197,12 +179,9 @@ private[graft] object CoarseMerge {
     * P × nq × k individual partial ROWS (640M records at nq=10k,
     * k=2000, P=32 — the measured bound of the nq10k proof row);
     * [[mergeDistributed]] ships the same information as P × shards
-    * primitive-array records instead. Disable with
-    * `-Dgraft.coarse.dist.merge=false` (volatile for the A/B bench). */
-  @volatile var distMerge: Boolean =
-    sys.props.get("graft.coarse.dist.merge").forall(_.toBoolean)
+    * primitive-array records instead. */
   def distEligible(nq: Int, k: Int): Boolean =
-    distMerge && k > TopBuffer.HeapThreshold && nq.toLong * k > maxRows
+    k > TopBuffer.HeapThreshold && nq.toLong * k > maxRows
 
   /** Contiguous, balanced query-index spans `[start, end)` such that each
     * chunk's per-task selection state (span × k × 16 B) fits

@@ -284,7 +284,7 @@ object Dedup {
     * were silently missed. maxHamming is REQUIRED ≤ 15 — see
     * [[simhashCandidates]] — since 16 bands of 4 bits are the narrowest
     * structural split and larger cutoffs degenerate toward all-pairs.)
-    * Calibration context, tools/SimhashProbe: every exact 3-gram
+    * Calibration context (banding sweep): every exact 3-gram
     * near-dup pair on the sf corpora sits at Hamming ≤ 5; maxHamming=3
     * capped recall at 0.60; h≤5 reaches 1.00 but admits visibly looser
     * pairs (min cosine 0.68) — so 4 is the default and 5 the recall-first
@@ -302,11 +302,7 @@ object Dedup {
 
   /** The banding stage of [[simhashPairs]] WITHOUT the final Hamming
     * filter: every distinct pair agreeing on ≥ 1 of the `maxHamming + 1`
-    * pigeonhole bands, with its exact Hamming attached. Exposed for
-    * calibration (tools/SimhashProbe measures the production banding's
-    * false-candidate pressure — candidates emitted per true pair — from
-    * this stage directly, instead of a near-cross-join maxHamming=64
-    * call).
+    * pigeonhole bands, with its exact Hamming attached.
     *
     * `maxHamming` is capped at 15: 16 bands of 64 bits are the narrowest
     * split (4 bits each) where the pigeonhole argument is still the one
@@ -403,12 +399,13 @@ object Dedup {
     // count at Σ_c |A_c|·|B_c| instead of duplicating every pair once
     // per shared expanded bucket (the symmetric form degenerates to
     // numBlocks × all-pairs when the margin covers the data diameter).
+    // one centroid broadcast serves both sides of the blocked join
+    val centroids = base.sparkSession.sparkContext.broadcast(model.centroids)
     val nearest = base.withColumn("bucket",
-      Ivf.nearestCentroid(col("vec"), model.centroids, "l2sqr").cast("int"))
+      Ivf.nearestCentroid(col("vec"), centroids, "l2sqr").cast("int"))
     val expanded = base.withColumn("bucket",
       explode(ColumnShim.column(CentroidsWithinRadius(
-        ColumnShim.expression(col("vec")),
-        base.sparkSession.sparkContext.broadcast(model.centroids), margin))))
+        ColumnShim.expression(col("vec")), centroids, margin))))
     val pairs = nearest.as("a")
       .join(expanded.as("b"),
         col("a.bucket") === col("b.bucket") && col("a.id") =!= col("b.id"))

@@ -340,7 +340,7 @@ object Hnsw {
     * spid). Returns (codes n×m, cosine centroid self-dot per node — null
     * for L2) per entry.
     *
-    * Measured negative result (r11, WalkProbe rank-48 d960 @50k): a
+    * Measured negative result (r11, walk timing, rank-48 d960 @50k): a
     * DiskANN-style inline-neighbor-blocks layout (each node's level-0
     * neighbors' codes transposed 16-lane group-major, scored with the
     * serve path's `Simd.adcBlock1` permute kernel) reproduced the scalar

@@ -179,7 +179,7 @@ object Ivf {
     // blob (`vecb`) instead of `array<float>`: scans decode ONE binary
     // cell per row where the array layout pays per-element assembly —
     // the measured bound of the float-heavy rerank rows
-    // (tools/VecDecodeProbe, r20); VecDistance scores the blob in place
+    // (r20 decode timing); VecDistance scores the blob in place
     // with bit-identical arithmetic (DistanceSpec). Readers detect the
     // column by name, so both layouts serve interchangeably.
     val data =

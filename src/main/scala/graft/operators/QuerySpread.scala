@@ -11,7 +11,7 @@ import org.apache.spark.sql.Dataset
   * catalog lookup over 32 tasks is 31 empty dispatches. When Catalyst
   * statistics expose an exact row count (a cached-and-materialized query
   * batch does, via its InMemoryRelation; a `limit(n)` plan reports n),
-  * clamp the batch to `ceil(nq/queriesPerTask)` tasks; when the count is
+  * clamp the batch to `ceil(nq/QueriesPerTask)` tasks; when the count is
   * unknown (an arbitrary lazy plan), keep the full cluster width — a
   * wrong narrow guess on a huge batch would cost far more than extra
   * empty tasks on a small one.
@@ -29,19 +29,15 @@ import org.apache.spark.sql.Dataset
   * batch should occupy a few tasks, not 1000.
   */
 private[graft] object QuerySpread {
-  /** Queries per task target; override for experiments via the
-    * `graft.queriesPerTask` system property or SPARK_GRAFT_QUERIES_PER_TASK. */
-  private def queriesPerTask: Int =
-    sys.props.get("graft.queriesPerTask")
-      .orElse(sys.env.get("SPARK_GRAFT_QUERIES_PER_TASK"))
-      .map(_.toInt).getOrElse(32)
+  /** Queries per task target. */
+  private val QueriesPerTask = 32L
 
   def apply[T](qds: Dataset[T]): Dataset[T] = {
     val par = qds.sparkSession.sparkContext.defaultParallelism
     val cur = qds.rdd.getNumPartitions
     val target = qds.queryExecution.optimizedPlan.stats.rowCount match {
       case Some(n) =>
-        val qpt = queriesPerTask.toLong
+        val qpt = QueriesPerTask
         math.max(1L, math.min(par.toLong, (n.toLong + qpt - 1) / qpt)).toInt
       case None => par
     }

@@ -389,7 +389,7 @@ object Sq extends Serializable {
     * with per-row query subsets. Same distances term for term as the
     * declarative [[SqAdcDistance]] arm, so ties and results agree exactly.
     * Measured at 10k×960 the decode-once kernel serves ~1.5-2× the
-    * declarative per-(row×query) decode (bench `sq_ivf_kernel_ab`). */
+    * declarative per-(row×query) decode (r14 kernel A/B). */
   private def coarseIvfKernel(
       probedRows: DataFrame,
       qs: Array[(Long, Array[Float])],
@@ -794,8 +794,8 @@ object Sq extends Serializable {
   }
 
   /** The r14 declarative probed scan (per-(row×query) codegen decode) —
-    * kept as the A/B twin for the kernel arm (bench `sq_ivf_kernel_ab`):
-    * same logical result as [[searchIvf]], slower physical shape.
+    * kept as SqSpec's reference for the kernel and partitioned arms: same
+    * logical result as [[searchIvf]], slower physical shape.
     *
     * @param nqHint caller-known query count, used to price the rerank
     *               broadcast gate without an extra count job per call

@@ -90,7 +90,7 @@ final class TopKState(val k: Int, withPayload: Boolean) {
   * (measured: 128 MB sort pointer arrays per task on a 200M-pair scan)
   * even though this state is k-bounded and the hash map stays tiny. Set
   * the threshold at or above the expected distinct query count per task
-  * (graft's Bench/Verify sessions use 8192).
+  * (graft's Verify session uses 8192).
   */
 case class TopKAggregate(
     idExpr: Expression,

@@ -74,7 +74,7 @@ class BqSpec extends SparkTestBase {
     // the sf0.001 embeddings are 64-dim zero-mean near-uniform — the
     // HARDEST case for a 64-bit sign sketch (neighbors barely closer than
     // random); candidates=200 of 500 measures 0.967 recall@10 on this
-    // fixed fixture (d960 fixtures in Bench measure the realistic regime)
+    // fixed fixture (vecbench's routed_d960 workload measures the d960 regime)
     val k = 10
     val got = Bq.searchRerank(base, qs, k = k, candidates = 200)
     val gotRows = got.orderBy("query_id", "distance", "id").collect()
@@ -249,7 +249,7 @@ class BqSpec extends SparkTestBase {
 
   test("routed autoCandidates: pool-derived budget, flat-arm cap, 10k floor, recall held") {
     import graft.operators.Bq
-    // pool = np·N/kc; budget = 2/3 pool (CandProbe-calibrated), capped at
+    // pool = np·N/kc; budget = 2/3 pool (sweep-calibrated), capped at
     // the flat-arm budget, floored at 10·k
     assert(Bq.autoCandidates(1000000L, 10, 1, 512) == 1302) // 2/3 of 1953
     assert(Bq.autoCandidates(1000000L, 10, 1, 32) == 2000)  // cap: flat arm

@@ -853,7 +853,7 @@ class CatalogSpec extends SparkTestBase {
     assert(VecDB.adcWalkEligible(960, 120))
     assert(VecDB.adcWalkEligible(64, 8))
     // the RAM-bound pinned regime has a wider crossover (ratio 6): m=160
-    // codes win there (AdcBench r11) but stay gated when cache-resident
+    // codes win there (r11 kernel timing) but stay gated when cache-resident
     assert(VecDB.adcWalkEligible(960, 160, pinned = true))
     assert(!VecDB.adcWalkEligible(960, 160))
     assert(!VecDB.adcWalkEligible(960, 320, pinned = true))

@@ -99,20 +99,6 @@ class CoarseChunkSpec extends SparkTestBase {
       r
     } finally CoarseMerge.maxRows = savedRows
     assert(dist == want)
-    // kill switch: dist disabled falls through to the aggregate path
-    val savedFlag = CoarseMerge.distMerge
-    val agg = try {
-      CoarseMerge.maxRows = 1L
-      CoarseMerge.distMerge = false
-      val r = Bq.hammingBroadcast(base, qs, k = k)
-        .orderBy("query_id", "hamming", "id").collect().toSeq
-      assert(CoarseMerge.lastPath == "agg")
-      r
-    } finally {
-      CoarseMerge.maxRows = savedRows
-      CoarseMerge.distMerge = savedFlag
-    }
-    assert(agg == want)
     // SQ serving kernel through the dist path too (TopBuffer arrays cross a
     // real shuffle: local[4] serializes them between stages)
     val model = Sq.train(base)
