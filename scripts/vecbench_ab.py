@@ -15,7 +15,11 @@ For every metric the report prints each side's median and quartiles, how
 many pairs the change won (ties count for neither side) and a verdict: a
 gain needs at least nine tenths of the pairs won and a median difference
 larger than the parent's own quartile spread; a loss is the same rule with
-the sides swapped. Raw results go to <workdir>/vecbench_ab_<stamp>.jsonl.
+the sides swapped. Each run also records the host's 1-minute load average
+(/proc/loadavg) just before and just after it and its wall time; the report
+lists them per pair and flags a pair whose two sides' mean load differs by
+more than 1.0, since such a pair compares two host speeds as much as two
+trees. Raw results go to <workdir>/vecbench_ab_<stamp>.jsonl.
 The extracted trees are removed at the end unless --keep is given.
 """
 import argparse
@@ -41,6 +45,23 @@ def better_direction():
         bench = json.load(fh)
     return {m["name"]: m["better"]
             for m in bench.get("end_to_end", []) + bench.get("per_layer", [])}
+
+
+LOAD_FLAG = 1.0
+
+
+def loadavg():
+    """The host's 1-minute load average, or None where /proc is absent."""
+    try:
+        with open("/proc/loadavg") as fh:
+            return float(fh.read().split()[0])
+    except (OSError, ValueError, IndexError):
+        return None
+
+
+def mean_load(host):
+    xs = [x for x in (host.get("load_before"), host.get("load_after")) if x is not None]
+    return sum(xs) / len(xs) if xs else None
 
 
 def run_once(tree, workload, seed, seconds, trace):
@@ -109,21 +130,27 @@ def main():
 
     log_path = os.path.join(a.workdir, f"vecbench_ab_{stamp}.jsonl")
     results = {"parent": [], "change": []}
+    hosts = {"parent": [], "change": []}
     try:
         with open(log_path, "w") as log:
             for i in range(a.n):
                 seed = a.seed0 + i
                 order = ("parent", "change") if i % 2 == 0 else ("change", "parent")
                 for side in order:
+                    load0 = loadavg()
                     t0 = time.time()
                     r = run_once(trees[side], a.workload, seed, seconds, a.trace)
+                    host = {"load_before": load0, "load_after": loadavg(),
+                            "wall_s": round(time.time() - t0, 1)}
                     results[side].append(r)
+                    hosts[side].append(host)
                     log.write(json.dumps({"pair": i, "seed": seed, "side": side,
-                                          "result": r}) + "\n")
+                                          "host": host, "result": r}) + "\n")
                     log.flush()
                     print(f"[ab] pair {i} seed {seed} {side}: "
                           f"{'ok' if 'metrics' in r else r.get('error')} "
-                          f"correct={r.get('correct')} ({time.time() - t0:.0f} s)",
+                          f"correct={r.get('correct')} ({host['wall_s']:.0f} s, "
+                          f"load {host['load_before']} -> {host['load_after']})",
                           file=sys.stderr)
     finally:
         if not a.keep:
@@ -141,6 +168,15 @@ def main():
                or r.get("failed", 0)]
         if bad:
             print(f"  {side}: {len(bad)} runs errored, incorrect or with failed operations")
+    print(f"{'pair':>4s} {'seed':>6s} {'parent load before/after':>25s} {'wall':>6s} "
+          f"{'change load before/after':>25s} {'wall':>6s}")
+    for i, (hp, hc) in enumerate(zip(hosts["parent"], hosts["change"])):
+        lp, lc = mean_load(hp), mean_load(hc)
+        flag = ("  load differs by more than %.1f" % LOAD_FLAG
+                if lp is not None and lc is not None and abs(lp - lc) > LOAD_FLAG else "")
+        fmt = lambda h: f"{h['load_before']}/{h['load_after']}"
+        print(f"{i:>4d} {a.seed0 + i:>6d} {fmt(hp):>25s} {hp['wall_s']:>6.0f} "
+              f"{fmt(hc):>25s} {hc['wall_s']:>6.0f}{flag}")
     if not ok:
         return 1
     names = sorted(set(ok[0][0]["metrics"]) & set(ok[0][1]["metrics"]))

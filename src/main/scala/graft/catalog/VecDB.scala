@@ -368,9 +368,9 @@ class VecDB(spark: SparkSession, root: String) {
     * delete+recreate. */
   private def hnswKey(e: TableEntry): String =
     s"${hnswBroadcastKey(e)}n${e.nextId}"
-  /** Serving cacheKey of the broadcast HNSW arms: no nextId, because that
-    * arm tells appends apart by the sidecar's part files and ships only the
-    * new subgraphs ([[graft.operators.Hnsw.searchBroadcast]]). */
+  /** Serving cacheKey of the driver-resident HNSW arms: no nextId, because
+    * that arm tells appends apart by the sidecar's part files and loads only
+    * the new subgraphs ([[graft.operators.Hnsw.searchBroadcast]]). */
   private def hnswBroadcastKey(e: TableEntry): String =
     s"${hnswDir(e)}@c${e.created}v${e.version}"
   /** Routing-centroid sidecar of a routed HNSW index (holds `centroids`,
@@ -1433,9 +1433,12 @@ class VecDB(spark: SparkSession, root: String) {
     * (query_id, query_vec); returns (query_id, id, distance, meta)
     * ascending (distance, id) per query.
     *
-    * Serving regime (batch within [[serveMaxQueries]]): broadcast/pinned
-    * arms run and their winners are collected before this returns; each
-    * winner's meta comes from the driver-side part-file cache
+    * Serving regime (batch within [[serveMaxQueries]]): the serving arms
+    * run and their winners reach the driver before this returns — the
+    * HNSW arms under the broadcast gate walk driver-resident graphs and
+    * hand their rows over directly, so a warm search of a local query batch
+    * runs no Spark job; the other arms are collected. Each winner's meta
+    * comes from the driver-side part-file cache
     * ([[attachMeta]], [[metaParts]]), and the result is a local relation,
     * so collecting it launches no Spark job. A search after an append reads
     * only the appended part files' meta; a table whose packed meta exceeds
@@ -1469,44 +1472,48 @@ class VecDB(spark: SparkSession, root: String) {
     // serving-shape broadcast paths for in-memory-sized tables, declarative
     // plans beyond (same results; specs assert equality)
     val small = e.nextId <= FlatBroadcastMaxRows
-    val hits = if (!serveable) (ef, e.pq) match {
-      // oversized query batch: driver-unbounded shapes only — no serving
-      // arm may collect this batch to the driver
-      case (efOpt, pqInfo) if e.hasHnsw && pattern.isEmpty =>
-        // INDEXED oversized-batch arm: the HNSW sidecar keeps pruning the
-        // scan exactly when the workload is largest. Queries stay a
-        // distributed Dataset end to end ([[Hnsw.searchPinnedStream]] —
-        // probe-pid explode + pid-exact shuffle + zip against the pinned
-        // index); same ADC cost gate as the serving arms.
-        val idx = sidecarDf(hnswDir(e).toString, e)
-        val ck = Some(hnswKey(e))
-        val usePq = efOpt.isDefined && pqInfo.isDefined &&
-          VecDB.adcWalkEligible(e.dim, pqInfo.get.m, pinned = true)
-        val route =
-          if (e.hnswRouted) {
-            val rm = cachedRouteModel(e)
-            Some((rm, rm.defaultNProbes))
-          } else None
-        lastServedArm =
-          if (usePq) "knn_pq_stream"
-          else if (efOpt.isDefined && pqInfo.isDefined)
-            "knn_pq_stream_gated_plain_hnsw"
-          else "hnsw_stream"
-        Hnsw.searchPinnedStream(idx, queries, k, efOpt,
-          e.dist, efConstruction = e.efConstruction, upperBound = ub,
-          cacheKey = ck, pq = if (usePq) Some(cachedPqModel(key, e)) else None,
-          route = route)
-      case (Some(efv), Some(info)) if !info.residual =>
-        lastServedArm = "declarative_pq"
-        val codes = sidecarDf(pqDir(e).resolve("codes").toString, e)
-        Pq.searchFlat(filtered.join(codes, "id"), cachedPqModel(key, e), queries,
-          k, efv, ub)
-      case _ =>
-        // exact distributed KNN (ef is a serving-arm knob; the declarative
-        // exact join returns the un-approximated answer)
-        lastServedArm = "declarative_exact"
-        Knn.exactDeclarative(filtered, queries, k, e.dist, upperBound = ub)
-    } else (ef, e.pq) match {
+    if (!serveable) {
+      val hits = (ef, e.pq) match {
+        // oversized query batch: driver-unbounded shapes only — no serving
+        // arm may collect this batch to the driver
+        case (efOpt, pqInfo) if e.hasHnsw && pattern.isEmpty =>
+          // INDEXED oversized-batch arm: the HNSW sidecar keeps pruning the
+          // scan exactly when the workload is largest. Queries stay a
+          // distributed Dataset end to end ([[Hnsw.searchPinnedStream]] —
+          // probe-pid explode + pid-exact shuffle + zip against the pinned
+          // index); same ADC cost gate as the serving arms.
+          val idx = sidecarDf(hnswDir(e).toString, e)
+          val ck = Some(hnswKey(e))
+          val usePq = efOpt.isDefined && pqInfo.isDefined &&
+            VecDB.adcWalkEligible(e.dim, pqInfo.get.m, pinned = true)
+          val route =
+            if (e.hnswRouted) {
+              val rm = cachedRouteModel(e)
+              Some((rm, rm.defaultNProbes))
+            } else None
+          lastServedArm =
+            if (usePq) "knn_pq_stream"
+            else if (efOpt.isDefined && pqInfo.isDefined)
+              "knn_pq_stream_gated_plain_hnsw"
+            else "hnsw_stream"
+          Hnsw.searchPinnedStream(idx, queries, k, efOpt,
+            e.dist, efConstruction = e.efConstruction, upperBound = ub,
+            cacheKey = ck, pq = if (usePq) Some(cachedPqModel(key, e)) else None,
+            route = route)
+        case (Some(efv), Some(info)) if !info.residual =>
+          lastServedArm = "declarative_pq"
+          val codes = sidecarDf(pqDir(e).resolve("codes").toString, e)
+          Pq.searchFlat(filtered.join(codes, "id"), cachedPqModel(key, e), queries,
+            k, efv, ub)
+        case _ =>
+          // exact distributed KNN (ef is a serving-arm knob; the declarative
+          // exact join returns the un-approximated answer)
+          lastServedArm = "declarative_exact"
+          Knn.exactDeclarative(filtered, queries, k, e.dist, upperBound = ub)
+      }
+      filtered.select(col("id"), col("meta")).join(hits, "id")
+        .select(col("query_id"), col("id"), col("distance"), col("meta"))
+    } else attachMeta(e, listing, (ef, e.pq) match {
       case (Some(efv), Some(info))
           if e.hasHnsw && pattern.isEmpty &&
             !VecDB.adcWalkEligible(e.dim, info.m,
@@ -1532,18 +1539,18 @@ class VecDB(spark: SparkSession, root: String) {
           // per-cluster shifts) — never the cluster-blind broadcast arm
           if (hnswEligible(e.nextId, e.dim) && !model.residual) {
             lastServedArm = "knn_pq_broadcast"
-            Hnsw.searchBroadcastPq(idx, queries, model, k, Some(efv),
+            Hnsw.residentPqRows(idx, queries, model, k, Some(efv),
               efConstruction = e.efConstruction, upperBound = ub,
               cacheKey = Some(hnswBroadcastKey(e)))
           } else if (e.hnswRouted) {
             lastServedArm = "knn_pq_routed"
-            IvfHnsw.searchPinnedPq(idx, cachedRouteModel(e), model, queries,
-              k, Some(efv), efConstruction = e.efConstruction,
-              upperBound = ub, cacheKey = ck)
+            collectHits(IvfHnsw.searchPinnedPq(idx, cachedRouteModel(e), model,
+              queries, k, Some(efv), efConstruction = e.efConstruction,
+              upperBound = ub, cacheKey = ck))
           } else {
             lastServedArm = "knn_pq_pinned"
-            Hnsw.searchPinnedPq(idx, queries, model, k, Some(efv),
-              efConstruction = e.efConstruction, upperBound = ub, cacheKey = ck)
+            collectHits(Hnsw.searchPinnedPq(idx, queries, model, k, Some(efv),
+              efConstruction = e.efConstruction, upperBound = ub, cacheKey = ck))
           }
         } else if (model.residual) {
           // pattern-filtered search on a residual-PQ table: the flat arms
@@ -1554,7 +1561,7 @@ class VecDB(spark: SparkSession, root: String) {
         } else {
           val codes = sidecarDf(pqDir(e).resolve("codes").toString, e)
           val encoded = filtered.join(codes, "id")
-          if (pattern.isEmpty &&
+          collectHits(if (pattern.isEmpty &&
               pqEligible(e.nextId, e.dim, info.m)) {
             lastServedArm = "pq_flat_serve"
             val ck = Some(s"${pqDir(e)}@c${e.created}v${e.version}n${e.nextId}")
@@ -1565,7 +1572,7 @@ class VecDB(spark: SparkSession, root: String) {
           } else {
             lastServedArm = "pq_flat"
             Pq.searchFlat(encoded, model, queries, k, efv, ub)
-          }
+          })
         }
       case (Some(efv), None) if e.hasHnsw =>
         lastServedArm = "hnsw"
@@ -1644,8 +1651,8 @@ class VecDB(spark: SparkSession, root: String) {
               candidates, dist = e.dist,
               coarseSelect = if (candidates < liveRows(e)) "auto" else "exact")
           }
-        if (ub == Double.PositiveInfinity) hits
-        else hits.filter(col("distance") <= lit(ub))
+        collectHits(if (ub == Double.PositiveInfinity) hits
+          else hits.filter(col("distance") <= lit(ub)))
       case (efOpt, _) if e.bq.isDefined && !e.hasHnsw && pattern.isEmpty =>
         val info = e.bq.get
         val hits =
@@ -1699,34 +1706,38 @@ class VecDB(spark: SparkSession, root: String) {
                 bqDir(e).resolve("model").toString, e)(loadBqModel(e)),
               coarseSelect = if (candidates < liveRows(e)) "auto" else "exact")
           }
-        if (ub == Double.PositiveInfinity) hits
-        else hits.filter(col("distance") <= lit(ub))
+        collectHits(if (ub == Double.PositiveInfinity) hits
+          else hits.filter(col("distance") <= lit(ub)))
       // IVF arms (extension): ef → n_probes, the reference's IVF ef mapping
       // (ivf_index.rs:137-143); the partitioned layout prunes the scan to
       // the probed clusters. Metadata patterns fall through to Flat (the
       // layout stores no meta and pruning would fight the filter).
       case (Some(efv), None) if e.ivf.isDefined && pattern.isEmpty =>
         lastServedArm = "ivf"
-        ivfSearch(e, queries, k, Some(efv), ub)
+        collectHits(ivfSearch(e, queries, k, Some(efv), ub))
       case (None, _) if e.hasHnsw =>
         lastServedArm = "hnsw"
         hnswSearch(e, filtered, queries, k, None, ub, pattern.isEmpty)
       case (None, None) if e.ivf.isDefined && pattern.isEmpty =>
         lastServedArm = "ivf"
-        ivfSearch(e, queries, k, None, ub)
+        collectHits(ivfSearch(e, queries, k, None, ub))
       case _ => // Flat path; ef ignored (dynamic_index.rs:75-80)
-        if (small) {
+        collectHits(if (small) {
           lastServedArm = "flat_broadcast"
           Knn.exactBroadcast(filtered, queries, k, e.dist, upperBound = ub)
         } else {
           lastServedArm = "flat"
           Knn.exact(filtered, queries, k, e.dist, upperBound = ub)
-        }
-    }
-    if (serveable) attachMeta(e, listing, hits)
-    else filtered.select(col("id"), col("meta")).join(hits, "id")
-      .select(col("query_id"), col("id"), col("distance"), col("meta"))
+        })
+    })
   }
+
+  /** A serving arm's winners collected to the driver as
+    * (query_id, id, distance). */
+  private def collectHits(hits: DataFrame): Array[(Long, Long, Double)] =
+    hits.select(col("query_id").cast("long"), col("id").cast("long"),
+      col("distance").cast("double")).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
 
   /** Output schema of [[searchBatch]]. */
   private def searchOutSchema: StructType = StructType(Seq(
@@ -1738,16 +1749,13 @@ class VecDB(spark: SparkSession, root: String) {
   /** J2 — metadata attach of the serving regime: the reference's
     * positional lookup (`metadata_vec_table.rs:210-211`) over a driver-side
     * cache of the table's packed part-file meta ([[metaParts]]). The winners
-    * (≤ Q·k rows) are collected and the result is built on the driver as a
-    * local relation in (query_id, distance, id) order, so the caller's
-    * `collect()` launches no Spark job. A winner no part file holds keeps
-    * null meta. */
+    * (≤ Q·k driver rows) come straight from the serving arm, and the result
+    * is built on the driver as a local relation in (query_id, distance, id)
+    * order, so the caller's `collect()` launches no Spark job. A winner no
+    * part file holds keeps null meta. */
   private def attachMeta(e: TableEntry, listing: DataFrame,
-      hits: DataFrame): DataFrame = {
-    val rows = hits.select(col("query_id").cast("long"),
-      col("id").cast("long"), col("distance").cast("double")).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-      .sortBy { case (q, id, d) => (q, d, id) }(
+      hits: Array[(Long, Long, Double)]): DataFrame = {
+    val rows = hits.sortBy { case (q, id, d) => (q, d, id) }(
         Ordering.Tuple3(Ordering.Long, Ordering.Double.TotalOrdering, Ordering.Long))
     val parts = if (rows.isEmpty) Array.empty[MetaPart] else metaParts(e, listing)
     def metaOf(id: Long): Map[String, String] = {
@@ -1834,17 +1842,19 @@ class VecDB(spark: SparkSession, root: String) {
   /** HNSW path: the stored sidecar when the whole table is searched; with a
     * metadata pattern (our extension — the reference's `search` takes none)
     * the stored links would point at filtered-out nodes, so fall back to
-    * filter-then-build, which also searches fewer rows. */
+    * filter-then-build, which also searches fewer rows. Under the broadcast
+    * gate the driver-resident walk returns its rows directly. */
   private def hnswSearch(e: TableEntry, filtered: DataFrame, queries: DataFrame,
-      k: Int, ef: Option[Int], ub: Double, wholeTable: Boolean): DataFrame =
+      k: Int, ef: Option[Int], ub: Double,
+      wholeTable: Boolean): Array[(Long, Long, Double)] =
     if (wholeTable) {
       val idx = sidecarDf(hnswDir(e).toString, e)
       val ck = Some(hnswKey(e))
       if (hnswEligible(e.nextId, e.dim))
-        Hnsw.searchBroadcast(idx, queries, k, ef, e.dist,
+        Hnsw.residentRows(idx, queries, k, ef, e.dist,
           efConstruction = e.efConstruction, upperBound = ub,
           cacheKey = Some(hnswBroadcastKey(e)))
-      else if (e.hnswRouted)
+      else collectHits(if (e.hnswRouted)
         // beyond-broadcast + routed: walk only each query's routeProbes
         // nearest clusters (delta subgraphs always walked)
         IvfHnsw.searchPinned(idx, cachedRouteModel(e), queries, k, ef,
@@ -1853,10 +1863,10 @@ class VecDB(spark: SparkSession, root: String) {
         // beyond-broadcast: pin the index across the cluster (resident,
         // partitioned) instead of re-shuffling it per batch
         Hnsw.searchPinned(idx, queries, k, ef, e.dist,
-          efConstruction = e.efConstruction, upperBound = ub, cacheKey = ck)
+          efConstruction = e.efConstruction, upperBound = ub, cacheKey = ck))
     } else
-      Hnsw.search(filtered, queries, k, ef, e.dist,
-        efConstruction = e.efConstruction, upperBound = ub)
+      collectHits(Hnsw.search(filtered, queries, k, ef, e.dist,
+        efConstruction = e.efConstruction, upperBound = ub))
 
   /** Single-query convenience matching the reference signature: ascending
     * (metadata, distance) pairs. */

@@ -24,9 +24,10 @@ object CacheStats {
   /** PQ code-matrix (re)encodes for ADC arms. */
   val codesBuilds = new AtomicLong
   val codesBuildNanos = new AtomicLong
-  /** Index-sidecar rows the broadcast HNSW arms collected to the driver and
-    * broadcast (full and delta ships alike), and the wall time those ships
-    * took. An append that ships its own rows, not the table, shows here. */
+  /** Index-sidecar rows the driver-resident HNSW arms collected to the
+    * driver (full, delta and evicted-graph loads alike), and the wall time
+    * those loads took. An append that loads its own rows, not the table,
+    * shows here. */
   val indexRowsShipped = new AtomicLong
   val indexShipNanos = new AtomicLong
   /** Data rows whose `(id, meta)` the catalog's metadata attach read into

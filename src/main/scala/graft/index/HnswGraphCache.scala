@@ -1,16 +1,18 @@
 package graft.index
 
-/** Executor-local LRU of rebuilt HNSW subgraphs, keyed by (index identity,
+/** JVM-local LRU of rebuilt HNSW subgraphs, keyed by (index identity,
   * subgraph or partition id). Serving workloads search the same stored index
   * with batch after batch of queries; without this every batch re-decodes
   * the adjacency rows and re-allocates the graph. A (key, id) pair must name
-  * one immutable subgraph. The broadcast arm keys on a per-table generation
-  * under which a subgraph never changes: an append adds new pids to the
+  * one immutable subgraph. The driver-resident serving arm
+  * (`graft.operators.ResidentIndex`) keys on a per-table generation under
+  * which a subgraph never changes: an append adds new pids to the
   * generation (only those graphs build), while compaction or a rebuild
-  * starts a new generation and evicts the old one
-  * (`graft.operators.BroadcastIndex`). The pinned arms key on table
-  * version + row count, so any add/delete rotates the key; the catalog
-  * evicts the superseded key.
+  * starts a new generation and evicts the old one; a graph this budget
+  * evicts reloads from its own part files on the next search. The pinned
+  * arms cache per-partition groups on executors, keyed on table version +
+  * row count, so any add/delete rotates the key; the catalog evicts the
+  * superseded key.
   *
   * Eviction is BYTE-budgeted, not entry-counted (r13 lesson: a 64-entry cap
   * against a 96-entry working set turned interleaved serving reps into a
@@ -75,6 +77,9 @@ object HnswGraphCache {
   // other leaves (reads are lock-free, so no cross-monitor deadlock)
   private val cache = new ByteLru[(String, Int), Entry](
     () => math.max(maxBytes / 16, maxBytes - groupCache.currentBytes))
+
+  /** The cached graph of (key, pid), if resident; never builds. */
+  def resident(key: String, pid: Int): Option[Entry] = cache.get((key, pid))
 
   def get(key: String, pid: Int)(build: => Entry): Entry = {
     val k = (key, pid)

@@ -1,8 +1,9 @@
 package graft.operators
 
 import org.apache.spark.TaskContext
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
 import graft.functions.PqKernel
 import graft.index.{HnswGraph, HnswGraphCache}
 
@@ -244,8 +245,8 @@ object Hnsw {
   }
 
   /** Evict every DRIVER-side cached serving structure whose cacheKey starts
-    * with `prefix` — pinned RDDs (unpersisted), index broadcasts
-    * (unpersisted), and the executor-local graph/code caches reachable from
+    * with `prefix` — pinned RDDs (unpersisted), the driver-resident
+    * serving state ([[ResidentIndex]]), and the graph/code caches of
     * this JVM (effective in local mode; on a cluster, remote executors'
     * entries age out of their LRUs and are additionally fenced by the
     * content-versioned cacheKey rotation). Called by the catalog when a
@@ -261,16 +262,16 @@ object Hnsw {
         }
       }
     }
-    BroadcastIndex.invalidate(prefix)
+    ResidentIndex.invalidate(prefix)
     pinnedCodesCache.removeIf(_._1.startsWith(prefix))
     pqCodesCache.removeIf(_._1.startsWith(prefix))
     graft.index.HnswGraphCache.invalidate(prefix)
   }
 
   /** Evict the serving state of exactly one cacheKey — its pinned RDD
-    * (unpersisted), its executor-local graphs and its PQ code matrices —
-    * and nothing under keys it merely prefixes. The catalog evicts the key
-    * an append superseded; the broadcast state evicts a generation it
+    * (unpersisted), its cached graphs and its PQ code matrices — and
+    * nothing under keys it merely prefixes. The catalog evicts the key an
+    * append superseded; the resident state evicts a generation it
     * replaced. */
   private[graft] def evictKey(key: String): Unit = {
     pinnedCache.synchronized(Option(pinnedCache.remove(key)))
@@ -386,31 +387,7 @@ object Hnsw {
         val cent =
           if (residCents != null && pid < residCents.length) residCents(pid)
           else null
-        val nn = e.ids.length
-        val cm = new Array[Byte](nn * pqM)
-        val cd = if (cosine) new Array[Double](nn) else null
-        var r = 0
-        while (r < nn) {
-          val v0 = e.graph.exportNode(r)._1
-          val v = if (cent == null) v0 else {
-            var j = 0
-            while (j < v0.length) { v0(j) -= cent(j); j += 1 }
-            v0 // exportNode returns a fresh copy — safe to shift in place
-          }
-          PqKernel.encodeDecodedInto(v, pqCentroids, pqGroups, cosine,
-            cm, r * pqM)
-          if (cosine) {
-            var acc = 0.0
-            var g = 0; var gk = 0; val base = r * pqM
-            while (g < pqM) {
-              acc += pqCentDot(gk + (cm(base + g) & 0xff))
-              g += 1; gk += pqK
-            }
-            cd(r) = acc
-          }
-          r += 1
-        }
-        (cm, cd)
+        encodeCodes(e, cent, pqCentroids, pqGroups, pqCentDot, pqM, pqK, cosine)
       }
     ck match {
       case Some(key) =>
@@ -423,6 +400,42 @@ object Hnsw {
         }
       case None => buildCodes
     }
+  }
+
+  /** One subgraph's PQ codes (n×m, row-major) and, for cosine, each node's
+    * centroid self-dot sum (null for L2), encoded from the graph's stored
+    * vectors — shifted by `cent` first when it is non-null (residual
+    * encoding, [[codeMatricesFor]]). */
+  private def encodeCodes(
+      e: HnswGraphCache.Entry, cent: Array[Float],
+      pqCentroids: Array[Array[Array[Float]]], pqGroups: Array[(Int, Int)],
+      pqCentDot: Array[Double], pqM: Int, pqK: Int, cosine: Boolean)
+    : (Array[Byte], Array[Double]) = {
+    val nn = e.ids.length
+    val cm = new Array[Byte](nn * pqM)
+    val cd = if (cosine) new Array[Double](nn) else null
+    var r = 0
+    while (r < nn) {
+      val v0 = e.graph.exportNode(r)._1
+      val v = if (cent == null) v0 else {
+        var j = 0
+        while (j < v0.length) { v0(j) -= cent(j); j += 1 }
+        v0 // exportNode returns a fresh copy — safe to shift in place
+      }
+      PqKernel.encodeDecodedInto(v, pqCentroids, pqGroups, cosine,
+        cm, r * pqM)
+      if (cosine) {
+        var acc = 0.0
+        var g = 0; var gk = 0; val base = r * pqM
+        while (g < pqM) {
+          acc += pqCentDot(gk + (cm(base + g) & 0xff))
+          g += 1; gk += pqK
+        }
+        cd(r) = acc
+      }
+      r += 1
+    }
+    (cm, cd)
   }
 
   /** The walk LUT for one (query, cluster) pair under optional residual
@@ -465,9 +478,9 @@ object Hnsw {
     new HnswGraphCache.ByteLru[(String, Int), Array[(Array[Byte], Array[Double])]](
       () => math.max(codesMaxBytes / 16, codesMaxBytes - pqCodesCache.currentBytes))
 
-  /** Serving-shape search for indexes too big to broadcast: PIN the stored
-    * index across the cluster (repartitioned by subgraph, persisted) and
-    * broadcast the QUERIES — the memory inverse of [[searchBroadcast]] and
+  /** Serving-shape search for indexes too big for the driver: PIN the
+    * stored index across the cluster (repartitioned by subgraph, persisted)
+    * and broadcast the QUERIES — the memory inverse of [[searchBroadcast]] and
     * the shuffle-free replacement for [[searchIndexed]], whose per-batch
     * groupByKey re-shuffles every index byte. The first batch pays one
     * shuffle of the sidecar plus the graph rebuilds; rebuilt graphs pin per
@@ -861,18 +874,17 @@ object Hnsw {
     merge(bounded(partial, upperBound), k)
   }
 
-  /** Serving-shape search: broadcast the stored index, partition the
-    * QUERIES. The inverse of [[searchIndexed]] — right whenever the index
-    * fits in executor memory (the reference's entire operating envelope:
-    * its single-process graph IS an index-in-memory design). Zero
-    * shuffles: each task searches every subgraph for its query slice and
-    * merges top-k in-task, so per-batch cost is O(Q/cores) graph searches,
-    * not an index scan. With `cacheKey`, the index ships as one broadcast
-    * per subgraph and stays shipped across batches ([[BroadcastIndex]]):
-    * a subgraph is identified by its sidecar part file, so after a catalog
-    * append only the new subgraph is read, broadcast and rebuilt, while the
-    * graphs already pinned per executor by [[HnswGraphCache]] keep serving.
-    * For indexes too big to broadcast, use [[searchPinned]].
+  /** Serving-shape search of an index that fits in driver memory (the
+    * reference's entire operating envelope: its single-process graph IS an
+    * index-in-memory design). The subgraphs stay built on the driver
+    * ([[ResidentIndex]]) and the query batch is read and walked there, on
+    * a JVM-wide pool of at most `availableProcessors` threads: a warm
+    * search of a local query batch runs no Spark job. With `cacheKey`, a
+    * subgraph is identified by its sidecar part file, so after a catalog
+    * append only the new subgraph is read and built, while the graphs
+    * already resident in [[HnswGraphCache]] keep serving. The result is a
+    * local relation of (query_id, id, distance), ascending (distance, id)
+    * per query. For indexes too big for the driver, use [[searchPinned]].
     */
   def searchBroadcast(
       index: DataFrame,
@@ -883,75 +895,80 @@ object Hnsw {
       m: Int = 16,
       efConstruction: Int = 200,
       upperBound: Double = Double.PositiveInfinity,
-      cacheKey: Option[String] = None): DataFrame = {
+      cacheKey: Option[String] = None): DataFrame =
+    hitsFrame(queries, residentRows(index, queries, k, ef, dist, m,
+      efConstruction, upperBound, cacheKey))
+
+  /** [[searchBroadcast]] as driver rows (query_id, id, distance), per query
+    * ascending (distance, id), queries in batch order — what the catalog
+    * hands straight to its metadata attach. */
+  private[graft] def residentRows(
+      index: DataFrame,
+      queries: DataFrame,
+      k: Int,
+      ef: Option[Int] = None,
+      dist: String = "l2sqr",
+      m: Int = 16,
+      efConstruction: Int = 200,
+      upperBound: Double = Double.PositiveInfinity,
+      cacheKey: Option[String] = None): Array[(Long, Long, Double)] = {
     val efq = ef.getOrElse(math.max(efConstruction, 2 * m) / 2)
-    broadcastWalk(queries, BroadcastIndex.ship(index, cacheKey), k, upperBound,
-      dist, m, efConstruction) { entries =>
-      qv => (ei, ids, ds) => entries(ei).graph.searchInto(qv, k, efq, ids, ds)
+    val entries = ResidentIndex.graphs(index, cacheKey, dist, m, efConstruction).entries
+    residentWalk(queries, entries, k, upperBound) {
+      qv => (ei, ids, ds) => entries(ei)._2.graph.searchInto(qv, k, efq, ids, ds)
     }
   }
 
-  /** The broadcast arms' shared task: rebuild (or fetch) every shipped
-    * subgraph, walk each per query and merge top-k across subgraphs in-task
-    * by ascending (distance, id). `walker` runs once per task over the
-    * graphs and yields, per query vector, the walk of subgraph `ei` into
+  private val hitsSchema = StructType(Seq(
+    StructField("query_id", LongType, nullable = false),
+    StructField("id", LongType, nullable = false),
+    StructField("distance", DoubleType, nullable = false)))
+
+  /** Driver rows as a local relation: collecting it runs no job. */
+  private def hitsFrame(queries: DataFrame, rows: Array[(Long, Long, Double)]): DataFrame =
+    queries.sparkSession.createDataFrame(
+      java.util.Arrays.asList(rows.map(r => Row(r._1, r._2, r._3)): _*), hitsSchema)
+
+  /** The resident arms' shared walk: per query, walk every subgraph and
+    * merge top-k across subgraphs by ascending (distance, id). `walker`
+    * yields, per query vector, the walk of subgraph `ei` into
     * (ids, distances), returning its hit count. */
-  private def broadcastWalk(
+  private def residentWalk(
       queries: DataFrame,
-      shipped: BroadcastIndex.Shipped,
+      entries: Array[(Int, HnswGraphCache.Entry)],
       k: Int,
-      upperBound: Double,
-      dist: String,
-      m: Int,
-      efConstruction: Int)(
-      walker: Array[HnswGraphCache.Entry] =>
-        Array[Float] => (Int, Array[Int], Array[Double]) => Int): DataFrame = {
-    val spark = queries.sparkSession
-    import spark.implicits._
-    val qds = queries
-      .select(col("query_id").cast("long"), col("query_vec"))
-      .as[(Long, Array[Float])]
-    // spread the batch across cores, clamped by the per-task scheduling
-    // floor when the batch size is known: see [[QuerySpread]]
-    QuerySpread(qds)
-      .mapPartitions { qit =>
-        if (qit.isEmpty) Iterator.empty
-        else {
-          val entries = shipped.graphs(dist, m, efConstruction)
-          val perQuery = walker(entries)
-          // reusable per-task buffers: subgraph hits + bounded global merge
-          val subIds = new Array[Int](k)
-          val subDs = new Array[Double](k)
-          val st = new TopKState(k, withPayload = false)
-          qit.flatMap { case (qid, qv) =>
-            val walk = perQuery(qv)
-            st.size = 0 // reuse: insert only reads [0, size)
-            var ei = 0
-            while (ei < entries.length) {
-              val c = walk(ei, subIds, subDs)
-              val ids = entries(ei).ids
-              var i = 0
-              while (i < c) {
-                if (subDs(i) <= upperBound) st.insert(ids(subIds(i)), subDs(i), null)
-                i += 1
-              }
-              ei += 1
-            }
-            val out = new Array[(Long, Long, Double)](st.size)
-            var i = 0
-            while (i < st.size) { out(i) = (qid, st.ids(i), st.dists(i)); i += 1 }
-            out.iterator
-          }
+      upperBound: Double)(
+      walker: Array[Float] => (Int, Array[Int], Array[Double]) => Int)
+    : Array[(Long, Long, Double)] = {
+    val qs = ResidentIndex.queries(queries)
+    val out = new Array[Array[(Long, Long, Double)]](qs.length)
+    ResidentIndex.parallel(qs.length) { qi =>
+      val (qid, qv) = qs(qi)
+      val walk = walker(qv)
+      val subIds = new Array[Int](k)
+      val subDs = new Array[Double](k)
+      val st = new TopKState(k, withPayload = false)
+      var ei = 0
+      while (ei < entries.length) {
+        val c = walk(ei, subIds, subDs)
+        val ids = entries(ei)._2.ids
+        var i = 0
+        while (i < c) {
+          if (subDs(i) <= upperBound) st.insert(ids(subIds(i)), subDs(i), null)
+          i += 1
         }
+        ei += 1
       }
-      .toDF("query_id", "id", "distance")
+      out(qi) = Array.tabulate(st.size)(i => (qid, st.ids(i), st.dists(i)))
+    }
+    out.flatten
   }
 
-  /** Executor-local cache of per-subgraph decoded code matrices for
-    * [[searchBroadcastPq]]: (generation#pq<model>, pid) → (decoded codes
-    * n×m, per-node centroid self-dot sums — cosine only, null for L2).
-    * Built once per (subgraph, model) by re-encoding the subgraph's vectors
-    * (deterministic — identical to decoding the stored code column). */
+  /** Per-subgraph PQ code matrices of [[searchBroadcastPq]]:
+    * (generation#pq<model>, pid) → (codes n×m, per-node centroid self-dot
+    * sums — cosine only, null for L2). Built once per (subgraph, model) by
+    * encoding the resident graph's vectors (deterministic — identical to
+    * decoding the stored code column). */
   private val pqCodesCache: HnswGraphCache.ByteLru[(String, Int), (Array[Byte], Array[Double])] =
     new HnswGraphCache.ByteLru[(String, Int), (Array[Byte], Array[Double])](
       () => math.max(codesMaxBytes / 16, codesMaxBytes - pinnedCodesCache.currentBytes))
@@ -965,8 +982,8 @@ object Hnsw {
     * [[searchBroadcast]] whenever ef is generous enough for the walk to
     * cover the exact top-k.
     *
-    * Same broadcast/cache structure as [[searchBroadcast]]; `model` must be
-    * the quantizer of the table the index was built on.
+    * Same driver-resident graphs and walk as [[searchBroadcast]]; `model`
+    * must be the quantizer of the table the index was built on.
     */
   def searchBroadcastPq(
       index: DataFrame,
@@ -977,7 +994,21 @@ object Hnsw {
       m: Int = 16,
       efConstruction: Int = 200,
       upperBound: Double = Double.PositiveInfinity,
-      cacheKey: Option[String] = None): DataFrame = {
+      cacheKey: Option[String] = None): DataFrame =
+    hitsFrame(queries, residentPqRows(index, queries, model, k, ef, m,
+      efConstruction, upperBound, cacheKey))
+
+  /** [[searchBroadcastPq]] as driver rows, like [[residentRows]]. */
+  private[graft] def residentPqRows(
+      index: DataFrame,
+      queries: DataFrame,
+      model: PqModel,
+      k: Int,
+      ef: Option[Int] = None,
+      m: Int = 16,
+      efConstruction: Int = 200,
+      upperBound: Double = Double.PositiveInfinity,
+      cacheKey: Option[String] = None): Array[(Long, Long, Double)] = {
     require(!model.residual,
       "residual-trained PqModel requires the routed walk (IvfHnsw.searchPinnedPq)")
     val dist = model.dist
@@ -993,64 +1024,39 @@ object Hnsw {
     // cacheKey unchanged, so a retrained quantizer must not be served stale
     // code matrices for beam selection
     val pqId = java.util.Arrays.deepHashCode(centroids.asInstanceOf[Array[AnyRef]])
-
-    val shipped = BroadcastIndex.ship(index, cacheKey)
     val efq = ef.getOrElse(math.max(efConstruction, 2 * m) / 2)
 
-    broadcastWalk(queries, shipped, k, upperBound, dist, m, efConstruction) { entries =>
-      def codesFor(i: Int): (Array[Byte], Array[Double]) = {
-        val (pid, bc) = shipped.parts(i)
-        def build: (Array[Byte], Array[Double]) = {
-          val nodes = bc.value
-          val nn = nodes.length
-          val codes = new Array[Byte](nn * pm)
-          val cdRow = if (cosine) new Array[Double](nn) else null
-          var r = 0
-          while (r < nn) {
-            PqKernel.encodeDecodedInto(nodes(r)._2, centroids, groups,
-              cosine, codes, r * pm)
-            if (cosine) {
-              var acc = 0.0
-              var g = 0; var gk = 0; val base = r * pm
-              while (g < pm) {
-                acc += centDot(gk + (codes(base + g) & 0xff)); g += 1; gk += kCent
-              }
-              cdRow(r) = acc
-            }
-            r += 1
-          }
-          (codes, cdRow)
-        }
-        if (shipped.gen == null) build
-        else {
-          val kk = (shipped.gen + "#pq" + pqId, pid)
-          pqCodesCache.get(kk).getOrElse {
-            val e = graft.index.CacheStats.timedCodesBuild(build)
-            pqCodesCache.put(kk, e, codesBytes(e))
-            e
-          }
+    val served = ResidentIndex.graphs(index, cacheKey, dist, m, efConstruction)
+    val entries = served.entries
+    val allCodes = entries.map { case (pid, e) =>
+      def build = encodeCodes(e, null, centroids, groups, centDot, pm, kCent, cosine)
+      if (served.gen == null) build
+      else {
+        val kk = (served.gen + "#pq" + pqId, pid)
+        pqCodesCache.get(kk).getOrElse {
+          val c = graft.index.CacheStats.timedCodesBuild(build)
+          pqCodesCache.put(kk, c, codesBytes(c))
+          c
         }
       }
-      val allCodes = Array.tabulate(entries.length)(codesFor)
-      qv => {
-        // float lut: selection-grade precision (winners are exact
-        // re-ranked), half the cache footprint of double
-        val lut = PqKernel.buildLookup(qv, centroids, nBits, dist)
-          .map(_.toFloat)
-        val qn = if (cosine) {
-          var acc = 0.0; var i = 0
-          while (i < qv.length) { acc += qv(i).toDouble * qv(i); i += 1 }
-          math.sqrt(acc)
-        } else 0.0
-        (ei, ids, ds) => {
-          val (codes, cdRow) = allCodes(ei)
-          val distFn: Int => Double = { idx =>
-            val s = PqKernel.adcOne(codes, idx * pm, pm, kCent, lut)
-            if (cosine) 1.0 - s / math.max(math.sqrt(cdRow(idx)) * qn, 1e-10)
-            else s
-          }
-          entries(ei).graph.searchFnInto(distFn, qv, k, efq, ids, ds)
+    }
+    residentWalk(queries, entries, k, upperBound) { qv =>
+      // float lut: selection-grade precision (winners are exact
+      // re-ranked), half the cache footprint of double
+      val lut = PqKernel.buildLookup(qv, centroids, nBits, dist).map(_.toFloat)
+      val qn = if (cosine) {
+        var acc = 0.0; var i = 0
+        while (i < qv.length) { acc += qv(i).toDouble * qv(i); i += 1 }
+        math.sqrt(acc)
+      } else 0.0
+      (ei, ids, ds) => {
+        val (codes, cdRow) = allCodes(ei)
+        val distFn: Int => Double = { idx =>
+          val s = PqKernel.adcOne(codes, idx * pm, pm, kCent, lut)
+          if (cosine) 1.0 - s / math.max(math.sqrt(cdRow(idx)) * qn, 1e-10)
+          else s
         }
+        entries(ei)._2.graph.searchFnInto(distFn, qv, k, efq, ids, ds)
       }
     }
   }

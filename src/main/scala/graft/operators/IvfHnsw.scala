@@ -202,18 +202,23 @@ object IvfHnsw {
     val spark = base.sparkSession
     import spark.implicits._
     val sampled = trainFraction.map(f => base.sample(f, seed)).getOrElse(base)
+    // one centroid broadcast serves the assignment and the shift; released
+    // once training (the last action over `resid`) returns
     val cents = spark.sparkContext.broadcast(model.centroids)
-    val resid = Ivf.assign(sampled.select(col("vec")), model)
-      .select(col("vec"), col("cluster").cast("int"))
-      .as[(Array[Float], Int)]
-      .map { case (v, c) =>
-        val cent = cents.value(c)
-        var j = 0
-        while (j < v.length) { v(j) -= cent(j); j += 1 }
-        v // Dataset decode hands each row a fresh array
-      }
-      .toDF("vec")
-    Pq.train(resid, m, nBits, model.dist, maxIter, tol, seed)
-      .copy(residual = true)
+    try {
+      val resid = sampled
+        .select(col("vec"), Ivf.nearestCentroid(col("vec"), cents, model.dist)
+          .cast("int").as("cluster"))
+        .as[(Array[Float], Int)]
+        .map { case (v, c) =>
+          val cent = cents.value(c)
+          var j = 0
+          while (j < v.length) { v(j) -= cent(j); j += 1 }
+          v // Dataset decode hands each row a fresh array
+        }
+        .toDF("vec")
+      Pq.train(resid, m, nBits, model.dist, maxIter, tol, seed)
+        .copy(residual = true)
+    } finally cents.unpersist(blocking = false)
   }
 }

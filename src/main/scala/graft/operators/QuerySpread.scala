@@ -2,10 +2,11 @@ package graft.operators
 
 import org.apache.spark.sql.Dataset
 
-/** Query-side parallelism policy for the broadcast serving arms.
+/** Query-side parallelism policy for the broadcast-state serving arm
+  * (`Pq.searchFlatBroadcast`; the HNSW serving arms walk on the driver).
   *
-  * A serving batch resolves each query entirely inside its task (the index
-  * is broadcast), so the only cross-task cost is scheduling — measured at
+  * A serving batch resolves each query entirely inside its task (the
+  * scanned state is broadcast), so the only cross-task cost is scheduling — measured at
   * ~2 ms of serial driver time per task on local[32]. Spreading a tiny
   * batch across every core is therefore a pessimization: an 8-query
   * catalog lookup over 32 tasks is 31 empty dispatches. When Catalyst
