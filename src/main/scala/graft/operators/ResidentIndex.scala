@@ -99,7 +99,7 @@ private[operators] object ResidentIndex {
             build(groups(pid), dist, m, efConstruction))
         }
       }
-      Served(st.gen, st.pids.indices.map(i => st.pids(i) -> entries(i)).toArray)
+      Served(st.gen, st.pids.zip(entries))
   }
 
   /** The state for `ck` matching the index's current listing, plus the
