@@ -15,12 +15,15 @@ For every metric the report prints each side's median and quartiles, how
 many pairs the change won (ties count for neither side) and a verdict: a
 gain needs at least nine tenths of the pairs won and a median difference
 larger than the parent's own quartile spread; a loss is the same rule with
-the sides swapped. Each run also records the host's 1-minute load average
-(/proc/loadavg) just before and just after it and its wall time; the report
-lists them per pair and flags a pair whose two sides' mean load differs by
-more than 1.0, since such a pair compares two host speeds as much as two
-trees. Raw results go to <workdir>/vecbench_ab_<stamp>.jsonl.
-The extracted trees are removed at the end unless --keep is given.
+the sides swapped. Directions come from BENCHMARK.json; a per-table metric
+`table.<t>.<m>` takes the one declared for `table.ivf.<m>`, and a metric
+with no declared direction prints `?` in place of a verdict. Each run also
+records the host's 1-minute load average (/proc/loadavg) just before and
+just after it and its wall time; the report lists them per pair and flags
+a pair whose two sides' mean load differs by more than 1.0, since such a
+pair compares two host speeds as much as two trees. Raw results go to
+<workdir>/vecbench_ab_<stamp>.jsonl. The extracted trees are removed at the
+end unless --keep is given.
 """
 import argparse
 import json
@@ -45,6 +48,19 @@ def better_direction():
         bench = json.load(fh)
     return {m["name"]: m["better"]
             for m in bench.get("end_to_end", []) + bench.get("per_layer", [])}
+
+
+def direction_of(name, better):
+    """'lower'/'higher' for a metric, or None when none is declared.
+
+    A per-table metric `table.<t>.<m>` takes the direction declared for
+    `table.ivf.<m>`: every table reports the same kind of quantity."""
+    if name in better:
+        return better[name]
+    parts = name.split(".")
+    if len(parts) == 3 and parts[0] == "table":
+        return better.get(f"table.ivf.{parts[2]}")
+    return None
 
 
 LOAD_FLAG = 1.0
@@ -85,7 +101,11 @@ def quartiles(xs):
 
 
 def verdict(pairs, better):
-    """pairs: [(parent, change)]; returns (wins, losses, text)."""
+    """pairs: [(parent, change)]; returns (wins, losses, text).
+
+    `better` None (no declared direction) gives no verdict: '?'."""
+    if better is None:
+        return 0, 0, "?"
     sign = -1.0 if better == "lower" else 1.0
     wins = sum(1 for a, b in pairs if sign * (b - a) > 0)
     losses = sum(1 for a, b in pairs if sign * (b - a) < 0)
@@ -187,7 +207,7 @@ def main():
                  for p, c in ok]
         pq = quartiles([x for x, _ in pairs])
         cq = quartiles([y for _, y in pairs])
-        wins, losses, v = verdict(pairs, better.get(name, "lower"))
+        wins, losses, v = verdict(pairs, direction_of(name, better))
         fmt = lambda q: "/".join(f"{x:.4g}" for x in q)
         print(f"{name:40s} {fmt(pq):>28s} {fmt(cq):>28s} "
               f"{wins:>3d}/{len(pairs):<2d} {losses:>5d}  {v}")

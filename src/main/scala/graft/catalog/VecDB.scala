@@ -8,7 +8,7 @@ import org.apache.spark.sql.types._
 import org.json4s.{DefaultFormats, Formats}
 import org.json4s.jackson.Serialization
 
-import graft.operators.{Bq, Hnsw, Ivf, IvfHnsw, Knn, Pq, PqModel, Search, Sq, TopK}
+import graft.operators.{Bq, CoarseMerge, Hnsw, Ivf, IvfHnsw, Knn, Pq, PqModel, Search, Sq, TopK}
 import graft.functions.VectorFunctions
 import graft.index.CacheStats
 
@@ -1204,19 +1204,8 @@ class VecDB(spark: SparkSession, root: String) {
     val model = Sq.train(df)
     val routed = e.ivf.isDefined
     if (routed) {
-      val ivfModel = Ivf.readModel(spark, ivfDir(e).toString, e.dist,
-        e.ivf.get.defaultNProbes)
-      val assigned = Sq.encode(
-        Ivf.assign(df.select(col("id"), col("vec")), ivfModel), model)
-        .select(col("id"), col("sq"), col("cluster"))
-      Sq.writeIvfPartitioned(assigned, sqDir(e).resolve("ivf").toString)
-      // flat twin of the partitioned codes (one contiguous parquet, same
-      // rows): the coverage-aware dispatch target — when a batch's probe
-      // union approaches full coverage, directory pruning is void and the
-      // flat copy scans faster than kc directories. Costs one extra
-      // corpus/4 copy; serving reads exactly one of the two.
-      assigned.write.mode("overwrite")
-        .parquet(sqDir(e).resolve("flat").toString)
+      writeRouted(e, df, sqDir(e), Sq.writeIvfPartitioned)(
+        Sq.encode(_, model).select(col("id"), col("sq"), col("cluster")))
     } else {
       Sq.encode(df, model).select("id", "sq")
         .write.mode("overwrite").parquet(sqDir(e).resolve("codes").toString)
@@ -1251,7 +1240,7 @@ class VecDB(spark: SparkSession, root: String) {
   /** Build the BQ sidecar: per-dim mean thresholds
     * ([[graft.operators.Bq.train]]) + packed threshold bits — 1/32 the
     * float scan traffic for the Hamming coarse pass, exact re-rank on a
-    * corpus-scaled candidate set ([[graft.operators.Bq.autoCandidates]]).
+    * corpus-scaled candidate set ([[graft.operators.CoarseMerge.autoCandidates]]).
     * `centered = false` packs raw sign bits (the SQL-function convention;
     * near-uninformative on uncentered corpora — see Bq.BqModel). On a
     * table with an IVF index the packed words are written
@@ -1273,15 +1262,8 @@ class VecDB(spark: SparkSession, root: String) {
         model.fold(Bq.encode(d))(m => Bq.encodeCentered(d, m))
       val routed = e.ivf.isDefined
       if (routed) {
-        val ivfModel = Ivf.readModel(spark, ivfDir(e).toString, e.dist,
-          e.ivf.get.defaultNProbes)
-        val assigned = packed(
-          Ivf.assign(df.select(col("id"), col("vec")), ivfModel))
-          .select(col("id"), col("bq"), col("cluster"))
-        Bq.writeIvfPartitioned(assigned, bqDir(e).resolve("ivf").toString)
-        // flat twin for the coverage-aware dispatch — see buildSqIndex
-        assigned.write.mode("overwrite")
-          .parquet(bqDir(e).resolve("flat").toString)
+        writeRouted(e, df, bqDir(e), Bq.writeIvfPartitioned)(
+          packed(_).select(col("id"), col("bq"), col("cluster")))
       } else {
         packed(df).select("id", "bq")
           .write.mode("overwrite").parquet(bqDir(e).resolve("packed").toString)
@@ -1312,6 +1294,27 @@ class VecDB(spark: SparkSession, root: String) {
   }
 
   def hasBqIndex(key: String): Boolean = entry(key).bq.isDefined
+
+  /** The routed quantized sidecar: `encode`d (id, code, cluster) rows
+    * under the table's IVF assignment, written cluster-partitioned by
+    * `writePartitioned` under `dir/ivf` plus their flat twin under
+    * `dir/flat` (one contiguous parquet, same rows): the coverage-aware
+    * dispatch target — when a batch's probe union approaches full
+    * coverage, directory pruning is void and the flat copy scans faster
+    * than kc directories. Costs one extra code copy; serving reads exactly
+    * one of the two. Both writes share one centroid broadcast, released
+    * after them. */
+  private def writeRouted(e: TableEntry, df: DataFrame, dir: Path,
+      writePartitioned: (DataFrame, String) => Unit)(
+      encode: DataFrame => DataFrame): Unit = {
+    val ivfModel = Ivf.readModel(spark, ivfDir(e).toString, e.dist,
+      e.ivf.get.defaultNProbes)
+    Ivf.withAssigned(df.select(col("id"), col("vec")), ivfModel) { assigned =>
+      val codes = encode(assigned)
+      writePartitioned(codes, dir.resolve("ivf").toString)
+      codes.write.mode("overwrite").parquet(dir.resolve("flat").toString)
+    }
+  }
 
   private def loadSqModel(e: TableEntry): Sq.SqModel = {
     val r = spark.read.parquet(sqDir(e).resolve("model").toString).head()
@@ -1581,27 +1584,48 @@ class VecDB(spark: SparkSession, root: String) {
       // the scan-compressed two-stage arms wherever the matrix would
       // otherwise run a FLOAT scan (HNSW arms above keep priority —
       // sub-linear beats any compressed linear scan; the plain IVF arms
-      // below yield to sq_ivf, which prunes the same probed clusters at
-      // 1/4 the bytes). `ef` maps to the coarse candidate budget (default
-      // scales with N, Bq.autoCandidates); the upper bound applies on the
-      // EXACT re-ranked distances, so P3 semantics are preserved.
-      case (efOpt, _) if e.sq.isDefined && !e.hasHnsw && pattern.isEmpty =>
-        val info = e.sq.get
-        // model + centroid loads cached per index generation (1-3 extra
-        // driver jobs per batch otherwise — the latency-regime floor)
-        val model = sidecarCachedAs[Sq.SqModel](
-          sqDir(e).resolve("model").toString, e)(loadSqModel(e))
+      // below yield to sq_ivf/bq_ivf, which prune the same probed clusters
+      // at 1/4 or 1/32 the bytes). SQ outranks BQ on a table with both.
+      // `ef` maps to the coarse candidate budget (default scales with N,
+      // CoarseMerge.autoCandidates); the upper bound applies on the EXACT
+      // re-ranked distances, so P3 semantics are preserved.
+      case (efOpt, _) if (e.sq.isDefined || e.bq.isDefined) && !e.hasHnsw &&
+          pattern.isEmpty =>
+        // model loads cached per index generation (1-3 extra driver jobs
+        // per batch otherwise — the latency-regime floor)
+        val (codec, dir, flatName, routed)
+            : (CoarseMerge.Codec[_, _], Path, String, Boolean) = e.sq match {
+          case Some(info) =>
+            (Sq.SqCodec(sidecarCachedAs[Sq.SqModel](
+              sqDir(e).resolve("model").toString, e)(loadSqModel(e)), e.dist),
+              sqDir(e), "codes", info.routed)
+          case None =>
+            (Bq.BqCodec(sidecarCachedAs[Option[Bq.BqModel]](
+              bqDir(e).resolve("model").toString, e)(loadBqModel(e))),
+              bqDir(e), "packed", e.bq.get.routed)
+        }
+        // batch-shape-aware serving (r19/r20): nq-large batches switch to
+        // approximate coarse selection ("auto" — per-partition top pool,
+        // no selection shuffle) UNLESS the caller's budget is exhaustive
+        // (candidates ≥ corpus ⇒ the exact-KNN contract, e.g. the SQL
+        // top-k rewrite at ef = 2n, must keep exact selection). Tables
+        // with an HNSW index never reach this arm — the graph serves big
+        // batches at ~10× these rates.
+        def selectFor(candidates: Int) =
+          if (candidates < liveRows(e)) "auto" else "exact"
+        // arm labels: sq_ivf | bq_ivf, sq_rerank_serve | bq_rerank_serve
         val hits =
-          if (info.routed) {
+          if (routed) {
             if (e.ivf.isEmpty) throw new IllegalStateException(
-              s"table '$key': routed SQ sidecar without an IVF index " +
-                "(clearIvfIndex cascades — this brief was edited externally)")
-            lastServedArm = "sq_ivf"
+              s"table '$key': routed ${codec.name.toUpperCase} sidecar " +
+                "without an IVF index (clearIvfIndex cascades — this brief " +
+                "was edited externally)")
+            lastServedArm = s"${codec.name}_ivf"
             val ivfModel = cachedIvfModel(e)
             // probe-pool-aware budget: the scored pool is ~np·N/kc rows,
-            // not the corpus (see Bq.autoCandidates' routed overload)
+            // not the corpus (see autoCandidates' routed overload)
             val candidates = math.max(k, efOpt.getOrElse(
-              Bq.autoCandidates(e.nextId, k, ivfModel.defaultNProbes,
+              CoarseMerge.autoCandidates(e.nextId, k, ivfModel.defaultNProbes,
                 ivfModel.centroids.length)))
             // rerank against the IVF sidecar's OWN cluster-partitioned
             // float layout (same assignment as the codes): both stages
@@ -1619,92 +1643,25 @@ class VecDB(spark: SparkSession, root: String) {
             // dispatch: prune-void batches scan one contiguous parquet
             // instead of kc directories. Absent on pre-r18 sidecars — the
             // dispatch then always serves the partitioned layout.
-            val flatDir = sqDir(e).resolve("flat")
+            val flatDir = dir.resolve("flat")
             val flat =
               if (java.nio.file.Files.exists(flatDir))
                 Some(sidecarDf(flatDir.toString, e))
               else None
-            Sq.searchIvfPartitionedDf(
-              sidecarDf(sqDir(e).resolve("ivf").resolve("data").toString, e),
-              floatBase, ivfModel, model, queries, k, candidates,
-              nProbes = None, dist = e.dist, vecCol = baseVecCol,
-              baseClusterCol = Some("cluster"),
-              flatCodes = flat, flatBase = Some(filtered),
-              flatVecCol = Some("vec"),
-              // batch-shape-aware routed serving (r20): nq-large,
-              // non-exhaustive batches switch to approx coarse selection
-              // inside the probed scan — see the sq_rerank_serve arm
-              coarseSelect = if (candidates < liveRows(e)) "auto" else "exact")
+            CoarseMerge.searchIvf(codec,
+              sidecarDf(dir.resolve("ivf").resolve("data").toString, e),
+              floatBase, ivfModel, queries, k, candidates, nProbes = None,
+              dist = e.dist, vecCol = baseVecCol,
+              baseClusterCol = Some("cluster"), flatCodes = flat,
+              flatBase = Some(filtered), coarseSelect = selectFor(candidates),
+              flatVecCol = Some("vec"))
           } else {
-            lastServedArm = "sq_rerank_serve"
+            lastServedArm = s"${codec.name}_rerank_serve"
             val candidates = math.max(k,
-              efOpt.getOrElse(Bq.autoCandidates(e.nextId, k)))
-            val packed = sidecarDf(sqDir(e).resolve("codes").toString, e)
-            // batch-shape-aware serving (r19): nq-large batches switch to
-            // approximate coarse selection ("auto" — per-partition top
-            // pool, no selection shuffle) UNLESS the caller's budget is
-            // exhaustive (candidates ≥ corpus ⇒ the exact-KNN contract,
-            // e.g. the SQL top-k rewrite at ef = 2n, must keep exact
-            // selection). Tables with an HNSW index never reach this arm
-            // — the graph serves big batches at ~10× these rates.
-            Sq.searchRerankPacked(packed, filtered, queries, model, k,
-              candidates, dist = e.dist,
-              coarseSelect = if (candidates < liveRows(e)) "auto" else "exact")
-          }
-        collectHits(if (ub == Double.PositiveInfinity) hits
-          else hits.filter(col("distance") <= lit(ub)))
-      case (efOpt, _) if e.bq.isDefined && !e.hasHnsw && pattern.isEmpty =>
-        val info = e.bq.get
-        val hits =
-          if (info.routed) {
-            if (e.ivf.isEmpty) throw new IllegalStateException(
-              s"table '$key': routed BQ sidecar without an IVF index " +
-                "(clearIvfIndex cascades — this brief was edited externally)")
-            lastServedArm = "bq_ivf"
-            val ivfModel = cachedIvfModel(e)
-            // probe-pool-aware budget (see the sq_ivf arm / Bq.autoCandidates)
-            val candidates = math.max(k, efOpt.getOrElse(
-              Bq.autoCandidates(e.nextId, k, ivfModel.defaultNProbes,
-                ivfModel.centroids.length)))
-            // rerank against the IVF sidecar's OWN cluster-partitioned
-            // float layout (same assignment as the packed words): both
-            // stages partition-prune — the sq_ivf arm's argument, at 1/32
-            // the coarse bytes instead of 1/4; reads pre-listed (sidecar
-            // cache) like the sq_ivf arm
-            val floatBase = sidecarDf(ivfDir(e).resolve("data").toString, e)
-            // binary-vs-float rerank base — see the sq_ivf arm
-            val baseVecCol =
-              if (floatBase.columns.contains("vecb")) "vecb" else "vec"
-            // coverage-aware dispatch twin — see the sq_ivf arm
-            val flatDir = bqDir(e).resolve("flat")
-            val flat =
-              if (java.nio.file.Files.exists(flatDir))
-                Some(sidecarDf(flatDir.toString, e))
-              else None
-            Bq.searchIvfPartitionedDf(
-              sidecarDf(bqDir(e).resolve("ivf").resolve("data").toString, e),
-              floatBase, ivfModel, sidecarCachedAs[Option[Bq.BqModel]](
-                bqDir(e).resolve("model").toString, e)(loadBqModel(e)),
-              queries, k, candidates,
-              nProbes = None, dist = e.dist, vecCol = baseVecCol,
-              baseClusterCol = Some("cluster"),
-              flatPacked = flat, flatBase = Some(filtered),
-              flatVecCol = Some("vec"),
-              // batch-shape-aware routed serving (r20) — see the sq_ivf arm
-              coarseSelect = if (candidates < liveRows(e)) "auto" else "exact")
-          } else {
-            lastServedArm = "bq_rerank_serve"
-            val candidates = math.max(k,
-              efOpt.getOrElse(Bq.autoCandidates(e.nextId, k)))
-            val packed = sidecarDf(bqDir(e).resolve("packed").toString, e)
-            // batch-shape-aware serving (r19) — see the sq_rerank_serve
-            // arm: approx coarse selection for nq-large, non-exhaustive
-            // batches; exhaustive budgets keep the exact-KNN contract
-            Bq.searchRerankPacked(packed, filtered, queries, k,
-              candidates, dist = e.dist,
-              model = sidecarCachedAs[Option[Bq.BqModel]](
-                bqDir(e).resolve("model").toString, e)(loadBqModel(e)),
-              coarseSelect = if (candidates < liveRows(e)) "auto" else "exact")
+              efOpt.getOrElse(CoarseMerge.autoCandidates(e.nextId, k)))
+            CoarseMerge.searchRerank(codec,
+              sidecarDf(dir.resolve(flatName).toString, e), filtered,
+              queries, k, candidates, e.dist, "vec", selectFor(candidates))
           }
         collectHits(if (ub == Double.PositiveInfinity) hits
           else hits.filter(col("distance") <= lit(ub)))

@@ -1,6 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.ColumnShim
 
@@ -98,33 +99,6 @@ object Bq extends Serializable {
     BqModel(sums.map(_ / n))
   }
 
-  /** Default rerank candidate count, scaled with corpus size: a FIXED
-    * candidate budget is a recall cliff at scale — on a clustered corpus
-    * the Hamming sketch reliably separates clusters but ranks near-randomly
-    * WITHIN one, so the budget must cover the natural neighborhood size,
-    * which grows with N (measured: candidates=100 at 1M serves recall 0.36;
-    * the verdict's standing BQ weakness). N/500 tracks ~2× the per-cluster
-    * row count across the bench grid, floored at 10·k, capped at 20k (the
-    * re-rank stays an O(nq·candidates) broadcast either way). */
-  def autoCandidates(n: Long, k: Int): Int =
-    math.max(10L * k, math.min(20000L, n / 500L)).toInt
-
-  /** ROUTED-arm rerank budget (r17 verdict Missing #3): under IVF routing
-    * the scored pool is only ~np·N/kc rows, so the corpus-scaled budget
-    * above degenerates — at kc=512, np=1, N=1M it reranks c=2000 of a
-    * ~1953-row pool, i.e. the sketch prunes nothing and the rerank join
-    * dominates the serving cost. Budget = 2/3 of the probed pool,
-    * measured on the kc512 bench grid (candidate sweep: recall 1.000 at
-    * pool·2/3 and at pool/2+24; 0.999 at pool/2; 0.97 at 0.44·pool;
-    * 0.80 at pool/4 — the knee sits just under pool/2, and 2/3 clears it
-    * with a full band of margin), floored at 10·k and never above the
-    * flat-arm budget. */
-  def autoCandidates(n: Long, k: Int, np: Int, kc: Int): Int = {
-    val pool = math.max(1L, np.toLong * n / math.max(1, kc))
-    math.max(10L * k,
-      math.min(autoCandidates(n, k).toLong, pool * 2 / 3)).toInt
-  }
-
   /** Add a packed sign-bit column (default name `bq`). */
   def encode(df: DataFrame, vecCol: String = "vec", out: String = "bq"): DataFrame =
     df.withColumn(out, bqPack(col(vecCol)))
@@ -194,44 +168,22 @@ object Bq extends Serializable {
       queryIdCol: String = "query_id",
       queryVecCol: String = "query_vec",
       model: Option[BqModel] = None): DataFrame = {
-    val spark = packed.sparkSession
-    import spark.implicits._
-    val qs = queries
-      .select(col(queryIdCol).cast("long"), col(queryVecCol))
-      .as[(Long, Array[Float])].collect()
-      .map { case (qid, v) =>
-        (qid, model.fold(BqKernel.pack(v))(m => BqKernel.packCentered(v, m.thresholds)))
-      }
-    hammingBroadcastPackedArr(packed, qs, k)
+    val codec = BqCodec(model)
+    hammingBroadcastPackedArr(packed,
+      CoarseMerge.collectQueries(queries, queryIdCol, queryVecCol)
+        .map { case (qid, v) => (qid, codec.prepare(v)) }, k)
   }
 
   /** [[hammingBroadcastPacked]] over an already-collected, already-PACKED
-    * query batch — the shared entry for callers that need the batch on
-    * the driver anyway (probe planning, rerank byte-gating).
-    *
-    * Task-memory gate: every scanned partition holds nq × k × 16 B of
-    * [[graft.index.TopBuffer]] slots for the whole pass — 3.2 GB/task at
-    * nq=10k × candidates=20k, an OOM at any executor size. The batch is
-    * chunked to [[CoarseMerge.spans]] (default 256 MiB of slots per task)
-    * and the chunk results union — exact by construction (selection is
-    * per-query), each chunk one more pass over the packed scan. */
+    * query batch ([[CoarseMerge.coarse]] under its task-memory gate).
+    * Output: (query_id, id, hamming). */
   private[graft] def hammingBroadcastPackedArr(
       packed: DataFrame,
       qs: Array[(Long, Array[Long])],
-      k: Int,
-      approxPerPart: Int = 0): DataFrame = {
-    // approx mode: per-task state is nq × perPart slots, not nq × k —
-    // the chunking gate must size on what the task actually holds
-    val spans = CoarseMerge.spans(qs.length,
-      if (approxPerPart > 0) approxPerPart else k)
-    val hits = spans.map { case (s, e) =>
-      hammingChunk(packed, if (s == 0 && e == qs.length) qs else qs.slice(s, e),
-        k, approxPerPart)
-    }.reduce(_ union _)
-    CoarseMerge.lastChunks = spans.length
-    hits.select(col("query_id"), col("id"),
-      col("distance").cast("long").as("hamming"))
-  }
+      k: Int): DataFrame =
+    CoarseMerge.coarse(BqCodec(None), packed, qs, k)
+      .select(col("query_id"), col("id"),
+        col("distance").cast("long").as("hamming"))
 
   /** One query's bounded sweep over a flat row-block run [from, until) —
     * the 15-word (d960, the reference dim) unrolled variant: query words
@@ -322,123 +274,145 @@ object Bq extends Serializable {
     qflat
   }
 
-  /** One task-memory chunk of [[hammingBroadcastPackedArr]]: the full
-    * coarse scan for a query sub-batch. Output: (query_id, id, distance). */
-  private def hammingChunk(
-      packed: DataFrame,
-      qs: Array[(Long, Array[Long])],
-      k: Int,
-      approxPerPart: Int = 0): DataFrame = {
-    val spark = packed.sparkSession
-    import spark.implicits._
-    val bc = spark.sparkContext.broadcast(qs)
-    val bufCap = if (approxPerPart > 0) approxPerPart else k
-    // bounded (hamming, id) selector per query — integer hammings (≤ dim)
-    // are exact in double, so (distance, id) order is the engine's
-    // standard tie-break bit for bit. QUERY-OUTER blocked loop (r18): the
-    // r17 row-outer loop paid ~67 ns/pair — streaming the query-word
-    // array, a bounds array and a random buffer per (row, query) — while
-    // the arithmetic floor is ~15 ns/pair (kernel timing). Buffering
-    // ~4 MB of rows and looping queries OUTER keeps one query's words and
-    // its admission bound in registers and ONE TopBuffer hot per sweep:
-    // measured 20-31 ns/pair (15-word unroll / generic), 2.8× on the
-    // nq10k coarse pass. Selection identical — per query the rows offer
-    // in the same order, under the same integer bound (hammings are
-    // exact in int and double alike).
-    def scanPartition(it: Iterator[(Long, Array[Long])])
-        : Array[graft.index.TopBuffer] = {
-      val qarr = bc.value
-      val nq = qarr.length
-      if (nq == 0 || !it.hasNext) return Array.empty
-      val words = qarr(0)._2.length
-      val qflat = flattenQueries(qarr, words)
-      val bufs = Array.fill(nq)(new graft.index.TopBuffer(bufCap))
-      // per-query integer admission bounds carried across row blocks
-      val bounds = Array.fill(nq)(Int.MaxValue)
-      val blockRows = math.max(1, (4 << 20) / (words * 8))
-      val ids = new Array[Long](blockRows)
-      val rowsFlat = new Array[Long](blockRows * words)
-      while (it.hasNext) {
-        var m = 0
-        while (m < blockRows && it.hasNext) {
-          val (id, bq) = it.next()
-          if (bq.length != words) throw new IllegalArgumentException(
-            s"bq_hamming: word-count mismatch (${bq.length} vs $words)")
-          System.arraycopy(bq, 0, rowsFlat, m * words, words)
-          ids(m) = id
-          m += 1
-        }
-        var qi = 0
-        while (qi < nq) {
-          bounds(qi) =
-            if (words == 15)
-              scanRun15(rowsFlat, ids, 0, m, qflat, qi * 15, bufs(qi), bounds(qi))
-            else
-              scanRunGeneric(rowsFlat, ids, 0, m, qflat, qi * words, words,
-                bufs(qi), bounds(qi))
-          qi += 1
-        }
-      }
-      bufs
+  /** BQ as a [[CoarseMerge.Codec]]: queries pack to words under the
+    * corpus's `model` (`None` = raw sign bits) and both kernels score
+    * XOR/popcount Hamming distances. */
+  private[graft] final case class BqCodec(model: Option[BqModel])
+      extends CoarseMerge.Codec[Array[Long], Array[Long]] {
+    def name: String = "bq"
+
+    def prepare(v: Array[Float]): Array[Long] =
+      model.fold(BqKernel.pack(v))(m => BqKernel.packCentered(v, m.thresholds))
+
+    def flatRows(packed: DataFrame): Dataset[(Long, Array[Long])] = {
+      val spark = packed.sparkSession
+      import spark.implicits._
+      packed.select(col("id").cast("long"), col("bq")).as[(Long, Array[Long])]
     }
-    val src = packed
-      .select(col("id").cast("long"), col("bq"))
-      .as[(Long, Array[Long])]
-    val hits =
-      if (approxPerPart > 0) {
-        // APPROXIMATE selection (r19, verdict #2): each partition's
-        // top-approxPerPart per query IS the candidate pool — no global
-        // top-c merge at all. Exactness of the final result is the
-        // rerank's job anyway (true distances + global top-k over the
-        // pool); what approximation changes is pool MEMBERSHIP only.
-        // Shuffle economics: the exact paths must move P × nq × c
-        // partial entries (640M ≈ 10 GB at nq=10k, c=2000, P=32 — the
-        // probe-proven bound of the nq10k row); this path moves the pool
-        // rows once, straight into the rerank join.
-        CoarseMerge.lastPath = "approx"
-        src.mapPartitions { it =>
-            val qarr = bc.value
-            val bufs = scanPartition(it)
-            Iterator.range(0, bufs.length).flatMap { qi =>
-              val buf = bufs(qi)
-              Iterator.range(0, buf.size).map(p =>
-                (qarr(qi)._1, buf.idAt(p), buf.distAt(p)))
-            }
+
+    def probedRows(rows: DataFrame): Dataset[(Long, Array[Long], Long)] = {
+      val spark = rows.sparkSession
+      import spark.implicits._
+      rows.select(col("id").cast("long"), col("bq"), col("cluster").cast("long"))
+        .as[(Long, Array[Long], Long)]
+    }
+
+    def flatKernel(bc: Broadcast[Array[(Long, Array[Long])]], bufCap: Int)
+        : Iterator[(Long, Array[Long])] => Array[graft.index.TopBuffer] = {
+      // bounded (hamming, id) selector per query — integer hammings (≤ dim)
+      // are exact in double, so (distance, id) order is the engine's
+      // standard tie-break bit for bit. QUERY-OUTER blocked loop (r18): the
+      // r17 row-outer loop paid ~67 ns/pair — streaming the query-word
+      // array, a bounds array and a random buffer per (row, query) — while
+      // the arithmetic floor is ~15 ns/pair (kernel timing). Buffering
+      // ~4 MB of rows and looping queries OUTER keeps one query's words and
+      // its admission bound in registers and ONE TopBuffer hot per sweep:
+      // measured 20-31 ns/pair (15-word unroll / generic), 2.8× on the
+      // nq10k coarse pass. Selection identical — per query the rows offer
+      // in the same order, under the same integer bound (hammings are
+      // exact in int and double alike).
+      def scanPartition(it: Iterator[(Long, Array[Long])])
+          : Array[graft.index.TopBuffer] = {
+        val qarr = bc.value
+        val nq = qarr.length
+        if (nq == 0 || !it.hasNext) return Array.empty
+        val words = qarr(0)._2.length
+        val qflat = flattenQueries(qarr, words)
+        val bufs = Array.fill(nq)(new graft.index.TopBuffer(bufCap))
+        // per-query integer admission bounds carried across row blocks
+        val bounds = Array.fill(nq)(Int.MaxValue)
+        val blockRows = math.max(1, (4 << 20) / (words * 8))
+        val ids = new Array[Long](blockRows)
+        val rowsFlat = new Array[Long](blockRows * words)
+        while (it.hasNext) {
+          var m = 0
+          while (m < blockRows && it.hasNext) {
+            val (id, bq) = it.next()
+            if (bq.length != words) throw new IllegalArgumentException(
+              s"bq_hamming: word-count mismatch (${bq.length} vs $words)")
+            System.arraycopy(bq, 0, rowsFlat, m * words, words)
+            ids(m) = id
+            m += 1
           }
-          .toDF("query_id", "id", "distance")
-      } else if (CoarseMerge.eligible(qs.length, k)) {
-        // large candidate budgets: tree-merge the per-partition buffers —
-        // the aggregate path would shuffle P × nq × k partial rows (64M
-        // at nq=1000, k=2000, P=32 — the measured bound of the 1M rerank)
-        CoarseMerge.lastPath = "merge"
-        CoarseMerge.merge(spark, qs.map(_._1),
-          src.rdd.mapPartitions(it => Iterator.single(scanPartition(it))), k)
-      } else if (CoarseMerge.distEligible(qs.length, k)) {
-        // past the driver cap: shard-keyed distributed buffer merge — the
-        // same winners as P × shards primitive-array records instead of
-        // P × nq × k shuffled rows
-        CoarseMerge.lastPath = "dist"
-        CoarseMerge.mergeDistributed(spark, qs.map(_._1),
-          src.rdd.mapPartitions(it => Iterator.single(scanPartition(it))), k)
-      } else {
-        CoarseMerge.lastPath = "agg"
-        src.mapPartitions { it =>
-            val qarr = bc.value
-            val bufs = scanPartition(it)
-            Iterator.range(0, bufs.length).flatMap { qi =>
-              val buf = bufs(qi)
-              Iterator.range(0, buf.size).map(p =>
-                (qarr(qi)._1, buf.idAt(p), buf.distAt(p)))
-            }
+          var qi = 0
+          while (qi < nq) {
+            bounds(qi) =
+              if (words == 15)
+                scanRun15(rowsFlat, ids, 0, m, qflat, qi * 15, bufs(qi), bounds(qi))
+              else
+                scanRunGeneric(rowsFlat, ids, 0, m, qflat, qi * words, words,
+                  bufs(qi), bounds(qi))
+            qi += 1
           }
-          .toDF("query_id", "id", "distance")
-          .groupBy("query_id")
-          .agg(TopK.topK(k)(col("id"), col("distance")).as("topk"))
-          .select(col("query_id"), explode(col("topk")).as("hit"))
-          .select(col("query_id"), col("hit.id").as("id"),
-            col("hit.distance").as("distance"))
+        }
+        bufs
       }
-    hits
+      scanPartition _
+    }
+
+    /** Probed Hamming pass: rows buffer into ~4 MB flat blocks, cluster
+      * RUNS within a block are detected (the partitioned layout delivers
+      * rows grouped by directory, so runs span whole file splits; the
+      * in-memory path degrades to shorter runs, still on flat arrays), and
+      * each run is swept once per PROBING query with that query's words
+      * and admission bound in registers — the flat kernel's loop shape,
+      * 2-3× over the r17 row-outer form. Selection identical (per query
+      * the rows offer in scan order under the same integer bound). */
+    def probedKernel(bcQ: Broadcast[Array[(Long, Array[Long])]],
+        bcMap: Broadcast[Map[Long, Array[Int]]], bufCap: Int)
+        : Iterator[(Long, Array[Long], Long)] => Array[graft.index.TopBuffer] = {
+      def scanPartition(it: Iterator[(Long, Array[Long], Long)])
+          : Array[graft.index.TopBuffer] = {
+        val qarr = bcQ.value
+        val qmap = bcMap.value
+        val nq = qarr.length
+        if (nq == 0 || !it.hasNext) return Array.empty
+        val words = qarr(0)._2.length
+        val qflat = flattenQueries(qarr, words)
+        val bufs = Array.fill(nq)(new graft.index.TopBuffer(bufCap))
+        val bounds = Array.fill(nq)(Int.MaxValue)
+        val blockRows = math.max(1, (4 << 20) / (words * 8))
+        val ids = new Array[Long](blockRows)
+        val clusters = new Array[Long](blockRows)
+        val rowsFlat = new Array[Long](blockRows * words)
+        while (it.hasNext) {
+          var m = 0
+          while (m < blockRows && it.hasNext) {
+            val (id, bq, cluster) = it.next()
+            if (bq.length != words) throw new IllegalArgumentException(
+              s"bq_hamming: word-count mismatch (${bq.length} vs $words)")
+            System.arraycopy(bq, 0, rowsFlat, m * words, words)
+            ids(m) = id
+            clusters(m) = cluster
+            m += 1
+          }
+          var s = 0
+          while (s < m) {
+            val cl = clusters(s)
+            var e = s + 1
+            while (e < m && clusters(e) == cl) e += 1
+            val probers = qmap.getOrElse(cl, null)
+            if (probers != null) {
+              var pi = 0
+              while (pi < probers.length) {
+                val qi = probers(pi)
+                bounds(qi) =
+                  if (words == 15)
+                    scanRun15(rowsFlat, ids, s, e, qflat, qi * 15,
+                      bufs(qi), bounds(qi))
+                  else
+                    scanRunGeneric(rowsFlat, ids, s, e, qflat, qi * words,
+                      words, bufs(qi), bounds(qi))
+                pi += 1
+              }
+            }
+            s = e
+          }
+        }
+        bufs
+      }
+      scanPartition _
+    }
   }
 
   /** Two-stage BQ serving: Hamming top-`candidates` coarse pass on the
@@ -454,31 +428,21 @@ object Bq extends Serializable {
       k: Int,
       candidates: Int,
       dist: String = "l2sqr",
-      idCol: String = "id",
       vecCol: String = "vec",
-      queryIdCol: String = "query_id",
-      queryVecCol: String = "query_vec",
       center: Boolean = true,
       coarseSelect: String = "exact"): DataFrame = {
-    val ids = base.select(col(idCol).cast("long").as("id"), col(vecCol).as("vec"))
+    val ids = base.select(col("id").cast("long").as("id"), col(vecCol).as("vec"))
     val model = if (center) Some(train(ids)) else None
     val packed = model.fold(encode(ids))(m => encodeCentered(ids, m))
       .select(col("id"), col("bq"))
-    searchRerankPacked(packed, base, queries, k, candidates, dist, idCol,
-      vecCol, queryIdCol, queryVecCol, model, coarseSelect)
+    searchRerankPacked(packed, base, queries, k, candidates, dist, vecCol,
+      model, coarseSelect)
   }
 
   /** [[searchRerank]] with the coarse pass over an ALREADY-PACKED corpus
     * (see [[hammingBroadcastPacked]]; pass the packing `model` so queries
-    * pack under the same thresholds).
-    *
-    * @param coarseSelect coarse-pool selection mode: `"exact"` (default)
-    *   keeps the global Hamming top-`candidates` per query; `"approx"`
-    *   keeps each scan partition's top-⌈candidates/P⌉ and the union is
-    *   the pool — no selection shuffle (the big-batch serving mode; see
-    *   [[CoarseMerge.approxNqThreshold]]); `"auto"` picks approx iff the
-    *   batch has ≥ that many queries. Exhaustive-exact callers
-    *   (candidates ≥ corpus) must use `"exact"`. */
+    * pack under the same thresholds) — [[CoarseMerge.searchRerank]], whose
+    * `coarseSelect` modes apply. */
   def searchRerankPacked(
       packed: DataFrame,
       base: DataFrame,
@@ -486,421 +450,56 @@ object Bq extends Serializable {
       k: Int,
       candidates: Int,
       dist: String = "l2sqr",
-      idCol: String = "id",
       vecCol: String = "vec",
-      queryIdCol: String = "query_id",
-      queryVecCol: String = "query_vec",
       model: Option[BqModel] = None,
-      coarseSelect: String = "exact"): DataFrame = {
-    require(candidates >= k, s"candidates ($candidates) must be >= k ($k)")
-    val spark = packed.sparkSession
-    import spark.implicits._
-    val qs = queries
-      .select(col(queryIdCol).cast("long"), col(queryVecCol))
-      .as[(Long, Array[Float])].collect()
-    val qsPacked = qs.map { case (qid, v) =>
-      (qid, model.fold(BqKernel.pack(v))(m => BqKernel.packCentered(v, m.thresholds)))
-    }
-    val approxPerPart = CoarseMerge.approxPerPart(coarseSelect, qs.length,
-      packed, k, candidates)
-    // coarse is chunked under the task-memory gate; the rerank runs ONCE
-    // over the unioned winners. Per-chunk rerank was measured (r18, at
-    // nq10k × c2000 over 1M×960) and REJECTED for the
-    // flat path: the winner side is 16 B/row while the float base is
-    // ~3.8 KB/row, so shrinking the winner join by the chunk factor while
-    // re-scanning the full base per chunk trades ~300 MB of join input
-    // against ~7.6 GB of extra base reads — two_stage 35 s per-chunk vs
-    // ~24 s global. (The ROUTED twins DO rerank per chunk: their base is
-    // partition-pruned to each chunk's probed clusters, so there is no
-    // base-scan amplification and the pruning is tighter per chunk.)
-    val coarse =
-      hammingBroadcastPackedArr(packed, qsPacked, candidates, approxPerPart)
-        .select(col("query_id"), col("id"))
-    Rerank.exact(coarse, base, queries, k, dist, idCol, vecCol,
-      queryIdCol, queryVecCol, estRows = qs.length.toLong * candidates)
-  }
+      coarseSelect: String = "exact"): DataFrame =
+    CoarseMerge.searchRerank(BqCodec(model), packed, base, queries, k,
+      candidates, dist, vecCol, coarseSelect)
 
   /** Persist `(id, bq, cluster)` as the physical IVF-BQ layout: cluster-
     * partitioned parquet (`data/cluster=N/...`) — [[Sq.writeIvfPartitioned]]'s
-    * layout on packed sign/threshold words, so [[searchIvfPartitioned]]'s
-    * probe filter prunes DIRECTORIES before any word is read. */
+    * layout on packed sign/threshold words, so [[searchIvf]]'s probe
+    * filter prunes DIRECTORIES before any word is read. */
   def writeIvfPartitioned(assignedPacked: DataFrame, path: String): Unit =
     assignedPacked.select(col("id"), col("bq"), col("cluster"))
       .write.partitionBy("cluster").mode("overwrite").parquet(s"$path/data")
 
-  /** Probed Hamming coarse pass in the serving kernel shape: stream the
-    * probed clusters' `(id, bq, cluster)` rows through blocked,
-    * QUERY-OUTER sweeps — rows buffer into ~4 MB flat blocks, cluster
-    * RUNS within a block are detected (the partitioned layout delivers
-    * rows grouped by directory, so runs span whole file splits; the
-    * in-memory path degrades to shorter runs, still on flat arrays), and
-    * each run is swept once per PROBING query with that query's words and
-    * admission bound in registers ([[scanRun15]]/[[scanRunGeneric]] — the
-    * flat kernel's loop shape, 2-3× over the r17 row-outer form). Output:
-    * (query_id, id) coarse winners; selection identical (per query the
-    * rows offer in scan order under the same integer bound). */
-  private def coarseIvfKernel(
-      probedRows: DataFrame,
-      qsPacked: Array[(Long, Array[Long])],
-      clusterToQ: Map[Long, Array[Int]],
-      candidates: Int,
-      approxPerPart: Int = 0): DataFrame = {
-    val spark = probedRows.sparkSession
-    import spark.implicits._
-    val bcQ = spark.sparkContext.broadcast(qsPacked)
-    val bcMap = spark.sparkContext.broadcast(clusterToQ)
-    val k = candidates
-    // approx mode: per-task state is nq × approxPerPart slots, not nq × k
-    val bufCap = if (approxPerPart > 0) approxPerPart else k
-    def scanPartition(it: Iterator[(Long, Array[Long], Long)])
-        : Array[graft.index.TopBuffer] = {
-      val qarr = bcQ.value
-      val qmap = bcMap.value
-      val nq = qarr.length
-      if (nq == 0 || !it.hasNext) return Array.empty
-      val words = qarr(0)._2.length
-      val qflat = flattenQueries(qarr, words)
-      val bufs = Array.fill(nq)(new graft.index.TopBuffer(bufCap))
-      val bounds = Array.fill(nq)(Int.MaxValue)
-      val blockRows = math.max(1, (4 << 20) / (words * 8))
-      val ids = new Array[Long](blockRows)
-      val clusters = new Array[Long](blockRows)
-      val rowsFlat = new Array[Long](blockRows * words)
-      while (it.hasNext) {
-        var m = 0
-        while (m < blockRows && it.hasNext) {
-          val (id, bq, cluster) = it.next()
-          if (bq.length != words) throw new IllegalArgumentException(
-            s"bq_hamming: word-count mismatch (${bq.length} vs $words)")
-          System.arraycopy(bq, 0, rowsFlat, m * words, words)
-          ids(m) = id
-          clusters(m) = cluster
-          m += 1
-        }
-        var s = 0
-        while (s < m) {
-          val cl = clusters(s)
-          var e = s + 1
-          while (e < m && clusters(e) == cl) e += 1
-          val probers = qmap.getOrElse(cl, null)
-          if (probers != null) {
-            var pi = 0
-            while (pi < probers.length) {
-              val qi = probers(pi)
-              bounds(qi) =
-                if (words == 15)
-                  scanRun15(rowsFlat, ids, s, e, qflat, qi * 15,
-                    bufs(qi), bounds(qi))
-                else
-                  scanRunGeneric(rowsFlat, ids, s, e, qflat, qi * words,
-                    words, bufs(qi), bounds(qi))
-              pi += 1
-            }
-          }
-          s = e
-        }
-      }
-      bufs
-    }
-    val src = probedRows
-      .select(col("id").cast("long"), col("bq"), col("cluster").cast("long"))
-      .as[(Long, Array[Long], Long)]
-    val hits =
-      if (approxPerPart > 0) {
-        // APPROXIMATE selection (r20, extending the r19 flat mode to the
-        // routed kernel per the verdict): each scanned partition's
-        // top-approxPerPart per query IS the candidate pool — the union
-        // streams straight into the (partition-pruned or global) exact
-        // rerank with no selection shuffle. The probe plans still prune
-        // the scan; approximation changes pool MEMBERSHIP only, and the
-        // rerank computes true distances over the pool. Reference analog:
-        // the ef-bounded approximate selection of `flat_index.rs:84-104`
-        // composed with the probe economics of `ivf_index.rs:143-155`.
-        CoarseMerge.lastPath = "approx"
-        src.mapPartitions { it =>
-            val qarr = bcQ.value
-            val bufs = scanPartition(it)
-            Iterator.range(0, bufs.length).flatMap { qi =>
-              val buf = bufs(qi)
-              Iterator.range(0, buf.size).map(p =>
-                (qarr(qi)._1, buf.idAt(p), buf.distAt(p)))
-            }
-          }
-          .toDF("query_id", "id", "distance")
-      } else if (CoarseMerge.eligible(qsPacked.length, k)) {
-        CoarseMerge.lastPath = "merge"
-        CoarseMerge.merge(spark, qsPacked.map(_._1),
-          src.rdd.mapPartitions(it => Iterator.single(scanPartition(it))), k)
-      } else if (CoarseMerge.distEligible(qsPacked.length, k)) {
-        CoarseMerge.lastPath = "dist"
-        CoarseMerge.mergeDistributed(spark, qsPacked.map(_._1),
-          src.rdd.mapPartitions(it => Iterator.single(scanPartition(it))), k)
-      } else {
-        CoarseMerge.lastPath = "agg"
-        src.mapPartitions { it =>
-            val qarr = bcQ.value
-            val bufs = scanPartition(it)
-            Iterator.range(0, bufs.length).flatMap { qi =>
-              val buf = bufs(qi)
-              Iterator.range(0, buf.size).map(p =>
-                (qarr(qi)._1, buf.idAt(p), buf.distAt(p)))
-            }
-          }
-          .toDF("query_id", "id", "distance")
-          .groupBy("query_id")
-          .agg(TopK.topK(k)(col("id"), col("distance")).as("topk"))
-          .select(col("query_id"), explode(col("topk")).as("hit"))
-          .select(col("query_id"), col("hit.id").as("id"),
-            col("hit.distance").as("distance"))
-      }
-    hits.select(col("query_id"), col("id"))
-  }
-
-  /** Task-memory-gated, rerank-pipelined IVF search core shared by
-    * [[searchIvf]] / [[searchIvfPartitionedDf]]: chunk the query batch to
-    * [[CoarseMerge.spans]] (bounding each task's TopBuffer state, the
-    * nq × candidates × 16 B OOM), plan probes PER CHUNK (a chunk's probe
-    * union is a subset of the batch's — over the partitioned layout each
-    * chunk pass reads only ITS clusters, so chunking tightens pruning
-    * rather than multiplying full passes), and rerank PER CHUNK (r18):
-    * when the chunk's float base is PRUNED to the chunk's probed clusters
-    * (`rerankBaseFor` returns Some — the partitioned layouts), that
-    * chunk's coarse winners feed their own exact [[Rerank.exact]] and the
-    * reranked top-k union. When the base CANNOT be pruned per chunk
-    * (`rerankBaseFor` returns None — the in-memory arm, a partitioned
-    * codes layout over an unpartitioned float base, the coverage-void
-    * flat regime), the chunk's coarse winners are DEFERRED and rerank
-    * ONCE, globally, against `globalBase`: per-chunk reranking there
-    * re-scans the ~3.8 KB/row float corpus once per chunk — the exact
-    * amplification the flat path measured (35 s vs 24 s, winner side is
-    * 16 B/row) and rejected. Join shapes weigh BYTES PER SIDE, not rows.
-    * Exact by construction either way — chunks partition the query set,
-    * and both stages are per-query. */
-  private def searchIvfChunked(
-      buildProbedRows: Array[Int] => DataFrame,
-      rerankBaseFor: Array[Int] => Option[DataFrame],
-      globalBase: DataFrame,
-      qs: Array[(Long, Array[Float])],
-      bqModel: Option[BqModel],
-      ivfModel: graft.operators.IvfModel,
-      np: Int,
-      k: Int,
-      candidates: Int,
-      dist: String,
-      idCol: String,
-      vecCol: String,
-      coarseSelect: String = "exact",
-      // vec column of `globalBase` when it differs from the pruned base's
-      // (r20 binary sidecar: the partitioned rerank base stores `vecb`
-      // f32-binary while the flat/global base is the float table)
-      flatVecCol: Option[String] = None): DataFrame = {
-    // APPROX coarse selection over the routed kernel (r20): the per-chunk
-    // cap comes from the chunk's OWN pruned scan's partition count (the
-    // probed directories, not the full layout — a layout-wide P would
-    // shrink the pool below ≈ candidates whenever pruning leaves fewer
-    // splits). The batch probe plan is computed once up front so the chunk
-    // gate can size on what approx tasks actually hold (nq × cap slots,
-    // not nq × candidates) and is reused verbatim as the single chunk's
-    // plan in the common 1-chunk case.
-    val approxOn = CoarseMerge.approxActive(coarseSelect, qs.length)
-    val batchPlan =
-      if (!approxOn) None
-      else {
-        val (c2q, probed) = Sq.probePlan(qs, ivfModel, np)
-        val rows = buildProbedRows(probed)
-        Some((c2q, probed, rows, CoarseMerge.capFor(rows, k, candidates)))
-      }
-    val spans = CoarseMerge.spans(qs.length,
-      batchPlan.map(_._4).getOrElse(candidates))
-    val deferredCoarse = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    val deferredQs =
-      scala.collection.mutable.ArrayBuffer.empty[(Long, Array[Float])]
-    val perChunk = spans.flatMap { case (s, e) =>
-      val qsC = if (s == 0 && e == qs.length) qs else qs.slice(s, e)
-      val (clusterToQ, probed, probedRows, cap) = batchPlan match {
-        case Some(b) if spans.length == 1 => b
-        case _ =>
-          val (c2q, p) = Sq.probePlan(qsC, ivfModel, np)
-          val rows = buildProbedRows(p)
-          (c2q, p, rows,
-            if (approxOn) CoarseMerge.capFor(rows, k, candidates) else 0)
-      }
-      val qsPacked = qsC.map { case (qid, v) =>
-        (qid, bqModel.fold(BqKernel.pack(v))(m =>
-          BqKernel.packCentered(v, m.thresholds)))
-      }
-      val coarse =
-        coarseIvfKernel(probedRows, qsPacked, clusterToQ, candidates,
-          approxPerPart = if (approxOn) cap else 0)
-      rerankBaseFor(probed) match {
-        case Some(prunedBase) =>
-          Some(Rerank.exact(coarse, prunedBase,
-            Rerank.queriesDf(coarse.sparkSession, qsC), k, dist, idCol,
-            vecCol, "query_id", "query_vec",
-            estRows = qsC.length.toLong * candidates))
-        case None =>
-          deferredCoarse += coarse; deferredQs ++= qsC; None
-      }
-    }
-    CoarseMerge.lastChunks = spans.length
-    val global =
-      if (deferredCoarse.isEmpty) None
-      else Some(Rerank.exact(deferredCoarse.reduce(_ union _), globalBase,
-        Rerank.queriesDf(globalBase.sparkSession, deferredQs.toArray), k,
-        dist, idCol, flatVecCol.getOrElse(vecCol), "query_id", "query_vec",
-        estRows = deferredQs.length.toLong * candidates))
-    (perChunk ++ global).reduce(_ union _)
-  }
-
-  /** IVF-routed BQ (the composition [[Sq.searchIvf]] already serves for
-    * byte codes, on 1-bit words): per query, probe the `nProbes` nearest
-    * clusters (driver-side exact double distances, [[Sq.probePlan]]), scan
-    * ONLY those clusters' packed words with the Hamming kernel, keep the
-    * coarse top-`candidates`, then exact re-rank on an id-pruned pass over
-    * the float column. With `nProbes ≥ kClusters` and `candidates ≥ n`
-    * the result is exact KNN (every row survives both prunes).
+  /** IVF-routed BQ (the composition [[Sq.searchIvf]] serves for byte
+    * codes, on 1-bit words — [[CoarseMerge.searchIvf]]): per query, probe
+    * the `nProbes` nearest clusters, scan ONLY those clusters' packed
+    * words with the Hamming kernel, keep the coarse top-`candidates`, then
+    * exact re-rank on an id-pruned pass over the float column. With
+    * `nProbes ≥ kClusters` and `candidates ≥ n` the result is exact KNN.
     *
     * 100 TB shape: the IVF pruning and the 32× bit compression multiply —
     * a batch reads (np/kc) × corpus/32 bytes over the partitioned layout
-    * ([[writeIvfPartitioned]] / [[searchIvfPartitioned]]). Reference
-    * analog: the probe economics of
-    * `/root/reference/src/index/ivf_index.rs:143-155` on the packed
-    * sidecar pattern of `metadata_vec_table.rs:14-20`.
+    * ([[writeIvfPartitioned]], read back as
+    * `spark.read.parquet(s"$path/data")`); `baseClusterCol` prunes the
+    * rerank scan as in [[Sq.searchIvf]]. Reference analog: the probe
+    * economics of `/root/reference/src/index/ivf_index.rs:143-155` on the
+    * packed sidecar pattern of `metadata_vec_table.rs:14-20`.
     *
-    * @param assignedPacked (id, bq, cluster) — [[Ivf.assign]] output run
-    *                       through [[encodeCentered]]/[[encode]]
-    * @param base           (id, vec) float table for the re-rank
-    */
+    * @param codes (id, bq, cluster) — [[Ivf.assign]] output run through
+    *              [[encodeCentered]]/[[encode]], in memory or the
+    *              partitioned layout
+    * @param base  (id, vec) float table for the re-rank */
   def searchIvf(
-      assignedPacked: DataFrame,
+      codes: DataFrame,
       base: DataFrame,
-      ivfModel: graft.operators.IvfModel,
+      ivfModel: IvfModel,
       bqModel: Option[BqModel],
       queries: DataFrame,
       k: Int,
       candidates: Int,
       nProbes: Option[Int] = None,
       dist: String = "l2sqr",
-      idCol: String = "id",
       vecCol: String = "vec",
-      queryIdCol: String = "query_id",
-      queryVecCol: String = "query_vec",
-      coarseSelect: String = "exact"): DataFrame = {
-    require(candidates >= k, s"candidates ($candidates) must be >= k ($k)")
-    val np = math.max(1, nProbes.getOrElse(ivfModel.defaultNProbes))
-    val spark = assignedPacked.sparkSession
-    import spark.implicits._
-    val qs = queries
-      .select(col(queryIdCol).cast("long"), col(queryVecCol))
-      .as[(Long, Array[Float])].collect()
-    searchIvfChunked(
-      probed => assignedPacked
-        .select(col(idCol).cast("long").as("id"), col("bq"),
-          col("cluster").cast("long").as("cluster"))
-        .filter(col("cluster").isInCollection(
-          probed.map(c => Long.box(c.toLong)).toSeq)),
-      // in-memory base: not cluster-prunable per chunk -> ONE global rerank
-      _ => None, base,
-      qs, bqModel, ivfModel, np, k, candidates, dist, idCol, vecCol,
-      coarseSelect)
-  }
-
-  /** [[searchIvf]] over the cluster-partitioned packed layout: the probed
-    * clusters push down as a parquet PARTITION filter, so a batch reads
-    * (probed clusters / kc) × corpus/32 bytes. When `base` is ALSO
-    * cluster-partitioned under the same IVF assignment (the catalog's IVF
-    * sidecar layout), pass `baseClusterCol = Some("cluster")` and the
-    * RERANK scan partition-prunes too — every coarse candidate comes from
-    * a probed cluster, so pruning cannot drop one ([[Sq.searchIvfPartitioned]]'s
-    * argument, verbatim). */
-  def searchIvfPartitioned(
-      path: String,
-      base: DataFrame,
-      ivfModel: graft.operators.IvfModel,
-      bqModel: Option[BqModel],
-      queries: DataFrame,
-      k: Int,
-      candidates: Int,
-      nProbes: Option[Int] = None,
-      dist: String = "l2sqr",
-      idCol: String = "id",
-      vecCol: String = "vec",
-      queryIdCol: String = "query_id",
-      queryVecCol: String = "query_vec",
       baseClusterCol: Option[String] = None,
-      coarseSelect: String = "exact"): DataFrame =
-    searchIvfPartitionedDf(base.sparkSession.read.parquet(s"$path/data"),
-      base, ivfModel, bqModel, queries, k, candidates, nProbes, dist,
-      idCol, vecCol, queryIdCol, queryVecCol, baseClusterCol,
-      coarseSelect = coarseSelect)
-
-  /** [[searchIvfPartitioned]] over a PRE-LISTED packed DataFrame — see
-    * [[Sq.searchIvfPartitionedDf]]: partition-layout listing is a
-    * per-`read.parquet`-call driver cost a deployment pays once, not per
-    * batch. */
-  /** @param flatPacked optional UNPARTITIONED (id, bq, cluster) twin of
-    *                    `packed` — the coverage-aware dispatch target (see
-    *                    [[Sq.searchIvfPartitionedDf]]: when a chunk's probe
-    *                    union covers ≥ [[CoarseMerge.coverageFlatThreshold]]
-    *                    of the clusters, directory pruning is void and the
-    *                    flat copy scans instead; same rows, same per-query
-    *                    probe restriction, identical results).
-    * @param flatBase    the flat float twin the RERANK reads in the same
-    *                    regime. */
-  def searchIvfPartitionedDf(
-      packed: DataFrame,
-      base: DataFrame,
-      ivfModel: graft.operators.IvfModel,
-      bqModel: Option[BqModel],
-      queries: DataFrame,
-      k: Int,
-      candidates: Int,
-      nProbes: Option[Int] = None,
-      dist: String = "l2sqr",
-      idCol: String = "id",
-      vecCol: String = "vec",
-      queryIdCol: String = "query_id",
-      queryVecCol: String = "query_vec",
-      baseClusterCol: Option[String] = None,
-      flatPacked: Option[DataFrame] = None,
+      flatCodes: Option[DataFrame] = None,
       flatBase: Option[DataFrame] = None,
       coarseSelect: String = "exact",
-      flatVecCol: Option[String] = None): DataFrame = {
-    require(candidates >= k, s"candidates ($candidates) must be >= k ($k)")
-    val np = math.max(1, nProbes.getOrElse(ivfModel.defaultNProbes))
-    val spark = base.sparkSession
-    import spark.implicits._
-    val qs = queries
-      .select(col(queryIdCol).cast("long"), col(queryVecCol))
-      .as[(Long, Array[Float])].collect()
-    val kc = ivfModel.centroids.length
-    def prunes(probed: Array[Int]): Boolean = {
-      val flat = flatPacked.isDefined &&
-        probed.length.toDouble / kc >= CoarseMerge.coverageFlatThreshold
-      CoarseMerge.lastCoverageArm = if (flat) "flat" else "partitioned"
-      !flat
-    }
-    searchIvfChunked(
-      probed =>
-        (if (prunes(probed))
-           packed.filter(col("cluster").isin(probed.map(Int.box): _*)) // partition-pruned
-         else flatPacked.get)
-          .select(col("id").cast("long").as("id"), col("bq"),
-            col("cluster").cast("long").as("cluster")),
-      // per-CHUNK probed clusters — a tighter rerank partition filter than
-      // the batch union (every chunk candidate comes from a chunk-probed
-      // cluster, so pruning cannot drop one). Prunable ONLY when the base
-      // is cluster-partitioned AND this chunk is in the pruning regime;
-      // otherwise (flat regime, or no baseClusterCol) defer to ONE global
-      // rerank — per-chunk passes over an unpruned float base multiply
-      // full corpus scans by the chunk count.
-      probed =>
-        if (prunes(probed))
-          baseClusterCol.map(c =>
-            base.filter(col(c).isin(probed.map(Int.box): _*)))
-        else None,
-      flatBase.getOrElse(base),
-      qs, bqModel, ivfModel, np, k, candidates, dist, idCol, vecCol,
-      coarseSelect, if (flatBase.isDefined) flatVecCol else None)
-  }
+      flatVecCol: Option[String] = None): DataFrame =
+    CoarseMerge.searchIvf(BqCodec(bqModel), codes, base, ivfModel, queries,
+      k, candidates, nProbes, dist, vecCol, baseClusterCol, flatCodes,
+      flatBase, coarseSelect, flatVecCol)
 }

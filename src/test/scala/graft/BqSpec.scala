@@ -248,17 +248,17 @@ class BqSpec extends SparkTestBase {
   }
 
   test("routed autoCandidates: pool-derived budget, flat-arm cap, 10k floor, recall held") {
-    import graft.operators.Bq
+    import graft.operators.CoarseMerge
     // pool = np·N/kc; budget = 2/3 pool (sweep-calibrated), capped at
     // the flat-arm budget, floored at 10·k
-    assert(Bq.autoCandidates(1000000L, 10, 1, 512) == 1302) // 2/3 of 1953
-    assert(Bq.autoCandidates(1000000L, 10, 1, 32) == 2000)  // cap: flat arm
-    assert(Bq.autoCandidates(1000000L, 10, 4, 512) == 2000) // np scales pool
-    assert(Bq.autoCandidates(10000L, 10, 1, 512) == 100)    // floor: 10·k
+    assert(CoarseMerge.autoCandidates(1000000L, 10, 1, 512) == 1302) // 2/3 of 1953
+    assert(CoarseMerge.autoCandidates(1000000L, 10, 1, 32) == 2000)  // cap: flat arm
+    assert(CoarseMerge.autoCandidates(1000000L, 10, 4, 512) == 2000) // np scales pool
+    assert(CoarseMerge.autoCandidates(10000L, 10, 1, 512) == 100)    // floor: 10·k
     // the pool-aware budget serves the same rows as the corpus-scaled one
     // when the floor makes both exhaustive over the probed pool (the
     // small-fixture regime) — and never violates candidates >= k
-    assert(Bq.autoCandidates(1L, 10, 1, 1) == 100)
+    assert(CoarseMerge.autoCandidates(1L, 10, 1, 1) == 100)
   }
 
   test("candidates < k rejected; candidates >= n is exact") {
@@ -347,7 +347,7 @@ class BqSpec extends SparkTestBase {
     for (np <- Seq(2, 8)) {
       val mem = Bq.searchIvf(packed, base, ivfModel, Some(model), qs,
         k = 5, candidates = 24, nProbes = Some(np))
-      val partBoth = Bq.searchIvfPartitioned(dir,
+      val partBoth = Bq.searchIvf(spark.read.parquet(s"$dir/data"),
         spark.read.parquet(s"$floatDir/data"), ivfModel, Some(model), qs,
         k = 5, candidates = 24, nProbes = Some(np),
         baseClusterCol = Some("cluster"))
@@ -433,8 +433,8 @@ class BqSpec extends SparkTestBase {
     val dir = java.nio.file.Files.createTempDirectory(
       java.nio.file.Paths.get("target"), "bq_ivf_approx").toString
     Bq.writeIvfPartitioned(packed, dir)
-    val part = Bq.searchIvfPartitioned(dir, base, ivfModel, Some(model),
-      qs, k = k, candidates = 200, nProbes = Some(8),
+    val part = Bq.searchIvf(spark.read.parquet(s"$dir/data"), base,
+      ivfModel, Some(model), qs, k = k, candidates = 200, nProbes = Some(8),
       coarseSelect = "approx")
     assert(graft.operators.CoarseMerge.lastPath == "approx")
     val pByQ = part.collect()

@@ -219,11 +219,11 @@ class CoarseChunkSpec extends SparkTestBase {
     val floatDir = s"$dir/float"
     Ivf.writePartitioned(assigned, ivfModel, floatDir)
     val floats = spark.read.parquet(s"$floatDir/data")
-    def sqSearch() = Sq.searchIvfPartitioned(s"$dir/sq", floats, ivfModel,
-      sqModel, qs, k = 5, candidates = 24, nProbes = Some(3),
+    def sqSearch() = Sq.searchIvf(spark.read.parquet(s"$dir/sq/data"),
+      floats, ivfModel, sqModel, qs, k = 5, candidates = 24, nProbes = Some(3),
       baseClusterCol = Some("cluster"))
-    def bqSearch() = Bq.searchIvfPartitioned(s"$dir/bq", floats, ivfModel,
-      Some(bqModel), qs, k = 5, candidates = 24, nProbes = Some(3),
+    def bqSearch() = Bq.searchIvf(spark.read.parquet(s"$dir/bq/data"),
+      floats, ivfModel, Some(bqModel), qs, k = 5, candidates = 24, nProbes = Some(3),
       baseClusterCol = Some("cluster"))
     val sqOne = rows(sqSearch()); assert(CoarseMerge.lastChunks == 1)
     val bqOne = rows(bqSearch()); assert(CoarseMerge.lastChunks == 1)

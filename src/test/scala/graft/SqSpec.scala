@@ -330,12 +330,12 @@ class SqSpec extends SparkTestBase {
         k = 6, candidates = 24, nProbes = Some(np), dist = dist)
       val declarative = Sq.searchIvfDeclarative(packed, df, ivfModel,
         sqModel, q, k = 6, candidates = 24, nProbes = Some(np), dist = dist)
-      val part = Sq.searchIvfPartitioned(dir, df, ivfModel, sqModel, q,
-        k = 6, candidates = 24, nProbes = Some(np), dist = dist)
+      val part = Sq.searchIvf(spark.read.parquet(s"$dir/data"), df,
+        ivfModel, sqModel, q, k = 6, candidates = 24, nProbes = Some(np), dist = dist)
       // both stages partition-pruned: codes from `dir`, floats from the
       // cluster-partitioned layout (every candidate's float row lives in
       // a probed cluster's directory, so pruning cannot drop a candidate)
-      val partBoth = Sq.searchIvfPartitioned(dir,
+      val partBoth = Sq.searchIvf(spark.read.parquet(s"$dir/data"),
         spark.read.parquet(s"$floatDir/data"), ivfModel, sqModel, q,
         k = 6, candidates = 24, nProbes = Some(np), dist = dist,
         baseClusterCol = Some("cluster"))
