@@ -336,8 +336,8 @@ private[graft] object CoarseMerge {
     * over one partition's rows and return them (empty for an empty
     * partition or batch): the flat kernel over `(id, code)` rows, the
     * probed kernel over `(id, code, cluster)` rows, scoring a row only
-    * for the queries `bcMap` lists for its cluster. `name` is the
-    * code column and the catalog's arm-label prefix. */
+    * for the queries `bcMap` lists for its cluster. `name` prefixes the
+    * catalog's arm labels. */
   trait Codec[Q, C] extends Serializable {
     def name: String
     /** A collected float query as the kernels read it. */
