@@ -17,7 +17,12 @@ gain needs at least nine tenths of the pairs won and a median difference
 larger than the parent's own quartile spread; a loss is the same rule with
 the sides swapped. Directions come from BENCHMARK.json; a per-table metric
 `table.<t>.<m>` takes the one declared for `table.ivf.<m>`, and a metric
-with no declared direction prints `?` in place of a verdict. Each run also
+with no declared direction prints `?` in place of a verdict. Each end-to-end
+metric also gets the bound check of its BENCHMARK.json `bound` (a fraction
+of the median): `worse>bound` when the change's median is worse than the
+parent's by more than the bound, `unresolved` when either side's quartile
+spread is wider than the bound of its own median (unless every change run
+beats every parent run), `within` otherwise. Each run also
 records the host's 1-minute load average (/proc/loadavg) just before and
 just after it and its wall time; the report lists them per pair and flags
 a pair whose two sides' mean load differs by more than 1.0, since such a
@@ -48,6 +53,13 @@ def better_direction():
         bench = json.load(fh)
     return {m["name"]: m["better"]
             for m in bench.get("end_to_end", []) + bench.get("per_layer", [])}
+
+
+def end_to_end_bounds():
+    """end-to-end metric -> its relative bound, from BENCHMARK.json."""
+    with open(os.path.join(ROOT, "BENCHMARK.json")) as fh:
+        bench = json.load(fh)
+    return {m["name"]: m["bound"] for m in bench.get("end_to_end", []) if "bound" in m}
 
 
 def direction_of(name, better):
@@ -119,6 +131,25 @@ def verdict(pairs, better):
     return wins, losses, "-"
 
 
+def bound_check(pairs, better, bound):
+    """The bound check of an end-to-end metric over pairs [(parent, change)]:
+    'worse>bound', 'unresolved', both, or 'within'."""
+    sign = -1.0 if better == "lower" else 1.0
+    parent = [a for a, _ in pairs]
+    change = [b for _, b in pairs]
+    pq1, pmed, pq3 = quartiles(parent)
+    cq1, cmed, cq3 = quartiles(change)
+    flags = []
+    if sign * (cmed - pmed) < -bound * abs(pmed):
+        flags.append("worse>bound")
+    # every change run better than every parent run settles it however wide
+    # the spread
+    clean = (max(change) < min(parent)) if better == "lower" else (min(change) > max(parent))
+    if not clean and (pq3 - pq1 > bound * abs(pmed) or cq3 - cq1 > bound * abs(cmed)):
+        flags.append("unresolved")
+    return ",".join(flags) or "within"
+
+
 def main():
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     ap.add_argument("--parent", required=True, help="parent git rev")
@@ -137,6 +168,7 @@ def main():
     with open(os.path.join(ROOT, "BENCHMARK.json")) as fh:
         seconds = a.seconds or json.load(fh).get("run_seconds", 10)
     better = better_direction()
+    bounds = end_to_end_bounds()
     stamp = time.strftime("%Y%m%d_%H%M%S")
     trees = {}
     for side, rev in (("parent", a.parent), ("change", a.change)):
@@ -201,16 +233,18 @@ def main():
         return 1
     names = sorted(set(ok[0][0]["metrics"]) & set(ok[0][1]["metrics"]))
     print(f"{'metric':40s} {'parent q1/med/q3':>28s} {'change q1/med/q3':>28s} "
-          f"{'won':>6s} {'lost':>5s}  verdict")
+          f"{'won':>6s} {'lost':>5s}  {'verdict':8s} bound")
     for name in names:
         pairs = [(p["metrics"][name]["value"], c["metrics"][name]["value"])
                  for p, c in ok]
         pq = quartiles([x for x, _ in pairs])
         cq = quartiles([y for _, y in pairs])
         wins, losses, v = verdict(pairs, direction_of(name, better))
+        b = (bound_check(pairs, better[name], bounds[name])
+             if name in bounds and name in better else "")
         fmt = lambda q: "/".join(f"{x:.4g}" for x in q)
         print(f"{name:40s} {fmt(pq):>28s} {fmt(cq):>28s} "
-              f"{wins:>3d}/{len(pairs):<2d} {losses:>5d}  {v}")
+              f"{wins:>3d}/{len(pairs):<2d} {losses:>5d}  {v:8s} {b}".rstrip())
     return 0
 
 

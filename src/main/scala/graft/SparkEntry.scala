@@ -1083,8 +1083,8 @@ object SparkEntry {
     }),
     // §7.3 + §2.11: the rewrite's catalog arm end to end — ingest into a
     // VecDB, build the HNSW sidecar, registerSql, and run the SQL top-k:
-    // the rule dispatches through searchBatch (lastServedArm pinned to
-    // "hnsw"), full beam ⇒ exact ⇒ the same DuckDB ORDER BY LIMIT oracle
+    // the rule dispatches through the catalog search (lastServedArm pinned
+    // to "hnsw"), full beam ⇒ exact ⇒ the same DuckDB ORDER BY LIMIT oracle
     "q_sql_topk_indexed" -> ((s, dir) => {
       val db = catalogIngest(s, dir, "vecdb_qsql")
       val n = db.getLen("emb").toInt
@@ -1097,17 +1097,16 @@ object SparkEntry {
       try {
         val top = s.sql("SELECT id, vec_l2sq(vec, CAST(" + lits +
           " AS array<float>)) AS d FROM sql_topk_cat_emb ORDER BY d LIMIT 50")
-        val fired = top.queryExecution.optimizedPlan.collect {
-          case f: org.apache.spark.sql.catalyst.plans.logical.Filter =>
-            f.condition
-        }.exists(_.exists {
-          case org.apache.spark.sql.catalyst.expressions.In(_, vs) =>
-            vs.length == 50
-          case si: org.apache.spark.sql.catalyst.expressions.InSet =>
-            si.hset.size == 50
+        // the HNSW graphs are driver-resident at this size, so the rewrite
+        // answers from the search's winners: the optimized plan is a local
+        // relation of the 50 rows, with no relation scan left
+        val fired = top.queryExecution.optimizedPlan.collectLeaves() match {
+          case Seq(org.apache.spark.sql.catalyst.plans.logical.LocalRelation(
+              _, data, _, _)) => data.length == 50
           case _ => false
-        })
-        require(fired, "q_sql_topk_indexed: the catalog rewrite did not fire")
+        }
+        require(fired,
+          "q_sql_topk_indexed: the catalog rewrite was not answered locally")
         require(db.lastServedArm == "hnsw",
           s"q_sql_topk_indexed: expected the hnsw arm, got '${db.lastServedArm}'")
         top.select(col("id"), (round(col("d"), 6) + lit(0.0)).as("distance"))

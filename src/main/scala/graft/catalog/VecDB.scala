@@ -456,9 +456,10 @@ class VecDB(spark: SparkSession, root: String) {
     }
   }
 
-  /** (version, nextId, created) of a table — fixture observability for the
-    * cacheKey-rotation fence spec. */
-  private[graft] def entrySnapshotForTest(key: String): (Int, Long, Long) = {
+  /** (version, nextId, created) of a table: any append, delete or
+    * recreate moves it. The SQL top-k rewrite records it at registration
+    * to spot a view older than the table. */
+  private[graft] def tableStamp(key: String): (Int, Long, Long) = {
     val e = entry(key)
     (e.version, e.nextId, e.created)
   }
@@ -1077,9 +1078,9 @@ class VecDB(spark: SparkSession, root: String) {
     * creates/replaces a temp view and registers it with
     * [[graft.plans.GraftSqlTopK]], so `ORDER BY vec_l2sq(vec, lit) LIMIT k`
     * over the view dispatches through [[searchBatch]]'s index arms instead
-    * of a full-table sort. Re-call after mutations that bump the table
-    * version (delete/compaction) — the registered plan pins the current
-    * data files. */
+    * of a full-table sort. Re-call after any append or delete: the view
+    * pins the data files it was created with, and the rewrite declines
+    * over a view older than its table. */
   def registerSql(key: String, viewName: Option[String] = None): Unit = {
     val name = viewName.getOrElse(key)
     table(key).createOrReplaceTempView(name)
@@ -1151,12 +1152,14 @@ class VecDB(spark: SparkSession, root: String) {
     val df = table(key)
     if (df.isEmpty) throw new IllegalArgumentException(
       "Cannot build IVF index for an empty table")
-    val (model, assigned) = Ivf.build(df.select(col("id"), col("vec")), k,
-      e.dist, trainFraction = trainProportion)
+    val base = df.select(col("id"), col("vec"))
+    val model = Ivf.train(base, k, e.dist, trainFraction = trainProportion)
     // binary f32 layout (r20): the rerank/scan decodes one blob per row
     // instead of per-element array assembly — the measured bound of the
-    // float-heavy rerank rows (VERDICT r19 #2); bit-identical distances
-    Ivf.writePartitioned(assigned, model, ivfDir(e).toString, binary = true)
+    // float-heavy rerank rows (VERDICT r19 #2); bit-identical distances.
+    // The write assigns through a centroid broadcast released after it.
+    Ivf.withAssigned(base, model)(
+      Ivf.writePartitioned(_, model, ivfDir(e).toString, binary = true))
     invalidateSidecars(e.filename)
     catalogLock.synchronized {
       tables += key -> entry(key).copy(ivf = Some(IvfInfo(k, defaultNProbes)))
@@ -1451,31 +1454,12 @@ class VecDB(spark: SparkSession, root: String) {
   def searchBatch(key: String, queries: DataFrame, k: Int,
       ef: Option[Int] = None, upperBound: Option[Double] = None,
       pattern: Map[String, String] = Map.empty): DataFrame = {
-    // lock-free on the healthy path (a search must not block behind a
-    // long-running build/ingest holding the table lock); only when a
-    // sidecar is actually missing, heal under tableLock → catalogLock
-    val e = {
-      val snap = entry(key)
-      if (sidecarsIntact(snap)) snap
-      else tableLock(key).synchronized {
-        catalogLock.synchronized(healMissingSidecars(key))
-      }
-    }
+    val e = servingEntry(key)
     val ub = upperBound.getOrElse(Double.PositiveInfinity)
-    // serve-path table read through the sidecar cache (r20): `table(key)`
-    // re-lists the data directory per call; the stamp folds
-    // (version, nextId) so any rewrite/append rotates the listing.
-    // An explicit cacheTable() still takes priority for the scans; the
-    // metadata attach always reads the listing (its part files).
-    val listing = sidecarCachedAs[DataFrame](dataDir(e), e)(
-      spark.read.schema(dataSchema(e.dim)).parquet(dataDir(e)))
+    val listing = listingOf(e)
     val data = cached.getOrElse(key, listing)
     val filtered = data.filter(Search.metaPattern(pattern, col("meta")))
-    val serveable = queryBatchServeable(queries)
-    // serving-shape broadcast paths for in-memory-sized tables, declarative
-    // plans beyond (same results; specs assert equality)
-    val small = e.nextId <= FlatBroadcastMaxRows
-    if (!serveable) {
+    if (!queryBatchServeable(queries)) {
       val hits = (ef, e.pq) match {
         // oversized query batch: driver-unbounded shapes only — no serving
         // arm may collect this batch to the driver
@@ -1516,7 +1500,69 @@ class VecDB(spark: SparkSession, root: String) {
       }
       filtered.select(col("id"), col("meta")).join(hits, "id")
         .select(col("query_id"), col("id"), col("distance"), col("meta"))
-    } else attachMeta(e, listing, (ef, e.pq) match {
+    } else attachMeta(e, listing,
+      serve(key, e, filtered, queries, k, ef, ub, pattern, withVecs = false).rows)
+  }
+
+  /** The single-query SQL top-k's search ([[graft.plans.GraftSqlTopK]]):
+    * [[searchBatch]]'s dispatch for one query vector, no bound, no
+    * pattern. The winners' ids always come back. When the arm walked the
+    * driver-resident HNSW graphs, the winners also come back as full table
+    * rows (id, vec, meta): the vector from the graphs the walk read, the
+    * meta from the part-file cache ([[attachMeta]]'s source). The rule
+    * answers from those rows without a Spark job. */
+  private[graft] def searchTopK(key: String, query: Array[Float], k: Int,
+      ef: Option[Int]): VecDB.Winners = {
+    val e = servingEntry(key)
+    val listing = listingOf(e)
+    val queries = spark.createDataFrame(java.util.Arrays.asList(Row(0L, query)),
+      StructType(Seq(
+        StructField("query_id", LongType, nullable = false),
+        StructField("query_vec", ArrayType(FloatType, containsNull = false),
+          nullable = false))))
+    if (!queryBatchServeable(queries))
+      return VecDB.Winners(searchBatch(key, queries, k, ef).select("id")
+        .collect().map(_.getLong(0)), None)
+    val hits = serve(key, e, cached.getOrElse(key, listing), queries, k, ef,
+      Double.PositiveInfinity, Map.empty, withVecs = true)
+    val ids = hits.rows.map(_._2)
+    VecDB.Winners(ids, hits.vecs.map { vecs =>
+      val parts = metaParts(e, listing)
+      ids.indices.map(i => Row(ids(i), vecs(i), metaOf(parts, ids(i)))).toArray
+    })
+  }
+
+  /** The table's brief for a search: lock-free on the healthy path (a
+    * search must not block behind a long-running build/ingest holding the
+    * table lock); only when a sidecar is actually missing, heal under
+    * tableLock → catalogLock. */
+  private def servingEntry(key: String): TableEntry = {
+    val snap = entry(key)
+    if (sidecarsIntact(snap)) snap
+    else tableLock(key).synchronized {
+      catalogLock.synchronized(healMissingSidecars(key))
+    }
+  }
+
+  /** Serve-path table read through the sidecar cache (r20): `table(key)`
+    * re-lists the data directory per call; the stamp folds (version,
+    * nextId) so any rewrite/append rotates the listing. An explicit
+    * cacheTable() still takes priority for the scans; the metadata attach
+    * always reads the listing (its part files). */
+  private def listingOf(e: TableEntry): DataFrame =
+    sidecarCachedAs[DataFrame](dataDir(e), e)(
+      spark.read.schema(dataSchema(e.dim)).parquet(dataDir(e)))
+
+  /** The serving regime's dispatch matrix: the arm for (ef, PQ, HNSW, SQ/BQ,
+    * IVF, pattern), its winners on the driver. `withVecs` asks the
+    * driver-resident HNSW arms for each winner's vector too. */
+  private def serve(key: String, e: TableEntry, filtered: DataFrame,
+      queries: DataFrame, k: Int, ef: Option[Int], ub: Double,
+      pattern: Map[String, String], withVecs: Boolean): Hnsw.Hits = {
+    // serving-shape broadcast paths for in-memory-sized tables, declarative
+    // plans beyond (same results; specs assert equality)
+    val small = e.nextId <= FlatBroadcastMaxRows
+    (ef, e.pq) match {
       case (Some(efv), Some(info))
           if e.hasHnsw && pattern.isEmpty &&
             !VecDB.adcWalkEligible(e.dim, info.m,
@@ -1528,7 +1574,8 @@ class VecDB(spark: SparkSession, root: String) {
         // exact distances subsume the combined traversal's re-rank. Same
         // output contract, strictly better selection quality.
         lastServedArm = "knn_pq_gated_plain_hnsw"
-        hnswSearch(e, filtered, queries, k, Some(efv), ub, wholeTable = true)
+        hnswSearch(e, filtered, queries, k, Some(efv), ub, wholeTable = true,
+          withVecs)
       case (Some(efv), Some(info)) =>
         val model = cachedPqModel(key, e)
         if (e.hasHnsw && pattern.isEmpty) {
@@ -1544,7 +1591,7 @@ class VecDB(spark: SparkSession, root: String) {
             lastServedArm = "knn_pq_broadcast"
             Hnsw.residentPqRows(idx, queries, model, k, Some(efv),
               efConstruction = e.efConstruction, upperBound = ub,
-              cacheKey = Some(hnswBroadcastKey(e)))
+              cacheKey = Some(hnswBroadcastKey(e)), withVecs = withVecs)
           } else if (e.hnswRouted) {
             lastServedArm = "knn_pq_routed"
             collectHits(IvfHnsw.searchPinnedPq(idx, cachedRouteModel(e), model,
@@ -1560,7 +1607,8 @@ class VecDB(spark: SparkSession, root: String) {
           // score codes cluster-blind, which residual encoding can never
           // be — serve the plain HNSW walk (exact distances) instead
           lastServedArm = "pq_residual_fallback_hnsw"
-          hnswSearch(e, filtered, queries, k, Some(efv), ub, pattern.isEmpty)
+          hnswSearch(e, filtered, queries, k, Some(efv), ub, pattern.isEmpty,
+            withVecs)
         } else {
           val codes = sidecarDf(pqDir(e).resolve("codes").toString, e)
           val encoded = filtered.join(codes, "id")
@@ -1579,7 +1627,8 @@ class VecDB(spark: SparkSession, root: String) {
         }
       case (Some(efv), None) if e.hasHnsw =>
         lastServedArm = "hnsw"
-        hnswSearch(e, filtered, queries, k, Some(efv), ub, pattern.isEmpty)
+        hnswSearch(e, filtered, queries, k, Some(efv), ub, pattern.isEmpty,
+          withVecs)
       // Quantized-arm extension: an explicitly built SQ/BQ sidecar serves
       // the scan-compressed two-stage arms wherever the matrix would
       // otherwise run a FLOAT scan (HNSW arms above keep priority —
@@ -1674,7 +1723,7 @@ class VecDB(spark: SparkSession, root: String) {
         collectHits(ivfSearch(e, queries, k, Some(efv), ub))
       case (None, _) if e.hasHnsw =>
         lastServedArm = "hnsw"
-        hnswSearch(e, filtered, queries, k, None, ub, pattern.isEmpty)
+        hnswSearch(e, filtered, queries, k, None, ub, pattern.isEmpty, withVecs)
       case (None, None) if e.ivf.isDefined && pattern.isEmpty =>
         lastServedArm = "ivf"
         collectHits(ivfSearch(e, queries, k, None, ub))
@@ -1686,15 +1735,15 @@ class VecDB(spark: SparkSession, root: String) {
           lastServedArm = "flat"
           Knn.exact(filtered, queries, k, e.dist, upperBound = ub)
         })
-    })
+    }
   }
 
   /** A serving arm's winners collected to the driver as
     * (query_id, id, distance). */
-  private def collectHits(hits: DataFrame): Array[(Long, Long, Double)] =
-    hits.select(col("query_id").cast("long"), col("id").cast("long"),
+  private def collectHits(hits: DataFrame): Hnsw.Hits =
+    Hnsw.Hits(hits.select(col("query_id").cast("long"), col("id").cast("long"),
       col("distance").cast("double")).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))))
 
   /** Output schema of [[searchBatch]]. */
   private def searchOutSchema: StructType = StructType(Seq(
@@ -1715,17 +1764,20 @@ class VecDB(spark: SparkSession, root: String) {
     val rows = hits.sortBy { case (q, id, d) => (q, d, id) }(
         Ordering.Tuple3(Ordering.Long, Ordering.Double.TotalOrdering, Ordering.Long))
     val parts = if (rows.isEmpty) Array.empty[MetaPart] else metaParts(e, listing)
-    def metaOf(id: Long): Map[String, String] = {
-      var p = 0
-      while (p < parts.length) {
-        val i = parts(p).indexOf(id)
-        if (i >= 0) return parts(p).meta(i)
-        p += 1
-      }
-      null
-    }
-    val out = rows.map { case (q, id, d) => Row(q, id, d, metaOf(id)) }
+    val out = rows.map { case (q, id, d) => Row(q, id, d, metaOf(parts, id)) }
     spark.createDataFrame(java.util.Arrays.asList(out: _*), searchOutSchema)
+  }
+
+  /** The meta of row `id` from the part file holding it; null when no part
+    * file does. */
+  private def metaOf(parts: Array[MetaPart], id: Long): Map[String, String] = {
+    var p = 0
+    while (p < parts.length) {
+      val i = parts(p).indexOf(id)
+      if (i >= 0) return parts(p).meta(i)
+      p += 1
+    }
+    null
   }
 
   /** Packed meta of every data part file in `listing`: resident entries
@@ -1803,14 +1855,14 @@ class VecDB(spark: SparkSession, root: String) {
     * gate the driver-resident walk returns its rows directly. */
   private def hnswSearch(e: TableEntry, filtered: DataFrame, queries: DataFrame,
       k: Int, ef: Option[Int], ub: Double,
-      wholeTable: Boolean): Array[(Long, Long, Double)] =
+      wholeTable: Boolean, withVecs: Boolean): Hnsw.Hits =
     if (wholeTable) {
       val idx = sidecarDf(hnswDir(e).toString, e)
       val ck = Some(hnswKey(e))
       if (hnswEligible(e.nextId, e.dim))
         Hnsw.residentRows(idx, queries, k, ef, e.dist,
           efConstruction = e.efConstruction, upperBound = ub,
-          cacheKey = Some(hnswBroadcastKey(e)))
+          cacheKey = Some(hnswBroadcastKey(e)), withVecs = withVecs)
       else collectHits(if (e.hnswRouted)
         // beyond-broadcast + routed: walk only each query's routeProbes
         // nearest clusters (delta subgraphs always walked)
@@ -1893,6 +1945,11 @@ class VecDB(spark: SparkSession, root: String) {
 }
 
 object VecDB {
+
+  /** The single-query SQL top-k's winners ([[VecDB.searchTopK]]): their
+    * ids and, when the search walked driver-resident graphs, the same
+    * winners as table rows (id, vec, meta), ascending by (distance, id). */
+  private[graft] final case class Winners(ids: Array[Long], rows: Option[Array[Row]])
 
   /** Byte budget for serving paths that materialize the whole table on the
     * driver and every executor (HNSW index broadcast, PQ decoded-codes +

@@ -642,8 +642,11 @@ final class HnswGraph(
     * how insertion maintains it — `enterLevel` only increases on strictly
     * greater levels). */
   def exportNode(i: Int): (Array[Float], Int, Array[Array[Int]]) =
-    (java.util.Arrays.copyOfRange(packed, i * dim, (i + 1) * dim),
-      vecLevel(i), links(i).map(_.toArray))
+    (vecAt(i), vecLevel(i), links(i).map(_.toArray))
+
+  /** A copy of node `i`'s vector, as inserted. */
+  def vecAt(i: Int): Array[Float] =
+    java.util.Arrays.copyOfRange(packed, i * dim, (i + 1) * dim)
 }
 
 object HnswGraph {

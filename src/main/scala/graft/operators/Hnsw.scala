@@ -897,11 +897,19 @@ object Hnsw {
       upperBound: Double = Double.PositiveInfinity,
       cacheKey: Option[String] = None): DataFrame =
     hitsFrame(queries, residentRows(index, queries, k, ef, dist, m,
-      efConstruction, upperBound, cacheKey))
+      efConstruction, upperBound, cacheKey).rows)
 
-  /** [[searchBroadcast]] as driver rows (query_id, id, distance), per query
-    * ascending (distance, id), queries in batch order — what the catalog
-    * hands straight to its metadata attach. */
+  /** A serving search's winners on the driver: `rows` are (query_id, id,
+    * distance), per query ascending (distance, id), queries in batch order.
+    * `vecs`, when present, holds each row's vector as the driver-resident
+    * graphs the search walked store it (the floats the sidecar holds). */
+  private[graft] final case class Hits(
+      rows: Array[(Long, Long, Double)],
+      vecs: Option[Array[Array[Float]]] = None)
+
+  /** [[searchBroadcast]] as driver rows — what the catalog hands straight
+    * to its metadata attach; `withVecs` adds each winner's vector, read
+    * from the graph the walk found it in. */
   private[graft] def residentRows(
       index: DataFrame,
       queries: DataFrame,
@@ -911,10 +919,11 @@ object Hnsw {
       m: Int = 16,
       efConstruction: Int = 200,
       upperBound: Double = Double.PositiveInfinity,
-      cacheKey: Option[String] = None): Array[(Long, Long, Double)] = {
+      cacheKey: Option[String] = None,
+      withVecs: Boolean = false): Hits = {
     val efq = ef.getOrElse(math.max(efConstruction, 2 * m) / 2)
     val entries = ResidentIndex.graphs(index, cacheKey, dist, m, efConstruction).entries
-    residentWalk(queries, entries, k, upperBound) {
+    residentWalk(queries, entries, k, upperBound, withVecs) {
       qv => (ei, ids, ds) => entries(ei)._2.graph.searchInto(qv, k, efq, ids, ds)
     }
   }
@@ -932,36 +941,48 @@ object Hnsw {
   /** The resident arms' shared walk: per query, walk every subgraph and
     * merge top-k across subgraphs by ascending (distance, id). `walker`
     * yields, per query vector, the walk of subgraph `ei` into
-    * (ids, distances), returning its hit count. */
+    * (ids, distances), returning its hit count. With `withVecs`, each
+    * candidate's (subgraph, local index) is kept, so a winner's vector is
+    * read from the graph that found it. */
   private def residentWalk(
       queries: DataFrame,
       entries: Array[(Int, HnswGraphCache.Entry)],
       k: Int,
-      upperBound: Double)(
-      walker: Array[Float] => (Int, Array[Int], Array[Double]) => Int)
-    : Array[(Long, Long, Double)] = {
+      upperBound: Double,
+      withVecs: Boolean)(
+      walker: Array[Float] => (Int, Array[Int], Array[Double]) => Int): Hits = {
     val qs = ResidentIndex.queries(queries)
     val out = new Array[Array[(Long, Long, Double)]](qs.length)
+    val outVecs = new Array[Array[Array[Float]]](qs.length)
     ResidentIndex.parallel(qs.length) { qi =>
       val (qid, qv) = qs(qi)
       val walk = walker(qv)
       val subIds = new Array[Int](k)
       val subDs = new Array[Double](k)
       val st = new TopKState(k, withPayload = false)
+      // candidate id -> subgraph << 32 | local index
+      val at = if (withVecs) new java.util.HashMap[Long, Long] else null
       var ei = 0
       while (ei < entries.length) {
         val c = walk(ei, subIds, subDs)
         val ids = entries(ei)._2.ids
         var i = 0
         while (i < c) {
-          if (subDs(i) <= upperBound) st.insert(ids(subIds(i)), subDs(i), null)
+          if (subDs(i) <= upperBound) {
+            st.insert(ids(subIds(i)), subDs(i), null)
+            if (at != null) at.put(ids(subIds(i)), ei.toLong << 32 | subIds(i))
+          }
           i += 1
         }
         ei += 1
       }
       out(qi) = Array.tabulate(st.size)(i => (qid, st.ids(i), st.dists(i)))
+      if (at != null) outVecs(qi) = Array.tabulate(st.size) { i =>
+        val loc = at.get(st.ids(i))
+        entries((loc >>> 32).toInt)._2.graph.vecAt(loc.toInt)
+      }
     }
-    out.flatten
+    Hits(out.flatten, if (withVecs) Some(outVecs.flatten) else None)
   }
 
   /** Per-subgraph PQ code matrices of [[searchBroadcastPq]]:
@@ -996,7 +1017,7 @@ object Hnsw {
       upperBound: Double = Double.PositiveInfinity,
       cacheKey: Option[String] = None): DataFrame =
     hitsFrame(queries, residentPqRows(index, queries, model, k, ef, m,
-      efConstruction, upperBound, cacheKey))
+      efConstruction, upperBound, cacheKey).rows)
 
   /** [[searchBroadcastPq]] as driver rows, like [[residentRows]]. */
   private[graft] def residentPqRows(
@@ -1008,7 +1029,8 @@ object Hnsw {
       m: Int = 16,
       efConstruction: Int = 200,
       upperBound: Double = Double.PositiveInfinity,
-      cacheKey: Option[String] = None): Array[(Long, Long, Double)] = {
+      cacheKey: Option[String] = None,
+      withVecs: Boolean = false): Hits = {
     require(!model.residual,
       "residual-trained PqModel requires the routed walk (IvfHnsw.searchPinnedPq)")
     val dist = model.dist
@@ -1040,7 +1062,7 @@ object Hnsw {
         }
       }
     }
-    residentWalk(queries, entries, k, upperBound) { qv =>
+    residentWalk(queries, entries, k, upperBound, withVecs) { qv =>
       // float lut: selection-grade precision (winners are exact
       // re-ranked), half the cache footprint of double
       val lut = PqKernel.buildLookup(qv, centroids, nBits, dist).map(_.toFloat)

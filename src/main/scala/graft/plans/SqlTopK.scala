@@ -4,10 +4,11 @@ import scala.collection.concurrent.TrieMap
 import scala.util.control.NonFatal
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.plans.{Cross, Inner}
+import org.apache.spark.sql.catalyst.optimizer.ConvertToLocalRelation
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.graftshim.ColumnShim
@@ -64,14 +65,28 @@ case class TopKEf(child: Expression, efExpr: Expression)
   *
   * '''Single-query''' —
   * {{{ SELECT …, vec_l2sq(vec, array(…)) AS d FROM t ORDER BY d LIMIT k }}}
-  * the rule runs the engine's KNN search on the driver (k winner ids — the
-  * same driver-eager shape as a DPP subquery) and splices the winner ids
-  * back as an `id IN (…)` filter directly above the scanned relation,
-  * leaving the original Project/Sort/Limit on top of the pruned k-row
-  * input. Output attributes, ordering, and schema are untouched — the
+  * the rule runs the engine's KNN search on the driver (k winners — the
+  * same driver-eager shape as a DPP subquery), then takes one of two paths:
+  *  - '''Local answer''': when a catalog table's search walked its
+  *    driver-resident HNSW graphs ([[VecDB.searchTopK]]), the winners come
+  *    back as full table rows (vec from the graphs walked, meta from the
+  *    part-file cache). The rule evaluates the retained Filter, Project and
+  *    Sort over those ≤ k rows on the driver (interpreted, as Spark's
+  *    `ConvertToLocalRelation` does), takes k, and replaces the whole
+  *    `GlobalLimit` subtree with a local relation of the answer: no table
+  *    scan, and `collect()` launches no Spark job. The reference answers
+  *    the same query from its in-memory index (`HNSWIndex::search`).
+  *  - '''Prune''': everywhere else — a registered DataFrame, a table
+  *    served beyond the broadcast gate (routed or pinned HNSW, IVF, SQ/BQ,
+  *    PQ flat), or a retained expression that is nondeterministic or not
+  *    evaluable interpreted — the winner ids are spliced back as an
+  *    `id IN (…)` filter directly above the scanned relation, leaving the
+  *    original Project/Sort/Limit on top of the pruned k-row input. For a
+  *    natively-long id column the `IN` reaches the parquet scan as a
+  *    pushed filter (row-group pruning).
+  * Either way output attributes, ordering and schema are untouched: the
   * full-table distance sort is replaced by the engine's bounded top-k (or
-  * index) search, and for a natively-long id column the spliced `IN`
-  * reaches the parquet scan as a pushed filter (row-group pruning).
+  * index) search.
   *
   * '''Batch (per-query-row)''' — the lateral shape every pipeline actually
   * runs (the reference analog: the bench harness's query sweep,
@@ -101,8 +116,9 @@ case class TopKEf(child: Expression, efExpr: Expression)
   *    `ORDER BY … LIMIT` it replaces (ties broken (distance, id)), so it
   *    is safe by default and DuckDB-oracle-able (`q_sql_topk`).
   *  - [[GraftSqlTopK.registerTable]]: a [[graft.catalog.VecDB]] table; the
-  *    rewrite dispatches through [[VecDB.searchBatch]] — HNSW/IVF/PQ index
-  *    arms engage per the catalog's dispatch matrix. Search beam: a
+  *    rewrite dispatches through the catalog's search ([[VecDB.searchTopK]]
+  *    for the single shape, [[VecDB.searchBatch]] for the batch) — the
+  *    index arms engage per the catalog's dispatch matrix. Search beam: a
   *    [[TopKEf]] hint on the sort key wins, else the session conf
   *    `graft.sql.topk.ef`, else the table's default dispatch.
   *
@@ -116,6 +132,13 @@ case class TopKEf(child: Expression, efExpr: Expression)
   * matches). Registrations are tried in turn and the first whose metric
   * matches the sort key's distance kind serves — registering one table
   * under several metrics cannot mask a serviceable entry.
+  *
+  * A catalog registration records the table's (created, version, nextId)
+  * stamp. A view keeps the file listing it was created with, while the
+  * search reads the catalog's current rows, so once an append, delete or
+  * recreate moves the stamp the rewrite declines (both shapes) and the
+  * query runs unrewritten over the view's own snapshot until the table is
+  * registered again.
   *
   * Scope guards (no rewrite, never a wrong result): single ASC sort key
   * whose distance kind matches the registered metric; a NULL /
@@ -144,13 +167,17 @@ object GraftSqlTopK {
     * [[TopKEf]] sort-key hint overrides it per query. */
   val EfConf = "graft.sql.topk.ef"
 
+  /** A registration: the matched leaf and its vec/id expressions, the
+    * metric, the two searches, and whether the registered plan still reads
+    * what the search reads (`current`). */
   private[plans] case class Entry(
       leaf: LogicalPlan,
       vecExpr: Expression,
       idExpr: Expression,
       dist: String,
-      search: (SparkSession, Array[Float], Int, Option[Int]) => Array[Long],
-      searchBatch: (SparkSession, DataFrame, Int, Option[Int]) => DataFrame)
+      search: (SparkSession, Array[Float], Int, Option[Int]) => VecDB.Winners,
+      searchBatch: (SparkSession, DataFrame, Int, Option[Int]) => DataFrame,
+      current: () => Boolean)
 
   private val registry = TrieMap.empty[String, Entry]
   // weak set: enabling the rule must not pin a closed SparkSession
@@ -190,27 +217,29 @@ object GraftSqlTopK {
     def searchable: DataFrame =
       df.select("id", "vec").na.drop(Seq("id", "vec"))
     registry(name) = mkEntry(df, dist,
-      (spark, q, k, _) => {
+      (spark, q, k, _) => VecDB.Winners(
         Knn.exactBroadcast(searchable, queryDf(spark, q), k, dist)
-          .select("id").collect().map(_.getLong(0))
-      },
+          .select("id").collect().map(_.getLong(0)), None),
       (_, qdf, k, _) =>
-        Knn.exactBroadcast(searchable, qdf, k, dist))
+        Knn.exactBroadcast(searchable, qdf, k, dist),
+      () => true)
   }
 
-  /** Register a catalog table; rewrites dispatch through
-    * [[VecDB.searchBatch]] (index arms engage; [[TopKEf]] hint else
-    * `graft.sql.topk.ef`). */
+  /** Register a catalog table; rewrites dispatch through the catalog's
+    * search ([[VecDB.searchTopK]], [[VecDB.searchBatch]]: index arms
+    * engage; [[TopKEf]] hint else `graft.sql.topk.ef`). The table's stamp
+    * is recorded here: once an append, delete or recreate moves it, the
+    * registered plan reads an older file listing than the search, and the
+    * rewrite declines until the table is registered again. */
   def registerTable(name: String, db: VecDB, key: String): Unit = {
     def efOf(spark: SparkSession, hint: Option[Int]): Option[Int] =
       hint.orElse(spark.conf.getOption(EfConf).map(_.toInt))
+    val stamp = db.tableStamp(key)
     registry(name) = mkEntry(db.table(key), db.getDist(key),
-      (spark, q, k, hint) => {
-        db.searchBatch(key, queryDf(spark, q), k, ef = efOf(spark, hint))
-          .select("id").collect().map(_.getLong(0))
-      },
+      (spark, q, k, hint) => db.searchTopK(key, q, k, efOf(spark, hint)),
       (spark, qdf, k, hint) =>
-        db.searchBatch(key, qdf, k, ef = efOf(spark, hint)))
+        db.searchBatch(key, qdf, k, ef = efOf(spark, hint)),
+      () => scala.util.Try(db.tableStamp(key)).toOption.contains(stamp))
   }
 
   def unregister(name: String): Unit = registry.remove(name)
@@ -220,9 +249,9 @@ object GraftSqlTopK {
     * must be a plain projection over a single relation so the optimizer's
     * Project collapse cannot take a query out of matching range. */
   private def mkEntry(df: DataFrame, dist: String,
-      search: (SparkSession, Array[Float], Int, Option[Int]) => Array[Long],
-      searchBatch: (SparkSession, DataFrame, Int, Option[Int]) => DataFrame)
-    : Entry = {
+      search: (SparkSession, Array[Float], Int, Option[Int]) => VecDB.Winners,
+      searchBatch: (SparkSession, DataFrame, Int, Option[Int]) => DataFrame,
+      current: () => Boolean): Entry = {
     def sourceExpr(pl: Seq[NamedExpression], col: String): Expression =
       pl.collectFirst {
         case a: Alias if a.name == col => a.child
@@ -232,10 +261,10 @@ object GraftSqlTopK {
     df.queryExecution.optimizedPlan match {
       case Project(pl, leaf: LeafNode) =>
         Entry(leaf, sourceExpr(pl, "vec"), sourceExpr(pl, "id"), dist,
-          search, searchBatch)
+          search, searchBatch, current)
       case leaf: LeafNode =>
         Entry(leaf, sourceExpr(leaf.output, "vec"),
-          sourceExpr(leaf.output, "id"), dist, search, searchBatch)
+          sourceExpr(leaf.output, "id"), dist, search, searchBatch, current)
       case other => throw new IllegalArgumentException(
         "registered DataFrame must be a plain projection over a single " +
           s"relation; got ${other.nodeName}")
@@ -272,6 +301,11 @@ object GraftSqlTopK {
           rewriteBatch(f, w).getOrElse(f)
       }
     }
+
+    /** The registrations over `leaf` whose plan still reads what their
+      * search reads. */
+    private def entriesOver(leaf: LogicalPlan): Iterable[Entry] =
+      registry.values.filter(e => leaf.sameResult(e.leaf) && e.current())
 
     private def maxK(spark: SparkSession): Int =
       spark.conf.getOption(MaxKConf).map(_.toInt).getOrElse(10000)
@@ -315,7 +349,7 @@ object GraftSqlTopK {
       // all registered entries over this scan, tried in turn: a
       // metric-mismatched sibling registration must not mask a
       // serviceable one
-      registry.values.filter(e => rel.sameResult(e.leaf)).view.flatMap { e =>
+      entriesOver(rel).view.flatMap { e =>
         // remap the registered vec/id expressions onto this scan's
         // attributes by position (sameResult ⇒ same schema order; exprIds
         // may differ when the table was re-read independently)
@@ -345,22 +379,60 @@ object GraftSqlTopK {
           // legal without the rewrite (null distance sorts first) — fall
           // back rather than throw
           evalQueryVector(qExpr).map { qvec =>
-            val ids = e.search(spark, qvec, k, efHint)
+            val won = e.search(spark, qvec, k, efHint)
             lastFired = Some(("single", efHint))
-            val pruned = Filter(pruneCond(idExpr, vecExpr, ids), rel)
-            val bounded = filterOpt match {
-              case Some(f) => f.withNewChildren(Seq(pruned))
-              case None => pruned
+            won.rows.flatMap(answerLocally(rel, filterOpt, projOpt, sort, k, _))
+                .map(LocalRelation(gl.output, _)).getOrElse {
+              val pruned = Filter(pruneCond(idExpr, vecExpr, won.ids), rel)
+              val bounded = filterOpt match {
+                case Some(f) => f.withNewChildren(Seq(pruned))
+                case None => pruned
+              }
+              val newChild = projOpt match {
+                case Some(p) => p.withNewChildren(Seq(bounded))
+                case None => bounded
+              }
+              gl.withNewChildren(Seq(ll.withNewChildren(
+                Seq(sort.withNewChildren(Seq(newChild))))))
             }
-            val newChild = projOpt match {
-              case Some(p) => p.withNewChildren(Seq(bounded))
-              case None => bounded
-            }
-            gl.withNewChildren(Seq(ll.withNewChildren(
-              Seq(sort.withNewChildren(Seq(newChild))))))
           }
         })
       }.headOption
+    }
+
+    /** The single-query answer evaluated on the driver over the winners'
+      * table rows (in `rel`'s column order): the retained Filter and
+      * Project with interpreted predicate and projection, as Spark's
+      * `ConvertToLocalRelation` does over local rows, then the Sort with an
+      * interpreted ordering, stable so equal keys keep the search's
+      * (distance, id) order, then the first k. None, for the prune path,
+      * when a retained expression is nondeterministic or not evaluable
+      * interpreted, or evaluation throws. */
+    private def answerLocally(rel: LeafNode, filterOpt: Option[Filter],
+        projOpt: Option[Project], sort: Sort, k: Int,
+        rows: Array[Row]): Option[Seq[InternalRow]] = {
+      val exprs = filterOpt.map(_.condition).toSeq ++
+        projOpt.toSeq.flatMap(_.projectList) ++ sort.order.map(_.child)
+      if (exprs.exists(x => !x.deterministic ||
+          ConvertToLocalRelation.hasUnevaluableExpr(x))) return None
+      try {
+        val toRow = CatalystTypeConverters.createToCatalystConverter(
+          StructType(rel.output.map(a => StructField(a.name, a.dataType, a.nullable))))
+        var in = rows.map(r => toRow(r).asInstanceOf[InternalRow])
+        filterOpt.foreach { f =>
+          val p = Predicate.createInterpreted(
+            BindReferences.bindReference(f.condition, rel.output))
+          p.initialize(0)
+          in = in.filter(p.eval)
+        }
+        val out = projOpt.fold(in) { p =>
+          val proj = new InterpretedMutableProjection(p.projectList, rel.output)
+          proj.initialize(0)
+          in.map(r => proj(r).copy())
+        }
+        Some(out.sorted(new InterpretedOrdering(sort.order, sort.child.output))
+          .take(k).toSeq)
+      } catch { case NonFatal(_) => None }
     }
 
     // ----------------------------------------------------- batch shape
@@ -440,7 +512,7 @@ object GraftSqlTopK {
       Seq((join.left, join.right), (join.right, join.left)).view.flatMap {
         case (vecSide, qSide) =>
           leafOf(vecSide).toSeq.flatMap { vecLeaf =>
-            registry.values.filter(e => vecLeaf.sameResult(e.leaf)).flatMap { e =>
+            entriesOver(vecLeaf).flatMap { e =>
               tryBatch(spark, f, w, vecSide, vecLeaf, qSide, e, orderKey,
                 partKey, tieKey, k, efHint)
             }

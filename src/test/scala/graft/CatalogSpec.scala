@@ -1015,13 +1015,13 @@ class CatalogSpec extends SparkTestBase {
     load(a)
     val beforeIds = db.search("t", a(7), 3, ef = Some(100)).map(_._1("i"))
     assert(beforeIds.head == "7")
-    val vBefore = db.entrySnapshotForTest("t")
+    val vBefore = db.tableStamp("t")
     db.deleteTable("t")
     // same row count, same build sequence ⇒ identical (version, nextId) —
     // only the created stamp differs
     val b = (0 until 30).map(_ => Array.fill(4)(rnd.nextFloat()))
     load(b)
-    val vAfter = db.entrySnapshotForTest("t")
+    val vAfter = db.tableStamp("t")
     assert(vBefore._1 == vAfter._1 && vBefore._2 == vAfter._2,
       s"fixture broke: (version, nextId) $vBefore vs $vAfter must collide")
     assert(vBefore._3 != vAfter._3, "created stamp must rotate")

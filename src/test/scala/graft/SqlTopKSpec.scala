@@ -1,7 +1,11 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.{In, InSet}
-import org.apache.spark.sql.catalyst.plans.logical.Filter
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LocalRelation}
 import org.apache.spark.sql.functions._
 import graft.catalog.VecDB
 import graft.functions.VectorFunctions
@@ -9,10 +13,13 @@ import graft.plans.GraftSqlTopK
 
 /** SURVEY §7.3 — index-backed SQL top-k rewrite: `ORDER BY vec_l2sq(vec,
   * lit) LIMIT k` over a registered table runs the engine's search and
-  * prunes the scan to the k winners. Asserts the rewrite fires (plan
-  * carries the spliced id IN filter), matches the unrewritten results
+  * prunes the scan to the k winners — or, over a catalog table served from
+  * driver-resident graphs, answers from the winners' rows with no scan.
+  * Asserts the rewrite fires (plan carries the spliced id IN filter, or is
+  * a local relation of the answer), matches the unrewritten results
   * exactly, dispatches through the catalog's index arms for registered
-  * VecDB tables, and declines out-of-scope shapes (WHERE, DESC, k > maxK). */
+  * VecDB tables, and declines out-of-scope shapes (WHERE, DESC, k > maxK)
+  * and views older than their table. */
 class SqlTopKSpec extends SparkTestBase {
 
   private def litVec(v: scala.collection.Seq[Float]): String =
@@ -28,6 +35,14 @@ class SqlTopKSpec extends SparkTestBase {
       case s: InSet => s.hset.size == k
       case _ => false
     })
+
+  /** the local answer: the optimized plan's only leaf is a local relation
+    * of exactly `rows` rows, so no relation is scanned */
+  private def servedLocally(df: DataFrame, rows: Int): Boolean =
+    df.queryExecution.optimizedPlan.collectLeaves() match {
+      case Seq(LocalRelation(_, data, _, _)) => data.length == rows
+      case _ => false
+    }
 
   test("exact rewrite fires, prunes the scan, and matches ORDER BY LIMIT") {
     VectorFunctions.register(spark)
@@ -346,7 +361,8 @@ class SqlTopKSpec extends SparkTestBase {
       val exact = spark.sql(sqlText(dist)).collect()
       db.registerSql("t", Some("catalog_ef_v"))
       val hinted = spark.sql(sqlText(s"graft_topk_ef($dist, 250)"))
-      assert(firedWithK(hinted, 5))
+      assert(servedLocally(hinted, 5), "resident table not answered locally:\n" +
+        hinted.queryExecution.optimizedPlan.treeString)
       assert(hinted.collect().toSeq == exact.toSeq)
     } finally {
       spark.conf.unset(GraftSqlTopK.EfConf)
@@ -375,12 +391,200 @@ class SqlTopKSpec extends SparkTestBase {
     spark.conf.set(GraftSqlTopK.EfConf, "300") // generous beam ⇒ exact
     try {
       val rewritten = spark.sql(sqlText)
-      assert(firedWithK(rewritten, 5))
+      assert(servedLocally(rewritten, 5), "resident table not answered locally:\n" +
+        rewritten.queryExecution.optimizedPlan.treeString)
       assert(rewritten.collect().toSeq == exact.toSeq)
       assert(db.lastServedArm == "hnsw",
         s"expected the HNSW arm, served '${db.lastServedArm}'")
     } finally {
       spark.conf.unset(GraftSqlTopK.EfConf)
+      GraftSqlTopK.unregisterAll()
+      db.close()
+    }
+  }
+
+  // ------------------------------------------ local answer (resident HNSW)
+
+  /** A catalog table "t" over `vs` (meta i = row index) with its HNSW
+    * index built under the default broadcast gate. */
+  private def residentTable(dist: String, vs: Seq[Array[Float]]): VecDB = {
+    val root = Files.createTempDirectory(Paths.get("target"), "vecdb_sqllocal").toString
+    val db = new VecDB(spark, root)
+    db.createTableIfNotExists("t", vs.head.length, dist)
+    db.batchAdd("t", vs, vs.indices.map(i => Map("i" -> i.toString)))
+    db.buildHnswIndex("t")
+    db
+  }
+
+  private def fnOf(dist: String): String =
+    if (dist == "cosine") "vec_cosine" else "vec_l2sq"
+
+  /** Spark jobs started while `body` runs. */
+  private def jobsDuring[T](body: => T): (T, Int) = {
+    val jobs = new AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.graftshim.ListenerDrain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val r = body
+      org.apache.spark.graftshim.ListenerDrain(spark.sparkContext)
+      (r, jobs.get)
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("a warm single-query SQL top-k on a resident HNSW table runs no Spark job") {
+    VectorFunctions.register(spark)
+    val rnd = new scala.util.Random(41)
+    val db = residentTable("cosine",
+      (0 until 300).map(_ => Array.fill(16)(rnd.nextFloat() - 0.5f)))
+    def sqlText(q: Array[Float]) =
+      s"SELECT id, graft_topk_ef(vec_cosine(vec, ${litVec(q.toSeq)}), 64) AS d " +
+        "FROM catalog_local_jobs_v ORDER BY d LIMIT 10"
+    try {
+      db.registerSql("t", Some("catalog_local_jobs_v"))
+      spark.sql(sqlText(Array.fill(16)(rnd.nextFloat() - 0.5f))).collect() // warm
+      val (got, jobs) = jobsDuring(
+        spark.sql(sqlText(Array.fill(16)(rnd.nextFloat() - 0.5f))).collect())
+      assert(got.length == 10)
+      assert(db.lastServedArm == "hnsw", s"served by '${db.lastServedArm}'")
+      assert(jobs == 0, s"a warm SQL top-k ran $jobs Spark jobs")
+    } finally {
+      GraftSqlTopK.unregisterAll()
+      db.close()
+    }
+  }
+
+  test("local answer: SELECT * equals the unregistered query, ties at the cut included") {
+    // every vector twice (ids i and i + 150): distances come in equal
+    // pairs, so at an odd k the k-th and (k+1)-th rows tie. The search
+    // keeps the lower id of a tied pair; the unregistered query states
+    // that tie-break as a second sort key (one key alone leaves Spark free
+    // to pick either twin).
+    VectorFunctions.register(spark)
+    for (dist <- Seq("l2sqr", "cosine")) {
+      val rnd = new scala.util.Random(if (dist == "cosine") 43 else 47)
+      val base = (0 until 150).map(_ => Array.fill(8)(rnd.nextFloat() * 4f - 2f))
+      val db = residentTable(dist, base ++ base.map(_.clone()))
+      val q = litVec(Array.fill(8)(rnd.nextFloat() * 4f - 2f).toSeq)
+      val k = 7
+      def sqlText(order: String) =
+        s"SELECT * FROM catalog_local_star_v ORDER BY $order LIMIT $k"
+      try {
+        db.registerSql("t", Some("catalog_local_star_v"))
+        GraftSqlTopK.unregisterAll()
+        val expected = spark.sql(sqlText(s"${fnOf(dist)}(vec, $q), id")).collect()
+        val tie = spark.sql(s"SELECT ${fnOf(dist)}(vec, $q) AS d " +
+          s"FROM catalog_local_star_v ORDER BY d LIMIT ${k + 1}").collect()
+        assert(tie(k - 1).getDouble(0) == tie(k).getDouble(0),
+          "fixture: no tie at the cut")
+        db.registerSql("t", Some("catalog_local_star_v"))
+        val got = spark.sql(sqlText(s"graft_topk_ef(${fnOf(dist)}(vec, $q), 600)"))
+        assert(servedLocally(got, k), s"$dist: not answered locally:\n" +
+          got.queryExecution.optimizedPlan.treeString)
+        assert(got.collect().toSeq == expected.toSeq, dist)
+      } finally {
+        GraftSqlTopK.unregisterAll()
+        db.close()
+      }
+    }
+  }
+
+  test("local answer: the distance upper-bound WHERE equals the unregistered query") {
+    VectorFunctions.register(spark)
+    val rnd = new scala.util.Random(53)
+    val db = residentTable("l2sqr", (0 until 200).map(_ => Array.fill(8)(rnd.nextFloat())))
+    val q = litVec(Array.fill(8)(rnd.nextFloat()).toSeq)
+    def sqlText(ub: String) =
+      s"SELECT id, graft_topk_ef(vec_l2sq(vec, $q), 400) AS d " +
+        s"FROM catalog_local_ub_v WHERE vec_l2sq(vec, $q) <= $ub ORDER BY d LIMIT 9"
+    try {
+      db.registerSql("t", Some("catalog_local_ub_v"))
+      GraftSqlTopK.unregisterAll()
+      val loose = spark.sql(sqlText("1e9")).collect()
+      // between the 4th and 5th distance: 4 rows survive
+      val ub = ((loose(3).getDouble(1) + loose(4).getDouble(1)) / 2).toString
+      val tight = spark.sql(sqlText(ub)).collect()
+      assert(tight.length == 4)
+      db.registerSql("t", Some("catalog_local_ub_v"))
+      val rLoose = spark.sql(sqlText("1e9"))
+      assert(servedLocally(rLoose, 9))
+      assert(rLoose.collect().toSeq == loose.toSeq)
+      val rTight = spark.sql(sqlText(ub))
+      assert(servedLocally(rTight, 4))
+      assert(rTight.collect().toSeq == tight.toSeq)
+    } finally {
+      GraftSqlTopK.unregisterAll()
+      db.close()
+    }
+  }
+
+  test("beyond the broadcast gate and with rand() the rewrite keeps the prune path") {
+    VectorFunctions.register(spark)
+    val rnd = new scala.util.Random(59)
+    val db = residentTable("l2sqr", (0 until 200).map(_ => Array.fill(8)(rnd.nextFloat())))
+    val q = litVec(Array.fill(8)(rnd.nextFloat()).toSeq)
+    val plain = s"SELECT id, graft_topk_ef(vec_l2sq(vec, $q), 400) AS d " +
+      "FROM catalog_local_prune_v ORDER BY d LIMIT 6"
+    val withRand = s"SELECT id, graft_topk_ef(vec_l2sq(vec, $q), 400) AS d, " +
+      "rand() AS r FROM catalog_local_prune_v ORDER BY d LIMIT 6"
+    try {
+      db.registerSql("t", Some("catalog_local_prune_v"))
+      GraftSqlTopK.unregisterAll()
+      val expected = spark.sql(plain).collect().toSeq
+      db.registerSql("t", Some("catalog_local_prune_v"))
+      // the graphs are not driver-resident beyond the gate: pinned arm
+      db.broadcastGateBytes = Some(1L)
+      try {
+        val pinned = spark.sql(plain)
+        assert(firedWithK(pinned, 6), "gated table did not take the prune path:\n" +
+          pinned.queryExecution.optimizedPlan.treeString)
+        assert(pinned.collect().toSeq == expected)
+      } finally db.broadcastGateBytes = None
+      // a nondeterministic select list cannot be evaluated on the driver
+      val rand = spark.sql(withRand)
+      assert(firedWithK(rand, 6), "rand() did not decline to the prune path:\n" +
+        rand.queryExecution.optimizedPlan.treeString)
+      assert(rand.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq ==
+        expected.map(r => (r.getLong(0), r.getDouble(1))))
+    } finally {
+      GraftSqlTopK.unregisterAll()
+      db.close()
+    }
+  }
+
+  test("a view registered before an append declines until registered again") {
+    // the search reads the catalog's current rows; the view reads the file
+    // listing it was created with. Splicing the new winners' ids into the
+    // old listing returned no rows.
+    VectorFunctions.register(spark)
+    val rnd = new scala.util.Random(61)
+    val db = residentTable("l2sqr", (0 until 200).map(_ => Array.fill(8)(rnd.nextFloat())))
+    val qv = Array.fill(8)(rnd.nextFloat())
+    val sqlText = s"SELECT id, graft_topk_ef(vec_l2sq(vec, ${litVec(qv.toSeq)}), 1000) AS d " +
+      "FROM catalog_local_stale_v ORDER BY d LIMIT 5"
+    try {
+      db.registerSql("t", Some("catalog_local_stale_v"))
+      GraftSqlTopK.unregisterAll()
+      val expected = spark.sql(sqlText).collect().toSeq
+      assert(expected.length == 5)
+      db.registerSql("t", Some("catalog_local_stale_v"))
+      // 20 rows right at the query: every one beats the old rows
+      db.batchAdd("t", (0 until 20).map(i => qv.map(_ + i * 1e-4f)),
+        (0 until 20).map(i => Map("new" -> i.toString)))
+      val stale = spark.sql(sqlText)
+      assert(stale.collect().toSeq == expected)
+      assert(!firedWithK(stale, 5) && !servedLocally(stale, 5),
+        "a view older than its table was rewritten:\n" +
+          stale.queryExecution.optimizedPlan.treeString)
+      // registered again: the new rows answer, locally
+      db.registerSql("t", Some("catalog_local_stale_v"))
+      val fresh = spark.sql(sqlText)
+      assert(servedLocally(fresh, 5))
+      assert(fresh.collect().map(_.getLong(0)).toSeq == (200L until 205L))
+    } finally {
       GraftSqlTopK.unregisterAll()
       db.close()
     }
