@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 import java.util.concurrent.{Callable, Executors, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
@@ -46,22 +45,6 @@ class ResidentServeSpec extends SparkTestBase {
     db.batchAdd("t", vs, vs.indices.map(i => Map("i" -> i.toString)))
     db.buildHnswIndex("t")
     (db, root)
-  }
-
-  /** Spark jobs started while `body` runs. */
-  private def jobsDuring[T](body: => T): (T, Int) = {
-    val jobs = new AtomicInteger
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    org.apache.spark.graftshim.ListenerDrain(spark.sparkContext)
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val r = body
-      org.apache.spark.graftshim.ListenerDrain(spark.sparkContext)
-      (r, jobs.get)
-    } finally spark.sparkContext.removeSparkListener(listener)
   }
 
   test("a warm catalog search runs no Spark job at 1, 10 and 100 queries") {

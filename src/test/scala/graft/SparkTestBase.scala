@@ -8,6 +8,22 @@ trait SparkTestBase extends AnyFunSuite {
   lazy val spark: SparkSession = SparkTestBase.session
   val sf0001 = "/root/testdata/sf0.001"
   val sf001 = "/root/testdata/sf0.01"
+
+  /** Spark jobs started while `body` runs. */
+  def jobsDuring[T](body: => T): (T, Int) = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.graftshim.ListenerDrain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val r = body
+      org.apache.spark.graftshim.ListenerDrain(spark.sparkContext)
+      (r, jobs.get)
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
 }
 
 object SparkTestBase {

@@ -1,7 +1,6 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.{In, InSet}
@@ -418,22 +417,6 @@ class SqlTopKSpec extends SparkTestBase {
 
   private def fnOf(dist: String): String =
     if (dist == "cosine") "vec_cosine" else "vec_l2sq"
-
-  /** Spark jobs started while `body` runs. */
-  private def jobsDuring[T](body: => T): (T, Int) = {
-    val jobs = new AtomicInteger
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    org.apache.spark.graftshim.ListenerDrain(spark.sparkContext)
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val r = body
-      org.apache.spark.graftshim.ListenerDrain(spark.sparkContext)
-      (r, jobs.get)
-    } finally spark.sparkContext.removeSparkListener(listener)
-  }
 
   test("a warm single-query SQL top-k on a resident HNSW table runs no Spark job") {
     VectorFunctions.register(spark)
