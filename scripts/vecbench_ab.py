@@ -26,7 +26,12 @@ beats every parent run), `within` otherwise. Each run also
 records the host's 1-minute load average (/proc/loadavg) just before and
 just after it and its wall time; the report lists them per pair and flags
 a pair whose two sides' mean load differs by more than 1.0, since such a
-pair compares two host speeds as much as two trees. Raw results go to
+pair compares two host speeds as much as two trees. The report also lists
+how many operations each run attempted (the result line's `attempted`)
+with each side's median and quartiles, and flags a pair whose two sides
+differ by more than 10 %: a fixed-length run that completes more cycles
+also runs more appends and compactions, which moves bytes_per_user_byte
+and the write and tail latencies on its own. Raw results go to
 <workdir>/vecbench_ab_<stamp>.jsonl. The extracted trees are removed at the
 end unless --keep is given.
 """
@@ -76,6 +81,7 @@ def direction_of(name, better):
 
 
 LOAD_FLAG = 1.0
+ATTEMPTED_FLAG = 0.10
 
 
 def loadavg():
@@ -221,14 +227,25 @@ def main():
         if bad:
             print(f"  {side}: {len(bad)} runs errored, incorrect or with failed operations")
     print(f"{'pair':>4s} {'seed':>6s} {'parent load before/after':>25s} {'wall':>6s} "
-          f"{'change load before/after':>25s} {'wall':>6s}")
+          f"{'ops':>5s} {'change load before/after':>25s} {'wall':>6s} {'ops':>5s}")
     for i, (hp, hc) in enumerate(zip(hosts["parent"], hosts["change"])):
         lp, lc = mean_load(hp), mean_load(hc)
-        flag = ("  load differs by more than %.1f" % LOAD_FLAG
-                if lp is not None and lc is not None and abs(lp - lc) > LOAD_FLAG else "")
+        flags = []
+        if lp is not None and lc is not None and abs(lp - lc) > LOAD_FLAG:
+            flags.append("load differs by more than %.1f" % LOAD_FLAG)
+        op, oc = (results[side][i].get("attempted") for side in ("parent", "change"))
+        if op and oc and abs(oc - op) > ATTEMPTED_FLAG * op:
+            flags.append("attempted differs by more than %d %%" % (100 * ATTEMPTED_FLAG))
         fmt = lambda h: f"{h['load_before']}/{h['load_after']}"
+        ops = lambda n: "-" if n is None else str(n)
         print(f"{i:>4d} {a.seed0 + i:>6d} {fmt(hp):>25s} {hp['wall_s']:>6.0f} "
-              f"{fmt(hc):>25s} {hc['wall_s']:>6.0f}{flag}")
+              f"{ops(op):>5s} {fmt(hc):>25s} {hc['wall_s']:>6.0f} {ops(oc):>5s}"
+              + "".join("  " + f for f in flags))
+    for side in ("parent", "change"):
+        ops = [r["attempted"] for r in results[side] if r.get("attempted") is not None]
+        if ops:
+            print(f"  {side} attempted per run q1/med/q3: "
+                  + "/".join(f"{x:.4g}" for x in quartiles(ops)))
     if not ok:
         return 1
     names = sorted(set(ok[0][0]["metrics"]) & set(ok[0][1]["metrics"]))

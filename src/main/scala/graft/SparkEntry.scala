@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.operators.{Bm25, Bq, Corpus, Decontaminate, Dedup, Hnsw, Ivf, Knn, Multimodal, Pq, Redact, Search, Sq, TextAnalysis}
+import graft.operators.{Bm25, Bq, CoarseMerge, Corpus, Decontaminate, Dedup, Hnsw, Ivf, Knn, Multimodal, Pq, Redact, Search, Sq, TextAnalysis}
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
@@ -495,12 +495,17 @@ object SparkEntry {
       import org.apache.spark.sql.expressions.Window
       val b = base(s, dir).repartition(8, col("id"))
       val q = queryVectors(s, dir)
-      val approx = Bq.searchRerank(b, q, k = 5, candidates = 200,
-          coarseSelect = "approx")
+      // Bq.searchRerank's steps, through the call that returns its choice
+      val ids = b.select(col("id").cast("long").as("id"), col("vec"))
+      val model = Bq.train(ids)
+      val (found, choice) = CoarseMerge.searchRerank(Bq.BqCodec(Some(model)),
+        Bq.encodeCentered(ids, model).select(col("id"), col("bq")), b, q,
+        k = 5, candidates = 200, dist = "l2sqr", vecCol = "vec",
+        coarseSelect = "approx")
+      val approx = found
         .select(col("query_id"), col("id"), col("distance")).cache()
-      require(graft.operators.CoarseMerge.lastPath == "approx",
-        s"q_bq_approx: expected the approx coarse path, got " +
-          s"'${graft.operators.CoarseMerge.lastPath}'")
+      require(choice.path == "approx",
+        s"q_bq_approx: expected the approx coarse path, got '${choice.path}'")
       val exact = Knn.exact(b, q, k = 5, dist = "l2sqr")
         .select(col("query_id"), col("id").as("e_id"),
           col("distance").as("e_dist"))
@@ -528,12 +533,17 @@ object SparkEntry {
       import org.apache.spark.sql.expressions.Window
       val b = base(s, dir).repartition(8, col("id"))
       val q = queryVectors(s, dir)
-      val approx = Sq.searchRerank(b, q, k = 5, candidates = 200,
-          coarseSelect = "approx")
+      // Sq.searchRerank's steps, through the call that returns its choice
+      val model = Sq.train(b)
+      val (found, choice) = CoarseMerge.searchRerank(Sq.SqCodec(model, "l2sqr"),
+        Sq.encode(b.select(col("id").cast("long").as("id"), col("vec")), model)
+          .select(col("id"), col("sq")), b, q,
+        k = 5, candidates = 200, dist = "l2sqr", vecCol = "vec",
+        coarseSelect = "approx")
+      val approx = found
         .select(col("query_id"), col("id"), col("distance")).cache()
-      require(graft.operators.CoarseMerge.lastPath == "approx",
-        s"q_sq_approx: expected the approx coarse path, got " +
-          s"'${graft.operators.CoarseMerge.lastPath}'")
+      require(choice.path == "approx",
+        s"q_sq_approx: expected the approx coarse path, got '${choice.path}'")
       val exact = Knn.exact(b, q, k = 5, dist = "l2sqr")
         .select(col("query_id"), col("id").as("e_id"),
           col("distance").as("e_dist"))
@@ -561,8 +571,8 @@ object SparkEntry {
     // shuffle). Exhaustive probes (np = kc) make pool membership the only
     // approximation; the derived-bound grade pins hit count, the recall
     // floor and per-rank domination, and the approx kernel path is pinned
-    // via CoarseMerge.lastPath. The packed layout hash-repartitions to 8
-    // so the per-partition cap genuinely binds.
+    // by the choice the search returns. The packed layout hash-repartitions
+    // to 8 so the per-partition cap genuinely binds.
     "q_bq_approx_routed" -> ((s, dir) => {
       val b = base(s, dir)
       val q = queryVectors(s, dir)
@@ -571,13 +581,13 @@ object SparkEntry {
       val packed = Bq.encodeCentered(assigned, model)
         .select(col("id"), col("bq"), col("cluster"))
         .repartition(8, col("id"))
-      val approx = Bq.searchIvf(packed, b, ivfModel, Some(model), q,
-          k = 5, candidates = 200, nProbes = Some(8),
-          coarseSelect = "approx")
+      val (found, choice) = CoarseMerge.searchIvf(Bq.BqCodec(Some(model)),
+        packed, b, ivfModel, q, 5, 200, Some(8), "l2sqr", "vec", None, None,
+        None, "approx", None)
+      val approx = found
         .select(col("query_id"), col("id"), col("distance")).cache()
-      require(graft.operators.CoarseMerge.lastPath == "approx",
-        s"q_bq_approx_routed: expected the approx coarse path, got " +
-          s"'${graft.operators.CoarseMerge.lastPath}'")
+      require(choice.path == "approx", s"q_bq_approx_routed: expected the " +
+        s"approx coarse path, got '${choice.path}'")
       approxGrade(approx, Knn.exact(b, q, k = 5, dist = "l2sqr"))
     }),
     // T13/T6 — the SQ twin of q_bq_approx_routed (approx selection inside
@@ -590,13 +600,13 @@ object SparkEntry {
       val packed = Sq.encode(assigned, sqModel)
         .select(col("id"), col("sq"), col("cluster"))
         .repartition(8, col("id"))
-      val approx = Sq.searchIvf(packed, b, ivfModel, sqModel, q,
-          k = 5, candidates = 200, nProbes = Some(8),
-          coarseSelect = "approx")
+      val (found, choice) = CoarseMerge.searchIvf(Sq.SqCodec(sqModel, "l2sqr"),
+        packed, b, ivfModel, q, 5, 200, Some(8), "l2sqr", "vec", None, None,
+        None, "approx", None)
+      val approx = found
         .select(col("query_id"), col("id"), col("distance")).cache()
-      require(graft.operators.CoarseMerge.lastPath == "approx",
-        s"q_sq_approx_routed: expected the approx coarse path, got " +
-          s"'${graft.operators.CoarseMerge.lastPath}'")
+      require(choice.path == "approx", s"q_sq_approx_routed: expected the " +
+        s"approx coarse path, got '${choice.path}'")
       approxGrade(approx, Knn.exact(b, q, k = 5, dist = "l2sqr"))
     }),
     // §2.11 dispatch + T12 approx as a CATALOG citizen (r20, verdict #5):
@@ -604,8 +614,8 @@ object SparkEntry {
     // live corpus) must route a big-enough batch through searchBatch's
     // bq_rerank_serve arm INTO the approx path — and must NOT when the
     // budget is exhaustive. Both directions pinned in-query: the approx
-    // call requires (lastServedArm, lastPath) == (bq_rerank_serve, approx);
-    // the exhaustive twin at ef = 2n requires lastPath != approx. The
+    // call requires (arm, coarse path) == (bq_rerank_serve, approx);
+    // the exhaustive twin at ef = 2n requires a path other than approx. The
     // threshold is lowered to the fixture's batch size for the duration of
     // the two dispatch calls (volatile knob, restored in finally — plan
     // construction resolves the mode eagerly, so later execution is
@@ -619,20 +629,21 @@ object SparkEntry {
       val approx =
         try {
           graft.operators.CoarseMerge.approxNqThreshold = 8
-          val out = db.searchBatch("emb", q, k = 5, ef = Some(200))
+          val d = db.dispatch("emb", q, k = 5, ef = Some(200))
+          val out = d.frame
             .select(col("query_id"), col("id"), col("distance")).cache()
-          require(db.lastServedArm == "bq_rerank_serve",
+          require(d.arm == "bq_rerank_serve",
             s"q_bq_approx_catalog: expected the BQ serving arm, " +
-              s"dispatched '${db.lastServedArm}'")
-          require(graft.operators.CoarseMerge.lastPath == "approx",
+              s"dispatched '${d.arm}'")
+          require(d.coarse.exists(_.path == "approx"),
             s"q_bq_approx_catalog: expected the auto rule to pick approx " +
-              s"at nq=8 ≥ threshold, got " +
-              s"'${graft.operators.CoarseMerge.lastPath}'")
+              s"at nq=8 ≥ threshold, got ${d.coarse}")
           // the negative direction: an exhaustive budget (candidates ≥
           // live corpus) must keep exact selection even past the nq
           // threshold — the exact-KNN contract of ef = 2n callers
-          db.searchBatch("emb", q, k = 5, ef = Some(2 * n)).count()
-          require(graft.operators.CoarseMerge.lastPath != "approx",
+          val exhaustive = db.dispatch("emb", q, k = 5, ef = Some(2 * n))
+          exhaustive.frame.count()
+          require(exhaustive.coarse.exists(_.path != "approx"),
             "q_bq_approx_catalog: exhaustive ef=2n batch was auto-routed " +
               "to approx selection — the exact-KNN contract is broken")
           out
@@ -875,12 +886,13 @@ object SparkEntry {
       val db = catalogIngest(s, dir, "vecdb_qsq")
       val n = db.getLen("emb").toInt
       db.buildSqIndex("emb")
-      val out = db.searchBatch("emb", queryVectors(s, dir), k = 5, ef = Some(2 * n))
+      val d = db.dispatch("emb", queryVectors(s, dir), k = 5, ef = Some(2 * n))
+      val out = d.frame
         .select(col("query_id"), col("id"),
           (round(col("distance"), 6) + lit(0.0)).as("distance"))
         .orderBy("query_id", "distance", "id")
-      require(db.lastServedArm == "sq_rerank_serve",
-        s"expected the SQ serving arm, dispatched '${db.lastServedArm}'")
+      require(d.arm == "sq_rerank_serve",
+        s"expected the SQ serving arm, dispatched '${d.arm}'")
       out
     }),
     // §2.11 dispatch + T13 routed: buildIvfIndex THEN buildSqIndex writes
@@ -895,12 +907,13 @@ object SparkEntry {
       val n = db.getLen("emb").toInt
       db.buildIvfIndex("emb", k = 8, defaultNProbes = 8)
       db.buildSqIndex("emb")
-      val out = db.searchBatch("emb", queryVectors(s, dir), k = 5, ef = Some(2 * n))
+      val d = db.dispatch("emb", queryVectors(s, dir), k = 5, ef = Some(2 * n))
+      val out = d.frame
         .select(col("query_id"), col("id"),
           (round(col("distance"), 6) + lit(0.0)).as("distance"))
         .orderBy("query_id", "distance", "id")
-      require(db.lastServedArm == "sq_ivf",
-        s"expected the IVFSQ serving arm, dispatched '${db.lastServedArm}'")
+      require(d.arm == "sq_ivf",
+        s"expected the IVFSQ serving arm, dispatched '${d.arm}'")
       out
     }),
     // §2.11 dispatch + T12 as a CATALOG citizen: buildBqIndex (centered
@@ -911,12 +924,13 @@ object SparkEntry {
       val db = catalogIngest(s, dir, "vecdb_qbq")
       val n = db.getLen("emb").toInt
       db.buildBqIndex("emb")
-      val out = db.searchBatch("emb", queryVectors(s, dir), k = 5, ef = Some(2 * n))
+      val d = db.dispatch("emb", queryVectors(s, dir), k = 5, ef = Some(2 * n))
+      val out = d.frame
         .select(col("query_id"), col("id"),
           (round(col("distance"), 6) + lit(0.0)).as("distance"))
         .orderBy("query_id", "distance", "id")
-      require(db.lastServedArm == "bq_rerank_serve",
-        s"expected the BQ serving arm, dispatched '${db.lastServedArm}'")
+      require(d.arm == "bq_rerank_serve",
+        s"expected the BQ serving arm, dispatched '${d.arm}'")
       out
     }),
     // §2.11 dispatch + T12 routed (r16): buildIvfIndex THEN buildBqIndex
@@ -932,12 +946,13 @@ object SparkEntry {
       val n = db.getLen("emb").toInt
       db.buildIvfIndex("emb", k = 8, defaultNProbes = 8)
       db.buildBqIndex("emb")
-      val out = db.searchBatch("emb", queryVectors(s, dir), k = 5, ef = Some(2 * n))
+      val d = db.dispatch("emb", queryVectors(s, dir), k = 5, ef = Some(2 * n))
+      val out = d.frame
         .select(col("query_id"), col("id"),
           (round(col("distance"), 6) + lit(0.0)).as("distance"))
         .orderBy("query_id", "distance", "id")
-      require(db.lastServedArm == "bq_ivf",
-        s"expected the IVF-BQ serving arm, dispatched '${db.lastServedArm}'")
+      require(d.arm == "bq_ivf",
+        s"expected the IVF-BQ serving arm, dispatched '${d.arm}'")
       out
     }),
     // §2.11 dispatch + T7 residual variant: the catalog serving path with
@@ -1083,10 +1098,10 @@ object SparkEntry {
     }),
     // §7.3 + §2.11: the rewrite's catalog arm end to end — ingest into a
     // VecDB, build the HNSW sidecar, registerSql, and run the SQL top-k:
-    // the rule dispatches through the catalog search (lastServedArm pinned
-    // to "hnsw"), full beam ⇒ exact ⇒ the same DuckDB ORDER BY LIMIT oracle
+    // the rule dispatches through the catalog search (its arm pinned to
+    // "hnsw"), full beam ⇒ exact ⇒ the same DuckDB ORDER BY LIMIT oracle
     "q_sql_topk_indexed" -> ((s, dir) => {
-      val db = catalogIngest(s, dir, "vecdb_qsql")
+      val db = ingest(new ArmLog(s, scratchDir("vecdb_qsql").toString), s, dir)
       val n = db.getLen("emb").toInt
       db.buildHnswIndex("emb")
       db.registerSql("emb", Some("sql_topk_cat_emb"))
@@ -1107,19 +1122,19 @@ object SparkEntry {
         }
         require(fired,
           "q_sql_topk_indexed: the catalog rewrite was not answered locally")
-        require(db.lastServedArm == "hnsw",
-          s"q_sql_topk_indexed: expected the hnsw arm, got '${db.lastServedArm}'")
+        require(db.servedOnly("hnsw"),
+          s"q_sql_topk_indexed: expected the hnsw arm, got ${db.arms}")
         top.select(col("id"), (round(col("d"), 6) + lit(0.0)).as("distance"))
           .orderBy("distance", "id")
       } finally s.conf.unset(graft.plans.GraftSqlTopK.EfConf)
     }),
     // §7.3 + T13 (r16): the SQL top-k rewrite over a QUANTIZED-indexed
     // catalog table — the rule dispatches through searchBatch, which serves
-    // the SQ coarse+rerank arm (lastServedArm pinned). EfConf = 2n maps to
+    // the SQ coarse+rerank arm (its arm pinned). EfConf = 2n maps to
     // an exhaustive coarse candidate budget ⇒ exact ⇒ the same DuckDB
     // ORDER BY LIMIT oracle as the HNSW-indexed variant.
     "q_sql_topk_sq" -> ((s, dir) => {
-      val db = catalogIngest(s, dir, "vecdb_qsqlsq")
+      val db = ingest(new ArmLog(s, scratchDir("vecdb_qsqlsq").toString), s, dir)
       val n = db.getLen("emb").toInt
       db.buildSqIndex("emb")
       db.registerSql("emb", Some("sql_topk_sq_emb"))
@@ -1141,8 +1156,8 @@ object SparkEntry {
           case _ => false
         })
         require(fired, "q_sql_topk_sq: the catalog rewrite did not fire")
-        require(db.lastServedArm == "sq_rerank_serve",
-          s"q_sql_topk_sq: expected the SQ serving arm, got '${db.lastServedArm}'")
+        require(db.servedOnly("sq_rerank_serve"),
+          s"q_sql_topk_sq: expected the SQ serving arm, got ${db.arms}")
         top.select(col("id"), (round(col("d"), 6) + lit(0.0)).as("distance"))
           .orderBy("distance", "id")
       } finally s.conf.unset(graft.plans.GraftSqlTopK.EfConf)
@@ -1150,11 +1165,11 @@ object SparkEntry {
     // §7.3 + T12 (r19): the SQL top-k rewrite through the BQ catalog arm —
     // the last dispatch arm without a graded SQL path. Same shape as
     // q_sql_topk_sq: EfConf = 2n is an exhaustive coarse candidate budget
-    // (every row reranked) ⇒ exact ⇒ the plain ORDER BY LIMIT oracle;
-    // lastServedArm pins that the 1-bit Hamming coarse + exact rerank arm
-    // actually served it.
+    // (every row reranked) ⇒ exact ⇒ the plain ORDER BY LIMIT oracle; the
+    // arm the search returns pins that the 1-bit Hamming coarse + exact
+    // rerank arm actually served it.
     "q_sql_topk_bq" -> ((s, dir) => {
-      val db = catalogIngest(s, dir, "vecdb_qsqlbq")
+      val db = ingest(new ArmLog(s, scratchDir("vecdb_qsqlbq").toString), s, dir)
       val n = db.getLen("emb").toInt
       db.buildBqIndex("emb")
       db.registerSql("emb", Some("sql_topk_bq_emb"))
@@ -1176,8 +1191,8 @@ object SparkEntry {
           case _ => false
         })
         require(fired, "q_sql_topk_bq: the catalog rewrite did not fire")
-        require(db.lastServedArm == "bq_rerank_serve",
-          s"q_sql_topk_bq: expected the BQ serving arm, got '${db.lastServedArm}'")
+        require(db.servedOnly("bq_rerank_serve"),
+          s"q_sql_topk_bq: expected the BQ serving arm, got ${db.arms}")
         top.select(col("id"), (round(col("d"), 6) + lit(0.0)).as("distance"))
           .orderBy("distance", "id")
       } finally s.conf.unset(graft.plans.GraftSqlTopK.EfConf)
@@ -1204,7 +1219,11 @@ object SparkEntry {
           |           ORDER BY vec_l2sq(t.vec, q.qvec), t.id) AS rn
           |  FROM sql_topk_bt_q q CROSS JOIN sql_topk_bt_emb t
           |) WHERE rn <= 10""".stripMargin)
+      // fired in the batch shape: the window stays, with the spliced id
+      // prune beneath it
       val fired = top.queryExecution.optimizedPlan.collect {
+        case w: org.apache.spark.sql.catalyst.plans.logical.Window => w
+      }.exists(_.collect {
         case f: org.apache.spark.sql.catalyst.plans.logical.Filter =>
           f.condition
       }.exists(_.exists {
@@ -1213,11 +1232,8 @@ object SparkEntry {
         case si: org.apache.spark.sql.catalyst.expressions.InSet =>
           si.hset.size >= 10
         case _ => false
-      })
+      }))
       require(fired, "q_sql_topk_batch: the batch rewrite did not fire")
-      require(graft.plans.GraftSqlTopK.lastFired.exists(_._1 == "batch"),
-        "q_sql_topk_batch: expected the batch arm, got " +
-          graft.plans.GraftSqlTopK.lastFired)
       top.select(col("qid").as("query_id"), col("id"),
         (round(col("d"), 6) + lit(0.0)).as("distance"))
         .orderBy("query_id", "distance", "id")
@@ -1341,9 +1357,28 @@ object SparkEntry {
     * vector table (sorted by id ⇒ assigned ids equal vec_id — see
     * q_delete_pattern_survivors). No driver-side collect anywhere. */
   private def catalogIngest(s: SparkSession, dir: String, prefix: String)
-    : graft.catalog.VecDB = {
-    val root = scratchDir(prefix).toString
-    val db = new graft.catalog.VecDB(s, root)
+    : graft.catalog.VecDB =
+    ingest(new graft.catalog.VecDB(s, scratchDir(prefix).toString), s, dir)
+
+  /** A catalog that keeps the serving arm of each single-query search the
+    * SQL top-k rewrite runs through it, so a query can check which arm
+    * answered it. */
+  private final class ArmLog(s: SparkSession, root: String)
+      extends graft.catalog.VecDB(s, root) {
+    val arms = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    override private[graft] def searchTopK(key: String, query: Array[Float],
+        k: Int, ef: Option[Int]): graft.catalog.VecDB.Winners = {
+      val won = super.searchTopK(key, query, k, ef)
+      arms.add(won.arm)
+      won
+    }
+    def servedOnly(arm: String): Boolean =
+      !arms.isEmpty && arms.stream().allMatch(_ == arm)
+  }
+
+  /** Table "emb" of `db` holding the fixture's vectors and meta. */
+  private def ingest[D <: graft.catalog.VecDB](db: D, s: SparkSession,
+      dir: String): D = {
     val src = Tables.vectorsMeta(s, dir).orderBy("id")
     val dim = src.select(size(col("vec"))).head().getInt(0)
     db.createTableIfNotExists("emb", dim, "l2sqr")

@@ -509,11 +509,13 @@ final class HnswGraph(
     *
     * Primitive-array variant: fills `outIds`/`outDists` (caller-allocated,
     * length ≥ k) ascending by (distance, index) and returns the hit count —
-    * the zero-allocation serving hot path. */
+    * the zero-allocation serving hot path. `full = true` re-ranks the
+    * whole ef-sized set with no envelope skip: the reference path the
+    * envelope is A/B-tested against. */
   def searchInto(
       q: Array[Float], k: Int, ef: Int,
       outIds: Array[Int], outDists: Array[Double],
-      full: Boolean = HnswGraph.fullRerank): Int = {
+      full: Boolean = false): Int = {
     if (n == 0) return 0
     val efq = math.max(ef, k)
     val enter = greedyUntilLevel(0, q)
@@ -585,7 +587,7 @@ final class HnswGraph(
   def searchFnInto(
       distFn: Int => Double, q: Array[Float], k: Int, ef: Int,
       outIds: Array[Int], outDists: Array[Double],
-      full: Boolean = HnswGraph.fullRerank): Int = {
+      full: Boolean = false): Int = {
     if (n == 0) return 0
     val efq = math.max(ef, k)
     val enter = greedyUntilLevelFn(0, distFn)
@@ -666,14 +668,6 @@ object HnswGraph {
     * HnswSpec's envelope A/B. */
   @inline private[index] def envRel(dim: Int): Double = 1e-3 + dim * 2.4e-7
   @inline private[index] def envAbs(dim: Int): Double = 1e-6 + dim * 2.4e-7
-
-  /** Default for the `full` parameter of [[HnswGraph.searchInto]]/
-    * [[HnswGraph.searchFnInto]]: `true` restores the full ef-sized
-    * scalar-double re-rank (the pre-r12 tail). Probes and specs that A/B
-    * the envelope path pass `full` explicitly per call — this global is
-    * never mutated (driver-side mutation wouldn't reach executors anyway);
-    * it exists only so the production default is stated in one place. */
-  @volatile private[graft] var fullRerank: Boolean = false
 
   /** Rebuild a graph from exported nodes without re-running insertion —
     * the load half of S5 (`IndexSerde::load`,

@@ -181,7 +181,7 @@ object Bq extends Serializable {
       packed: DataFrame,
       qs: Array[(Long, Array[Long])],
       k: Int): DataFrame =
-    CoarseMerge.coarse(BqCodec(None), packed, qs, k)
+    CoarseMerge.coarse(BqCodec(None), packed, qs, k)._1
       .select(col("query_id"), col("id"),
         col("distance").cast("long").as("hamming"))
 
@@ -454,7 +454,7 @@ object Bq extends Serializable {
       model: Option[BqModel] = None,
       coarseSelect: String = "exact"): DataFrame =
     CoarseMerge.searchRerank(BqCodec(model), packed, base, queries, k,
-      candidates, dist, vecCol, coarseSelect)
+      candidates, dist, vecCol, coarseSelect)._1
 
   /** Persist `(id, bq, cluster)` as the physical IVF-BQ layout: cluster-
     * partitioned parquet (`data/cluster=N/...`) — [[Sq.writeIvfPartitioned]]'s
@@ -501,5 +501,5 @@ object Bq extends Serializable {
       flatVecCol: Option[String] = None): DataFrame =
     CoarseMerge.searchIvf(BqCodec(bqModel), codes, base, ivfModel, queries,
       k, candidates, nProbes, dist, vecCol, baseClusterCol, flatCodes,
-      flatBase, coarseSelect, flatVecCol)
+      flatBase, coarseSelect, flatVecCol)._1
 }

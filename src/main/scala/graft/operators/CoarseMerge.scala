@@ -75,15 +75,14 @@ private[graft] object CoarseMerge {
     sys.props.get("graft.coarse.task.max.bytes").map(_.toLong)
       .getOrElse(256L << 20)
 
-  /** Path the last eligible-kernel call took on THIS thread ("merge" |
-    * "agg") — observability for the specs; not public surface. Thread-
-    * local: gate decisions happen at plan-construction time on the
-    * calling thread, so concurrent searches (the bench's 4-wide sustained
-    * pool) don't interleave writes. */
-  private val lastPathTl: ThreadLocal[String] =
-    ThreadLocal.withInitial(() => "")
-  private[graft] def lastPath: String = lastPathTl.get()
-  private[graft] def lastPath_=(v: String): Unit = lastPathTl.set(v)
+  /** What a two-stage search chose while its plan was built, on the
+    * driver: the coarse selection `path` of its last chunk ("approx" |
+    * "merge" | "dist" | "agg"), the number of query `chunks` under the
+    * task-memory gate, and, for the routed search, the scan layout of its
+    * last chunk ("partitioned" | "flat"). Returned with the frame, so
+    * concurrent searches each read their own. */
+  final case class Choice(path: String, chunks: Int,
+      coverage: Option[String] = None)
 
   /** Coverage-aware dispatch threshold for the PARTITIONED quantized
     * layouts (r18, closing the r17 prune-void gap): when a chunk's probe
@@ -100,27 +99,10 @@ private[graft] object CoarseMerge {
     * > 1.0 disables. */
   @volatile var coverageFlatThreshold: Double = 0.5
 
-  /** Scan arm the last coverage-dispatched chunk took on THIS thread
-    * ("partitioned" | "flat"; "" before any dispatched call) —
-    * observability for the dispatch specs and the bench artifact. */
-  private val lastCoverageArmTl: ThreadLocal[String] =
-    ThreadLocal.withInitial(() => "")
-  private[graft] def lastCoverageArm: String = lastCoverageArmTl.get()
-  private[graft] def lastCoverageArm_=(v: String): Unit =
-    lastCoverageArmTl.set(v)
-
   /** Number of times a deferred [[merge]] thunk has actually RUN its
     * treeReduce (process-wide) — observability for the laziness spec: a
     * constructed-but-unexecuted merge plan must not move this. */
   private[graft] val mergeExecutions = new java.util.concurrent.atomic.AtomicLong(0)
-
-  /** Chunk count of the last kernel call on THIS thread — observability
-    * for the task-memory-gate specs. */
-  private val lastChunksTl: ThreadLocal[Integer] =
-    ThreadLocal.withInitial(() => Integer.valueOf(1))
-  private[graft] def lastChunks: Int = lastChunksTl.get().intValue
-  private[graft] def lastChunks_=(v: Int): Unit =
-    lastChunksTl.set(Integer.valueOf(v))
 
   /** Batch-size threshold for AUTO approximate coarse selection (r19,
     * verdict #2): the 660 q/s big-batch target is probe-proven
@@ -414,10 +396,10 @@ private[graft] object CoarseMerge {
     *    large candidate budgets, whose aggregate would shuffle P × nq × k
     *    partial rows; past the driver cap the shard-keyed distributed
     *    merge ([[distEligible]]); otherwise the row aggregate.
-    * Output: (query_id, id, distance). */
+    * Output: (query_id, id, distance), with the path taken. */
   private def select[Q, R](src: Dataset[R], qs: Broadcast[Array[(Long, Q)]],
       k: Int, approxPerPart: Int,
-      kernel: Iterator[R] => Array[TopBuffer]): DataFrame = {
+      kernel: Iterator[R] => Array[TopBuffer]): (DataFrame, String) = {
     val spark = src.sparkSession
     import spark.implicits._
     val qids = qs.value.map(_._1)
@@ -437,8 +419,7 @@ private[graft] object CoarseMerge {
       else if (eligible(qids.length, k)) "merge"
       else if (distEligible(qids.length, k)) "dist"
       else "agg"
-    lastPath = path
-    path match {
+    (path match {
       case "approx" => rows
       case "merge" => merge(spark, qids, partials, k)
       case "dist" => mergeDistributed(spark, qids, partials, k)
@@ -448,7 +429,7 @@ private[graft] object CoarseMerge {
           .select(col("query_id"), explode(col("topk")).as("hit"))
           .select(col("query_id"), col("hit.id").as("id"),
             col("hit.distance").as("distance"))
-    }
+    }, path)
   }
 
   /** The flat coarse pass: top-`k` codes of `packed` (id, code) per
@@ -457,33 +438,25 @@ private[graft] object CoarseMerge {
     * at nq=10k × candidates=20k), so the batch chunks to [[spans]] and the
     * chunk results union — exact by construction (selection is
     * per-query), each chunk one more pass over the scan. Output:
-    * (query_id, id, distance). */
+    * (query_id, id, distance), with the [[Choice]] made. */
   def coarse[Q, C](codec: Codec[Q, C], packed: DataFrame,
-      qs: Array[(Long, Q)], k: Int, approxPerPart: Int = 0): DataFrame = {
+      qs: Array[(Long, Q)], k: Int, approxPerPart: Int = 0)
+      : (DataFrame, Choice) = {
     val sc = packed.sparkSession.sparkContext
     // approx mode: per-task state is nq × approxPerPart slots, not nq × k
     val bufCap = if (approxPerPart > 0) approxPerPart else k
-    chunked(qs.length, bufCap) { (s, e) =>
+    val chunks = spans(qs.length, bufCap).map { case (s, e) =>
       val bc = sc.broadcast(if (s == 0 && e == qs.length) qs else qs.slice(s, e))
       select(codec.flatRows(packed), bc, k, approxPerPart,
         codec.flatKernel(bc, bufCap))
-    }.reduce(_ union _)
-  }
-
-  /** `body` over each `[start, end)` of the [[spans]] of an nq-query
-    * batch whose queries hold `slots` buffer slots each; records the
-    * chunk count for [[lastChunks]]. */
-  private def chunked[T](nq: Int, slots: Int)(body: (Int, Int) => T): Seq[T] = {
-    val chunks = spans(nq, slots)
-    val out = chunks.map { case (s, e) => body(s, e) }
-    lastChunks = chunks.length
-    out
+    }
+    (chunks.map(_._1).reduce(_ union _), Choice(chunks.last._2, chunks.length))
   }
 
   /** Two-stage flat search: coarse top-`candidates` over `packed`
     * (id, code), exact `dist` rerank of the survivors on one id-pruned
     * pass over `base`'s `vecCol`. Output: (query_id, id, distance)
-    * ascending (distance, id) per query; with `candidates ≥ n` and exact
+    * ascending (distance, id) per query, with the [[Choice]] made; with `candidates ≥ n` and exact
     * selection the coarse pass keeps every row and the result is exact
     * KNN.
     *
@@ -501,15 +474,16 @@ private[graft] object CoarseMerge {
     *   Exhaustive-exact callers (candidates ≥ corpus) must use `"exact"`. */
   def searchRerank[Q, C](codec: Codec[Q, C], packed: DataFrame,
       base: DataFrame, queries: DataFrame, k: Int, candidates: Int,
-      dist: String, vecCol: String, coarseSelect: String): DataFrame = {
+      dist: String, vecCol: String, coarseSelect: String)
+      : (DataFrame, Choice) = {
     require(candidates >= k, s"candidates ($candidates) must be >= k ($k)")
     val qs = collectQueries(queries)
-    val hits = coarse(codec, packed,
+    val (hits, choice) = coarse(codec, packed,
       qs.map { case (qid, v) => (qid, codec.prepare(v)) }, candidates,
       approxPerPart(coarseSelect, qs.length, packed, k, candidates))
-    Rerank.exact(hits.select(col("query_id"), col("id")), base, queries, k,
+    (Rerank.exact(hits.select(col("query_id"), col("id")), base, queries, k,
       dist, "id", vecCol, "query_id", "query_vec",
-      estRows = qs.length.toLong * candidates)
+      estRows = qs.length.toLong * candidates), choice)
   }
 
   /** Two-stage IVF-routed search: per query, probe the `nProbes` nearest
@@ -556,7 +530,7 @@ private[graft] object CoarseMerge {
       nProbes: Option[Int], dist: String, vecCol: String,
       baseClusterCol: Option[String], flatCodes: Option[DataFrame],
       flatBase: Option[DataFrame], coarseSelect: String,
-      flatVecCol: Option[String]): DataFrame = {
+      flatVecCol: Option[String]): (DataFrame, Choice) = {
     require(candidates >= k, s"candidates ($candidates) must be >= k ($k)")
     val np = math.max(1, nProbes.getOrElse(ivfModel.defaultNProbes))
     val spark = base.sparkSession
@@ -570,7 +544,6 @@ private[graft] object CoarseMerge {
       val (c2q, probed) = probePlan(chunk, ivfModel, np)
       val pruned = flatCodes.isEmpty ||
         probed.length.toDouble / kc < coverageFlatThreshold
-      lastCoverageArm = if (pruned) "partitioned" else "flat"
       val rows =
         if (pruned) codes.filter(col("cluster").isin(probed.map(Int.box): _*))
         else flatCodes.get
@@ -584,8 +557,8 @@ private[graft] object CoarseMerge {
     val deferredCoarse = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     val deferredQs =
       scala.collection.mutable.ArrayBuffer.empty[(Long, Array[Float])]
-    val perChunk = chunked(qs.length,
-        batchPlan.map(_._5).getOrElse(candidates)) { (s, e) =>
+    val perChunk = spans(qs.length,
+        batchPlan.map(_._5).getOrElse(candidates)).map { case (s, e) =>
       val whole = s == 0 && e == qs.length
       val qsC = if (whole) qs else qs.slice(s, e)
       val (c2q, probed, pruned, rows, cap) = batchPlan match {
@@ -594,11 +567,11 @@ private[graft] object CoarseMerge {
       }
       val bcQ = spark.sparkContext.broadcast(
         if (whole) prepared else prepared.slice(s, e))
-      val coarse = select(codec.probedRows(rows), bcQ, candidates, cap,
+      val (hits, path) = select(codec.probedRows(rows), bcQ, candidates, cap,
           codec.probedKernel(bcQ, spark.sparkContext.broadcast(c2q),
             if (cap > 0) cap else candidates))
-        .select(col("query_id"), col("id"))
-      baseClusterCol.filter(_ => pruned) match {
+      val coarse = hits.select(col("query_id"), col("id"))
+      val reranked = baseClusterCol.filter(_ => pruned) match {
         case Some(c) =>
           Some(Rerank.exact(coarse,
             base.filter(col(c).isin(probed.map(Int.box): _*)),
@@ -607,7 +580,8 @@ private[graft] object CoarseMerge {
         case None =>
           deferredCoarse += coarse; deferredQs ++= qsC; None
       }
-    }.flatten
+      (reranked, path, if (pruned) "partitioned" else "flat")
+    }
     val global =
       if (deferredCoarse.isEmpty) None
       else Some(Rerank.exact(deferredCoarse.reduce(_ union _),
@@ -616,6 +590,7 @@ private[graft] object CoarseMerge {
         flatBase.flatMap(_ => flatVecCol).getOrElse(vecCol),
         "query_id", "query_vec",
         estRows = deferredQs.length.toLong * candidates))
-    (perChunk ++ global).reduce(_ union _)
+    ((perChunk.flatMap(_._1) ++ global).reduce(_ union _),
+      Choice(perChunk.last._2, perChunk.length, Some(perChunk.last._3)))
   }
 }

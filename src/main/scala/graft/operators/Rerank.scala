@@ -32,16 +32,6 @@ private[graft] object Rerank {
     sys.props.get("graft.rerank.broadcast.max.bytes").map(_.toLong)
       .getOrElse(512L << 20)
 
-  /** Physical shape the last [[exact]] call took on THIS thread
-    * ("broadcast" | "shuffle") — observability for the gate specs; not
-    * public surface. Thread-local: the gate decides at plan-construction
-    * time on the calling thread, so concurrent searches (the bench's
-    * 4-wide sustained pool) don't interleave writes. */
-  private val lastJoinTl: ThreadLocal[String] =
-    ThreadLocal.withInitial(() => "")
-  private[graft] def lastJoin: String = lastJoinTl.get()
-  private[graft] def lastJoin_=(v: String): Unit = lastJoinTl.set(v)
-
   /** A collected query batch (or chunk of one) as a (query_id, query_vec)
     * DataFrame — a LocalRelation, so the rerank's query-side broadcast
     * costs no job. Used by the per-chunk rerank callers: each chunk
@@ -70,14 +60,11 @@ private[graft] object Rerank {
       col(queryIdCol).cast("long").as("query_id"),
       col(queryVecCol).as("__qvec")))
     val winners =
-      if (estRows * BytesPerRow <= broadcastMaxBytes) {
-        lastJoin = "broadcast"
-        broadcast(coarseIds)
-      } else {
+      if (estRows * BytesPerRow <= broadcastMaxBytes) broadcast(coarseIds)
+      else {
         // hinted (not left to AQE): the coarse set is a fresh aggregate
         // output with no stats, and a wrong runtime broadcast here is an
         // OOM, not a slowdown
-        lastJoin = "shuffle"
         coarseIds.hint("shuffle_hash")
       }
     winners

@@ -154,7 +154,7 @@ object Sq extends Serializable {
       queryIdCol: String = "query_id",
       queryVecCol: String = "query_vec"): DataFrame =
     CoarseMerge.coarse(SqCodec(model, dist), packed,
-      CoarseMerge.collectQueries(queries, queryIdCol, queryVecCol), k)
+      CoarseMerge.collectQueries(queries, queryIdCol, queryVecCol), k)._1
 
   /** SQ8 as a [[CoarseMerge.Codec]]: queries stay floats, and both kernels
     * decode each row ONCE per batch, then score it with [[SqKernel]]'s
@@ -371,7 +371,7 @@ object Sq extends Serializable {
       vecCol: String = "vec",
       coarseSelect: String = "exact"): DataFrame =
     CoarseMerge.searchRerank(SqCodec(model, dist), packed, base, queries, k,
-      candidates, dist, vecCol, coarseSelect)
+      candidates, dist, vecCol, coarseSelect)._1
 
   /** IVF-routed SQ8 (the FAISS IVF+SQ composition on the engine's own IVF
     * machinery, [[CoarseMerge.searchIvf]]): per query, probe the
@@ -413,7 +413,7 @@ object Sq extends Serializable {
       flatVecCol: Option[String] = None): DataFrame =
     CoarseMerge.searchIvf(SqCodec(sqModel, dist), codes, base, ivfModel,
       queries, k, candidates, nProbes, dist, vecCol, baseClusterCol,
-      flatCodes, flatBase, coarseSelect, flatVecCol)
+      flatCodes, flatBase, coarseSelect, flatVecCol)._1
 
   /** Persist `(id, sq, cluster)` as the physical IVFSQ layout: cluster-
     * partitioned parquet (`data/cluster=N/...`) — [[Ivf.writePartitioned]]'s

@@ -185,11 +185,6 @@ object GraftSqlTopK {
     java.util.Collections.newSetFromMap(
       new java.util.WeakHashMap[SparkSession, java.lang.Boolean]()))
 
-  /** Which arm the last fired rewrite took ("single" | "batch") with the
-    * ef it passed — spec/smoke assertion surface, mirrors
-    * [[VecDB.lastServedArm]]. */
-  @volatile private[graft] var lastFired: Option[(String, Option[Int])] = None
-
   /** Add the rewrite rule to `spark.experimental.extraOptimizations` and
     * register the [[TopKEf]] SQL hint (idempotent per session). */
   def enable(spark: SparkSession): Unit = synchronized {
@@ -219,7 +214,7 @@ object GraftSqlTopK {
     registry(name) = mkEntry(df, dist,
       (spark, q, k, _) => VecDB.Winners(
         Knn.exactBroadcast(searchable, queryDf(spark, q), k, dist)
-          .select("id").collect().map(_.getLong(0)), None),
+          .select("id").collect().map(_.getLong(0)), None, "flat_broadcast"),
       (_, qdf, k, _) =>
         Knn.exactBroadcast(searchable, qdf, k, dist),
       () => true)
@@ -380,7 +375,6 @@ object GraftSqlTopK {
           // back rather than throw
           evalQueryVector(qExpr).map { qvec =>
             val won = e.search(spark, qvec, k, efHint)
-            lastFired = Some(("single", efHint))
             won.rows.flatMap(answerLocally(rel, filterOpt, projOpt, sort, k, _))
                 .map(LocalRelation(gl.output, _)).getOrElse {
               val pruned = Filter(pruneCond(idExpr, vecExpr, won.ids), rel)
@@ -621,7 +615,6 @@ object GraftSqlTopK {
       val ids = e.searchBatch(spark, qdf, k, efHint)
         .select("id").collect().map(_.getLong(0)).distinct
       if (ids.isEmpty) return None
-      lastFired = Some(("batch", efHint))
       // splice the union prune above the vector leaf (reference identity:
       // a self-join registering both sides must touch only this side)
       var done = false

@@ -183,15 +183,18 @@ object ClusterSmoke {
       db.clearPqTable("t") // (Some ef, Some pq) would outrank the SQ arm
       db.buildIvfIndex("t", k = 6, defaultNProbes = 6)
       db.buildSqIndex("t")
-      val sqGot = db.search("t", q0, 10, ef = Some(2 * vecs.size))
-        .map(r => (r._1("i").toLong, r._2)).toSeq
-      val okSq = sqGot == flat && db.lastServedArm == "sq_ivf"
+      import spark.implicits._
+      val qdf = Seq((0L, q0)).toDF("query_id", "query_vec")
+      // `exact`'s (i, distance) rows, with the arm that served them
+      def served(): (Seq[(Long, Double)], String) = {
+        val d = db.dispatch("t", qdf, 10, ef = Some(2 * vecs.size))
+        (VecDB.ranked(d.frame).map(r => (r._1("i").toLong, r._2)), d.arm)
+      }
+      val okSq = served() == ((flat, "sq_ivf"))
       db.clearIvfIndex("t") // cascades the routed SQ sidecar
       val okCascade = !db.hasSqIndex("t")
       db.buildBqIndex("t")
-      val bqGot = db.search("t", q0, 10, ef = Some(2 * vecs.size))
-        .map(r => (r._1("i").toLong, r._2)).toSeq
-      val okBq = bqGot == flat && db.lastServedArm == "bq_rerank_serve"
+      val okBq = served() == ((flat, "bq_rerank_serve"))
       db.clearBqIndex("t")
       okSq && okCascade && okBq
     }

@@ -2,7 +2,8 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.functions.BqKernel
-import graft.operators.{Bq, Knn}
+import org.apache.spark.sql.DataFrame
+import graft.operators.{Bq, CoarseMerge, Knn}
 
 /** Binary (sign-bit) quantization invariants: packing layout, Hamming =
   * per-dim sign disagreement, serving arm == declarative arm, and two-stage
@@ -13,6 +14,40 @@ class BqSpec extends SparkTestBase {
   private lazy val base = Tables.vectors(spark, sf0001).select("id", "vec").cache()
   private lazy val qs = base.filter($"id" < 6)
     .select($"id".as("query_id"), $"vec".as("query_vec"))
+
+  /** [[Bq.searchRerank]]'s steps through the shared driver, which returns
+    * the choice it made with the frame. */
+  private def searchRerank(b: DataFrame, q: DataFrame, k: Int,
+      candidates: Int, coarseSelect: String): (DataFrame, CoarseMerge.Choice) = {
+    val ids = b.select(col("id").cast("long").as("id"), col("vec"))
+    val model = Bq.train(ids)
+    CoarseMerge.searchRerank(Bq.BqCodec(Some(model)),
+      Bq.encodeCentered(ids, model).select(col("id"), col("bq")), b, q, k,
+      candidates, "l2sqr", "vec", coarseSelect)
+  }
+
+  /** [[Bq.searchIvf]] with forced approx selection through the shared
+    * driver, which returns the choice it made with the frame. */
+  private def searchIvfApprox(codes: DataFrame, ivfModel: graft.operators.IvfModel,
+      model: Bq.BqModel, k: Int, candidates: Int)
+      : (DataFrame, CoarseMerge.Choice) =
+    CoarseMerge.searchIvf(Bq.BqCodec(Some(model)), codes, base, ivfModel, qs,
+      k, candidates, Some(8), "l2sqr", "vec", None, None, None, "approx", None)
+
+  /** [[Bq.hammingBroadcast]]'s (query_id, id, hamming) rows, sorted, with
+    * the coarse selection path the shared driver took. */
+  private def hammingWithPath(b: DataFrame, q: DataFrame, k: Int)
+      : (Seq[org.apache.spark.sql.Row], String) = {
+    val codec = Bq.BqCodec(None)
+    val (hits, choice) = CoarseMerge.coarse(codec,
+      Bq.encode(b.select(col("id").cast("long").as("id"), col("vec")))
+        .select(col("id"), col("bq")),
+      CoarseMerge.collectQueries(q).map { case (id, v) => (id, codec.prepare(v)) },
+      k)
+    (hits.select(col("query_id"), col("id"),
+        col("distance").cast("long").as("hamming"))
+      .orderBy("query_id", "hamming", "id").collect().toSeq, choice.path)
+  }
 
   test("kernel pack: bit j of word w set iff v(64w+j) >= 0; -0.0 packs set") {
     val v = new Array[Float](130)
@@ -106,9 +141,9 @@ class BqSpec extends SparkTestBase {
     val n = b8.count().toInt
     // forced approx path: per-partition top-⌈200/8⌉ pool, no selection
     // shuffle
-    val approx = Bq.searchRerank(b8, qs, k = k, candidates = 200,
+    val (approx, choice) = searchRerank(b8, qs, k = k, candidates = 200,
       coarseSelect = "approx")
-    assert(graft.operators.CoarseMerge.lastPath == "approx")
+    assert(choice.path == "approx")
     val approxRows = approx.collect()
       .map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("id"),
         r.getAs[Double]("distance")))
@@ -148,12 +183,14 @@ class BqSpec extends SparkTestBase {
     try {
       // batch (6 queries) below threshold: exact selection
       graft.operators.CoarseMerge.approxNqThreshold = 1000
-      Bq.searchRerank(base, qs, k = 5, candidates = 50, coarseSelect = "auto")
-      assert(graft.operators.CoarseMerge.lastPath != "approx")
+      val below = searchRerank(base, qs, k = 5, candidates = 50,
+        coarseSelect = "auto")._2
+      assert(below.path != "approx")
       // threshold at/below the batch: approx selection
       graft.operators.CoarseMerge.approxNqThreshold = 6
-      Bq.searchRerank(base, qs, k = 5, candidates = 50, coarseSelect = "auto")
-      assert(graft.operators.CoarseMerge.lastPath == "approx")
+      val at = searchRerank(base, qs, k = 5, candidates = 50,
+        coarseSelect = "auto")._2
+      assert(at.path == "approx")
     } finally graft.operators.CoarseMerge.approxNqThreshold = old
   }
 
@@ -303,18 +340,16 @@ class BqSpec extends SparkTestBase {
     val a = Bq.hammingTopK(big, q2, k = 300)
       .orderBy("query_id", "hamming", "id").collect().toSeq
     // default gate: the tree-merged driver path (no partial-row shuffle)
-    val b = Bq.hammingBroadcast(big, q2, k = 300)
-      .orderBy("query_id", "hamming", "id").collect().toSeq
-    assert(graft.operators.CoarseMerge.lastPath == "merge")
+    val (b, bPath) = hammingWithPath(big, q2, k = 300)
+    assert(bPath == "merge")
     assert(a == b)
     // forced-shut gate: the aggregate path over the same heap buffers
     val savedGate = graft.operators.CoarseMerge.maxBytes
-    val c = try {
+    val (c, cPath) = try {
       graft.operators.CoarseMerge.maxBytes = 1L
-      Bq.hammingBroadcast(big, q2, k = 300)
-        .orderBy("query_id", "hamming", "id").collect().toSeq
+      hammingWithPath(big, q2, k = 300)
     } finally graft.operators.CoarseMerge.maxBytes = savedGate
-    assert(graft.operators.CoarseMerge.lastPath == "agg")
+    assert(cPath == "agg")
     assert(a == c)
   }
 
@@ -371,7 +406,7 @@ class BqSpec extends SparkTestBase {
       val q1 = tiny.limit(1).select($"id".as("query_id"), $"vec".as("query_vec"))
       val viaBq = Bq.searchRerank(tiny, q1, k = 5, candidates = 40)
       val plan = viaBq.queryExecution.sparkPlan.toString
-      assert(graft.operators.Rerank.lastJoin == "shuffle")
+      assert(rerankJoin(viaBq) == "shuffle")
       assert(plan.contains("ShuffledHashJoin"),
         s"expected a shuffled winner join in:\n$plan")
       val got = viaBq.orderBy("distance", "id").collect().map(_.getLong(1)).toSeq
@@ -393,9 +428,8 @@ class BqSpec extends SparkTestBase {
     // forced approx inside the probed scan (np = kc ⇒ pool membership is
     // the only approximation): per-partition top-⌈200/8⌉, the union IS the
     // rerank pool
-    val approx = Bq.searchIvf(packed, base, ivfModel, Some(model), qs,
-      k = k, candidates = 200, nProbes = Some(8), coarseSelect = "approx")
-    assert(graft.operators.CoarseMerge.lastPath == "approx")
+    val (approx, choice) = searchIvfApprox(packed, ivfModel, model, k, 200)
+    assert(choice.path == "approx")
     val approxRows = approx.collect()
       .map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("id"),
         r.getAs[Double]("distance")))
@@ -433,10 +467,9 @@ class BqSpec extends SparkTestBase {
     val dir = java.nio.file.Files.createTempDirectory(
       java.nio.file.Paths.get("target"), "bq_ivf_approx").toString
     Bq.writeIvfPartitioned(packed, dir)
-    val part = Bq.searchIvf(spark.read.parquet(s"$dir/data"), base,
-      ivfModel, Some(model), qs, k = k, candidates = 200, nProbes = Some(8),
-      coarseSelect = "approx")
-    assert(graft.operators.CoarseMerge.lastPath == "approx")
+    val (part, partChoice) = searchIvfApprox(
+      spark.read.parquet(s"$dir/data"), ivfModel, model, k, 200)
+    assert(partChoice.path == "approx")
     val pByQ = part.collect()
       .map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("id"),
         r.getAs[Double]("distance")))

@@ -48,10 +48,11 @@ class BroadcastAppendSpec extends SparkTestBase {
   private def searchChecked(db: VecDB, root: String): (Long, Long) = {
     val r0 = CacheStats.indexRowsShipped.get
     val g0 = CacheStats.graphBuilds.get
-    val got = rows(db.searchBatch("t", queries, k = K, ef = Some(Ef)))
+    val served = db.dispatch("t", queries, k = K, ef = Some(Ef))
+    val got = rows(served.frame)
     val shipped = CacheStats.indexRowsShipped.get - r0
     val built = CacheStats.graphBuilds.get - g0
-    assert(db.lastServedArm == "hnsw", s"served by '${db.lastServedArm}'")
+    assert(served.arm == "hnsw", s"served by '${served.arm}'")
     val want = rows(Hnsw.searchBroadcast(spark.read.parquet(hnswDir(root)),
       queries, K, Some(Ef), "l2sqr"))
     assert(got.nonEmpty && got == want)
@@ -128,8 +129,9 @@ class BroadcastAppendSpec extends SparkTestBase {
     val (db, root) = freshTable(200, 4)
     db.broadcastGateBytes = Some(1L) // serve through the pinned arm
     try {
-      db.searchBatch("t", queries, k = K, ef = Some(Ef)).collect()
-      assert(db.lastServedArm == "hnsw")
+      val served = db.dispatch("t", queries, k = K, ef = Some(Ef))
+      served.frame.collect()
+      assert(served.arm == "hnsw")
       val pinned = spark.sparkContext.getPersistentRDDs.size
       add(db, vecs(50, 5))
       db.searchBatch("t", queries, k = K, ef = Some(Ef)).collect()

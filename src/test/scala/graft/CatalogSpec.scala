@@ -169,11 +169,13 @@ class CatalogSpec extends SparkTestBase {
     // plain SQ sidecar: coarse+rerank serving arm; ef ≥ n ⇒ exact
     db.buildSqIndex("t")
     assert(db.hasSqIndex("t"))
-    assert(db.search("t", vecs(7), 5, ef = Some(200)) == flat)
-    assert(db.lastServedArm == "sq_rerank_serve")
+    val (viaSq, sqServed) = dispatchOne(db, "t", vecs(7), 5, ef = Some(200))
+    assert(viaSq == flat)
+    assert(sqServed.arm == "sq_rerank_serve")
     // no ef → corpus-scaled default budget; self-hit survives
-    assert(db.search("t", vecs(7), 1).head._1("i") == "7")
-    assert(db.lastServedArm == "sq_rerank_serve")
+    val (self, selfServed) = dispatchOne(db, "t", vecs(7), 1)
+    assert(self.head._1("i") == "7")
+    assert(selfServed.arm == "sq_rerank_serve")
     // P3 upper bound applies on the EXACT re-ranked distances
     assert(db.search("t", vecs(7), 5, ef = Some(200), upperBound = Some(0.3))
       == flat.filter(_._2 <= 0.3))
@@ -186,8 +188,9 @@ class CatalogSpec extends SparkTestBase {
     db.buildSqIndex("t")
     import spark.implicits._
     val q = Seq((0L, vecs(7))).toDF("query_id", "query_vec")
-    val hits = db.searchBatch("t", q, 5, ef = Some(200))
-    assert(db.lastServedArm == "sq_ivf")
+    val served = db.dispatch("t", q, 5, ef = Some(200))
+    val hits = served.frame
+    assert(served.arm == "sq_ivf")
     val got = hits.orderBy("distance", "id").collect()
       .map(r => (Option(r.getAs[Map[String, String]]("meta")).getOrElse(Map.empty),
         r.getAs[Double]("distance"))).toSeq
@@ -214,22 +217,25 @@ class CatalogSpec extends SparkTestBase {
     db.buildSqIndex("t") // routed build writes the flat twin (r18)
     import spark.implicits._
     val q = Seq((0L, vecs(9))).toDF("query_id", "query_vec")
-    def served() = db.searchBatch("t", q, 5, ef = Some(200))
-      .orderBy("distance", "id").collect()
-      .map(r => (r.getAs[Long]("id"), r.getAs[Double]("distance"))).toSeq
+    // the rows, the arm and the coverage arm of one search
+    def served() = {
+      val d = db.dispatch("t", q, 5, ef = Some(200))
+      (d.frame.orderBy("distance", "id").collect()
+        .map(r => (r.getAs[Long]("id"), r.getAs[Double]("distance"))).toSeq,
+        d.arm, d.coarse.flatMap(_.coverage).getOrElse(""))
+    }
     // np=4 of kc=4 ⇒ probe coverage 1.0 ≥ default threshold: flat twin
-    val viaFlat = served()
-    assert(db.lastServedArm == "sq_ivf")
-    assert(graft.operators.CoarseMerge.lastCoverageArm == "flat",
-      s"arm=${graft.operators.CoarseMerge.lastCoverageArm}")
+    val (viaFlat, sqArm, sqCover) = served()
+    assert(sqArm == "sq_ivf")
+    assert(sqCover == "flat", s"arm=$sqCover")
     // threshold forced past 1.0: the same search serves the partitioned
     // layout — identical rows (the dispatch is purely physical)
     val saved = graft.operators.CoarseMerge.coverageFlatThreshold
-    val viaPart = try {
+    val (viaPart, _, partCover) = try {
       graft.operators.CoarseMerge.coverageFlatThreshold = 2.0
       served()
     } finally graft.operators.CoarseMerge.coverageFlatThreshold = saved
-    assert(graft.operators.CoarseMerge.lastCoverageArm == "partitioned")
+    assert(partCover == "partitioned")
     assert(viaPart == viaFlat)
     // pre-r18 sidecar (no flat twin on disk): coverage 1.0 still serves
     // the partitioned layout instead of failing
@@ -241,21 +247,21 @@ class CatalogSpec extends SparkTestBase {
     }
     assert(flatDirs.nonEmpty, "routed SQ build did not write the flat twin")
     flatDirs.foreach(deleteDir)
-    val viaOld = served()
-    assert(graft.operators.CoarseMerge.lastCoverageArm == "partitioned",
+    val (viaOld, _, oldCover) = served()
+    assert(oldCover == "partitioned",
       "missing flat twin must fall back to the partitioned layout")
     assert(viaOld == viaFlat)
     // BQ twin of the same dispatch (SQ outranks BQ in the matrix — clear it)
     db.clearSqIndex("t")
     db.buildBqIndex("t")
-    val bqFlat = served()
-    assert(db.lastServedArm == "bq_ivf")
-    assert(graft.operators.CoarseMerge.lastCoverageArm == "flat")
-    val bqPart = try {
+    val (bqFlat, bqArm, bqCover) = served()
+    assert(bqArm == "bq_ivf")
+    assert(bqCover == "flat")
+    val (bqPart, _, bqPartCover) = try {
       graft.operators.CoarseMerge.coverageFlatThreshold = 2.0
       served()
     } finally graft.operators.CoarseMerge.coverageFlatThreshold = saved
-    assert(graft.operators.CoarseMerge.lastCoverageArm == "partitioned")
+    assert(bqPartCover == "partitioned")
     assert(bqPart == bqFlat)
     db.close()
   }
@@ -273,8 +279,9 @@ class CatalogSpec extends SparkTestBase {
     val flat = db.search("t", vecs(3), 5)
     db.buildBqIndex("t")
     assert(db.hasBqIndex("t"))
-    assert(db.search("t", vecs(3), 5, ef = Some(200)) == flat)
-    assert(db.lastServedArm == "bq_rerank_serve")
+    val (viaBq, bqServed) = dispatchOne(db, "t", vecs(3), 5, ef = Some(200))
+    assert(viaBq == flat)
+    assert(bqServed.arm == "bq_rerank_serve")
     // delete-by-pattern clears the sidecar
     db.delete("t", Map("i" -> "49"))
     assert(!db.hasBqIndex("t"))
@@ -284,8 +291,9 @@ class CatalogSpec extends SparkTestBase {
     val db2 = new VecDB(spark, root)
     assert(db2.hasBqIndex("t"))
     val flat3 = flat.filterNot(_._1("i") == "49")
-    assert(db2.search("t", vecs(3), 5, ef = Some(200)).take(flat3.length) == flat3)
-    assert(db2.lastServedArm == "bq_rerank_serve")
+    val (reopened, reServed) = dispatchOne(db2, "t", vecs(3), 5, ef = Some(200))
+    assert(reopened.take(flat3.length) == flat3)
+    assert(reServed.arm == "bq_rerank_serve")
     db2.close()
   }
 
@@ -307,20 +315,23 @@ class CatalogSpec extends SparkTestBase {
     assert(db.hasBqIndex("t"))
     import spark.implicits._
     val q = Seq((0L, vecs(7))).toDF("query_id", "query_vec")
-    val hits = db.searchBatch("t", q, 5, ef = Some(200))
-    assert(db.lastServedArm == "bq_ivf")
+    val served = db.dispatch("t", q, 5, ef = Some(200))
+    val hits = served.frame
+    assert(served.arm == "bq_ivf")
     val got = hits.orderBy("distance", "id").collect()
       .map(r => (Option(r.getAs[Map[String, String]]("meta")).getOrElse(Map.empty),
         r.getAs[Double]("distance"))).toSeq
     assert(got == flat)
     // default probes (np < kc) still find the self-hit through the prune
-    assert(db.search("t", vecs(7), 1).head._1("i") == "7")
-    assert(db.lastServedArm == "bq_ivf")
+    val (self, selfServed) = dispatchOne(db, "t", vecs(7), 1)
+    assert(self.head._1("i") == "7")
+    assert(selfServed.arm == "bq_ivf")
     // the brief round-trips `routed` across reopen
     db.close()
     val db2 = new VecDB(spark, root)
-    assert(db2.searchBatch("t", q, 5, ef = Some(200)).count() == 5)
-    assert(db2.lastServedArm == "bq_ivf")
+    val reServed = db2.dispatch("t", q, 5, ef = Some(200))
+    assert(reServed.frame.count() == 5)
+    assert(reServed.arm == "bq_ivf")
     // clearing the IVF index cascades to the routed BQ sidecar (its probe
     // lists live in the IVF centroids)
     db2.clearIvfIndex("t")
@@ -352,21 +363,24 @@ class CatalogSpec extends SparkTestBase {
       graft.operators.CoarseMerge.approxNqThreshold = 4
       // candidates = 60: >= live corpus (50) but < nextId (100) — the
       // exact-KNN contract applies and the dispatch must NOT pick approx
-      db.searchBatch("t", q, 5, ef = Some(60)).count()
-      assert(db.lastServedArm == "bq_rerank_serve")
-      assert(graft.operators.CoarseMerge.lastPath != "approx",
+      val exhaustive = db.dispatch("t", q, 5, ef = Some(60))
+      exhaustive.frame.count()
+      assert(exhaustive.arm == "bq_rerank_serve")
+      assert(exhaustive.coarse.exists(_.path != "approx"),
         "exhaustive budget (candidates >= live rows) was auto-routed to approx")
       // below the live corpus the auto rule applies as before
-      db.searchBatch("t", q, 5, ef = Some(20)).count()
-      assert(graft.operators.CoarseMerge.lastPath == "approx")
+      val budgeted = db.dispatch("t", q, 5, ef = Some(20))
+      budgeted.frame.count()
+      assert(budgeted.coarse.exists(_.path == "approx"))
     } finally graft.operators.CoarseMerge.approxNqThreshold = saved
     // the counter survives reopen (persisted in the brief)
     db.close()
     val db2 = new VecDB(spark, root)
     try {
       graft.operators.CoarseMerge.approxNqThreshold = 4
-      db2.searchBatch("t", q, 5, ef = Some(60)).count()
-      assert(graft.operators.CoarseMerge.lastPath != "approx")
+      val reopened = db2.dispatch("t", q, 5, ef = Some(60))
+      reopened.frame.count()
+      assert(reopened.coarse.exists(_.path != "approx"))
     } finally graft.operators.CoarseMerge.approxNqThreshold = saved
     db2.close()
   }
@@ -398,11 +412,12 @@ class CatalogSpec extends SparkTestBase {
     db.clearIvfIndex("t") // cascades BQ
     db.buildIvfIndex("t", k = 4, defaultNProbes = 4)
     db.buildBqIndex("t")
-    val got = db.searchBatch("t", q, 5, ef = Some(200))
+    val served = db.dispatch("t", q, 5, ef = Some(200))
+    val got = served.frame
       .orderBy("distance", "id").collect()
       .map(r => (Option(r.getAs[Map[String, String]]("meta")).getOrElse(Map.empty),
         r.getAs[Double]("distance"))).toSeq
-    assert(db.lastServedArm == "bq_ivf")
+    assert(served.arm == "bq_ivf")
     assert(got == flat)
     db.close()
   }
@@ -423,8 +438,9 @@ class CatalogSpec extends SparkTestBase {
     try {
       VecDB.sidecarCacheMaxBytes = 1L // every insert evicts everything else
       (0 until 3).foreach { _ =>
-        assert(db.search("t", vecs(5), 5, ef = Some(200)) == flat)
-        assert(db.lastServedArm == "sq_ivf")
+        val (got, served) = dispatchOne(db, "t", vecs(5), 5, ef = Some(200))
+        assert(got == flat)
+        assert(served.arm == "sq_ivf")
       }
       // the oversized-entry rule keeps only the most recent insert
       assert(db.sidecarCacheEntries <= 1,
@@ -449,8 +465,8 @@ class CatalogSpec extends SparkTestBase {
     db.batchAdd("t", vecs, vecs.indices.map(i => Map("i" -> i.toString)))
     val flat = db.search("t", vecs(7), 5)
     db.buildIvfIndex("t", k = 4, defaultNProbes = 4)
-    val viaIvf = db.search("t", vecs(7), 5, ef = Some(4))
-    assert(db.lastServedArm == "ivf")
+    val (viaIvf, ivfServed) = dispatchOne(db, "t", vecs(7), 5, ef = Some(4))
+    assert(ivfServed.arm == "ivf")
     assert(viaIvf == flat) // np=4 of 4 clusters = exhaustive
     val entriesAfterFirst = db.sidecarCacheEntries
     assert(entriesAfterFirst >= 2, // data listing + centroid model
@@ -462,13 +478,14 @@ class CatalogSpec extends SparkTestBase {
     // probe wrong clusters; the bumped stamp must reload
     db.clearIvfIndex("t")
     db.buildIvfIndex("t", k = 2, defaultNProbes = 2)
-    assert(db.search("t", vecs(7), 5, ef = Some(2)) == flat)
-    assert(db.lastServedArm == "ivf")
+    val (rebuilt, rebuiltServed) = dispatchOne(db, "t", vecs(7), 5, ef = Some(2))
+    assert(rebuilt == flat)
+    assert(rebuiltServed.arm == "ivf")
     db.clearIvfIndex("t")
     // PQ arm: codebook + codes listing served from the cache
     db.buildPqTable("t", m = Some(4), nBits = Some(8))
-    val viaPq = db.search("t", vecs(7), 5, ef = Some(60))
-    assert(db.lastServedArm.startsWith("pq_"))
+    val (viaPq, pqServed) = dispatchOne(db, "t", vecs(7), 5, ef = Some(60))
+    assert(pqServed.arm.startsWith("pq_"))
     (0 until 2).foreach { _ =>
       assert(db.search("t", vecs(7), 5, ef = Some(60)) == viaPq)
     }
@@ -494,8 +511,9 @@ class CatalogSpec extends SparkTestBase {
     db.broadcastGateBytes = Some(1L) // "r" dispatch takes the routed arm
     // "v": ef = 4 = nProbes, exhaustive IVF; "r": full probes + ef = 200
     def find(t: String, v: Array[Float]): (Map[String, String], Double) = {
-      val hit = db.search(t, v, 1, ef = Some(if (t == "v") 4 else 200))
-      assert(db.lastServedArm == (if (t == "v") "ivf" else "hnsw"))
+      val (hit, served) = dispatchOne(db, t, v, 1,
+        ef = Some(if (t == "v") 4 else 200))
+      assert(served.arm == (if (t == "v") "ivf" else "hnsw"))
       hit.head
     }
     def appendAndFind(j: Int): Unit = Seq("v", "r").foreach { t =>
@@ -780,8 +798,9 @@ class CatalogSpec extends SparkTestBase {
     try {
       // (ef, pq) beyond the gate + routed ⇒ IvfHnsw.searchPinnedPq:
       // exhaustive ef + full probes + exact re-rank ⇒ equals Flat
-      assert(db.search("t", vecs(9), 5, ef = Some(200)) == flat)
-      assert(db.lastServedArm == "knn_pq_routed")
+      val (routed, served) = dispatchOne(db, "t", vecs(9), 5, ef = Some(200))
+      assert(routed == flat)
+      assert(served.arm == "knn_pq_routed")
     } finally {
       db.broadcastGateBytes = None
       sys.props.remove("graft.adc.walk.ratio")
@@ -802,15 +821,17 @@ class CatalogSpec extends SparkTestBase {
         residual = true)
     }
     val odd = Map("i" -> "^(1|3|5|7|9|11|13|15)$")
-    def patHits(d: VecDB, pat: Map[String, String]): Seq[(Long, Long)] = {
+    def patHits(d: VecDB, pat: Map[String, String]): (Seq[(Long, Long)], String) = {
       import spark.implicits._
       val q1 = Seq((0L, vecs(9))).toDF("query_id", "query_vec")
-      d.searchBatch("t", q1, 5, Some(200), pattern = pat)
+      val served = d.dispatch("t", q1, 5, Some(200), pattern = pat)
+      (served.frame
         .orderBy("distance", "id").select("id", "distance").collect()
-        .map(r => (r.getLong(0), math.round(r.getDouble(1) * 1e9))).toSeq
+        .map(r => (r.getLong(0), math.round(r.getDouble(1) * 1e9))).toSeq,
+        served.arm)
     }
     val flat = db.search("t", vecs(9), 5, ef = Some(200))
-    val flatOdd = patHits(db, odd)
+    val flatOdd = patHits(db, odd)._1
     db.buildIvfHnswIndex("t", kClusters = 3, defaultNProbes = 3,
       trainProportion = Some(0.5))
     db.buildPqTable("t", trainProportion = Some(0.5), m = Some(4),
@@ -819,22 +840,25 @@ class CatalogSpec extends SparkTestBase {
     try {
       // small table, broadcast-eligible — but residual codes are
       // per-cluster shifts, so the dispatch MUST pin to the routed walk
-      assert(db.search("t", vecs(9), 5, ef = Some(200)) == flat)
-      assert(db.lastServedArm == "knn_pq_routed",
-        s"residual table served by '${db.lastServedArm}'")
+      val (routed, served) = dispatchOne(db, "t", vecs(9), 5, ef = Some(200))
+      assert(routed == flat)
+      assert(served.arm == "knn_pq_routed",
+        s"residual table served by '${served.arm}'")
       // pattern search: flat ADC arms can't score residual codes — plain
       // HNSW walk fallback, exact distances, same results
-      assert(patHits(db, odd) == flatOdd)
-      assert(db.lastServedArm == "pq_residual_fallback_hnsw",
-        s"residual + pattern served by '${db.lastServedArm}'")
+      val (odds, oddArm) = patHits(db, odd)
+      assert(odds == flatOdd)
+      assert(oddArm == "pq_residual_fallback_hnsw",
+        s"residual + pattern served by '$oddArm'")
       // the flag must survive the brief round-trip: a reopened catalog
       // that lost it would serve the broadcast arm and mis-score silently
       db.close()
       val db2 = new VecDB(spark, root)
       try {
-        assert(db2.search("t", vecs(9), 5, ef = Some(200)) == flat)
-        assert(db2.lastServedArm == "knn_pq_routed",
-          s"reopened residual table served by '${db2.lastServedArm}'")
+        val (reopened, reServed) = dispatchOne(db2, "t", vecs(9), 5, ef = Some(200))
+        assert(reopened == flat)
+        assert(reServed.arm == "knn_pq_routed",
+          s"reopened residual table served by '${reServed.arm}'")
       } finally db2.close()
     } finally sys.props.remove("graft.adc.walk.ratio")
   }
@@ -864,15 +888,16 @@ class CatalogSpec extends SparkTestBase {
     db.batchAdd("t", vecs, vecs.indices.map(i => Map("i" -> i.toString)))
     db.buildHnswIndex("t")
     db.buildPqTable("t", trainProportion = Some(0.5), m = Some(4)) // 4·8 > 12
-    val gated = db.search("t", vecs(5), 3, ef = Some(100))
-    assert(db.lastServedArm == "knn_pq_gated_plain_hnsw",
-      s"dispatch picked '${db.lastServedArm}' for a gated (dim=12, m=4) quantizer")
+    val (gated, gatedServed) = dispatchOne(db, "t", vecs(5), 3, ef = Some(100))
+    assert(gatedServed.arm == "knn_pq_gated_plain_hnsw",
+      s"dispatch picked '${gatedServed.arm}' for a gated (dim=12, m=4) quantizer")
     assert(gated.head._1("i") == "5" && gated.head._2 < 1e-9)
     // narrow codes (ratio forced) keep the combined traversal, same result
     sys.props("graft.adc.walk.ratio") = "1"
     try {
-      val combined = db.search("t", vecs(5), 3, ef = Some(100))
-      assert(db.lastServedArm == "knn_pq_broadcast")
+      val (combined, combinedServed) =
+        dispatchOne(db, "t", vecs(5), 3, ef = Some(100))
+      assert(combinedServed.arm == "knn_pq_broadcast")
       assert(combined == gated)
     } finally sys.props.remove("graft.adc.walk.ratio")
   }
@@ -882,6 +907,19 @@ class CatalogSpec extends SparkTestBase {
     df.select(col("query_id").cast("long"), col("id").cast("long"),
       col("distance").cast("double"))
       .as[(Long, Long, Double)].collect().sorted.toSeq
+  }
+
+  /** A batch search's sorted rows with the arm that served them. */
+  private def armTriples(db: VecDB, queries: org.apache.spark.sql.DataFrame)
+      : (Seq[(Long, Long, Double)], String) = {
+    val served = db.dispatch("t", queries, k = 3, ef = Some(200))
+    (resTriples(served.frame), served.arm)
+  }
+
+  /** `body` with `-Dgraft.serve.max.queries` set to `n`. */
+  private def withServeMaxQueries[T](n: Long)(body: => T): T = {
+    sys.props("graft.serve.max.queries") = n.toString
+    try body finally sys.props.remove("graft.serve.max.queries")
   }
 
   test("oversized query batches serve through driver-unbounded shapes") {
@@ -895,39 +933,37 @@ class CatalogSpec extends SparkTestBase {
     // limit(6) exposes an exact Catalyst row count to the serve gate
     val queries = vecs.take(6).zipWithIndex
       .map { case (v, i) => (i.toLong, v) }.toDF("query_id", "query_vec").limit(6)
-    val expect = resTriples(db.searchBatch("t", queries, k = 3, ef = Some(200)))
-    assert(db.lastServedArm == "hnsw")
-    db.serveMaxQueriesOverride = Some(3)
-    try {
+    val (expect, servedArm) = armTriples(db, queries)
+    assert(servedArm == "hnsw")
+    withServeMaxQueries(3) {
       // past the gate no arm may collect the batch to the driver — but the
       // HNSW sidecar keeps serving, through the queries-distributed stream
       // walk (r10 verdict item 5: the index must not be ignored exactly
       // when the workload is largest)
-      val viaStream = resTriples(db.searchBatch("t", queries, k = 3, ef = Some(200)))
-      assert(db.lastServedArm == "hnsw_stream",
-        s"oversized batch served by '${db.lastServedArm}'")
+      val (viaStream, streamArm) = armTriples(db, queries)
+      assert(streamArm == "hnsw_stream",
+        s"oversized batch served by '$streamArm'")
       assert(viaStream == expect)
       db.buildPqTable("t", trainProportion = Some(0.5), m = Some(4))
       // (ef, pq) wide-code: same cost gate as the serving arms → plain walk
-      val viaGated = resTriples(db.searchBatch("t", queries, k = 3, ef = Some(200)))
-      assert(db.lastServedArm == "knn_pq_stream_gated_plain_hnsw")
+      val (viaGated, gatedArm) = armTriples(db, queries)
+      assert(gatedArm == "knn_pq_stream_gated_plain_hnsw")
       assert(viaGated == expect)
-    } finally db.serveMaxQueriesOverride = None
+    }
     // without an index the declarative shapes serve: exact KNN join, and
     // the flat ADC scan once a quantizer exists
     val db2 = freshDb()
     db2.createTableIfNotExists("t", 8, "l2sqr")
     db2.batchAdd("t", vecs, vecs.indices.map(i => Map("i" -> i.toString)))
-    db2.serveMaxQueriesOverride = Some(3)
-    try {
-      val viaExact = resTriples(db2.searchBatch("t", queries, k = 3, ef = Some(200)))
-      assert(db2.lastServedArm == "declarative_exact")
+    withServeMaxQueries(3) {
+      val (viaExact, exactArm) = armTriples(db2, queries)
+      assert(exactArm == "declarative_exact")
       assert(viaExact == expect)
       db2.buildPqTable("t", trainProportion = Some(0.5), m = Some(4))
-      val viaPq = resTriples(db2.searchBatch("t", queries, k = 3, ef = Some(200)))
-      assert(db2.lastServedArm == "declarative_pq")
+      val (viaPq, pqArm) = armTriples(db2, queries)
+      assert(pqArm == "declarative_pq")
       assert(viaPq == expect) // ef ≥ n ⇒ ADC + exact re-rank is exact
-    } finally db2.serveMaxQueriesOverride = None
+    }
   }
 
   test("oversized batch on a routed table serves via the indexed stream arm") {
@@ -945,23 +981,22 @@ class CatalogSpec extends SparkTestBase {
       .map { case (v, i) => (i.toLong, v) }.toDF("query_id", "query_vec").limit(7)
     val exact = resTriples(
       graft.operators.Knn.exactDeclarative(db.table("t"), queries, 3))
-    db.serveMaxQueriesOverride = Some(3)
-    try {
-      val viaStream = resTriples(db.searchBatch("t", queries, k = 3, ef = Some(200)))
-      assert(db.lastServedArm == "hnsw_stream",
-        s"oversized routed batch served by '${db.lastServedArm}'")
+    withServeMaxQueries(3) {
+      val (viaStream, streamArm) = armTriples(db, queries)
+      assert(streamArm == "hnsw_stream",
+        s"oversized routed batch served by '$streamArm'")
       assert(viaStream == exact)
       // narrow-code (ratio forced) (ef, pq): ADC-scored stream walk + exact
       // re-rank, still exact at exhaustive ef
       db.buildPqTable("t", trainProportion = Some(0.5), m = Some(4))
       sys.props("graft.adc.walk.ratio") = "1"
       try {
-        val viaPqStream = resTriples(db.searchBatch("t", queries, k = 3, ef = Some(200)))
-        assert(db.lastServedArm == "knn_pq_stream",
-          s"oversized routed (ef, pq) batch served by '${db.lastServedArm}'")
+        val (viaPqStream, pqArm) = armTriples(db, queries)
+        assert(pqArm == "knn_pq_stream",
+          s"oversized routed (ef, pq) batch served by '$pqArm'")
         assert(viaPqStream == exact)
       } finally sys.props.remove("graft.adc.walk.ratio")
-    } finally db.serveMaxQueriesOverride = None
+    }
   }
 
   test("serve gate probes borderline byte estimates instead of de-optimizing") {
@@ -986,11 +1021,11 @@ class CatalogSpec extends SparkTestBase {
     assert(stats.rowCount.isEmpty, "fixture must exercise the byte fallback")
     db.broadcastGateBytes = Some(stats.sizeInBytes.toLong / 2 + 1)
     try {
-      val out = resTriples(db.searchBatch("t", queries, k = 3, ef = Some(200)))
-      assert(db.lastGateDecision == "probe:4",
-        s"gate decided via '${db.lastGateDecision}'")
-      assert(db.lastServedArm == "hnsw",
-        s"estimate-inflated small batch served by '${db.lastServedArm}'")
+      val served = db.dispatch("t", queries, k = 3, ef = Some(200))
+      val out = resTriples(served.frame)
+      assert(served.gate == "probe:4", s"gate decided via '${served.gate}'")
+      assert(served.arm == "hnsw",
+        s"estimate-inflated small batch served by '${served.arm}'")
       assert(out.nonEmpty && out.map(_._1).distinct.size == 4)
     } finally db.broadcastGateBytes = None
   }
@@ -1215,5 +1250,46 @@ class CatalogSpec extends SparkTestBase {
     assert(db2.hasHnswIndex("persist"))
     assert(db2.getLen("persist") == 1)
     assert(db2.search("persist", Array(1f, 2f), 1).head._1("x") == "1")
+  }
+
+  test("concurrent searches on two tables each return their own arm and the serial answer") {
+    // every search returns the arm it took with its rows, so interleaved
+    // searches on one catalog cannot read each other's dispatch choice
+    val db = freshDb()
+    val rnd = new scala.util.Random(53)
+    val vecs = (0 until 200).map(_ => Array.fill(8)(rnd.nextFloat()))
+    Seq("h", "v").foreach { t =>
+      db.createTableIfNotExists(t, 8, "l2sqr")
+      db.batchAdd(t, vecs, vecs.indices.map(i => Map("i" -> i.toString)))
+    }
+    db.buildHnswIndex("h") // driver-resident at this size
+    db.buildIvfIndex("v", k = 4, defaultNProbes = 4)
+    val armOf = Map("h" -> "hnsw", "v" -> "ivf")
+    val queries = vecs.take(8)
+    def run(t: String, i: Int) =
+      dispatchOne(db, t, queries(i), 5, ef = Some(if (t == "h") 64 else 4))
+    val serial = (for (t <- armOf.keys; i <- queries.indices)
+      yield (t, i) -> run(t, i)._1).toMap
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
+    try {
+      val tasks = (0 until 4).map { w =>
+        pool.submit(new java.util.concurrent.Callable[Seq[(String, Int,
+            Seq[(Map[String, String], Double)], String)]] {
+          def call() = (0 until 8).map { r =>
+            val t = if ((w + r) % 2 == 0) "h" else "v"
+            val i = (3 * w + r) % queries.length
+            val (rows, served) = run(t, i)
+            (t, i, rows, served.arm)
+          }
+        })
+      }
+      val results = tasks.flatMap(_.get(5, java.util.concurrent.TimeUnit.MINUTES))
+      assert(results.length == 32 && results.map(_._1).toSet == armOf.keySet)
+      results.foreach { case (t, i, rows, arm) =>
+        assert(arm == armOf(t), s"a search of '$t' returned the arm '$arm'")
+        assert(rows == serial((t, i)), s"table '$t' query $i")
+      }
+    } finally pool.shutdown()
+    db.close()
   }
 }

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.operators.{Bq, CoarseMerge, Ivf, Sq}
 
@@ -18,6 +19,49 @@ class CoarseChunkSpec extends SparkTestBase {
   private def rows(d: org.apache.spark.sql.DataFrame) =
     d.select(col("query_id"), col("id"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+
+  // The Sq / Bq entry points below, each run through the shared driver
+  // call that returns its choice with the frame.
+
+  /** [[Bq.hammingBroadcastPackedArr]]. */
+  private def hammingArr(packed: DataFrame, qsArr: Array[(Long, Array[Long])],
+      k: Int): (DataFrame, CoarseMerge.Choice) = {
+    val (hits, choice) = CoarseMerge.coarse(Bq.BqCodec(None), packed, qsArr, k)
+    (hits.select(col("query_id"), col("id"),
+      col("distance").cast("long").as("hamming")), choice)
+  }
+
+  /** [[Bq.hammingBroadcast]] of `qs` over `base`. */
+  private def hamming(k: Int): (DataFrame, CoarseMerge.Choice) = {
+    val codec = Bq.BqCodec(None)
+    hammingArr(Bq.encode(base.select(col("id").cast("long").as("id"), col("vec")))
+        .select(col("id"), col("bq")),
+      CoarseMerge.collectQueries(qs).map { case (id, v) => (id, codec.prepare(v)) },
+      k)
+  }
+
+  /** [[Sq.serveBroadcastPacked]] of `qs`. */
+  private def sqServe(packed: DataFrame, model: Sq.SqModel, k: Int)
+      : (DataFrame, CoarseMerge.Choice) =
+    CoarseMerge.coarse(Sq.SqCodec(model, "l2sqr"), packed,
+      CoarseMerge.collectQueries(qs), k)
+
+  /** [[Bq.searchRerank]] / [[Sq.searchRerank]] of `qs` over `base`. */
+  private def searchRerank(codec: String, k: Int, candidates: Int)
+      : (DataFrame, CoarseMerge.Choice) = {
+    val ids = base.select(col("id").cast("long").as("id"), col("vec"))
+    if (codec == "bq") {
+      val model = Bq.train(ids)
+      CoarseMerge.searchRerank(Bq.BqCodec(Some(model)),
+        Bq.encodeCentered(ids, model).select(col("id"), col("bq")), base, qs,
+        k, candidates, "l2sqr", "vec", "exact")
+    } else {
+      val model = Sq.train(base)
+      CoarseMerge.searchRerank(Sq.SqCodec(model, "l2sqr"),
+        Sq.encode(ids, model).select(col("id"), col("sq")), base, qs, k,
+        candidates, "l2sqr", "vec", "exact")
+    }
+  }
 
   private def withTaskBudget[T](bytes: Long)(body: => T): T = {
     val saved = CoarseMerge.taskMaxBytes
@@ -45,41 +89,39 @@ class CoarseChunkSpec extends SparkTestBase {
 
   test("flat BQ hamming: multi-chunk == single-chunk (both merge and agg paths)") {
     val k = 300 // heap-layout budget, merge-eligible at nq=6
-    val one = Bq.hammingBroadcast(base, qs, k = k)
-      .orderBy("query_id", "hamming", "id").collect().toSeq
-    assert(CoarseMerge.lastChunks == 1)
+    val (oneDf, oneChoice) = hamming(k)
+    val one = oneDf.orderBy("query_id", "hamming", "id").collect().toSeq
+    assert(oneChoice.chunks == 1)
     val many = withTaskBudget(
         2L * k * graft.index.TopBuffer.slotBytes(k)) { // 2 q/chunk -> 3 chunks
-      val r = Bq.hammingBroadcast(base, qs, k = k)
-        .orderBy("query_id", "hamming", "id").collect().toSeq
-      assert(CoarseMerge.lastChunks == 3, s"chunks=${CoarseMerge.lastChunks}")
-      r
+      val (d, choice) = hamming(k)
+      assert(choice.chunks == 3, s"chunks=${choice.chunks}")
+      d.orderBy("query_id", "hamming", "id").collect().toSeq
     }
     assert(many == one)
     // agg path too (merge gate shut): chunking is orthogonal to the merge gate
     val savedGate = CoarseMerge.maxBytes
-    val aggMany = try {
+    val (aggMany, aggChoice) = try {
       CoarseMerge.maxBytes = 1L
       withTaskBudget(2L * k * graft.index.TopBuffer.slotBytes(k)) {
-        Bq.hammingBroadcast(base, qs, k = k)
-          .orderBy("query_id", "hamming", "id").collect().toSeq
+        val (d, choice) = hamming(k)
+        (d.orderBy("query_id", "hamming", "id").collect().toSeq, choice)
       }
     } finally CoarseMerge.maxBytes = savedGate
-    assert(CoarseMerge.lastPath == "agg")
+    assert(aggChoice.path == "agg")
     assert(aggMany == one)
   }
 
   test("flat SQ coarse: multi-chunk == single-chunk") {
     val model = Sq.train(base)
     val packed = Sq.encode(base, model).select("id", "sq").cache()
-    val one = Sq.serveBroadcastPacked(packed, qs, model, k = 7)
-      .orderBy("query_id", "distance", "id").collect().toSeq
-    assert(CoarseMerge.lastChunks == 1)
+    val (oneDf, oneChoice) = sqServe(packed, model, k = 7)
+    val one = oneDf.orderBy("query_id", "distance", "id").collect().toSeq
+    assert(oneChoice.chunks == 1)
     val many = withTaskBudget(7L * 16L) { // 1 query per chunk -> 6 chunks
-      val r = Sq.serveBroadcastPacked(packed, qs, model, k = 7)
-        .orderBy("query_id", "distance", "id").collect().toSeq
-      assert(CoarseMerge.lastChunks == 6, s"chunks=${CoarseMerge.lastChunks}")
-      r
+      val (d, choice) = sqServe(packed, model, k = 7)
+      assert(choice.chunks == 6, s"chunks=${choice.chunks}")
+      d.orderBy("query_id", "distance", "id").collect().toSeq
     }
     assert(many == one)
     packed.unpersist()
@@ -87,16 +129,15 @@ class CoarseChunkSpec extends SparkTestBase {
 
   test("distributed merge (big-batch regime past the driver cap) == merge-path rows") {
     val k = 300 // heap layout; nq=6 × k=300 = 1800 winners
-    val want = Bq.hammingBroadcast(base, qs, k = k)
-      .orderBy("query_id", "hamming", "id").collect().toSeq
-    assert(CoarseMerge.lastPath == "merge") // default gates: driver merge
+    val (wantDf, wantChoice) = hamming(k)
+    val want = wantDf.orderBy("query_id", "hamming", "id").collect().toSeq
+    assert(wantChoice.path == "merge") // default gates: driver merge
     val savedRows = CoarseMerge.maxRows
     val dist = try {
       CoarseMerge.maxRows = 1L // below nq×k: driver-ineligible, dist-eligible
-      val r = Bq.hammingBroadcast(base, qs, k = k)
-        .orderBy("query_id", "hamming", "id").collect().toSeq
-      assert(CoarseMerge.lastPath == "dist", s"path=${CoarseMerge.lastPath}")
-      r
+      val (d, choice) = hamming(k)
+      assert(choice.path == "dist", s"path=${choice.path}")
+      d.orderBy("query_id", "hamming", "id").collect().toSeq
     } finally CoarseMerge.maxRows = savedRows
     assert(dist == want)
     // SQ serving kernel through the dist path too (TopBuffer arrays cross a
@@ -107,10 +148,9 @@ class CoarseChunkSpec extends SparkTestBase {
       .orderBy("query_id", "distance", "id").collect().toSeq
     val sqDist = try {
       CoarseMerge.maxRows = 1L
-      val r = Sq.serveBroadcastPacked(packed, qs, model, k = 300)
-        .orderBy("query_id", "distance", "id").collect().toSeq
-      assert(CoarseMerge.lastPath == "dist")
-      r
+      val (d, choice) = sqServe(packed, model, k = 300)
+      assert(choice.path == "dist")
+      d.orderBy("query_id", "distance", "id").collect().toSeq
     } finally CoarseMerge.maxRows = savedRows
     assert(sqDist == sqWant)
     packed.unpersist()
@@ -125,17 +165,19 @@ class CoarseChunkSpec extends SparkTestBase {
     def full(d: org.apache.spark.sql.DataFrame) =
       d.select(col("query_id"), col("id"), col("distance"))
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val bqOne = full(Bq.searchRerank(base, qs, k = 5, candidates = cand))
-    assert(CoarseMerge.lastChunks == 1)
-    val sqOne = full(Sq.searchRerank(base, qs, k = 5, candidates = cand))
-    assert(CoarseMerge.lastChunks == 1)
+    val (bqOneDf, bqOneChoice) = searchRerank("bq", k = 5, candidates = cand)
+    val bqOne = full(bqOneDf)
+    assert(bqOneChoice.chunks == 1)
+    val (sqOneDf, sqOneChoice) = searchRerank("sq", k = 5, candidates = cand)
+    val sqOne = full(sqOneDf)
+    assert(sqOneChoice.chunks == 1)
     withTaskBudget(2L * cand * graft.index.TopBuffer.slotBytes(cand)) {
-      val bqMany = full(Bq.searchRerank(base, qs, k = 5, candidates = cand))
-      assert(CoarseMerge.lastChunks == 3, s"chunks=${CoarseMerge.lastChunks}")
-      assert(bqMany == bqOne)
-      val sqMany = full(Sq.searchRerank(base, qs, k = 5, candidates = cand))
-      assert(CoarseMerge.lastChunks == 3)
-      assert(sqMany == sqOne)
+      val (bqManyDf, bqManyChoice) = searchRerank("bq", k = 5, candidates = cand)
+      assert(bqManyChoice.chunks == 3, s"chunks=${bqManyChoice.chunks}")
+      assert(full(bqManyDf) == bqOne)
+      val (sqManyDf, sqManyChoice) = searchRerank("sq", k = 5, candidates = cand)
+      assert(sqManyChoice.chunks == 3)
+      assert(full(sqManyDf) == sqOne)
     }
   }
 
@@ -148,8 +190,8 @@ class CoarseChunkSpec extends SparkTestBase {
       .map { case (qid, v) => (qid, graft.functions.BqKernel.pack(v)) }
     val before = CoarseMerge.mergeExecutions.get()
     // construction (pre-collected pre-packed batch: owes zero jobs)
-    val df = Bq.hammingBroadcastPackedArr(packed, qsArr, k)
-    assert(CoarseMerge.lastPath == "merge", s"path=${CoarseMerge.lastPath}")
+    val (df, choice) = hammingArr(packed, qsArr, k)
+    assert(choice.path == "merge", s"path=${choice.path}")
     assert(CoarseMerge.mergeExecutions.get() == before,
       "treeReduce ran at DataFrame construction")
     // planning/explain must not execute either — the r17 wart was exactly
@@ -167,12 +209,12 @@ class CoarseChunkSpec extends SparkTestBase {
       "merge re-ran on a second action")
     // rows identical to the aggregate path (merge gate shut)
     val savedGate = CoarseMerge.maxBytes
-    val agg = try {
+    val (agg, aggChoice) = try {
       CoarseMerge.maxBytes = 1L
-      Bq.hammingBroadcastPackedArr(packed, qsArr, k)
-        .orderBy("query_id", "hamming", "id").collect().toSeq
+      val (d, c) = hammingArr(packed, qsArr, k)
+      (d.orderBy("query_id", "hamming", "id").collect().toSeq, c)
     } finally CoarseMerge.maxBytes = savedGate
-    assert(CoarseMerge.lastPath == "agg")
+    assert(aggChoice.path == "agg")
     assert(got == agg)
     packed.unpersist()
   }
@@ -219,25 +261,28 @@ class CoarseChunkSpec extends SparkTestBase {
     val floatDir = s"$dir/float"
     Ivf.writePartitioned(assigned, ivfModel, floatDir)
     val floats = spark.read.parquet(s"$floatDir/data")
-    def sqSearch() = Sq.searchIvf(spark.read.parquet(s"$dir/sq/data"),
-      floats, ivfModel, sqModel, qs, k = 5, candidates = 24, nProbes = Some(3),
-      baseClusterCol = Some("cluster"))
-    def bqSearch() = Bq.searchIvf(spark.read.parquet(s"$dir/bq/data"),
-      floats, ivfModel, Some(bqModel), qs, k = 5, candidates = 24, nProbes = Some(3),
-      baseClusterCol = Some("cluster"))
-    val sqOne = rows(sqSearch()); assert(CoarseMerge.lastChunks == 1)
-    val bqOne = rows(bqSearch()); assert(CoarseMerge.lastChunks == 1)
+    // Sq.searchIvf / Bq.searchIvf through the shared driver
+    def search(codec: CoarseMerge.Codec[_, _], codes: String) =
+      CoarseMerge.searchIvf(codec, spark.read.parquet(s"$dir/$codes/data"),
+        floats, ivfModel, qs, 5, 24, Some(3), "l2sqr", "vec", Some("cluster"),
+        None, None, "exact", None)
+    def sqSearch() = search(Sq.SqCodec(sqModel, "l2sqr"), "sq")
+    def bqSearch() = search(Bq.BqCodec(Some(bqModel)), "bq")
+    val (sqOneDf, sqOneChoice) = sqSearch()
+    val sqOne = rows(sqOneDf); assert(sqOneChoice.chunks == 1)
+    val (bqOneDf, bqOneChoice) = bqSearch()
+    val bqOne = rows(bqOneDf); assert(bqOneChoice.chunks == 1)
     withTaskBudget(2L * 24L * 16L) { // 2 queries per chunk -> 3 chunks
-      val sqManyDf = sqSearch()
-      assert(CoarseMerge.lastChunks == 3, s"chunks=${CoarseMerge.lastChunks}")
+      val (sqManyDf, sqManyChoice) = sqSearch()
+      assert(sqManyChoice.chunks == 3, s"chunks=${sqManyChoice.chunks}")
       // per-chunk probe plans still reach the parquet scans as partition
       // filters (chunking must tighten pruning, not drop it)
       val plan = sqManyDf.queryExecution.executedPlan.toString
       assert("PartitionFilters: \\[cluster".r.findAllMatchIn(plan).size >= 2,
         s"expected partition filters on chunked scans:\n$plan")
       assert(rows(sqManyDf) == sqOne)
-      val bqManyDf = bqSearch()
-      assert(CoarseMerge.lastChunks == 3)
+      val (bqManyDf, bqManyChoice) = bqSearch()
+      assert(bqManyChoice.chunks == 3)
       assert(rows(bqManyDf) == bqOne)
     }
   }

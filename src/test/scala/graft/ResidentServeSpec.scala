@@ -53,8 +53,11 @@ class ResidentServeSpec extends SparkTestBase {
       for (nq <- Seq(1, 10, 100)) {
         db.searchBatch("t", queryFrame(vecs(nq, 100 + nq)), K, Some(64)).collect() // warm
         val qs = queryFrame(vecs(nq, 200 + nq))
-        val (got, jobs) = jobsDuring(db.searchBatch("t", qs, K, Some(64)).collect())
-        assert(db.lastServedArm == "hnsw", s"served by '${db.lastServedArm}'")
+        val ((got, arm), jobs) = jobsDuring {
+          val served = db.dispatch("t", qs, K, Some(64))
+          (served.frame.collect(), served.arm)
+        }
+        assert(arm == "hnsw", s"served by '$arm'")
         assert(jobs == 0, s"a warm $nq-query search ran $jobs Spark jobs")
         assert(got.length == nq * K)
         got.foreach(r => assert(
@@ -74,8 +77,9 @@ class ResidentServeSpec extends SparkTestBase {
         // odd k: the cut falls inside a tie pair
         val k = 7
         val qs = queryFrame(base.take(6) ++ vecs(6, 4))
-        val got = rows(db.searchBatch("t", qs, k, Some(2 * dup.size)))
-        assert(db.lastServedArm == "hnsw", s"served by '${db.lastServedArm}'")
+        val served = db.dispatch("t", qs, k, Some(2 * dup.size))
+        val got = rows(served.frame)
+        assert(served.arm == "hnsw", s"served by '${served.arm}'")
         val table = db.table("t").select("id", "vec")
         val want = rows(Knn.exact(table, qs, k, dist))
         assert(got.size == 12 * k)

@@ -2,7 +2,8 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.functions.SqKernel
-import graft.operators.{Knn, Sq}
+import org.apache.spark.sql.DataFrame
+import graft.operators.{CoarseMerge, Knn, Sq}
 
 /** SQ8 scalar-quantization semantics: affine-map exactness, the per-dim
   * reconstruction-error bound (≤ scale/2 for in-range values — the theorem
@@ -12,6 +13,15 @@ import graft.operators.{Knn, Sq}
   * SQ8 is the codebook-free 8-bit point of the same spectrum. */
 class SqSpec extends SparkTestBase {
   import spark.implicits._
+
+  /** [[Sq.serveBroadcastPacked]]'s rows, sorted, with the coarse
+    * selection path the shared driver took. */
+  private def serveWithPath(packed: DataFrame, q: DataFrame, m: Sq.SqModel,
+      k: Int, dist: String): (Seq[org.apache.spark.sql.Row], String) = {
+    val (hits, choice) = CoarseMerge.coarse(Sq.SqCodec(m, dist), packed,
+      CoarseMerge.collectQueries(q), k)
+    (hits.orderBy("query_id", "distance", "id").collect().toSeq, choice.path)
+  }
 
   private def randVecs(n: Int, d: Int, seed: Int): Seq[(Long, Array[Float])] = {
     val rnd = new scala.util.Random(seed)
@@ -114,17 +124,15 @@ class SqSpec extends SparkTestBase {
       val a = Sq.coarseTopK(packed, q, m, k = 300, dist = dist)
         .orderBy("query_id", "distance", "id").collect().toSeq
       // default gate: the tree-merged driver path (no partial-row shuffle)
-      val b = Sq.serveBroadcastPacked(packed, q, m, k = 300, dist = dist)
-        .orderBy("query_id", "distance", "id").collect().toSeq
-      assert(graft.operators.CoarseMerge.lastPath == "merge")
+      val (b, bPath) = serveWithPath(packed, q, m, k = 300, dist = dist)
+      assert(bPath == "merge")
       assert(a == b, s"merge path disagrees for $dist at k=300")
       // forced-shut gate: the aggregate path over the same heap buffers
-      val c = try {
+      val (c, cPath) = try {
         graft.operators.CoarseMerge.maxBytes = 1L
-        Sq.serveBroadcastPacked(packed, q, m, k = 300, dist = dist)
-          .orderBy("query_id", "distance", "id").collect().toSeq
+        serveWithPath(packed, q, m, k = 300, dist = dist)
       } finally graft.operators.CoarseMerge.maxBytes = savedGate
-      assert(graft.operators.CoarseMerge.lastPath == "agg")
+      assert(cPath == "agg")
       assert(a == c, s"agg path disagrees for $dist at k=300")
     }
     packed.unpersist(); df.unpersist()
@@ -135,18 +143,16 @@ class SqSpec extends SparkTestBase {
     val df = data.toDF("id", "vec").repartition(4).cache()
     val q = df.filter(col("id") < 5)
       .select(col("id").as("query_id"), col("vec").as("query_vec"))
-    def run() = Sq.searchRerank(df, q, k = 5, candidates = 300)
-      .orderBy("query_id", "distance", "id").collect().toSeq
     val saved = graft.operators.Rerank.broadcastMaxBytes
     val viaBroadcast = try {
-      val r = run()
-      assert(graft.operators.Rerank.lastJoin == "broadcast")
-      r
+      val d = Sq.searchRerank(df, q, k = 5, candidates = 300)
+      assert(rerankJoin(d) == "broadcast")
+      d.orderBy("query_id", "distance", "id").collect().toSeq
     } finally graft.operators.Rerank.broadcastMaxBytes = saved
     val viaShuffle = try {
       graft.operators.Rerank.broadcastMaxBytes = 1L
       val d = Sq.searchRerank(df, q, k = 5, candidates = 300)
-      assert(graft.operators.Rerank.lastJoin == "shuffle")
+      assert(rerankJoin(d) == "shuffle")
       assert(d.queryExecution.sparkPlan.toString.contains("ShuffledHashJoin"))
       d.orderBy("query_id", "distance", "id").collect().toSeq
     } finally graft.operators.Rerank.broadcastMaxBytes = saved
@@ -159,9 +165,13 @@ class SqSpec extends SparkTestBase {
     val df = data.toDF("id", "vec").repartition(4, col("id")).cache()
     val q = df.filter(col("id") < 5)
       .select(col("id").as("query_id"), col("vec").as("query_vec"))
-    val approx = Sq.searchRerank(df, q, k = 5, candidates = 40,
-      coarseSelect = "approx")
-    assert(graft.operators.CoarseMerge.lastPath == "approx")
+    // Sq.searchRerank's steps through the shared driver, which returns
+    // the choice it made with the frame
+    val m = Sq.train(df)
+    val (approx, choice) = CoarseMerge.searchRerank(Sq.SqCodec(m, "l2sqr"),
+      Sq.encode(df, m).select(col("id"), col("sq")), df, q, 5, 40, "l2sqr",
+      "vec", "approx")
+    assert(choice.path == "approx")
     val a = approx.orderBy("query_id", "distance", "id").collect()
       .map(r => (r.getAs[Long]("query_id"), r.getAs[Double]("distance")))
     val e = Knn.exact(df, q, k = 5, dist = "l2sqr")
@@ -267,9 +277,10 @@ class SqSpec extends SparkTestBase {
       .repartition(8, col("id")).cache()
     // forced approx inside the probed scan (np = kc ⇒ pool membership is
     // the only approximation)
-    val approx = Sq.searchIvf(packed, df, ivfModel, sqModel, q, k = k,
-      candidates = 100, nProbes = Some(8), coarseSelect = "approx")
-    assert(graft.operators.CoarseMerge.lastPath == "approx")
+    val (approx, choice) = CoarseMerge.searchIvf(Sq.SqCodec(sqModel, "l2sqr"),
+      packed, df, ivfModel, q, k, 100, Some(8), "l2sqr", "vec", None, None,
+      None, "approx", None)
+    assert(choice.path == "approx")
     val approxRows = approx.collect()
       .map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("id"),
         r.getAs[Double]("distance")))

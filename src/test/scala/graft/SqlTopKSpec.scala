@@ -2,9 +2,9 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{In, InSet}
-import org.apache.spark.sql.catalyst.plans.logical.{Filter, LocalRelation}
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LocalRelation, Window}
 import org.apache.spark.sql.functions._
 import graft.catalog.VecDB
 import graft.functions.VectorFunctions
@@ -20,6 +20,7 @@ import graft.plans.GraftSqlTopK
   * VecDB tables, and declines out-of-scope shapes (WHERE, DESC, k > maxK)
   * and views older than their table. */
 class SqlTopKSpec extends SparkTestBase {
+  import SqlTopKSpec.RecordingVecDB
 
   private def litVec(v: scala.collection.Seq[Float]): String =
     v.map(f => f.toString + "F").mkString("array(", ", ", ")")
@@ -183,6 +184,19 @@ class SqlTopKSpec extends SparkTestBase {
       case _ => false
     })
 
+  /** the batch shape: the window stays, and the batch splice of at least
+    * `n` ids sits beneath it */
+  private def batchShaped(df: DataFrame, n: Int): Boolean =
+    df.queryExecution.optimizedPlan.collect { case w: Window => w }
+      .exists(_.exists {
+        case Filter(cond, _) => cond.exists {
+          case In(_, list) => list.length >= n
+          case s: InSet => s.hset.size >= n
+          case _ => false
+        }
+        case _ => false
+      })
+
   test("batch rewrite: rank-over-join matches the unrewritten window query") {
     VectorFunctions.register(spark)
     val df = Tables.vectors(spark, sf001)
@@ -207,7 +221,8 @@ class SqlTopKSpec extends SparkTestBase {
       val rewritten = spark.sql(sqlText).orderBy("qid", "d", "id")
       assert(firedWithAtLeast(rewritten, 7), "batch rewrite did not fire:\n" +
         rewritten.queryExecution.optimizedPlan.treeString)
-      assert(GraftSqlTopK.lastFired.exists(_._1 == "batch"))
+      assert(batchShaped(rewritten, 7), "not the batch shape:\n" +
+        rewritten.queryExecution.optimizedPlan.treeString)
       assert(rewritten.collect().toSeq == baseline.toSeq)
     } finally GraftSqlTopK.unregisterAll()
   }
@@ -259,7 +274,7 @@ class SqlTopKSpec extends SparkTestBase {
     VectorFunctions.register(spark)
     val root = java.nio.file.Files.createTempDirectory(
       java.nio.file.Paths.get("target"), "vecdb_sqlbt").toString
-    val db = new VecDB(spark, root)
+    val db = new RecordingVecDB(spark, root)
     db.createTableIfNotExists("t", 8, "l2sqr")
     val rnd = new scala.util.Random(31)
     val vecs = (0 until 200).map(_ => Array.fill(8)(rnd.nextFloat() * 10f))
@@ -288,9 +303,9 @@ class SqlTopKSpec extends SparkTestBase {
       assert(firedWithAtLeast(rewritten, 6),
         "catalog batch rewrite did not fire:\n" +
           rewritten.queryExecution.optimizedPlan.treeString)
-      assert(GraftSqlTopK.lastFired.contains(("batch", Some(200))))
-      assert(db.lastServedArm == "hnsw",
-        s"expected the HNSW arm, served '${db.lastServedArm}'")
+      val call = db.lastCall
+      assert(call.shape == "batch" && call.ef.contains(200), s"ran $call")
+      assert(call.arm == "hnsw", s"expected the HNSW arm, served '${call.arm}'")
       assert(rewritten.collect().toSeq == baseline.toSeq)
     } finally {
       GraftSqlTopK.unregisterAll()
@@ -333,7 +348,7 @@ class SqlTopKSpec extends SparkTestBase {
     VectorFunctions.register(spark)
     val root = java.nio.file.Files.createTempDirectory(
       java.nio.file.Paths.get("target"), "vecdb_sqlef").toString
-    val db = new VecDB(spark, root)
+    val db = new RecordingVecDB(spark, root)
     db.createTableIfNotExists("t", 8, "l2sqr")
     val rnd = new scala.util.Random(23)
     val vecs = (0 until 250).map(_ => Array.fill(8)(rnd.nextFloat() * 10f))
@@ -350,11 +365,11 @@ class SqlTopKSpec extends SparkTestBase {
       // back to the session conf — so concurrent SQL clients at different
       // recall points no longer fight over one global
       spark.sql(sqlText(s"graft_topk_ef($dist, 250)")).collect()
-      assert(GraftSqlTopK.lastFired.contains(("single", Some(250))))
+      assert(db.lastCall.shape == "single" && db.lastCall.ef.contains(250))
       spark.sql(sqlText(s"graft_topk_ef($dist, 80)")).collect()
-      assert(GraftSqlTopK.lastFired.contains(("single", Some(80))))
+      assert(db.lastCall.shape == "single" && db.lastCall.ef.contains(80))
       spark.sql(sqlText(dist)).collect()
-      assert(GraftSqlTopK.lastFired.contains(("single", None)))
+      assert(db.lastCall.shape == "single" && db.lastCall.ef.contains(64))
       // hinted at full table size ⇒ exact: matches the unregistered sort
       GraftSqlTopK.unregisterAll()
       val exact = spark.sql(sqlText(dist)).collect()
@@ -374,7 +389,7 @@ class SqlTopKSpec extends SparkTestBase {
     VectorFunctions.register(spark)
     val root = java.nio.file.Files.createTempDirectory(
       java.nio.file.Paths.get("target"), "vecdb_sql").toString
-    val db = new VecDB(spark, root)
+    val db = new RecordingVecDB(spark, root)
     db.createTableIfNotExists("t", 8, "l2sqr")
     val rnd = new scala.util.Random(17)
     val vecs = (0 until 300).map(_ => Array.fill(8)(rnd.nextFloat() * 10f))
@@ -393,8 +408,8 @@ class SqlTopKSpec extends SparkTestBase {
       assert(servedLocally(rewritten, 5), "resident table not answered locally:\n" +
         rewritten.queryExecution.optimizedPlan.treeString)
       assert(rewritten.collect().toSeq == exact.toSeq)
-      assert(db.lastServedArm == "hnsw",
-        s"expected the HNSW arm, served '${db.lastServedArm}'")
+      assert(db.lastCall.arm == "hnsw",
+        s"expected the HNSW arm, served '${db.lastCall.arm}'")
     } finally {
       spark.conf.unset(GraftSqlTopK.EfConf)
       GraftSqlTopK.unregisterAll()
@@ -406,9 +421,9 @@ class SqlTopKSpec extends SparkTestBase {
 
   /** A catalog table "t" over `vs` (meta i = row index) with its HNSW
     * index built under the default broadcast gate. */
-  private def residentTable(dist: String, vs: Seq[Array[Float]]): VecDB = {
+  private def residentTable(dist: String, vs: Seq[Array[Float]]): RecordingVecDB = {
     val root = Files.createTempDirectory(Paths.get("target"), "vecdb_sqllocal").toString
-    val db = new VecDB(spark, root)
+    val db = new RecordingVecDB(spark, root)
     db.createTableIfNotExists("t", vs.head.length, dist)
     db.batchAdd("t", vs, vs.indices.map(i => Map("i" -> i.toString)))
     db.buildHnswIndex("t")
@@ -432,7 +447,7 @@ class SqlTopKSpec extends SparkTestBase {
       val (got, jobs) = jobsDuring(
         spark.sql(sqlText(Array.fill(16)(rnd.nextFloat() - 0.5f))).collect())
       assert(got.length == 10)
-      assert(db.lastServedArm == "hnsw", s"served by '${db.lastServedArm}'")
+      assert(db.lastCall.arm == "hnsw", s"served by '${db.lastCall.arm}'")
       assert(jobs == 0, s"a warm SQL top-k ran $jobs Spark jobs")
     } finally {
       GraftSqlTopK.unregisterAll()
@@ -570,6 +585,35 @@ class SqlTopKSpec extends SparkTestBase {
     } finally {
       GraftSqlTopK.unregisterAll()
       db.close()
+    }
+  }
+}
+
+object SqlTopKSpec {
+
+  /** One search the SQL rewrite ran: its shape ("single" | "batch"), the
+    * ef that reached the catalog and the arm that served it. */
+  final case class Call(shape: String, ef: Option[Int], arm: String)
+
+  /** A catalog that records every search the SQL rewrite runs through it. */
+  class RecordingVecDB(spark: SparkSession, root: String)
+      extends VecDB(spark, root) {
+    private val calls = scala.collection.mutable.ArrayBuffer.empty[Call]
+    def lastCall: Call = calls.synchronized(calls.last)
+
+    override private[graft] def searchTopK(key: String, query: Array[Float],
+        k: Int, ef: Option[Int]): VecDB.Winners = {
+      val won = super.searchTopK(key, query, k, ef)
+      calls.synchronized(calls += Call("single", ef, won.arm))
+      won
+    }
+
+    override def searchBatch(key: String, queries: DataFrame, k: Int,
+        ef: Option[Int], upperBound: Option[Double],
+        pattern: Map[String, String]): DataFrame = {
+      val served = dispatch(key, queries, k, ef, upperBound, pattern)
+      calls.synchronized(calls += Call("batch", ef, served.arm))
+      served.frame
     }
   }
 }

@@ -96,25 +96,27 @@ class TwoStageDiffSpec extends SparkTestBase {
       else Bq.encodeCentered(a, bqModel).select("id", "bq", "cluster")
     val dir = java.nio.file.Files.createTempDirectory(
       java.nio.file.Paths.get("target"), "twostage").toString
+    // the codec the Sq / Bq search entry points hand the shared driver
+    def codec: CoarseMerge.Codec[_, _] =
+      if (c.codec == "sq") Sq.SqCodec(sqModel, c.dist)
+      else Bq.BqCodec(Some(bqModel))
     def routed(codesDf: DataFrame, base: DataFrame,
         baseClusterCol: Option[String] = None,
         flatCodes: Option[DataFrame] = None,
         flatBase: Option[DataFrame] = None,
         flatVecCol: Option[String] = None) =
-      if (c.codec == "sq")
-        Sq.searchIvf(codesDf, base, ivfModel, sqModel, q, c.k, candidates,
-          Some(kc), c.dist, baseClusterCol = baseClusterCol,
-          flatCodes = flatCodes, flatBase = flatBase, flatVecCol = flatVecCol)
-      else
-        Bq.searchIvf(codesDf, base, ivfModel, Some(bqModel), q, c.k,
-          candidates, Some(kc), c.dist, baseClusterCol = baseClusterCol,
-          flatCodes = flatCodes, flatBase = flatBase, flatVecCol = flatVecCol)
+      CoarseMerge.searchIvf(codec, codesDf, base, ivfModel, q, c.k,
+        candidates, Some(kc), c.dist, "vec", baseClusterCol, flatCodes,
+        flatBase, "exact", flatVecCol)
     val want = rows(Knn.exact(df, q, c.k, c.dist))
     val got = withGates(c, candidates) {
-      val hits = c.layout match {
+      val (hits, choice) = c.layout match {
         case "flat" =>
-          if (c.codec == "sq") Sq.searchRerank(df, q, c.k, candidates, c.dist)
-          else Bq.searchRerank(df, q, c.k, candidates, c.dist)
+          val packed =
+            if (c.codec == "sq") Sq.encode(df, sqModel).select("id", "sq")
+            else Bq.encodeCentered(df, bqModel).select("id", "bq")
+          CoarseMerge.searchRerank(codec, packed, df, q, c.k, candidates,
+            c.dist, "vec", "exact")
         case "mem" => routed(codes(assigned), df)
         case _ =>
           val packed = codes(assigned)
@@ -129,11 +131,11 @@ class TwoStageDiffSpec extends SparkTestBase {
             flatBase = Some(df), flatVecCol = Some("vec"))
       }
       val r = rows(hits)
-      assert(CoarseMerge.lastPath == c.path, s"path ${CoarseMerge.lastPath}")
-      if (c.chunks && c.nq > 2) assert(CoarseMerge.lastChunks > 1)
+      assert(choice.path == c.path, s"path ${choice.path}")
+      if (c.chunks && c.nq > 2) assert(choice.chunks > 1)
       if (c.layout == "part" || c.layout == "twin")
-        assert(CoarseMerge.lastCoverageArm ==
-          (if (c.layout == "part") "partitioned" else "flat"))
+        assert(choice.coverage.contains(
+          if (c.layout == "part") "partitioned" else "flat"))
       r
     }
     df.unpersist()
