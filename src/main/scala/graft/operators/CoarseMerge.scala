@@ -456,9 +456,9 @@ private[graft] object CoarseMerge {
   /** Two-stage flat search: coarse top-`candidates` over `packed`
     * (id, code), exact `dist` rerank of the survivors on one id-pruned
     * pass over `base`'s `vecCol`. Output: (query_id, id, distance)
-    * ascending (distance, id) per query, with the [[Choice]] made; with `candidates ≥ n` and exact
-    * selection the coarse pass keeps every row and the result is exact
-    * KNN.
+    * ascending (distance, id) per query, with the [[Choice]] made; with
+    * `candidates ≥ n` and exact selection the coarse pass keeps every row
+    * and the result is exact KNN.
     *
     * The rerank runs ONCE over the unioned chunk winners. Per-chunk
     * rerank was measured (r18, nq10k × c2000 over 1M×960) and rejected
