@@ -107,11 +107,17 @@ object SparkEntry {
       val centroids = b.filter(col("id") < 16).orderBy("id")
         .select("vec").collect()
         .map(_.getSeq[Float](0).toArray)
-      val assigned = b.withColumn("cluster",
-        Ivf.nearestCentroid(col("vec"), centroids, "l2sqr"))
-      Ivf.histogram(assigned)
-        .select(col("cluster").cast("long").as("cluster"), col("cnt"))
-        .orderBy("cluster")
+      // the query owns its centroid broadcast: the histogram is collected
+      // here, the broadcast released, and the rows returned as a local
+      // relation
+      val cents = s.sparkContext.broadcast(centroids)
+      try {
+        val hist = Ivf.histogram(b.withColumn("cluster",
+            Ivf.nearestCentroid(col("vec"), cents, "l2sqr")))
+          .select(col("cluster").cast("long").as("cluster"), col("cnt"))
+          .orderBy("cluster")
+        s.createDataFrame(java.util.Arrays.asList(hist.collect(): _*), hist.schema)
+      } finally cents.unpersist(blocking = false)
     }),
     // LLM-pipeline: exact dedup — word-set fingerprint groups over documents
     "q_dedup_exact" -> ((s, dir) => {
@@ -381,13 +387,15 @@ object SparkEntry {
           col("meta")("parity").as("parity"))
         .orderBy("id")
     }),
-    // B5/B6+T4/T5: partitioned-subgraph HNSW search. With ef ≥ partition
-    // size the beam search is exhaustive per subgraph, so the result equals
-    // exact KNN and the plain top-k SQL oracle applies; HnswSpec adds the
-    // ported HNSW-==-Flat asserts (L2 + cosine) and default-ef recall.
+    // B5/B6+T4/T5: partitioned-subgraph HNSW search — build the subgraphs,
+    // then one pinned walk of the built index with no cache key (the
+    // one-shot shape). With ef ≥ partition size the beam search is
+    // exhaustive per subgraph, so the result equals exact KNN and the plain
+    // top-k SQL oracle applies; HnswSpec adds the ported HNSW-==-Flat
+    // asserts (L2 + cosine) and default-ef recall.
     "q_hnsw_search" -> ((s, dir) => {
-      Hnsw.search(base(s, dir).repartition(4), queryVectors(s, dir),
-          k = 5, ef = Some(400))
+      Hnsw.searchPinned(Hnsw.buildIndex(base(s, dir).repartition(4)),
+          queryVectors(s, dir), k = 5, ef = Some(400))
         .select(col("query_id"), col("id"),
           (round(col("distance"), 6) + lit(0.0)).as("distance"))
         .orderBy("query_id", "distance", "id")
@@ -794,11 +802,12 @@ object SparkEntry {
           (round(col("distance"), 6) + lit(0.0)).as("distance"))
         .orderBy("query_id", "distance", "id")
     }),
-    // S5+B6+T4/T5: HNSW over the persisted sidecar (build once, export
-    // adjacency, reload, search). ef ≥ partition size ⇒ exhaustive per
-    // subgraph ⇒ equals exact KNN, so the plain top-k oracle applies.
+    // S5+B6+T4/T5: HNSW over the exported sidecar (build once, export
+    // adjacency, rebuild the graphs on the driver from it, walk them
+    // there). ef ≥ partition size ⇒ exhaustive per subgraph ⇒ equals exact
+    // KNN, so the plain top-k oracle applies.
     "q_hnsw_indexed" -> ((s, dir) => {
-      Hnsw.searchIndexed(Hnsw.buildIndex(base(s, dir).repartition(4)),
+      Hnsw.searchBroadcast(Hnsw.buildIndex(base(s, dir).repartition(4)),
           queryVectors(s, dir), k = 5, ef = Some(400))
         .select(col("query_id"), col("id"),
           (round(col("distance"), 6) + lit(0.0)).as("distance"))
@@ -836,7 +845,7 @@ object SparkEntry {
     // create/addDataFrame/build_ivf, then searchBatch with ef = the cluster
     // count, which the dispatch maps to n_probes (ivf_index.rs:137-143);
     // probing every cluster ⇒ exact ⇒ the plain top-k SQL oracle applies.
-    // Exercises Ivf.searchPartitioned's cluster-pruned partitioned layout.
+    // Exercises Ivf.searchPartitionedDf's cluster-pruned partitioned layout.
     "q_ivf_catalog" -> ((s, dir) => {
       val db = catalogIngest(s, dir, "vecdb_qivf")
       db.buildIvfIndex("emb", k = 8)

@@ -16,7 +16,7 @@ import graft.index.CacheStats
   * quantizer trained on IVF residuals ([[graft.operators.IvfHnsw
   * .trainResidualPq]] — FAISS's IVFPQ design): only the routed walk can
   * score with it, so the dispatch pins such tables to the routed arms and
-  * pattern-filtered searches fall back to the plain HNSW walk. Defaulted
+  * pattern-filtered searches take the exact filtered scan. Defaulted
   * so briefs written before the field existed read as plain. */
 case class PqInfo(m: Int, nBits: Int, residual: Boolean = false)
 
@@ -1555,66 +1555,45 @@ class VecDB(spark: SparkSession, root: String) {
     // plans beyond (same results; specs assert equality)
     val small = e.nextId <= FlatBroadcastMaxRows
     (ef, e.pq) match {
-      case (Some(efv), Some(info))
-          if e.hasHnsw && pattern.isEmpty &&
-            !VecDB.adcWalkEligible(e.dim, info.m,
-              pinned = !hnswEligible(e.nextId, e.dim)) =>
-        // cost-gated knn_pq: at this (dim, m) in this serving regime the
-        // ADC-scored walk is SLOWER than the plain SIMD walk of the same
-        // graph (see [[VecDB.adcWalkEligible]] — the crossover is wider in
-        // the RAM-bound pinned regime) — serve the plain HNSW walk, whose
-        // exact distances subsume the combined traversal's re-rank. Same
-        // output contract, strictly better selection quality.
-        VecDB.Served(hnswSearch(e, filtered, queries, k, Some(efv), ub,
-          wholeTable = true, withVecs), "knn_pq_gated_plain_hnsw")
-      case (Some(efv), Some(info)) =>
-        val model = cachedPqModel(key, e)
-        if (e.hasHnsw && pattern.isEmpty) {
+      case (Some(efv), Some(info)) if e.hasHnsw && pattern.isEmpty =>
+        if (!VecDB.adcWalkEligible(e.dim, info.m,
+              pinned = !hnswEligible(e.nextId, e.dim)))
+          // cost-gated knn_pq: at this (dim, m) in this serving regime the
+          // ADC-scored walk is SLOWER than the plain SIMD walk of the same
+          // graph (see [[VecDB.adcWalkEligible]] — the crossover is wider in
+          // the RAM-bound pinned regime) — serve the plain HNSW walk, whose
+          // exact distances subsume the combined traversal's re-rank. Same
+          // output contract, strictly better selection quality.
+          hnswSearch(e, queries, k, Some(efv), ub, withVecs)
+            .copy(arm = "knn_pq_gated_plain_hnsw")
+        else
           // combined traversal (knn_pq, hnsw_index.rs:672-697): ADC-scored
           // graph walk + exact re-rank — sub-linear over the codes, vs the
-          // flat arms' O(N) ADC scan per batch. Broadcast the index while
-          // it fits; pin it across the cluster beyond the gate.
-          val idx = sidecarDf(hnswDir(e).toString, e)
-          val ck = Some(hnswKey(e))
-          // a residual model only scores inside the routed walk (codes are
-          // per-cluster shifts) — never the cluster-blind broadcast arm
-          if (hnswEligible(e.nextId, e.dim) && !model.residual)
-            VecDB.Served(Hnsw.residentPqRows(idx, queries, model, k, Some(efv),
-              efConstruction = e.efConstruction, upperBound = ub,
-              cacheKey = Some(hnswBroadcastKey(e)), withVecs = withVecs),
-              "knn_pq_broadcast")
-          else if (e.hnswRouted)
-            VecDB.Served(collectHits(IvfHnsw.searchPinnedPq(idx,
-              cachedRouteModel(e), model, queries, k, Some(efv),
-              efConstruction = e.efConstruction, upperBound = ub,
-              cacheKey = ck)), "knn_pq_routed")
-          else
-            VecDB.Served(collectHits(Hnsw.searchPinnedPq(idx, queries, model, k,
-              Some(efv), efConstruction = e.efConstruction, upperBound = ub,
-              cacheKey = ck)), "knn_pq_pinned")
-        } else if (model.residual) {
-          // pattern-filtered search on a residual-PQ table: the flat arms
-          // score codes cluster-blind, which residual encoding can never
-          // be — serve the plain HNSW walk (exact distances) instead
-          VecDB.Served(hnswSearch(e, filtered, queries, k, Some(efv), ub,
-            pattern.isEmpty, withVecs), "pq_residual_fallback_hnsw")
-        } else {
-          val codes = sidecarDf(pqDir(e).resolve("codes").toString, e)
-          val encoded = filtered.join(codes, "id")
-          val (hits, arm) =
-            if (pattern.isEmpty && pqEligible(e.nextId, e.dim, info.m)) {
-              val ck = Some(s"${pqDir(e)}@c${e.created}v${e.version}n${e.nextId}")
-              (Pq.searchFlatServe(encoded, model, queries, k, efv, ub, ck),
-                "pq_flat_serve")
-            } else if (small)
-              (Pq.searchFlatBroadcast(encoded, model, queries, k, efv, ub),
-                "pq_flat_broadcast")
-            else (Pq.searchFlat(encoded, model, queries, k, efv, ub), "pq_flat")
-          VecDB.Served(collectHits(hits), arm)
-        }
-      case (Some(efv), None) if e.hasHnsw =>
-        VecDB.Served(hnswSearch(e, filtered, queries, k, Some(efv), ub,
-          pattern.isEmpty, withVecs), "hnsw")
+          // flat arms' O(N) ADC scan per batch
+          hnswSearch(e, queries, k, Some(efv), ub, withVecs,
+            Some(cachedPqModel(key, e)))
+      case (Some(efv), Some(info)) if !info.residual =>
+        // the flat ADC arms; a residual quantizer scores only inside the
+        // routed walk, so a pattern-filtered search of a residual-PQ table
+        // takes the exact filtered scan below
+        val model = cachedPqModel(key, e)
+        val codes = sidecarDf(pqDir(e).resolve("codes").toString, e)
+        val encoded = filtered.join(codes, "id")
+        val (hits, arm) =
+          if (pattern.isEmpty && pqEligible(e.nextId, e.dim, info.m)) {
+            val ck = Some(s"${pqDir(e)}@c${e.created}v${e.version}n${e.nextId}")
+            (Pq.searchFlatServe(encoded, model, queries, k, efv, ub, ck),
+              "pq_flat_serve")
+          } else if (small)
+            (Pq.searchFlatBroadcast(encoded, model, queries, k, efv, ub),
+              "pq_flat_broadcast")
+          else (Pq.searchFlat(encoded, model, queries, k, efv, ub), "pq_flat")
+        VecDB.Served(collectHits(hits), arm)
+      // HNSW walks the stored graph of the whole table; a metadata pattern
+      // (our extension — the reference's `search` takes none) takes the
+      // exact filtered scan instead, as it does on every indexed arm
+      case _ if e.hasHnsw && pattern.isEmpty =>
+        hnswSearch(e, queries, k, ef, ub, withVecs)
       // Quantized-arm extension: an explicitly built SQ/BQ sidecar serves
       // the scan-compressed two-stage arms wherever the matrix would
       // otherwise run a FLOAT scan (HNSW arms above keep priority —
@@ -1624,8 +1603,7 @@ class VecDB(spark: SparkSession, root: String) {
       // `ef` maps to the coarse candidate budget (default scales with N,
       // CoarseMerge.autoCandidates); the upper bound applies on the EXACT
       // re-ranked distances, so P3 semantics are preserved.
-      case (efOpt, _) if (e.sq.isDefined || e.bq.isDefined) && !e.hasHnsw &&
-          pattern.isEmpty =>
+      case (efOpt, _) if (e.sq.isDefined || e.bq.isDefined) && pattern.isEmpty =>
         // model loads cached per index generation (1-3 extra driver jobs
         // per batch otherwise — the latency-regime floor)
         val (codec, dir, flatName, routed)
@@ -1703,13 +1681,8 @@ class VecDB(spark: SparkSession, root: String) {
       // (ivf_index.rs:137-143); the partitioned layout prunes the scan to
       // the probed clusters. Metadata patterns fall through to Flat (the
       // layout stores no meta and pruning would fight the filter).
-      case (Some(efv), None) if e.ivf.isDefined && pattern.isEmpty =>
-        VecDB.Served(collectHits(ivfSearch(e, queries, k, Some(efv), ub)), "ivf")
-      case (None, _) if e.hasHnsw =>
-        VecDB.Served(hnswSearch(e, filtered, queries, k, None, ub,
-          pattern.isEmpty, withVecs), "hnsw")
-      case (None, None) if e.ivf.isDefined && pattern.isEmpty =>
-        VecDB.Served(collectHits(ivfSearch(e, queries, k, None, ub)), "ivf")
+      case (_, None) if e.ivf.isDefined && pattern.isEmpty =>
+        VecDB.Served(collectHits(ivfSearch(e, queries, k, ef, ub)), "ivf")
       case _ => // Flat path; ef ignored (dynamic_index.rs:75-80)
         if (small)
           VecDB.Served(collectHits(Knn.exactBroadcast(filtered, queries, k,
@@ -1830,34 +1803,33 @@ class VecDB(spark: SparkSession, root: String) {
       Ivf.readModel(spark, ivfDir(e).toString, e.dist,
         e.ivf.get.defaultNProbes))
 
-  /** HNSW path: the stored sidecar when the whole table is searched; with a
-    * metadata pattern (our extension — the reference's `search` takes none)
-    * the stored links would point at filtered-out nodes, so fall back to
-    * filter-then-build, which also searches fewer rows. Under the broadcast
-    * gate the driver-resident walk returns its rows directly. */
-  private def hnswSearch(e: TableEntry, filtered: DataFrame, queries: DataFrame,
-      k: Int, ef: Option[Int], ub: Double,
-      wholeTable: Boolean, withVecs: Boolean): Hnsw.Hits =
-    if (wholeTable) {
-      val idx = sidecarDf(hnswDir(e).toString, e)
-      val ck = Some(hnswKey(e))
-      if (hnswEligible(e.nextId, e.dim))
-        Hnsw.residentRows(idx, queries, k, ef, e.dist,
-          efConstruction = e.efConstruction, upperBound = ub,
-          cacheKey = Some(hnswBroadcastKey(e)), withVecs = withVecs)
-      else collectHits(if (e.hnswRouted)
-        // beyond-broadcast + routed: walk only each query's routeProbes
-        // nearest clusters (delta subgraphs always walked)
-        IvfHnsw.searchPinned(idx, cachedRouteModel(e), queries, k, ef,
-          efConstruction = e.efConstruction, upperBound = ub, cacheKey = ck)
-      else
-        // beyond-broadcast: pin the index across the cluster (resident,
-        // partitioned) instead of re-shuffling it per batch
-        Hnsw.searchPinned(idx, queries, k, ef, e.dist,
-          efConstruction = e.efConstruction, upperBound = ub, cacheKey = ck))
-    } else
-      collectHits(Hnsw.search(filtered, queries, k, ef, e.dist,
-        efConstruction = e.efConstruction, upperBound = ub))
+  /** HNSW path over the stored sidecar, placed by size: under the broadcast
+    * gate the driver-resident walk returns its rows directly; beyond it the
+    * index is pinned across the cluster (routed: each query walks only its
+    * nearest clusters, delta subgraphs always). With `pq`, the walk is
+    * ADC-scored (`knn_pq_broadcast` | `knn_pq_routed` | `knn_pq_pinned`);
+    * a residual quantizer's codes are per-cluster shifts, so only the
+    * routed walk may score with it. Plain, every placement is `hnsw`. */
+  private def hnswSearch(e: TableEntry, queries: DataFrame, k: Int,
+      ef: Option[Int], ub: Double, withVecs: Boolean,
+      pq: Option[PqModel] = None): VecDB.Served = {
+    def arm(placement: String) = if (pq.isEmpty) "hnsw" else s"knn_pq_$placement"
+    val idx = sidecarDf(hnswDir(e).toString, e)
+    val ck = Some(hnswKey(e))
+    if (hnswEligible(e.nextId, e.dim) && !pq.exists(_.residual))
+      VecDB.Served(Hnsw.residentRows(idx, queries, k, ef, e.dist,
+        efConstruction = e.efConstruction, upperBound = ub,
+        cacheKey = Some(hnswBroadcastKey(e)), pq = pq, withVecs = withVecs),
+        arm("broadcast"))
+    else if (e.hnswRouted)
+      VecDB.Served(collectHits(IvfHnsw.searchPinned(idx, cachedRouteModel(e),
+        queries, k, ef, efConstruction = e.efConstruction, upperBound = ub,
+        cacheKey = ck, pq = pq)), arm("routed"))
+    else
+      VecDB.Served(collectHits(Hnsw.searchPinned(idx, queries, k, ef, e.dist,
+        efConstruction = e.efConstruction, upperBound = ub, cacheKey = ck,
+        pq = pq)), arm("pinned"))
+  }
 
   /** Single-query convenience matching the reference signature: ascending
     * (metadata, distance) pairs. */

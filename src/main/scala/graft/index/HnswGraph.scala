@@ -509,13 +509,17 @@ final class HnswGraph(
     *
     * Primitive-array variant: fills `outIds`/`outDists` (caller-allocated,
     * length ≥ k) ascending by (distance, index) and returns the hit count —
-    * the zero-allocation serving hot path. `full = true` re-ranks the
+    * the zero-allocation serving hot path. With `order` (a key per local
+    * index, e.g. the table ids of a subgraph's nodes), distance ties are
+    * cut by (distance, order(index)) instead, so a subgraph whose local
+    * indices do not follow the table's ids keeps the tied rows the exact
+    * top-k keeps. `full = true` re-ranks the
     * whole ef-sized set with no envelope skip: the reference path the
     * envelope is A/B-tested against. */
   def searchInto(
       q: Array[Float], k: Int, ef: Int,
       outIds: Array[Int], outDists: Array[Double],
-      full: Boolean = false): Int = {
+      full: Boolean = false, order: Array[Long] = null): Int = {
     if (n == 0) return 0
     val efq = math.max(ef, k)
     val enter = greedyUntilLevel(0, q)
@@ -540,25 +544,28 @@ final class HnswGraph(
       else {
         val idx = result.idxAt(p)
         val d = exactDistTo(idx, q)
-        cnt = topkInsert(outIds, outDists, cnt, k, idx, d)
+        cnt = topkInsert(outIds, outDists, cnt, k, idx, d, order)
         p += 1
       }
     }
     cnt
   }
 
-  /** Bounded ascending (distance, index) insert into caller arrays; returns
-    * the new count. Replacement at the boundary needs strictly smaller
-    * (distance, index) — the shared tail of [[searchInto]]/[[searchFnInto]]. */
+  /** Bounded ascending (distance, index) insert into caller arrays — ties
+    * by `order(index)` when `order` is given; returns the new count.
+    * Replacement at the boundary needs a strictly smaller key — the shared
+    * tail of [[searchInto]]/[[searchFnInto]]. */
   @inline private def topkInsert(
       outIds: Array[Int], outDists: Array[Double], cnt: Int, k: Int,
-      idx: Int, d: Double): Int = {
+      idx: Int, d: Double, order: Array[Long]): Int = {
+    @inline def before(a: Int, b: Int): Boolean =
+      if (order == null) a < b else order(a) < order(b)
     if (cnt < k || d < outDists(cnt - 1) ||
-        (d == outDists(cnt - 1) && idx < outIds(cnt - 1))) {
+        (d == outDists(cnt - 1) && before(idx, outIds(cnt - 1)))) {
       var lo = 0; var hi = cnt
       while (lo < hi) {
         val mid = (lo + hi) >>> 1
-        if (outDists(mid) < d || (outDists(mid) == d && outIds(mid) < idx)) lo = mid + 1
+        if (outDists(mid) < d || (outDists(mid) == d && before(outIds(mid), idx))) lo = mid + 1
         else hi = mid
       }
       val nShift = math.min(cnt, k - 1) - lo
@@ -583,11 +590,11 @@ final class HnswGraph(
     * only the walk's selection is approximate.
     *
     * Fills `outIds`/`outDists` (caller-allocated, length ≥ k), returns the
-    * hit count. */
+    * hit count; `order` cuts distance ties as in [[searchInto]]. */
   def searchFnInto(
       distFn: Int => Double, q: Array[Float], k: Int, ef: Int,
       outIds: Array[Int], outDists: Array[Double],
-      full: Boolean = false): Int = {
+      full: Boolean = false, order: Array[Long] = null): Int = {
     if (n == 0) return 0
     val efq = math.max(ef, k)
     val enter = greedyUntilLevelFn(0, distFn)
@@ -616,7 +623,7 @@ final class HnswGraph(
       }
       if (!skip) {
         val d = exactDistTo(idx, q)
-        cnt = topkInsert(outIds, outDists, cnt, k, idx, d)
+        cnt = topkInsert(outIds, outDists, cnt, k, idx, d, order)
       }
       p += 1
     }

@@ -479,7 +479,8 @@ object Bq extends Serializable {
     * economics of `/root/reference/src/index/ivf_index.rs:143-155` on the
     * packed sidecar pattern of `metadata_vec_table.rs:14-20`.
     *
-    * @param codes (id, bq, cluster) — [[Ivf.assign]] output run through
+    * @param codes (id, bq, cluster) — an assigned frame ([[Ivf.build]],
+    *              [[Ivf.withAssigned]]) run through
     *              [[encodeCentered]]/[[encode]], in memory or the
     *              partitioned layout
     * @param base  (id, vec) float table for the re-rank */

@@ -7,91 +7,44 @@ import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType
 import graft.functions.PqKernel
 import graft.index.{HnswGraph, HnswGraphCache}
 
-/** Distributed HNSW: partitioned-subgraph design (SURVEY §7.2.5). Each
-  * partition builds an independent HNSW graph over its rows inside one task
-  * and beam-searches every (broadcast) query; per-partition top-k merge via
-  * the bounded [[TopK]] aggregate. The reference's single sequential graph
-  * (`/root/reference/src/index_algorithm/hnsw_index.rs`) cannot be mutated
-  * concurrently across executors — the subgraph union sidesteps the
+/** Distributed HNSW: partitioned-subgraph design (SURVEY §7.2.5).
+  * [[buildIndex]] builds an independent HNSW graph over each partition's
+  * rows inside one task and stores it as a sidecar; a search walks the
+  * subgraphs (a routed search only its probed ones, [[IvfHnsw]]) and merges
+  * top-k across them by (distance, id). The reference's single sequential
+  * graph (`/root/reference/src/index_algorithm/hnsw_index.rs`) cannot be
+  * mutated concurrently across executors — the subgraph union sidesteps the
   * sequential bidirectional-link mutation entirely, and recall can only
   * improve over one big graph: the global top-k rows live in *some*
   * partition, and each partition's search covers its own rows.
   *
-  * Scale shape: base streams once (no shuffle before the Q·partitions·k
-  * merge); build cost is per-task and in-memory. A 100 TB table at 128 MB
-  * splits gives ~500k-row subgraphs — well inside the single-graph regime
-  * the reference itself targets.
+  * One walk per placement of the stored index:
+  *  - resident ([[searchBroadcast]]): the subgraphs stay built on the
+  *    driver ([[ResidentIndex]]); a warm search runs no Spark job;
+  *  - pinned ([[searchPinned]], [[IvfHnsw.searchPinned]]): the sidecar is
+  *    pinned across the executors and the query batch is broadcast;
+  *  - streamed ([[searchPinnedStream]]): an oversized batch stays a
+  *    distributed Dataset and meets the pinned index partition by partition.
+  * Each walk takes `pq`: with a quantizer it scores nodes by ADC code
+  * lookup and re-ranks the survivors exactly — the reference's `knn_pq`
+  * (`hnsw_index.rs:672-697`), through the one scorer [[Adc]].
+  *
+  * Scale shape: build cost is per-task and in-memory. A 100 TB table at
+  * 128 MB splits gives ~500k-row subgraphs — well inside the single-graph
+  * regime the reference itself targets.
   */
 object Hnsw {
 
-  /** Batch HNSW KNN search, building per-partition subgraphs on the fly.
-    *
-    * @param ef search beam width; None → reference default ef_construction/2
-    * @return (query_id, id, distance) ascending (distance, id) per query
-    */
-  def search(
-      base: DataFrame,
-      queries: DataFrame,
-      k: Int,
-      ef: Option[Int] = None,
-      dist: String = "l2sqr",
-      m: Int = 16,
-      efConstruction: Int = 200,
-      seed: Long = 42L,
-      upperBound: Double = Double.PositiveInfinity): DataFrame = {
-    val spark = base.sparkSession
-    import spark.implicits._
-    val qs = queries
-      .select(col("query_id").cast("long"), col("query_vec"))
-      .as[(Long, Array[Float])].collect()
-    val bc = spark.sparkContext.broadcast(qs)
-    // normalized default_ef = max(efConstruction, 2m)/2 (hnsw_index.rs:495-506)
-    val efq = ef.getOrElse(math.max(efConstruction, 2 * m) / 2)
-
-    val partial = base
-      .select(col("id").cast("long"), col("vec"))
-      .as[(Long, Array[Float])]
-      .mapPartitions { it =>
-        val rows = it.toArray
-        if (rows.isEmpty) Iterator.empty
-        else {
-          val pid = TaskContext.getPartitionId()
-          val g = new HnswGraph(rows(0)._2.length, dist, m, efConstruction,
-            seed + pid)
-          rows.foreach(r => g.add(r._2))
-          val hitIds = new Array[Int](k)
-          val hitDs = new Array[Double](k)
-          bc.value.iterator.flatMap { case (qid, qv) =>
-            val cnt = g.searchInto(qv, k, efq, hitIds, hitDs)
-            Iterator.range(0, cnt).map(i => (qid, rows(hitIds(i))._1, hitDs(i)))
-          }
-        }
-      }
-      .toDF("query_id", "id", "distance")
-
-    merge(bounded(partial, upperBound), k)
-  }
-
-  /** Apply the upper-bound filter only when one is actually set — an
-    * always-true predicate still costs an evaluation per row (and can be
-    * pushed into join conditions, doubling expression work). */
-  private def bounded(df: DataFrame, upperBound: Double): DataFrame =
-    if (upperBound == Double.PositiveInfinity) df
-    else df.filter(col("distance") <= lit(upperBound))
-
-  private def merge(partial: DataFrame, k: Int): DataFrame =
-    partial
-      .groupBy("query_id")
-      .agg(TopK.topK(k)(col("id"), col("distance")).as("topk"))
-      .select(col("query_id"), explode(col("topk")).as("hit"))
-      .select(col("query_id"), col("hit.id").as("id"),
-        col("hit.distance").as("distance"))
+  /** The beam width when the caller names none: the reference's default
+    * ef, normalized as max(efConstruction, 2m)/2 (`hnsw_index.rs:495-506`). */
+  private[operators] def defaultEf(m: Int, efConstruction: Int): Int =
+    math.max(efConstruction, 2 * m) / 2
 
   /** B6 + S5 — build the partitioned-subgraph index once and export it as a
     * DataFrame suitable for a Parquet sidecar: one row per node with its
     * vector, level, and per-level adjacency (local ids within the
-    * subgraph). Reloading with [[searchIndexed]] skips the O(N·efC) insert
-    * phase every later batch pays in [[search]]. The entry point is not
+    * subgraph). Every search walks this stored adjacency, so none repeats
+    * the O(N·efC) insert phase. The entry point is not
     * stored: it is recomputed as the first node of the maximum level, which
     * is exactly how insertion maintains it (`enterLevel` only advances on
     * strictly greater draws — `hnsw_index.rs:566-571`).
@@ -126,69 +79,20 @@ object Hnsw {
       .toDF("pid", "local_id", "id", "vec", "level", "links")
   }
 
-  /** T4+T5 over a stored index: regroup the sidecar by subgraph, rebuild
-    * each graph from its stored adjacency (no insertion searches), and
-    * beam-search every query. One shuffle of the index by `pid` per batch —
-    * at 100 TB that moves the same bytes a base scan would, but skips the
-    * construction distance computations that dominate [[search]].
-    *
-    * @param cacheKey identity of the stored index for the executor-side
-    *   graph LRU ([[HnswGraphCache]]): repeat batches against the same key
-    *   skip the adjacency decode + graph rebuild entirely. The key MUST
-    *   change whenever the index contents change.
-    */
-  def searchIndexed(
-      index: DataFrame,
-      queries: DataFrame,
-      k: Int,
-      ef: Option[Int] = None,
-      dist: String = "l2sqr",
-      m: Int = 16,
-      efConstruction: Int = 200,
-      upperBound: Double = Double.PositiveInfinity,
-      cacheKey: Option[String] = None): DataFrame = {
-    val spark = index.sparkSession
-    import spark.implicits._
-    val qs = queries
-      .select(col("query_id").cast("long"), col("query_vec"))
-      .as[(Long, Array[Float])].collect()
-    val bc = spark.sparkContext.broadcast(qs)
-    val efq = ef.getOrElse(math.max(efConstruction, 2 * m) / 2)
+  /** Apply the upper-bound filter only when one is actually set — an
+    * always-true predicate still costs an evaluation per row (and can be
+    * pushed into join conditions, doubling expression work). */
+  private def bounded(df: DataFrame, upperBound: Double): DataFrame =
+    if (upperBound == Double.PositiveInfinity) df
+    else df.filter(col("distance") <= lit(upperBound))
 
-    val partial = index
-      .select(col("pid").cast("int"), col("local_id").cast("int"),
-        col("id").cast("long"), col("vec"), col("level").cast("int"),
-        col("links"))
-      .as[(Int, Int, Long, Array[Float], Int, Array[Array[Int]])]
-      .groupByKey(_._1)
-      .flatMapGroups { (pid, it) =>
-        def build: HnswGraphCache.Entry = {
-          val rows = it.toArray.sortBy(_._2)
-          if (rows.isEmpty) HnswGraphCache.Entry(
-            new HnswGraph(1, dist, m, efConstruction), Array.empty)
-          else HnswGraphCache.Entry(
-            HnswGraph.fromNodes(rows(0)._4.length, dist, m, efConstruction,
-              rows.iterator.map(r => (r._4, r._5, r._6))),
-            rows.map(_._3))
-        }
-        val e = cacheKey match {
-          case Some(ck) => HnswGraphCache.get(ck, pid)(build)
-          case None => build
-        }
-        if (e.ids.isEmpty) Iterator.empty
-        else {
-          val hitIds = new Array[Int](k)
-          val hitDs = new Array[Double](k)
-          bc.value.iterator.flatMap { case (qid, qv) =>
-            val cnt = e.graph.searchInto(qv, k, efq, hitIds, hitDs)
-            Iterator.range(0, cnt).map(i => (qid, e.ids(hitIds(i)), hitDs(i)))
-          }
-        }
-      }
-      .toDF("query_id", "id", "distance")
-
-    merge(bounded(partial, upperBound), k)
-  }
+  private def merge(partial: DataFrame, k: Int): DataFrame =
+    partial
+      .groupBy("query_id")
+      .agg(TopK.topK(k)(col("id"), col("distance")).as("topk"))
+      .select(col("query_id"), explode(col("topk")).as("hit"))
+      .select(col("query_id"), col("hit.id").as("id"),
+        col("hit.distance").as("distance"))
 
   /** Typed sidecar row: (pid, local_id, id, vec, level, links). */
   private[operators] type IndexRow = (Int, Int, Long, Array[Float], Int, Array[Array[Int]])
@@ -244,6 +148,14 @@ object Hnsw {
     throw new IllegalStateException("unreachable")
   }
 
+  /** The sidecar pid-partitioned for the pinned walks: pinned and cached
+    * under `cacheKey`, or, without one, built for this search alone. */
+  private def pinnedIndex(index: DataFrame, cacheKey: Option[String])
+    : org.apache.spark.rdd.RDD[IndexRow] = cacheKey match {
+    case Some(ckey) => pinnedGetOrBuild(ckey)(pidPartitioned(index))
+    case None => pidPartitioned(index)
+  }
+
   /** Evict every DRIVER-side cached serving structure whose cacheKey starts
     * with `prefix` — pinned RDDs (unpersisted), the driver-resident
     * serving state ([[ResidentIndex]]), and the graph/code caches of
@@ -263,8 +175,7 @@ object Hnsw {
       }
     }
     ResidentIndex.invalidate(prefix)
-    pinnedCodesCache.removeIf(_._1.startsWith(prefix))
-    pqCodesCache.removeIf(_._1.startsWith(prefix))
+    codesCache.removeIf(_._1.startsWith(prefix))
     graft.index.HnswGraphCache.invalidate(prefix)
   }
 
@@ -276,8 +187,7 @@ object Hnsw {
   private[graft] def evictKey(key: String): Unit = {
     pinnedCache.synchronized(Option(pinnedCache.remove(key)))
       .foreach(_.unpersist(blocking = false))
-    pinnedCodesCache.removeIf(_._1.startsWith(key + "#pq"))
-    pqCodesCache.removeIf(_._1.startsWith(key + "#pq"))
+    codesCache.removeIf(_._1.startsWith(key + "#pq"))
     graft.index.HnswGraphCache.evict(key)
   }
 
@@ -334,155 +244,187 @@ object Hnsw {
     }
   }
 
-  /** Per-pid PQ code matrices for an ADC-scored walk, aligned with
-    * [[entriesFor]]'s output (both sorted by pid) and encoded from the
-    * cached graphs' vectors — a codes-cache fill never re-reads the
-    * partition rows. Cached per executor under (cacheKey#pq<modelId>,
-    * spid). Returns (codes n×m, cosine centroid self-dot per node — null
-    * for L2) per entry.
-    *
-    * Measured negative result (r11, walk timing, rank-48 d960 @50k): a
-    * DiskANN-style inline-neighbor-blocks layout (each node's level-0
-    * neighbors' codes transposed 16-lane group-major, scored with the
-    * serve path's `Simd.adcBlock1` permute kernel) reproduced the scalar
-    * walk's recall exactly but measured 10–40% SLOWER at every (m, ef) —
-    * parity only at m=64 where blocks still fit cache. The walk is not
-    * lookup-arithmetic-bound: `adcOne`'s 4-chain loop already runs near
-    * the codes-row memory floor, and the n·m·2maxM0 block blow-up turns
-    * each (random-node) expansion into a ~10 KB cold read vs ~3 KB of
-    * row-major codes. The fast-scan kernel pays only where blocks stream
-    * sequentially and stay cache-resident — the flat serve scan
-    * (`Pq.searchFlatServe`) — so this walk keeps the row-major codes.
-    *
-    * Second measured negative result (r12, same probe): the no-blow-up
-    * variant — ONE shared 16-row-block transposed matrix (the serve
-    * layout, same bytes as row-major) scored per node through
-    * `Simd.adcBlock1`, with and without a per-query block-sum epoch cache
-    * (each ~2k-block subgraph walk revisits a block ~1.8× on average) —
-    * also lost at every (m, ef): 5–25% behind the scalar gather (e.g.
-    * m=160/ef=240: 1134/1315 q/s vs 1637; m=120/ef=360: 1220/1229 vs
-    * 1413). Scoring one scattered neighbor still reads the whole m×16-byte
-    * block (16× the traffic of its m-byte row), and the ≤1.8× revisit
-    * amortization cannot pay that back. The walk regime keeps row-major
-    * codes + `adcOne`; fast-scan stays serve-only.
-    *
-    * With `residCents` (routed L2 tables), a node in cluster pid encodes
-    * its RESIDUAL x − centroid(pid) — FAISS's IVFPQ/IVFADC design: the
-    * quantizer spends its resolution on the within-cell spread instead of
-    * re-describing the cell location, and L2 distances are exact under the
-    * shared shift (|(q−c)−(x−c)| = |q−x|), so the walk's LUT just builds
-    * from the shifted query. Delta pids ≥ residCents.length (post-build
-    * appends, not cluster-partitioned) encode plain. */
-  private def codeMatricesFor(
-      entries: Array[(Int, HnswGraphCache.Entry)],
-      ck: Option[String], spid: Int, pqId: Int,
-      pqCentroids: Array[Array[Array[Float]]],
-      pqGroups: Array[(Int, Int)],
-      pqCentDot: Array[Double],
-      pqM: Int, pqK: Int, cosine: Boolean,
-      residCents: Array[Array[Float]] = null)
-    : Array[(Array[Byte], Array[Double])] = {
-    def buildCodes: Array[(Array[Byte], Array[Double])] =
-      entries.map { case (pid, e) =>
-        val cent =
-          if (residCents != null && pid < residCents.length) residCents(pid)
-          else null
-        encodeCodes(e, cent, pqCentroids, pqGroups, pqCentDot, pqM, pqK, cosine)
-      }
-    ck match {
-      case Some(key) =>
-        val marker = if (residCents != null) "#pqR" else "#pq"
-        val kk = (key + marker + pqId, spid)
-        pinnedCodesCache.get(kk).getOrElse {
-          val c = graft.index.CacheStats.timedCodesBuild(buildCodes)
-          pinnedCodesCache.put(kk, c, c.map(codesBytes(_) + 16).sum)
-          c
-        }
-      case None => buildCodes
-    }
-  }
-
   /** One subgraph's PQ codes (n×m, row-major) and, for cosine, each node's
-    * centroid self-dot sum (null for L2), encoded from the graph's stored
-    * vectors — shifted by `cent` first when it is non-null (residual
-    * encoding, [[codeMatricesFor]]). */
-  private def encodeCodes(
-      e: HnswGraphCache.Entry, cent: Array[Float],
-      pqCentroids: Array[Array[Array[Float]]], pqGroups: Array[(Int, Int)],
-      pqCentDot: Array[Double], pqM: Int, pqK: Int, cosine: Boolean)
-    : (Array[Byte], Array[Double]) = {
-    val nn = e.ids.length
-    val cm = new Array[Byte](nn * pqM)
-    val cd = if (cosine) new Array[Double](nn) else null
-    var r = 0
-    while (r < nn) {
-      val v0 = e.graph.exportNode(r)._1
-      val v = if (cent == null) v0 else {
-        var j = 0
-        while (j < v0.length) { v0(j) -= cent(j); j += 1 }
-        v0 // exportNode returns a fresh copy — safe to shift in place
-      }
-      PqKernel.encodeDecodedInto(v, pqCentroids, pqGroups, cosine,
-        cm, r * pqM)
-      if (cosine) {
-        var acc = 0.0
-        var g = 0; var gk = 0; val base = r * pqM
-        while (g < pqM) {
-          acc += pqCentDot(gk + (cm(base + g) & 0xff))
-          g += 1; gk += pqK
+    * centroid self-dot sum (null for L2). */
+  private type Codes = (Array[Byte], Array[Double])
+
+  /** ADC node scoring, the one scorer of every PQ-scored walk: the
+    * quantizer unpacked into the arrays the kernel reads (a task closure
+    * ships only those), its cache identity `id` (a PQ sidecar rebuilt with
+    * a different quantizer must not serve stale code matrices), each
+    * subgraph's code matrix and the per-query distance closure.
+    *
+    * Residual encoding (routed L2 tables, a residual-trained model): a node
+    * in cluster pid encodes x − centroid(pid) — FAISS's IVFPQ/IVFADC
+    * design: the quantizer spends its resolution on the within-cell spread
+    * instead of re-describing the cell location, and L2 distances are
+    * exact under the shared shift (|(q−c)−(x−c)| = |q−x|), so the query's
+    * LUT builds from the query shifted by the same centroid.
+    *
+    * The walk keeps row-major codes scored by `adcOne`. Measured negative
+    * results (r11/r12, walk timing, rank-48 d960 @50k): a DiskANN-style
+    * inline-neighbor-blocks layout scored with `Simd.adcBlock1` measured
+    * 10–40% SLOWER at every (m, ef) (each random-node expansion becomes a
+    * ~10 KB cold read vs ~3 KB of row-major codes), and one shared
+    * 16-row-block transposed matrix 5–25% slower (scoring one scattered
+    * neighbor reads its whole m×16-byte block, 16× its m-byte row). The
+    * fast-scan kernel pays only where blocks stream sequentially — the
+    * flat serve scan (`Pq.searchFlatServe`). */
+  private final case class Adc(
+      id: Int, dist: String, centroids: Array[Array[Array[Float]]],
+      centDot: Array[Double], groups: Array[(Int, Int)], m: Int, kc: Int,
+      nBits: Int) {
+    private def cosine: Boolean = dist == "cosine"
+
+    /** The code matrix of one subgraph, encoded from its graph's stored
+      * vectors, each shifted by `cent` first when it is non-null. */
+    def encode(e: HnswGraphCache.Entry, cent: Array[Float]): Codes = {
+      val nn = e.ids.length
+      val cm = new Array[Byte](nn * m)
+      val cd = if (cosine) new Array[Double](nn) else null
+      var r = 0
+      while (r < nn) {
+        val v = e.graph.exportNode(r)._1 // a fresh copy — safe to shift in place
+        if (cent != null) {
+          var j = 0
+          while (j < v.length) { v(j) -= cent(j); j += 1 }
         }
-        cd(r) = acc
+        PqKernel.encodeDecodedInto(v, centroids, groups, cosine, cm, r * m)
+        if (cosine) {
+          var acc = 0.0
+          var g = 0; var gk = 0; val base = r * m
+          while (g < m) {
+            acc += centDot(gk + (cm(base + g) & 0xff))
+            g += 1; gk += kc
+          }
+          cd(r) = acc
+        }
+        r += 1
       }
-      r += 1
+      (cm, cd)
     }
-    (cm, cd)
+
+    /** Query `qv`'s distance closure over one subgraph's codes, the query
+      * shifted by `cent` when it is non-null. The float LUT is
+      * selection-grade (winners are re-ranked exactly) at half the cache
+      * footprint of double. */
+    def scorer(qv: Array[Float], cent: Array[Float]): Codes => Int => Double = {
+      val q =
+        if (cent == null) qv
+        else Array.tabulate(qv.length)(j => qv(j) - cent(j))
+      val lut = PqKernel.buildLookup(q, centroids, nBits, dist).map(_.toFloat)
+      val qn = if (cosine) {
+        var acc = 0.0; var i = 0
+        while (i < qv.length) { acc += qv(i).toDouble * qv(i); i += 1 }
+        math.sqrt(acc)
+      } else 0.0
+      codes => {
+        val (cm, cd) = codes
+        idx => {
+          val s = PqKernel.adcOne(cm, idx * m, m, kc, lut)
+          if (cosine) 1.0 - s / math.max(math.sqrt(cd(idx)) * qn, 1e-10) else s
+        }
+      }
+    }
   }
 
-  /** The walk LUT for one (query, cluster) pair under optional residual
-    * encoding: shifts the query by the cluster centroid when that cluster
-    * encodes residuals ([[codeMatricesFor]]), else plain. */
-  private def walkLut(
-      qv: Array[Float], pid: Int, residCents: Array[Array[Float]],
-      pqCentroids: Array[Array[Array[Float]]], pqNBits: Int, dist: String)
-    : Array[Float] = {
-    val q =
-      if (residCents != null && pid < residCents.length) {
-        val c = residCents(pid)
-        val out = new Array[Float](qv.length)
-        var j = 0
-        while (j < qv.length) { out(j) = qv(j) - c(j); j += 1 }
-        out
-      } else qv
-    PqKernel.buildLookup(q, pqCentroids, pqNBits, dist).map(_.toFloat)
+  /** A walk's scorer, or null for the plain float walk. The model's metric
+    * must be the walk's, and a residual-trained model needs the routing
+    * centroids its codes shift by (`residCents`, an L2 routed walk); any
+    * mix of encoding and training scores garbage silently. */
+  private def adcFor(pq: Option[PqModel], dist: String,
+      residCents: Array[Array[Float]]): Adc = {
+    require(pq.forall(_.dist == dist),
+      s"PqModel metric ${pq.map(_.dist).orNull} differs from the walk's $dist")
+    require(residCents == null || dist != "cosine",
+      "residual PQ encoding is an L2 shift identity; cosine encodes plain")
+    require(pq.forall(_.residual == (residCents != null)),
+      "a residual-trained PqModel requires the routed walk " +
+        "(IvfHnsw.searchPinned with pq); a plain one encodes plain")
+    pq.map { p =>
+      Adc(java.util.Arrays.deepHashCode(p.centroids.asInstanceOf[Array[AnyRef]]),
+        p.dist, p.centroids, p.centroidDotCache, PqKernel.pqGroups(p.dim, p.m),
+        p.m, p.k, p.nBits)
+    }.orNull
   }
 
-  /** Codes-cache byte budget shared by [[pinnedCodesCache]] and
-    * [[pqCodesCache]]: `graft.cache.codes.maxBytes` sysprop, else 8% of
-    * max heap. Byte-budgeted for the same reason as [[HnswGraphCache]]
-    * (r13: a 64-entry cap vs a 96-entry working set — 3 PQ models × 32
-    * partitions on one fixture — made every interleaved rep's first row
-    * re-encode 1M vectors: the bench's "ef120 10× slower than ef180"
-    * anomaly was pure LRU thrash, CPU-bound and GC-invisible). */
+  /** The centroid subgraph `pid` encodes residuals against, or null when
+    * it encodes plain: the walk is not residual, or `pid` is a post-build
+    * delta (≥ the model's cells, not cluster-partitioned). */
+  private def centOf(residCents: Array[Array[Float]], pid: Int): Array[Float] =
+    if (residCents != null && pid < residCents.length) residCents(pid) else null
+
+  /** Codes-cache byte budget of [[codesCache]]: `graft.cache.codes.maxBytes`
+    * sysprop, else 8% of max heap. Byte-budgeted for the same reason as
+    * [[HnswGraphCache]] (r13: a 64-entry cap vs a 96-entry working set — 3
+    * PQ models × 32 partitions on one fixture — made every interleaved
+    * rep's first row re-encode 1M vectors: the bench's "ef120 10× slower
+    * than ef180" anomaly was pure LRU thrash, CPU-bound and GC-invisible). */
   private[graft] def codesMaxBytes: Long =
     sys.props.get("graft.cache.codes.maxBytes").map(_.toLong).getOrElse(
       (Runtime.getRuntime.maxMemory * 0.08).toLong)
 
-  private def codesBytes(v: (Array[Byte], Array[Double])): Long =
+  private def codesBytes(v: Codes): Long =
     v._1.length.toLong + (if (v._2 == null) 0L else v._2.length.toLong * 8) + 48
 
-  /** Executor-local cache of per-PARTITION PQ code matrices for the pinned
-    * PQ walk (aligned 1:1 with the partition's [[HnswGraphCache.getGroup]]
-    * entries — both sorted by pid): (cacheKey+"#pq", spid) → per-pid
-    * (codes n×m, cosine centroid self-dot per node — null for L2). */
-  private val pinnedCodesCache =
-    new HnswGraphCache.ByteLru[(String, Int), Array[(Array[Byte], Array[Double])]](
-      () => math.max(codesMaxBytes / 16, codesMaxBytes - pqCodesCache.currentBytes))
+  /** JVM-local cache of per-subgraph PQ code matrices for every ADC walk:
+    * (key#pq<model id> — #pqR for residual codes —, pid) → codes, where key
+    * is the pinned cacheKey or the resident generation. Built once per
+    * (subgraph, model) from the cached graph's vectors — a fill never
+    * re-reads the sidecar, and encoding is deterministic (identical to
+    * decoding the stored code column). */
+  private val codesCache =
+    new HnswGraphCache.ByteLru[(String, Int), Codes](() => codesMaxBytes)
+
+  /** The code matrices of `entries`, aligned with them; cached under `key`
+    * unless it is null. */
+  private def codesFor(entries: Array[(Int, HnswGraphCache.Entry)], key: String,
+      adc: Adc, residCents: Array[Array[Float]]): Array[Codes] =
+    entries.map { case (pid, e) =>
+      def build = adc.encode(e, centOf(residCents, pid))
+      if (key == null) build
+      else {
+        val kk = (key + (if (residCents != null) "#pqR" else "#pq") + adc.id, pid)
+        codesCache.get(kk).getOrElse {
+          val c = graft.index.CacheStats.timedCodesBuild(build)
+          codesCache.put(kk, c, codesBytes(c))
+          c
+        }
+      }
+    }
+
+  /** One query's walk, shared by every placement: `(ei, ids, ds)` walks
+    * subgraph `ei` of `entries` into (ids, ds) ascending (distance, table
+    * id) and returns its hit count. Ties at the k cut fall by table id, as
+    * in the exact top-k, however the subgraph's local indices are ordered
+    * (a routed build groups a cluster's rows in shuffle order). Plain
+    * (`adc` null), the float SIMD walk ([[HnswGraph.searchInto]]); with
+    * `adc`, the ADC-scored walk over `codes(ei)` with exact re-rank
+    * ([[HnswGraph.searchFnInto]]). Plain codes share one LUT per query;
+    * residual codes build one per subgraph. Call it only for a query that
+    * walks something here: a routed batch must not pay LUTs in partitions
+    * it never probes. */
+  private def walker(entries: Array[(Int, HnswGraphCache.Entry)], k: Int,
+      efq: Int, adc: Adc, codes: Array[Codes], residCents: Array[Array[Float]])(
+      qv: Array[Float]): (Int, Array[Int], Array[Double]) => Int =
+    if (adc == null) { (ei, ids, ds) =>
+      val e = entries(ei)._2
+      e.graph.searchInto(qv, k, efq, ids, ds, order = e.ids)
+    } else {
+      val shared = if (residCents == null) adc.scorer(qv, null) else null
+      (ei, ids, ds) => {
+        val score =
+          if (shared != null) shared
+          else adc.scorer(qv, centOf(residCents, entries(ei)._1))
+        val e = entries(ei)._2
+        e.graph.searchFnInto(score(codes(ei)), qv, k, efq, ids, ds, order = e.ids)
+      }
+    }
 
   /** Serving-shape search for indexes too big for the driver: PIN the
     * stored index across the cluster (repartitioned by subgraph, persisted)
-    * and broadcast the QUERIES — the memory inverse of [[searchBroadcast]] and
-    * the shuffle-free replacement for [[searchIndexed]], whose per-batch
-    * groupByKey re-shuffles every index byte. The first batch pays one
+    * and broadcast the QUERIES — the memory inverse of [[searchBroadcast]].
+    * The first batch pays one
     * shuffle of the sidecar plus the graph rebuilds; rebuilt graphs pin per
     * executor in [[HnswGraphCache.getGroup]] keyed by (cacheKey, Spark
     * partition id) — stable across jobs over the same persisted dataset —
@@ -493,7 +435,9 @@ object Hnsw {
     * per-partition top-k rows (Q·k per subgraph) reach the merge.
     *
     * Without `cacheKey` nothing is persisted or cached (one-shot shape:
-    * repartition + build + search).
+    * repartition + build + search). With `pq`, the walk is the reference's
+    * `knn_pq` over the pinned shape; `pq` must be plain-trained (a
+    * residual model needs the routed walk).
     */
   def searchPinned(
       index: DataFrame,
@@ -504,17 +448,11 @@ object Hnsw {
       m: Int = 16,
       efConstruction: Int = 200,
       upperBound: Double = Double.PositiveInfinity,
-      cacheKey: Option[String] = None): DataFrame = {
-    val spark = index.sparkSession
-    import spark.implicits._
-    val qs = queries
-      .select(col("query_id").cast("long"), col("query_vec"))
-      .as[(Long, Array[Float])].collect()
-      .map { case (qid, qv) => (qid, qv, null: Array[Int]) }
-    pinnedSearchCore(index, qs, k,
-      ef.getOrElse(math.max(efConstruction, 2 * m) / 2),
-      dist, m, efConstruction, upperBound, cacheKey)
-  }
+      cacheKey: Option[String] = None,
+      pq: Option[PqModel] = None): DataFrame =
+    pinnedSearchCore(index,
+      ResidentIndex.queries(queries).map { case (qid, qv) => (qid, qv, null: Array[Int]) },
+      k, ef, dist, m, efConstruction, upperBound, cacheKey, pq)
 
   /** Shared pinned-search engine: queries (with an optional per-query probe
     * list — null = search every subgraph) broadcast against the pinned
@@ -527,13 +465,13 @@ object Hnsw {
     * `knn_pq` over the pinned shape): at d960/m=320 the codes are 12× less
     * memory traffic per visit than the packed vectors, which is what the
     * walk is bound by once a subgraph outgrows L2. Code matrices build once
-    * per partition from the cached graphs and pin per executor alongside
+    * per subgraph from the cached graphs and stay per executor beside
     * them. */
   private[operators] def pinnedSearchCore(
       index: DataFrame,
       qs: Array[(Long, Array[Float], Array[Int])],
       k: Int,
-      efq: Int,
+      ef: Option[Int],
       dist: String,
       m: Int,
       efConstruction: Int,
@@ -542,38 +480,14 @@ object Hnsw {
       pq: Option[PqModel] = None,
       routeFloor: Int = Int.MaxValue,
       residCents: Array[Array[Float]] = null): DataFrame = {
-    require(residCents == null || dist != "cosine",
-      "residual PQ encoding is an L2 shift identity; cosine encodes plain")
-    // encode and train must agree: residual-trained quantizer ⇔ residual
-    // codes + shifted LUTs; any mix scores garbage silently
-    require(pq.forall(_.residual == (residCents != null)),
-      "PqModel.residual must match the centroid context of the walk")
+    val adc = adcFor(pq, dist, residCents)
+    val efq = ef.getOrElse(defaultEf(m, efConstruction))
     val spark = index.sparkSession
     import spark.implicits._
     val bc = spark.sparkContext.broadcast(qs)
 
-    val pinned = cacheKey match {
-      case Some(ckey) => pinnedGetOrBuild(ckey)(pidPartitioned(index))
-      case None => pidPartitioned(index)
-    }
+    val pinned = pinnedIndex(index, cacheKey)
     val ck = cacheKey
-    // PQ model unpacked into plain locals so the task closure ships only
-    // what the kernel needs
-    val hasPq = pq.isDefined
-    val pqCentroids = pq.map(_.centroids).orNull
-    val pqCentDot = pq.map(_.centroidDotCache).orNull
-    val pqGroups = pq.map(p => PqKernel.pqGroups(p.dim, p.m)).orNull
-    val pqM = pq.map(_.m).getOrElse(0)
-    val pqK = pq.map(_.k).getOrElse(0)
-    val pqNBits = pq.map(_.nBits).getOrElse(0)
-    // model identity folded into the codes-cache key: a PQ sidecar rebuilt
-    // with a different quantizer must not serve stale code matrices
-    val pqId =
-      if (hasPq)
-        java.util.Arrays.deepHashCode(
-          pqCentroids.asInstanceOf[Array[AnyRef]])
-      else 0
-    val cosine = dist == "cosine"
     val floor = routeFloor
     val ub = upperBound
 
@@ -583,10 +497,9 @@ object Hnsw {
         val entries = entriesFor(it, ck, spid, dist, m, efConstruction)
         if (entries.isEmpty) Iterator.empty
         else {
-          val codes: Array[(Array[Byte], Array[Double])] =
-            if (!hasPq) null
-            else codeMatricesFor(entries, ck, spid, pqId, pqCentroids,
-              pqGroups, pqCentDot, pqM, pqK, cosine, residCents)
+          val codes =
+            if (adc == null) null else codesFor(entries, ck.orNull, adc, residCents)
+          val walk = walker(entries, k, efq, adc, codes, residCents) _
           val hitIds = new Array[Int](k)
           val hitDs = new Array[Double](k)
           val sel = new Array[Int](entries.length)
@@ -614,46 +527,15 @@ object Hnsw {
             }
             if (selCount == 0) Iterator.empty
             else {
-              // the per-query ADC lookup builds ONLY when the query walks
-              // something here — a routed batch must not pay Q luts in
-              // every partition it never probes. Plain encoding shares one
-              // LUT across the partition's entries; residual encoding
-              // shifts the query per cluster ([[walkLut]] — partitions
-              // hold one pid by construction, so this is still one LUT
-              // per (query, partition) at steady state).
-              val sharedLut =
-                if (hasPq && residCents == null)
-                  PqKernel.buildLookup(qv, pqCentroids, pqNBits, dist)
-                    .map(_.toFloat)
-                else null
-              val qn = if (hasPq && cosine) {
-                var acc = 0.0; var i = 0
-                while (i < qv.length) { acc += qv(i).toDouble * qv(i); i += 1 }
-                math.sqrt(acc)
-              } else 0.0
+              val w = walk(qv)
               st.size = 0 // reuse: insert only reads [0, size)
               var si = 0
               while (si < selCount) {
-                val e2 = entries(sel(si))._2
-                val cnt =
-                  if (!hasPq) e2.graph.searchInto(qv, k, efq, hitIds, hitDs)
-                  else {
-                    val lut =
-                      if (sharedLut != null) sharedLut
-                      else walkLut(qv, entries(sel(si))._1, residCents,
-                        pqCentroids, pqNBits, dist)
-                    val (cm, cd) = codes(sel(si))
-                    val distFn: Int => Double = { idx =>
-                      val s = PqKernel.adcOne(cm, idx * pqM, pqM, pqK, lut)
-                      if (cosine)
-                        1.0 - s / math.max(math.sqrt(cd(idx)) * qn, 1e-10)
-                      else s
-                    }
-                    e2.graph.searchFnInto(distFn, qv, k, efq, hitIds, hitDs)
-                  }
+                val cnt = w(sel(si), hitIds, hitDs)
+                val ids = entries(sel(si))._2.ids
                 var i = 0
                 while (i < cnt) {
-                  if (hitDs(i) <= ub) st.insert(e2.ids(hitIds(i)), hitDs(i), null)
+                  if (hitDs(i) <= ub) st.insert(ids(hitIds(i)), hitDs(i), null)
                   i += 1
                 }
                 si += 1
@@ -708,32 +590,6 @@ object Hnsw {
     sys.props.get("graft.serve.driverMergeMaxRows").map(_.toLong)
       .getOrElse(4L << 20)
 
-  /** [[searchPinned]] with the ADC-scored walk + exact re-rank — `knn_pq`
-    * (`/root/reference/src/index_algorithm/hnsw_index.rs:672-697`) for
-    * indexes past the broadcast gate. */
-  def searchPinnedPq(
-      index: DataFrame,
-      queries: DataFrame,
-      model: PqModel,
-      k: Int,
-      ef: Option[Int] = None,
-      m: Int = 16,
-      efConstruction: Int = 200,
-      upperBound: Double = Double.PositiveInfinity,
-      cacheKey: Option[String] = None): DataFrame = {
-    require(!model.residual,
-      "residual-trained PqModel requires the routed walk (IvfHnsw.searchPinnedPq)")
-    val spark = index.sparkSession
-    import spark.implicits._
-    val qs = queries
-      .select(col("query_id").cast("long"), col("query_vec"))
-      .as[(Long, Array[Float])].collect()
-      .map { case (qid, qv) => (qid, qv, null: Array[Int]) }
-    pinnedSearchCore(index, qs, k,
-      ef.getOrElse(math.max(efConstruction, 2 * m) / 2),
-      model.dist, m, efConstruction, upperBound, cacheKey, Some(model))
-  }
-
   /** Driver-UNBOUNDED indexed search — the oversized-batch arm. Every
     * other pinned/broadcast arm starts by collecting the query batch to
     * the driver; past the serving gate that collect is the scaling bug, so
@@ -752,8 +608,9 @@ object Hnsw {
     * the top-k merge — the batch-similarity-JOIN regime with the index
     * still pruning the scan.
     *
-    * With `pq`, nodes are ADC-scored from per-partition code matrices and
-    * exact re-ranked ([[HnswGraph.searchFnInto]]), as the collected arms.
+    * With `pq`, nodes are ADC-scored from per-subgraph code matrices and
+    * exact re-ranked ([[HnswGraph.searchFnInto]]), as the collected arms;
+    * a residual-trained model needs the routed (L2) stream.
     */
   private[graft] def searchPinnedStream(
       index: DataFrame,
@@ -769,33 +626,17 @@ object Hnsw {
       route: Option[(IvfModel, Int)] = None): DataFrame = {
     val spark = index.sparkSession
     import spark.implicits._
-    val efq = ef.getOrElse(math.max(efConstruction, 2 * m) / 2)
+    val efq = ef.getOrElse(defaultEf(m, efConstruction))
     // routed L2 (ef, pq) with a residual-trained quantizer: residual
     // encoding, as the collected arm; plain-trained models encode plain
     val residCents: Array[Array[Float]] =
       if (pq.exists(_.residual) && dist != "cosine")
         route.map(_._1.centroids).orNull
       else null
-    require(pq.forall(_.residual == (residCents != null)),
-      "residual-trained PqModel requires a routed stream walk")
-    val pinned = cacheKey match {
-      case Some(ckey) => pinnedGetOrBuild(ckey)(pidPartitioned(index))
-      case None => pidPartitioned(index)
-    }
+    val adc = adcFor(pq, dist, residCents)
+    val pinned = pinnedIndex(index, cacheKey)
     val nPids = pinned.getNumPartitions
     val ck = cacheKey
-    val hasPq = pq.isDefined
-    val pqCentroids = pq.map(_.centroids).orNull
-    val pqCentDot = pq.map(_.centroidDotCache).orNull
-    val pqGroupsArr = pq.map(p => PqKernel.pqGroups(p.dim, p.m)).orNull
-    val pqM = pq.map(_.m).getOrElse(0)
-    val pqK = pq.map(_.k).getOrElse(0)
-    val pqNBits = pq.map(_.nBits).getOrElse(0)
-    val pqId =
-      if (hasPq)
-        java.util.Arrays.deepHashCode(pqCentroids.asInstanceOf[Array[AnyRef]])
-      else 0
-    val cosine = dist == "cosine"
 
     val qRdd = queries
       .select(col("query_id").cast("long"), col("query_vec"))
@@ -826,45 +667,20 @@ object Hnsw {
         val entries = entriesFor(idxIt, ck, spid, dist, m, efConstruction)
         if (entries.isEmpty) Iterator.empty
         else {
-          val codes: Array[(Array[Byte], Array[Double])] =
-            if (!hasPq) null
-            else codeMatricesFor(entries, ck, spid, pqId, pqCentroids,
-              pqGroupsArr, pqCentDot, pqM, pqK, cosine, residCents)
+          val codes =
+            if (adc == null) null else codesFor(entries, ck.orNull, adc, residCents)
+          val walk = walker(entries, k, efq, adc, codes, residCents) _
           val hitIds = new Array[Int](k)
           val hitDs = new Array[Double](k)
           qit.flatMap { case (qid, qv) =>
             // a query arrives here because a pid of this partition is on
             // its probe list; partitions hold exactly one pid by
             // construction, so every resident graph is walked
-            val sharedLut =
-              if (hasPq && residCents == null)
-                PqKernel.buildLookup(qv, pqCentroids, pqNBits, dist)
-                  .map(_.toFloat)
-              else null
-            val qn = if (hasPq && cosine) {
-              var acc = 0.0; var i = 0
-              while (i < qv.length) { acc += qv(i).toDouble * qv(i); i += 1 }
-              math.sqrt(acc)
-            } else 0.0
+            val w = walk(qv)
             Iterator.range(0, entries.length).flatMap { ei =>
-              val e2 = entries(ei)._2
-              val cnt =
-                if (!hasPq) e2.graph.searchInto(qv, k, efq, hitIds, hitDs)
-                else {
-                  val lut =
-                    if (sharedLut != null) sharedLut
-                    else walkLut(qv, entries(ei)._1, residCents,
-                      pqCentroids, pqNBits, dist)
-                  val (cm, cd) = codes(ei)
-                  val distFn: Int => Double = { idx =>
-                    val s = PqKernel.adcOne(cm, idx * pqM, pqM, pqK, lut)
-                    if (cosine)
-                      1.0 - s / math.max(math.sqrt(cd(idx)) * qn, 1e-10)
-                    else s
-                  }
-                  e2.graph.searchFnInto(distFn, qv, k, efq, hitIds, hitDs)
-                }
-              Iterator.range(0, cnt).map(i => (qid, e2.ids(hitIds(i)), hitDs(i)))
+              val cnt = w(ei, hitIds, hitDs)
+              val ids = entries(ei)._2.ids
+              Iterator.range(0, cnt).map(i => (qid, ids(hitIds(i)), hitDs(i)))
             }
           }
         }
@@ -885,6 +701,11 @@ object Hnsw {
     * already resident in [[HnswGraphCache]] keep serving. The result is a
     * local relation of (query_id, id, distance), ascending (distance, id)
     * per query. For indexes too big for the driver, use [[searchPinned]].
+    *
+    * With `pq` (plain-trained, the quantizer of the table the index was
+    * built on), the walk is the reference's `knn_pq`: sub-linear over the
+    * codes, with the same output contract whenever ef is generous enough
+    * for the walk to cover the exact top-k.
     */
   def searchBroadcast(
       index: DataFrame,
@@ -895,9 +716,10 @@ object Hnsw {
       m: Int = 16,
       efConstruction: Int = 200,
       upperBound: Double = Double.PositiveInfinity,
-      cacheKey: Option[String] = None): DataFrame =
+      cacheKey: Option[String] = None,
+      pq: Option[PqModel] = None): DataFrame =
     hitsFrame(queries, residentRows(index, queries, k, ef, dist, m,
-      efConstruction, upperBound, cacheKey).rows)
+      efConstruction, upperBound, cacheKey, pq).rows)
 
   /** A serving search's winners on the driver: `rows` are (query_id, id,
     * distance), per query ascending (distance, id), queries in batch order.
@@ -920,12 +742,15 @@ object Hnsw {
       efConstruction: Int = 200,
       upperBound: Double = Double.PositiveInfinity,
       cacheKey: Option[String] = None,
+      pq: Option[PqModel] = None,
       withVecs: Boolean = false): Hits = {
-    val efq = ef.getOrElse(math.max(efConstruction, 2 * m) / 2)
-    val entries = ResidentIndex.graphs(index, cacheKey, dist, m, efConstruction).entries
-    residentWalk(queries, entries, k, upperBound, withVecs) {
-      qv => (ei, ids, ds) => entries(ei)._2.graph.searchInto(qv, k, efq, ids, ds)
-    }
+    val adc = adcFor(pq, dist, null)
+    val efq = ef.getOrElse(defaultEf(m, efConstruction))
+    val served = ResidentIndex.graphs(index, cacheKey, dist, m, efConstruction)
+    val entries = served.entries
+    val codes = if (adc == null) null else codesFor(entries, served.gen, adc, null)
+    residentWalk(queries, entries, k, upperBound, withVecs)(
+      walker(entries, k, efq, adc, codes, null))
   }
 
   private val hitsSchema = StructType(Seq(
@@ -938,8 +763,8 @@ object Hnsw {
     queries.sparkSession.createDataFrame(
       java.util.Arrays.asList(rows.map(r => Row(r._1, r._2, r._3)): _*), hitsSchema)
 
-  /** The resident arms' shared walk: per query, walk every subgraph and
-    * merge top-k across subgraphs by ascending (distance, id). `walker`
+  /** The resident walk's driver loop: per query, walk every subgraph and
+    * merge top-k across subgraphs by ascending (distance, id). `walk`
     * yields, per query vector, the walk of subgraph `ei` into
     * (ids, distances), returning its hit count. With `withVecs`, each
     * candidate's (subgraph, local index) is kept, so a winner's vector is
@@ -950,13 +775,13 @@ object Hnsw {
       k: Int,
       upperBound: Double,
       withVecs: Boolean)(
-      walker: Array[Float] => (Int, Array[Int], Array[Double]) => Int): Hits = {
+      walk: Array[Float] => (Int, Array[Int], Array[Double]) => Int): Hits = {
     val qs = ResidentIndex.queries(queries)
     val out = new Array[Array[(Long, Long, Double)]](qs.length)
     val outVecs = new Array[Array[Array[Float]]](qs.length)
     ResidentIndex.parallel(qs.length) { qi =>
       val (qid, qv) = qs(qi)
-      val walk = walker(qv)
+      val w = walk(qv)
       val subIds = new Array[Int](k)
       val subDs = new Array[Double](k)
       val st = new TopKState(k, withPayload = false)
@@ -964,7 +789,7 @@ object Hnsw {
       val at = if (withVecs) new java.util.HashMap[Long, Long] else null
       var ei = 0
       while (ei < entries.length) {
-        val c = walk(ei, subIds, subDs)
+        val c = w(ei, subIds, subDs)
         val ids = entries(ei)._2.ids
         var i = 0
         while (i < c) {
@@ -983,103 +808,5 @@ object Hnsw {
       }
     }
     Hits(out.flatten, if (withVecs) Some(outVecs.flatten) else None)
-  }
-
-  /** Per-subgraph PQ code matrices of [[searchBroadcastPq]]:
-    * (generation#pq<model>, pid) → (codes n×m, per-node centroid self-dot
-    * sums — cosine only, null for L2). Built once per (subgraph, model) by
-    * encoding the resident graph's vectors (deterministic — identical to
-    * decoding the stored code column). */
-  private val pqCodesCache: HnswGraphCache.ByteLru[(String, Int), (Array[Byte], Array[Double])] =
-    new HnswGraphCache.ByteLru[(String, Int), (Array[Byte], Array[Double])](
-      () => math.max(codesMaxBytes / 16, codesMaxBytes - pinnedCodesCache.currentBytes))
-
-  /** HNSW+PQ combined traversal, serving shape — the reference's
-    * `HNSWIndex::knn_pq` (`/root/reference/src/index_algorithm/
-    * hnsw_index.rs:672-697`): beam-walk each subgraph scoring nodes by ADC
-    * code lookup, then exact re-rank of the ef survivors (`pq_resort`).
-    * Sub-linear over the codes — the graph prunes the scan the flat ADC
-    * path pays per query — with the same output contract as
-    * [[searchBroadcast]] whenever ef is generous enough for the walk to
-    * cover the exact top-k.
-    *
-    * Same driver-resident graphs and walk as [[searchBroadcast]]; `model`
-    * must be the quantizer of the table the index was built on.
-    */
-  def searchBroadcastPq(
-      index: DataFrame,
-      queries: DataFrame,
-      model: PqModel,
-      k: Int,
-      ef: Option[Int] = None,
-      m: Int = 16,
-      efConstruction: Int = 200,
-      upperBound: Double = Double.PositiveInfinity,
-      cacheKey: Option[String] = None): DataFrame =
-    hitsFrame(queries, residentPqRows(index, queries, model, k, ef, m,
-      efConstruction, upperBound, cacheKey).rows)
-
-  /** [[searchBroadcastPq]] as driver rows, like [[residentRows]]. */
-  private[graft] def residentPqRows(
-      index: DataFrame,
-      queries: DataFrame,
-      model: PqModel,
-      k: Int,
-      ef: Option[Int] = None,
-      m: Int = 16,
-      efConstruction: Int = 200,
-      upperBound: Double = Double.PositiveInfinity,
-      cacheKey: Option[String] = None,
-      withVecs: Boolean = false): Hits = {
-    require(!model.residual,
-      "residual-trained PqModel requires the routed walk (IvfHnsw.searchPinnedPq)")
-    val dist = model.dist
-    val cosine = dist == "cosine"
-    val pm = model.m
-    val kCent = model.k
-    val nBits = model.nBits
-    val centroids = model.centroids
-    val centDot = model.centroidDotCache
-    val groups = PqKernel.pqGroups(model.dim, pm)
-    // quantizer identity folded into the codes-cache key (same scheme as the
-    // pinned codes cache): clearPqTable+buildPqTable leaves the index
-    // cacheKey unchanged, so a retrained quantizer must not be served stale
-    // code matrices for beam selection
-    val pqId = java.util.Arrays.deepHashCode(centroids.asInstanceOf[Array[AnyRef]])
-    val efq = ef.getOrElse(math.max(efConstruction, 2 * m) / 2)
-
-    val served = ResidentIndex.graphs(index, cacheKey, dist, m, efConstruction)
-    val entries = served.entries
-    val allCodes = entries.map { case (pid, e) =>
-      def build = encodeCodes(e, null, centroids, groups, centDot, pm, kCent, cosine)
-      if (served.gen == null) build
-      else {
-        val kk = (served.gen + "#pq" + pqId, pid)
-        pqCodesCache.get(kk).getOrElse {
-          val c = graft.index.CacheStats.timedCodesBuild(build)
-          pqCodesCache.put(kk, c, codesBytes(c))
-          c
-        }
-      }
-    }
-    residentWalk(queries, entries, k, upperBound, withVecs) { qv =>
-      // float lut: selection-grade precision (winners are exact
-      // re-ranked), half the cache footprint of double
-      val lut = PqKernel.buildLookup(qv, centroids, nBits, dist).map(_.toFloat)
-      val qn = if (cosine) {
-        var acc = 0.0; var i = 0
-        while (i < qv.length) { acc += qv(i).toDouble * qv(i); i += 1 }
-        math.sqrt(acc)
-      } else 0.0
-      (ei, ids, ds) => {
-        val (codes, cdRow) = allCodes(ei)
-        val distFn: Int => Double = { idx =>
-          val s = PqKernel.adcOne(codes, idx * pm, pm, kCent, lut)
-          if (cosine) 1.0 - s / math.max(math.sqrt(cdRow(idx)) * qn, 1e-10)
-          else s
-        }
-        entries(ei)._2.graph.searchFnInto(distFn, qv, k, efq, ids, ds)
-      }
-    }
   }
 }

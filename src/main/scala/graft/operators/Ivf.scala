@@ -76,34 +76,30 @@ object Ivf {
     IvfModel(centroids, dist)
   }
 
-  /** F11 as a Column: nearest-centroid id (ties → lowest id). The centroid
-    * matrix is broadcast here (r21, guide §2.6/§5): embedded in the
-    * expression it was copied into every task binary — ~2 MB/task at
-    * kc=512 × d960, the r20 "task of very large size" warnings. */
-  def nearestCentroid(vec: Column, centroids: Array[Array[Float]], dist: String): Column =
-    nearestCentroid(vec, org.apache.spark.sql.SparkSession.active
-      .sparkContext.broadcast(centroids), dist)
-
-  /** [[nearestCentroid]] over a broadcast the caller owns (and releases). */
+  /** F11 as a Column: nearest-centroid id (ties → lowest id), over a
+    * centroid broadcast the caller owns and releases. The matrix travels
+    * as a broadcast (r21, guide §2.6/§5): embedded in the expression it was
+    * copied into every task binary — ~2 MB/task at kc=512 × d960, the r20
+    * "task of very large size" warnings. */
   def nearestCentroid(vec: Column, centroids: Broadcast[Array[Array[Float]]],
       dist: String): Column =
     ColumnShim.column(NearestCentroid(ColumnShim.expression(vec), centroids, dist))
 
-  /** B3 — assignment pass: adds a `cluster` column. One full scan, no
-    * shuffle; write with `.partitionBy("cluster")` for pruned probes. */
-  def assign(base: DataFrame, model: IvfModel, vecCol: String = "vec"): DataFrame =
-    base.withColumn("cluster", nearestCentroid(col(vecCol), model.centroids, model.dist))
-
-  /** [[assign]] for one write: `use` runs every action over the assigned
-    * frame, then the centroid broadcast is unpersisted instead of waiting
-    * for the GC to find it (the catalog's append path assigns per call). */
+  /** B3 — assignment pass for one write: adds a `cluster` column (one full
+    * scan, no shuffle; write with `.partitionBy("cluster")` for pruned
+    * probes). `use` runs every action over the assigned frame, then the
+    * centroid broadcast is unpersisted instead of waiting for the GC to
+    * find it (the catalog's append path assigns per call). */
   def withAssigned[T](base: DataFrame, model: IvfModel)(use: DataFrame => T): T = {
     val bc = base.sparkSession.sparkContext.broadcast(model.centroids)
     try use(base.withColumn("cluster", nearestCentroid(col("vec"), bc, model.dist)))
     finally bc.unpersist(blocking = false)
   }
 
-  /** Train + assign (`IVFIndex::from_vec_set`). */
+  /** Train + assign (`IVFIndex::from_vec_set`). The assigned frame is lazy
+    * and reads the centroids through one broadcast of its own, which lives
+    * as long as the frame; a long-lived process that assigns per call uses
+    * [[withAssigned]]. */
   def build(
       base: DataFrame,
       k: Int,
@@ -113,7 +109,8 @@ object Ivf {
       seed: Long = 42L,
       trainFraction: Option[Double] = None): (IvfModel, DataFrame) = {
     val model = train(base, k, dist, maxIter, tol, seed, trainFraction)
-    (model, assign(base, model))
+    (model, base.withColumn("cluster", nearestCentroid(col("vec"),
+      base.sparkSession.sparkContext.broadcast(model.centroids), dist)))
   }
 
   /** The centroid sidecar as a DataFrame (cluster: int, centroid: array<float>). */
@@ -125,7 +122,7 @@ object Ivf {
 
   /** T6 — probe search over an assigned table.
     *
-    * @param assigned (id, vec, cluster) table (output of [[assign]])
+    * @param assigned (id, vec, cluster) table (output of [[build]])
     * @param nProbes  the reference's `ef` for IVF; None → model default (4)
     * @return (query_id, id, distance) ascending (distance, id) per query
     */
@@ -223,24 +220,13 @@ object Ivf {
     * partition filter, so the scan's `PartitionFilters` restrict it to the
     * probed directories: at 1000 clusters × 4 probes a batch touches ~0.4%
     * of the table's bytes, the entire point of IVF at 100 TB. Per-query
-    * restriction + exact top-k then match [[search]] row for row. */
-  def searchPartitioned(
-      path: String,
-      model: IvfModel,
-      queries: DataFrame,
-      k: Int,
-      nProbes: Option[Int] = None,
-      upperBound: Double = Double.PositiveInfinity): DataFrame =
-    searchPartitionedDf(
-      queries.sparkSession.read.parquet(s"$path/data"),
-      model, queries, k, nProbes, upperBound)
-
-  /** [[searchPartitioned]] over a PRE-LISTED data DataFrame: listing a
+    * restriction + exact top-k then match [[search]] row for row.
+    *
+    * `dataDf` is the layout's `data` directory as read once: listing a
     * cluster-partitioned layout is a per-`read.parquet`-call driver cost
     * (~1.3 s at kc=512, measured for the SQ/BQ sidecars) that a serving
     * deployment pays once per index generation, not once per batch — the
-    * catalog passes its cached listing here (r20; the SQ/BQ routed arms
-    * already did). Results identical: same scan, same partition filter. */
+    * catalog passes its cached listing here (r20). */
   def searchPartitionedDf(
       dataDf: DataFrame,
       model: IvfModel,

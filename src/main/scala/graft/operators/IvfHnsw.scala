@@ -22,8 +22,10 @@ import graft.index.HnswGraph
   * degenerate to the exact union, which is the oracle-gradable config.
   *
   * Index schema matches [[Hnsw.buildIndex]] (`pid` = cluster id), so the
-  * sidecar persists/pins identically; search reuses
-  * [[Hnsw.pinnedSearchCore]] with a per-query probe list.
+  * sidecar persists/pins identically. [[searchPinned]] is the one routed
+  * walk: the pinned walk of [[Hnsw.pinnedSearchCore]] with a per-query
+  * probe list, plain or (with `pq`) ADC-scored — residual-encoded when the
+  * quantizer was trained on residuals ([[trainResidualPq]]).
   */
 object IvfHnsw {
 
@@ -60,8 +62,15 @@ object IvfHnsw {
     val spark = base.sparkSession
     import spark.implicits._
     val src = base.select(col("id"), col("vec"))
-    val (model0, assigned0) = Ivf.build(src, kClusters, dist, seed = seed,
+    val model0 = Ivf.train(src, kClusters, dist, seed = seed,
       trainFraction = trainFraction)
+    // one centroid broadcast per assignment: the cell counts (and the split
+    // samples) read the trained model's; the index reads the final model's.
+    // A split releases the first once its jobs are done; the last lives as
+    // long as the returned (lazy) index frame.
+    val cents0 = spark.sparkContext.broadcast(model0.centroids)
+    val assigned0 = src.withColumn("cluster",
+      Ivf.nearestCentroid(col("vec"), cents0, dist))
     val counts = assigned0.groupBy("cluster").count().collect()
       .map(r => (r.getInt(0), r.getLong(1)))
     val over = counts.filter(_._2 > maxGraphRows)
@@ -81,11 +90,13 @@ object IvfHnsw {
               maxIter = 10, tol = 1e-4, seed = seed + c)
           c -> cents
         }.toMap
+        cents0.unpersist(blocking = false)
         val cents = model0.centroids.indices.flatMap { i =>
           subCents.getOrElse(i, Array(model0.centroids(i))).toSeq
         }.toArray
         val m2 = IvfModel(cents, dist, defaultNProbes)
-        (m2, Ivf.assign(src, m2))
+        (m2, src.withColumn("cluster", Ivf.nearestCentroid(col("vec"),
+          spark.sparkContext.broadcast(m2.centroids), dist)))
       }
     val idx = assigned
       .select(col("cluster").cast("int"), col("id").cast("long"), col("vec"))
@@ -107,10 +118,21 @@ object IvfHnsw {
 
   /** Routed batch search over a pinned index: probe lists are selected
     * driver-side against the centroid sidecar (exact distances, ties →
-    * lowest cluster — identical to [[Ivf.searchPartitioned]]), then each
+    * lowest cluster — identical to [[Ivf.searchPartitionedDf]]), then each
     * pinned partition walks only the graphs its queries probed.
     * Steady-state per-batch cost: Q × n_probes graph walks + the top-k
     * merge — independent of the total partition count.
+    *
+    * With `pq`, each probed cluster's walk is ADC-scored with exact
+    * re-rank (`knn_pq`): routing bounds the number of walks, codes bound
+    * the bytes each walk touches — the composition matching the
+    * reference's fastest published configuration (HNSW+PQ,
+    * `/root/reference/data/t_bench.toml:29-55`) past one machine's memory.
+    * `pq` must be trained on the table the index was built on. A
+    * residual-trained model ([[trainResidualPq]], L2 only) encodes each
+    * node as x − centroid(cluster) and scores the query shifted by the
+    * same centroid (FAISS's IVFPQ design); measured walk recall at fixed
+    * (m, ef) rises accordingly (IvfHnswSpec). A plain model encodes plain.
     *
     * @param nProbes the reference's IVF `ef` (`ivf_index.rs:137-143`);
     *                None → model default. `kClusters` probes = exact union
@@ -127,56 +149,14 @@ object IvfHnsw {
       m: Int = 16,
       efConstruction: Int = 200,
       upperBound: Double = Double.PositiveInfinity,
-      cacheKey: Option[String] = None): DataFrame = {
-    val spark = index.sparkSession
-    import spark.implicits._
+      cacheKey: Option[String] = None,
+      pq: Option[PqModel] = None): DataFrame = {
     val np = math.max(1, nProbes.getOrElse(model.defaultNProbes))
-    val qs = queries
-      .select(col("query_id").cast("long"), col("query_vec"))
-      .as[(Long, Array[Float])].collect()
+    val qs = ResidentIndex.queries(queries)
       .map { case (qid, qv) => (qid, qv, Ivf.probeList(qv, model, np)) }
-    Hnsw.pinnedSearchCore(index, qs, k,
-      ef.getOrElse(math.max(efConstruction, 2 * m) / 2),
-      model.dist, m, efConstruction, upperBound, cacheKey,
-      routeFloor = model.centroids.length)
-  }
-
-  /** [[searchPinned]] with the ADC-scored walk + exact re-rank (`knn_pq`)
-    * inside each probed cluster — routing bounds the number of walks,
-    * codes bound the bytes each walk touches: the composition matching the
-    * reference's fastest published configuration (HNSW+PQ,
-    * `/root/reference/data/t_bench.toml:29-55`) past one machine's memory.
-    * `pqModel` must be trained on the same table the index was built on.
-    *
-    * L2 tables encode RESIDUALS x − centroid(cluster) (FAISS's IVFPQ
-    * design — `Hnsw.codeMatricesFor`): the shift is exact for L2, the
-    * quantizer's resolution all goes to within-cell spread, and measured
-    * walk recall at fixed (m, ef) rises accordingly (IvfHnswSpec). Cosine
-    * encodes plain (a shift changes cosine distances). */
-  def searchPinnedPq(
-      index: DataFrame,
-      model: IvfModel,
-      pqModel: PqModel,
-      queries: DataFrame,
-      k: Int,
-      ef: Option[Int] = None,
-      nProbes: Option[Int] = None,
-      m: Int = 16,
-      efConstruction: Int = 200,
-      upperBound: Double = Double.PositiveInfinity,
-      cacheKey: Option[String] = None): DataFrame = {
-    val spark = index.sparkSession
-    import spark.implicits._
-    val np = math.max(1, nProbes.getOrElse(model.defaultNProbes))
-    val qs = queries
-      .select(col("query_id").cast("long"), col("query_vec"))
-      .as[(Long, Array[Float])].collect()
-      .map { case (qid, qv) => (qid, qv, Ivf.probeList(qv, model, np)) }
-    Hnsw.pinnedSearchCore(index, qs, k,
-      ef.getOrElse(math.max(efConstruction, 2 * m) / 2),
-      pqModel.dist, m, efConstruction, upperBound, cacheKey, Some(pqModel),
-      routeFloor = model.centroids.length,
-      residCents = if (pqModel.residual) model.centroids else null)
+    Hnsw.pinnedSearchCore(index, qs, k, ef, model.dist, m, efConstruction,
+      upperBound, cacheKey, pq, routeFloor = model.centroids.length,
+      residCents = if (pq.exists(_.residual)) model.centroids else null)
   }
 
   /** Train a product quantizer on IVF RESIDUALS x − centroid(cluster(x)) —
@@ -187,7 +167,7 @@ object IvfHnsw {
     * the within-cell spread that actually ranks neighbors. L2 only — the
     * per-cluster shift is a distance identity for L2 and meaningless for
     * cosine. The returned model is flagged `residual`; cluster-blind arms
-    * reject it, [[searchPinnedPq]] encodes and shifts per probed cluster. */
+    * reject it, [[searchPinned]] with `pq` encodes and shifts per probed cluster. */
   def trainResidualPq(
       base: DataFrame,
       model: IvfModel,

@@ -140,7 +140,7 @@ object Pq {
     * cluster. Scoring raw vectors with it would be silently wrong. */
   private def requirePlain(model: PqModel): Unit =
     require(!model.residual,
-      "residual-trained PqModel requires the routed walk (IvfHnsw.searchPinnedPq)")
+      "residual-trained PqModel requires the routed walk (IvfHnsw.searchPinned with pq)")
 
   def encodeCol(vec: Column, model: PqModel): Column = {
     requirePlain(model)

@@ -10,10 +10,11 @@ import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.types.{ArrayType, FloatType, IntegerType, LongType}
 import graft.index.{CacheStats, HnswGraph, HnswGraphCache}
 
-/** Driver-resident serving state of the HNSW serving arms
-  * ([[Hnsw.searchBroadcast]], [[Hnsw.searchBroadcastPq]]) — the embedded,
+/** Driver-resident serving state of the resident HNSW walk
+  * ([[Hnsw.searchBroadcast]], plain or ADC-scored) — the embedded,
   * in-process index of the reference (`HNSWIndex::search` over a graph
-  * already in memory). Per cacheKey it records a generation key, the
+  * already in memory) — plus the driver-side query read of every HNSW walk
+  * that collects its batch ([[queries]]) and the walk pool ([[parallel]]). Per cacheKey it records a generation key, the
   * subgraphs (pids) of the index and, for a bare parquet sidecar, which
   * part files hold each pid. The rebuilt graphs themselves live in
   * [[HnswGraphCache]] under (generation, pid), inside its byte budget; the
@@ -218,9 +219,10 @@ private[operators] object ResidentIndex {
       case _ => Set.empty
     }
 
-  /** The query batch as (query_id, query_vec), read on the driver. A local
-    * relation (what `createDataFrame` over rows and `Seq.toDF` build) is
-    * read straight from its rows, with no planning and no job. */
+  /** The query batch as (query_id, query_vec), read on the driver: the
+    * resident and pinned HNSW walks' one query read. A local relation (what
+    * `createDataFrame` over rows and `Seq.toDF` build) is read straight
+    * from its rows, with no planning and no job. */
   def queries(qdf: DataFrame): Array[(Long, Array[Float])] = {
     def at(out: Seq[Attribute], name: String) =
       out.indexWhere(_.name == name)

@@ -391,8 +391,9 @@ object Sq extends Serializable {
     * corpus per batch, which dominates the serving cost once the coarse
     * pass is pruned (measured at 1M×960 np1: ~4 s of a ~5 s batch).
     *
-    * @param codes (id, sq, cluster) — [[Ivf.assign]] output run through
-    *              [[encode]], in memory or the partitioned layout
+    * @param codes (id, sq, cluster) — an assigned frame ([[Ivf.build]],
+    *              [[Ivf.withAssigned]]) run through [[encode]], in memory
+    *              or the partitioned layout
     * @param base  (id, vec) float table for the re-rank; see
     *              [[CoarseMerge.searchIvf]] for the flat-twin options */
   def searchIvf(

@@ -796,7 +796,7 @@ class CatalogSpec extends SparkTestBase {
     // traversal eligible so this test keeps exercising the routed PQ arm
     sys.props("graft.adc.walk.ratio") = "1"
     try {
-      // (ef, pq) beyond the gate + routed ⇒ IvfHnsw.searchPinnedPq:
+      // (ef, pq) beyond the gate + routed ⇒ IvfHnsw.searchPinned with pq:
       // exhaustive ef + full probes + exact re-rank ⇒ equals Flat
       val (routed, served) = dispatchOne(db, "t", vecs(9), 5, ef = Some(200))
       assert(routed == flat)
@@ -807,7 +807,7 @@ class CatalogSpec extends SparkTestBase {
     }
   }
 
-  test("residual PQ sidecar: routed-only dispatch, HNSW fallback on patterns, flag survives reopen") {
+  test("residual PQ sidecar: routed walk, flat scan on patterns, reopen") {
     val root = Files.createTempDirectory(
       java.nio.file.Paths.get("target"), "vecdb_test").toString
     val db = new VecDB(spark, root)
@@ -844,11 +844,12 @@ class CatalogSpec extends SparkTestBase {
       assert(routed == flat)
       assert(served.arm == "knn_pq_routed",
         s"residual table served by '${served.arm}'")
-      // pattern search: flat ADC arms can't score residual codes — plain
-      // HNSW walk fallback, exact distances, same results
+      // pattern search: flat ADC arms can't score residual codes, and an
+      // HNSW walk covers the whole table — the exact filtered scan serves
+      // it, exact distances, same results
       val (odds, oddArm) = patHits(db, odd)
       assert(odds == flatOdd)
-      assert(oddArm == "pq_residual_fallback_hnsw",
+      assert(oddArm == "flat_broadcast",
         s"residual + pattern served by '$oddArm'")
       // the flag must survive the brief round-trip: a reopened catalog
       // that lost it would serve the broadcast arm and mis-score silently

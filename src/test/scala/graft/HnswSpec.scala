@@ -43,7 +43,8 @@ class HnswSpec extends SparkTestBase {
   }
 
   test("distributed search equals Flat exact KNN with generous ef (L2)") {
-    val hnsw = Hnsw.search(base.repartition(4), queries, k = 10, ef = Some(600))
+    val hnsw = Hnsw.searchPinned(Hnsw.buildIndex(base.repartition(4)), queries,
+        k = 10, ef = Some(600))
       .select("query_id", "id").as[(Long, Long)].collect().toSet
     val flat = Knn.exact(base, queries, k = 10)
       .select("query_id", "id").as[(Long, Long)].collect().toSet
@@ -51,8 +52,9 @@ class HnswSpec extends SparkTestBase {
   }
 
   test("distributed search equals Flat exact KNN with generous ef (cosine)") {
-    val hnsw = Hnsw.search(base.repartition(4), queries, k = 8, ef = Some(600),
-        dist = "cosine")
+    val hnsw = Hnsw.searchBroadcast(
+        Hnsw.buildIndex(base.repartition(4), dist = "cosine"), queries, k = 8,
+        ef = Some(600), dist = "cosine")
       .select("query_id", "id").as[(Long, Long)].collect().toSet
     val flat = Knn.exact(base, queries, k = 8, dist = "cosine")
       .select("query_id", "id").as[(Long, Long)].collect().toSet
@@ -60,7 +62,8 @@ class HnswSpec extends SparkTestBase {
   }
 
   test("default ef reaches high recall; k rows per query, ascending") {
-    val res = Hnsw.search(base.repartition(4), queries, k = 10)
+    val res = Hnsw.searchPinned(Hnsw.buildIndex(base.repartition(4)), queries,
+      k = 10)
     assert(res.groupBy("query_id").count().filter($"count" =!= 10).count() == 0)
     val hnsw = res.select("query_id", "id").as[(Long, Long)].collect().toSet
     val flat = Knn.exact(base, queries, k = 10)
@@ -92,7 +95,7 @@ class HnswSpec extends SparkTestBase {
   test("stored-index search equals build-per-search with identical partitioning") {
     val parted = base.repartition(4)
     val idx = Hnsw.buildIndex(parted)
-    val stored = Hnsw.searchIndexed(idx, queries, k = 10, ef = Some(600))
+    val stored = Hnsw.searchBroadcast(idx, queries, k = 10, ef = Some(600))
       .select("query_id", "id").as[(Long, Long)].collect().toSet
     val flat = Knn.exact(base, queries, k = 10)
       .select("query_id", "id").as[(Long, Long)].collect().toSet
@@ -182,14 +185,14 @@ class HnswSpec extends SparkTestBase {
       val flat = Knn.exact(base, queries, k = 10, dist = dist)
         .select("query_id", "id", "distance")
         .as[(Long, Long, Double)].collect().toSet
-      val pq = Hnsw.searchBroadcastPq(idx, queries, model, k = 10,
-          ef = Some(600), cacheKey = Some(s"spec_pq_$dist"))
+      val pq = Hnsw.searchBroadcast(idx, queries, k = 10, ef = Some(600),
+          dist = dist, cacheKey = Some(s"spec_pq_$dist"), pq = Some(model))
         .select("query_id", "id", "distance")
         .as[(Long, Long, Double)].collect().toSet
       assert(pq == flat, s"dist=$dist")
       // cached second batch identical
-      val second = Hnsw.searchBroadcastPq(idx, queries, model, k = 10,
-          ef = Some(600), cacheKey = Some(s"spec_pq_$dist"))
+      val second = Hnsw.searchBroadcast(idx, queries, k = 10, ef = Some(600),
+          dist = dist, cacheKey = Some(s"spec_pq_$dist"), pq = Some(model))
         .select("query_id", "id", "distance")
         .as[(Long, Long, Double)].collect().toSet
       assert(second == flat, s"dist=$dist cached")
@@ -205,13 +208,13 @@ class HnswSpec extends SparkTestBase {
       val flat = Knn.exact(base, queries, k = 10, dist = dist)
         .select("query_id", "id", "distance")
         .as[(Long, Long, Double)].collect().toSet
-      val pq = Hnsw.searchPinnedPq(idx, queries, model, k = 10,
-          ef = Some(600), cacheKey = Some(s"spec_ppq_$dist"))
+      val pq = Hnsw.searchPinned(idx, queries, k = 10, ef = Some(600),
+          dist = dist, cacheKey = Some(s"spec_ppq_$dist"), pq = Some(model))
         .select("query_id", "id", "distance")
         .as[(Long, Long, Double)].collect().toSet
       assert(pq == flat, s"dist=$dist")
-      val second = Hnsw.searchPinnedPq(idx, queries, model, k = 10,
-          ef = Some(600), cacheKey = Some(s"spec_ppq_$dist"))
+      val second = Hnsw.searchPinned(idx, queries, k = 10, ef = Some(600),
+          dist = dist, cacheKey = Some(s"spec_ppq_$dist"), pq = Some(model))
         .select("query_id", "id", "distance")
         .as[(Long, Long, Double)].collect().toSet
       assert(second == flat, s"dist=$dist cached")
@@ -223,7 +226,8 @@ class HnswSpec extends SparkTestBase {
     val model = graft.operators.Pq.train(base, m = 8, nBits = 4)
     val flat = Knn.exact(base, queries, k = 10)
       .select("query_id", "id").as[(Long, Long)].collect().toSet
-    val pq = Hnsw.searchBroadcastPq(idx, queries, model, k = 10, ef = Some(100))
+    val pq = Hnsw.searchBroadcast(idx, queries, k = 10, ef = Some(100),
+      pq = Some(model))
       .select("query_id", "id").as[(Long, Long)].collect().toSet
     val recall = pq.intersect(flat).size.toDouble / flat.size
     assert(recall >= 0.8, s"recall $recall < 0.8 at ef=100 over ADC walk")
@@ -270,10 +274,11 @@ class HnswSpec extends SparkTestBase {
   }
 
   test("upper bound filters hits") {
-    val all = Hnsw.search(base.repartition(4), queries, k = 10, ef = Some(600))
+    val idx = Hnsw.buildIndex(base.repartition(4)).cache()
+    val all = Hnsw.searchPinned(idx, queries, k = 10, ef = Some(600))
     val cut = all.agg(avg($"distance")).head().getDouble(0)
-    val bounded = Hnsw.search(base.repartition(4), queries, k = 10,
-      ef = Some(600), upperBound = cut)
+    val bounded = Hnsw.searchPinned(idx, queries, k = 10, ef = Some(600),
+      upperBound = cut)
     assert(bounded.filter($"distance" > cut).count() == 0)
     assert(bounded.count() < all.count())
   }

@@ -72,8 +72,8 @@ class IvfHnswSpec extends SparkTestBase {
     val (model, idx) = IvfHnsw.buildIndex(base, kClusters = 5,
       trainFraction = Some(0.5))
     val pqModel = graft.operators.Pq.train(base, m = 8, nBits = 4)
-    val routed = IvfHnsw.searchPinnedPq(idx, model, pqModel, queries, k = 10,
-        ef = Some(600), nProbes = Some(5))
+    val routed = IvfHnsw.searchPinned(idx, model, queries, k = 10,
+        ef = Some(600), nProbes = Some(5), pq = Some(pqModel))
       .select("query_id", "id", "distance")
       .as[(Long, Long, Double)].collect().toSet
     val flat = Knn.exact(base, queries, k = 10)
@@ -109,10 +109,10 @@ class IvfHnswSpec extends SparkTestBase {
       val got = df.select("query_id", "id").as[(Long, Long)].collect().toSet
       got.intersect(exact).size.toDouble / exact.size
     }
-    val resid = recall(IvfHnsw.searchPinnedPq(idx, model, residModel, qs,
-      k = 5, ef = Some(10), nProbes = Some(4)))
-    val plain = recall(IvfHnsw.searchPinnedPq(idx, model, plainModel, qs,
-      k = 5, ef = Some(10), nProbes = Some(4)))
+    val resid = recall(IvfHnsw.searchPinned(idx, model, qs, k = 5,
+      ef = Some(10), nProbes = Some(4), pq = Some(residModel)))
+    val plain = recall(IvfHnsw.searchPinned(idx, model, qs, k = 5,
+      ef = Some(10), nProbes = Some(4), pq = Some(plainModel)))
     assert(resid >= plain,
       s"residual recall $resid below plain-encoded recall $plain")
     assert(resid >= 0.9, s"residual walk recall $resid < 0.9 at ef=10")
@@ -123,8 +123,8 @@ class IvfHnswSpec extends SparkTestBase {
         k = 5, ef = 10)
     }
     intercept[IllegalArgumentException] {
-      graft.operators.Hnsw.searchPinnedPq(idx, qs, residModel, k = 5,
-        ef = Some(10))
+      graft.operators.Hnsw.searchPinned(idx, qs, k = 5, ef = Some(10),
+        pq = Some(residModel))
     }
   }
 

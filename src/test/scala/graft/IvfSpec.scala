@@ -38,9 +38,11 @@ class IvfSpec extends SparkTestBase {
       }
       best
     }
-    val got = rows.toDF("id", "vec")
-      .select(col("id"), Ivf.nearestCentroid(col("vec"), cents, "l2sqr").as("c"))
+    val bc = spark.sparkContext.broadcast(cents)
+    val got = try rows.toDF("id", "vec")
+      .select(col("id"), Ivf.nearestCentroid(col("vec"), bc, "l2sqr").as("c"))
       .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
+    finally bc.unpersist(blocking = false)
     rows.foreach { case (id, v) =>
       assert(got(id) == brute(v), s"row $id")
     }
@@ -125,8 +127,8 @@ class IvfSpec extends SparkTestBase {
     assert(reloaded.centroids.zip(model.centroids)
       .forall { case (a, b) => a.sameElements(b) })
     for (np <- Seq(2, 7)) {
-      val part = Ivf.searchPartitioned(dir, reloaded, queries, k = 6,
-        nProbes = Some(np))
+      val part = Ivf.searchPartitionedDf(spark.read.parquet(s"$dir/data"),
+        reloaded, queries, k = 6, nProbes = Some(np))
       val plain = Ivf.search(assigned, model, queries, k = 6, nProbes = Some(np))
         .select("query_id", "id", "distance").as[(Long, Long, Double)]
         .collect().toSet
@@ -157,11 +159,11 @@ class IvfSpec extends SparkTestBase {
     val bcols = spark.read.parquet(s"$bdir/data").columns.toSet
     assert(bcols.contains("vecb") && !bcols.contains("vec"), bcols.toString)
     for (np <- Seq(2, 7)) {
-      val f = Ivf.searchPartitioned(fdir, model, queries, k = 6,
-        nProbes = Some(np)).select("query_id", "id", "distance")
+      val f = Ivf.searchPartitionedDf(spark.read.parquet(s"$fdir/data"), model,
+        queries, k = 6, nProbes = Some(np)).select("query_id", "id", "distance")
         .as[(Long, Long, Double)].collect().toSet
-      val b = Ivf.searchPartitioned(bdir, model, queries, k = 6,
-        nProbes = Some(np)).select("query_id", "id", "distance")
+      val b = Ivf.searchPartitionedDf(spark.read.parquet(s"$bdir/data"), model,
+        queries, k = 6, nProbes = Some(np)).select("query_id", "id", "distance")
         .as[(Long, Long, Double)].collect().toSet
       assert(b == f, s"np=$np (binary layout diverged from float)")
     }
