@@ -44,10 +44,10 @@ object Hnsw {
     * DataFrame suitable for a Parquet sidecar: one row per node with its
     * vector, level, and per-level adjacency (local ids within the
     * subgraph). Every search walks this stored adjacency, so none repeats
-    * the O(N·efC) insert phase. The entry point is not
-    * stored: it is recomputed as the first node of the maximum level, which
-    * is exactly how insertion maintains it (`enterLevel` only advances on
-    * strictly greater draws — `hnsw_index.rs:566-571`).
+    * the O(N·efC) insert phase. The entry point is not stored: it is
+    * recomputed as the first node of the maximum level, which is exactly
+    * how insertion maintains it (`enterLevel` only advances on strictly
+    * greater draws — `hnsw_index.rs:566-571`).
     *
     * @return (pid, local_id, id, vec, level, links)
     */
@@ -274,7 +274,7 @@ object Hnsw {
       id: Int, dist: String, centroids: Array[Array[Array[Float]]],
       centDot: Array[Double], groups: Array[(Int, Int)], m: Int, kc: Int,
       nBits: Int) {
-    private def cosine: Boolean = dist == "cosine"
+    private val cosine = dist == "cosine"
 
     /** The code matrix of one subgraph, encoded from its graph's stored
       * vectors, each shifted by `cent` first when it is non-null. */
@@ -424,8 +424,8 @@ object Hnsw {
   /** Serving-shape search for indexes too big for the driver: PIN the
     * stored index across the cluster (repartitioned by subgraph, persisted)
     * and broadcast the QUERIES — the memory inverse of [[searchBroadcast]].
-    * The first batch pays one
-    * shuffle of the sidecar plus the graph rebuilds; rebuilt graphs pin per
+    * The first batch pays one shuffle of the sidecar plus the graph
+    * rebuilds; rebuilt graphs pin per
     * executor in [[HnswGraphCache.getGroup]] keyed by (cacheKey, Spark
     * partition id) — stable across jobs over the same persisted dataset —
     * so steady-state batches do pure graph walks: no index bytes move, no
