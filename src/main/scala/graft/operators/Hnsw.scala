@@ -12,7 +12,7 @@ import graft.index.{HnswGraph, HnswGraphCache}
   * rows inside one task and stores it as a sidecar; a search walks the
   * subgraphs (a routed search only its probed ones, [[IvfHnsw]]) and merges
   * top-k across them by (distance, id). The reference's single sequential
-  * graph (`/root/reference/src/index_algorithm/hnsw_index.rs`) cannot be
+  * graph (its `src/index_algorithm/hnsw_index.rs`) cannot be
   * mutated concurrently across executors — the subgraph union sidesteps the
   * sequential bidirectional-link mutation entirely, and recall can only
   * improve over one big graph: the global top-k rows live in *some*

@@ -127,7 +127,7 @@ object IvfHnsw {
     * re-rank (`knn_pq`): routing bounds the number of walks, codes bound
     * the bytes each walk touches — the composition matching the
     * reference's fastest published configuration (HNSW+PQ,
-    * `/root/reference/data/t_bench.toml:29-55`) past one machine's memory.
+    * its `data/t_bench.toml:29-55`) past one machine's memory.
     * `pq` must be trained on the table the index was built on. A
     * residual-trained model ([[trainResidualPq]], L2 only) encodes each
     * node as x − centroid(cluster) and scores the query shifted by the
