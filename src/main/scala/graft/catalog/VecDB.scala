@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.json4s.{DefaultFormats, Formats}
 import org.json4s.jackson.Serialization
+import scala.jdk.CollectionConverters._
 
 import graft.operators.{Bq, CoarseMerge, Hnsw, Ivf, IvfHnsw, Knn, Pq, PqModel, Search, Sq, TopK}
 import graft.functions.VectorFunctions
@@ -264,6 +265,11 @@ class VecDB(spark: SparkSession, root: String) {
   }
   private def sidecarDf(path: String, e: TableEntry): DataFrame =
     sidecarCachedAs[DataFrame](path, e)(spark.read.parquet(path))
+  /** The HNSW sidecar through the listing cache, read with its stored
+    * schema: listing it again after an append starts no job. */
+  private def hnswSidecar(e: TableEntry): DataFrame =
+    sidecarCachedAs[DataFrame](hnswDir(e).toString, e)(
+      spark.read.schema(Hnsw.indexSchema).parquet(hnswDir(e).toString))
   /** Cache observability for the eviction spec; not public surface. */
   private[graft] def sidecarCacheEntries: Int = sidecarCached.size
   private[graft] def sidecarCacheBytes: Long = sidecarCached.currentBytes
@@ -540,11 +546,16 @@ class VecDB(spark: SparkSession, root: String) {
       val rows = vecs.zip(metas).zipWithIndex.map { case ((v, m), i) =>
         Row(start + i, v.toSeq, m)
       }
+      val slices = math.max(1, rows.length / 10000)
       val appended = spark.createDataFrame(
-        spark.sparkContext.parallelize(rows.toSeq, math.max(1, rows.length / 10000)),
-        dataSchema(e.dim))
+        spark.sparkContext.parallelize(rows.toSeq, slices), dataSchema(e.dim))
+      val dPath = Paths.get(dataDir(e))
+      val before = listPartFiles(dPath)
       appended.write.mode("append").parquet(dataDir(e))
-      if (vecs.nonEmpty) appendIndexSidecars(key, e, appended)
+      val written = listPartFiles(dPath) -- before
+      if (vecs.nonEmpty) appendIndexSidecars(key, e, appended, vecs.length,
+        Some((vecs.iterator.zipWithIndex.map { case (v, i) => (start + i, v) }
+          .toIndexedSeq, slices)))
       invalidateCache(key)
       // close the mutation window (ADVICE r20): nextId is published at
       // reservation time, so a lock-free search racing this append could
@@ -552,6 +563,15 @@ class VecDB(spark: SparkSession, root: String) {
       // under the FINAL stamp; bumping the generation at completion means
       // stamps published during the window cannot outlive it
       invalidateSidecars(e.filename, append = true)
+      // the appended rows' meta is on the driver already: hand it to the
+      // attach's part-file cache so the next search loads none of it
+      if (vecs.nonEmpty && written.size == 1) {
+        val part = MetaPart(metas.iterator.zipWithIndex.map { case (m, i) =>
+          if (m == null) (start + i, null, null)
+          else (start + i, m.keys.toSeq, m.values.toSeq)
+        }.toSeq)
+        sidecarCached.put(metaKey(e, written.head), part, part.bytes)
+      }
     }
   }
 
@@ -646,7 +666,7 @@ class VecDB(spark: SparkSession, root: String) {
               s"addDataFrame: source re-evaluated non-deterministically " +
               s"($landed rows landed for a reserved range of $n); rolled back")
           }
-          appendIndexSidecars(key, e, withId)
+          appendIndexSidecars(key, e, withId, n, None)
         } finally {
           withId.unpersist()
           // on success the cached handle is stale (missing the new rows);
@@ -687,15 +707,23 @@ class VecDB(spark: SparkSession, root: String) {
     if (!e.hnswRouted || !Files.exists(routeDir(e).resolve("centroids"))) 0
     else cachedRouteModel(e).centroids.length
 
-  /** Index-sidecar upkeep shared by [[batchAdd]] and [[addDataFrame]]:
+  /** Index-sidecar upkeep shared by [[batchAdd]] and [[addDataFrame]] for
+    * the `n` rows of `appended`:
     *
     *  - HNSW: a fresh subgraph over just the new rows keeps searches
     *    complete without touching the stored graphs (subgraph union — the
     *    distributed analog of `HNSWIndex::add`). N small adds would accrete
     *    N tiny subgraphs and serving cost grows with the subgraph count, so
-    *    compact past [[MaxSubgraphs]]. The post-append subgraph count comes
-    *    from ONE column-pruned pre-scan (max pid + distinct count) plus the
-    *    build output's own pid count — no second sidecar scan.
+    *    compact past [[MaxSubgraphs]]. The subgraph count comes from the
+    *    table's pid book ([[pidBook]]) plus what this append wrote: one job
+    *    writes the sidecar part and none scans or counts. `local` holds the
+    *    rows when they are on the driver ([[batchAdd]]), with the slice
+    *    count of their data write: the delta is built there
+    *    ([[Hnsw.buildLocal]], the same graphs the distributed build makes)
+    *    and written from a local relation. On a table the resident walk
+    *    serves (under the gate, unrouted), the new subgraphs then go to
+    *    its state ([[Hnsw.publishResident]]), so the next search reads
+    *    nothing; a compaction skips that and the next search reloads.
     *  - Routed HNSW: delta pids must land AT OR ABOVE the routing floor
     *    (the cluster count), not just above max(pid): k-means clusters can
     *    be empty (duplicate centroids tie-break to the lowest id, skew), so
@@ -709,31 +737,42 @@ class VecDB(spark: SparkSession, root: String) {
     *    broadcast released after the write) and appended into the
     *    partitioned layout.
     */
-  private def appendIndexSidecars(key: String, e: TableEntry, appended: DataFrame): Unit =
+  private def appendIndexSidecars(key: String, e: TableEntry, appended: DataFrame,
+      n: Long, local: Option[(IndexedSeq[(Long, Array[Float])], Int)]): Unit =
     tableLock(key).synchronized {
     if (e.hasHnsw) {
       val floor = routedClusterCount(e)
-      val isDelta = col("pid") >= lit(floor)
-      val stats = spark.read.parquet(hnswDir(e).toString)
-        .agg(coalesce(max(col("pid")) + 1, lit(0)).as("maxp"),
-          count_distinct(when(isDelta, col("pid"))).as("np"),
-          count(when(isDelta, 1)).as("rows")).head()
-      val maxPid = math.max(stats.getInt(0), floor)
-      val prePids = stats.getLong(1)
-      val preRows = stats.getLong(2)
-      val idx = Hnsw.buildIndex(appended, e.dist, efConstruction = e.efConstruction)
-        .withColumn("pid", col("pid") + lit(maxPid))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        idx.write.mode("append").parquet(hnswDir(e).toString)
-        val newStats = idx.agg(count_distinct(col("pid")), count(lit(1))).head()
-        val newPids = newStats.getLong(0)
-        val newRows = newStats.getLong(1)
-        // same size-scaled ceiling as compactHnsw's own guard, so appends
-        // to a large table don't pay a no-op compaction scan every time
-        if (prePids + newPids > deltaPidCeiling(floor, preRows + newRows))
-          compactHnsw(key)
-      } finally idx.unpersist()
+      val book = pidBook(e, floor)
+      val first = math.max(book.next, floor)
+      val dir = hnswDir(e)
+      val before = listPartFiles(dir)
+      val slices = local.map { case (rows, nSlices) =>
+        Hnsw.buildLocal(rows, nSlices, e.dist, efConstruction = e.efConstruction)
+          .map(_.map(r => r.copy(_1 = r._1 + first))).toSeq
+      }
+      val (newPids, next) = slices match {
+        case Some(subgraphs) =>
+          import spark.implicits._
+          subgraphs.flatten.toDF(Hnsw.indexSchema.fieldNames.toIndexedSeq: _*)
+            .coalesce(1).write.mode("append").parquet(dir.toString)
+          (subgraphs.size, first + subgraphs.size)
+        case None =>
+          val built = spark.sparkContext.collectionAccumulator[Int]
+          Hnsw.buildCounting(appended, built, e.dist, efConstruction = e.efConstruction)
+            .withColumn("pid", col("pid") + lit(first))
+            .write.mode("append").parquet(dir.toString)
+          val pids = built.value.asScala
+          (pids.size, first + pids.max + 1)
+      }
+      val grown = VecDB.PidBook(next, book.deltaPids + newPids, book.deltaRows + n)
+      putPidBook(e, grown)
+      // same size-scaled ceiling as compactHnsw's own guard, so appends
+      // to a large table don't pay a no-op compaction scan every time
+      val compacted = grown.deltaPids > deltaPidCeiling(floor, grown.deltaRows) &&
+        compactHnsw(key)
+      if (!compacted && !e.hnswRouted && hnswEligible(e.nextId + n, e.dim))
+        slices.foreach(Hnsw.publishResident(hnswBroadcastKey(e), before,
+          listPartFiles(dir) -- before, _, e.dist, efConstruction = e.efConstruction))
       // the pinned/routed arms' key rotated with nextId: drop exactly the
       // superseded key's pinned RDD, graphs and codes (a prefix-wide
       // invalidateCaches would also drop the broadcast arm's state, which
@@ -809,17 +848,18 @@ class VecDB(spark: SparkSession, root: String) {
     * aside (not deleted) before the new one moves into place, so no crash
     * window leaves `hasHnsw=true` with no readable hnsw directory — and
     * the read path additionally degrades a missing sidecar to Flat
-    * ([[healMissingSidecars]]) rather than throwing. */
-  private def compactHnsw(key: String): Unit = {
+    * ([[healMissingSidecars]]) rather than throwing. Returns whether it
+    * rewrote the sidecar; if so, it also rewrote the pid book. */
+  private def compactHnsw(key: String): Boolean = {
     val e = entry(key)
     val dir = hnswDir(e)
     val floor = routedClusterCount(e)
-    val sidecar = spark.read.parquet(dir.toString)
+    val sidecar = spark.read.schema(Hnsw.indexSchema).parquet(dir.toString)
     val allCounts = sidecar.groupBy("pid").count().collect()
       .map(r => (r.getInt(0), r.getLong(1)))
     val counts = allCounts.filter(_._1 >= floor) // delta subgraphs only
     val totalRows = counts.map(_._2).sum
-    if (counts.length <= deltaPidCeiling(floor, totalRows)) return
+    if (counts.length <= deltaPidCeiling(floor, totalRows)) return false
     val nMerge = counts.length - TargetSubgraphs + 1
     val picked = counts.sortBy { case (p, c) => (c, p) }.take(nMerge)
     val mergePids = picked.map(_._1).toSet
@@ -830,11 +870,12 @@ class VecDB(spark: SparkSession, root: String) {
     // be most of the table, and a single-task rebuild would straggle
     val nTasks = math.max(1L, (mergeRows + CompactRowsPerTask - 1) / CompactRowsPerTask).toInt
     // only compact when it actually reduces the subgraph count
-    if (nTasks >= nMerge) return
-    val merged = Hnsw.buildIndex(
+    if (nTasks >= nMerge) return false
+    val built = spark.sparkContext.collectionAccumulator[Int]
+    val merged = Hnsw.buildCounting(
       sidecar.filter(col("pid").isInCollection(mergePids))
         .select("id", "vec").repartition(nTasks),
-      e.dist, efConstruction = e.efConstruction)
+      built, e.dist, efConstruction = e.efConstruction)
       .withColumn("pid", col("pid") + lit(newPid))
     val tmp = dir.resolveSibling("hnsw_tmp")
     sidecar.filter(!col("pid").isInCollection(mergePids))
@@ -842,9 +883,41 @@ class VecDB(spark: SparkSession, root: String) {
       .write.mode("overwrite").parquet(tmp.toString)
     val old = dir.resolveSibling("hnsw_old")
     deleteRecursively(old) // leftover from a prior crash
+    // a crash from here on leaves no book: the next append scans
+    sidecarCached.removeIf(_.startsWith(pidBookPath(e) + "@"))
     Files.move(dir, old)
     Files.move(tmp, dir)
     deleteRecursively(old)
+    // the book from the counts above and the pids the merge wrote
+    val kept = allCounts.filter(c => !mergePids(c._1))
+    val mergedPids = built.value.asScala.map(_ + newPid).distinct
+    val keptDelta = kept.filter(_._1 >= floor)
+    putPidBook(e, VecDB.PidBook((kept.map(_._1) ++ mergedPids).max + 1,
+      keptDelta.length + mergedPids.size, keptDelta.map(_._2).sum + mergeRows))
+    true
+  }
+
+  /** The table's pid book ([[VecDB.PidBook]]) over delta pids ≥ `floor`:
+    * from the sidecar cache under the build-fixed stamp, which appends
+    * keep and builds, clears and deletes purge; on a miss (a fresh open,
+    * a purge, budget eviction) one scan of the sidecar's pid column fills
+    * it. Appends and compaction replace it under the table lock. */
+  private def pidBook(e: TableEntry, floor: Int): VecDB.PidBook =
+    cachedUnder(pidBookPath(e), fixedStamp(e))(scanPidBook(e, floor))
+  private def putPidBook(e: TableEntry, book: VecDB.PidBook): Unit =
+    sidecarCached.put(s"${pidBookPath(e)}@${fixedStamp(e)}", book, 64L)
+  private def pidBookPath(e: TableEntry): String = s"${hnswDir(e)}#pids"
+  private def scanPidBook(e: TableEntry, floor: Int): VecDB.PidBook = {
+    val isDelta = col("pid") >= lit(floor)
+    val r = spark.read.schema(Hnsw.indexSchema).parquet(hnswDir(e).toString)
+      .agg(coalesce(max(col("pid")) + 1, lit(0)),
+        count_distinct(when(isDelta, col("pid"))), count(when(isDelta, 1))).head()
+    VecDB.PidBook(r.getInt(0), r.getLong(1), r.getLong(2))
+  }
+  /** The pid book a table's next append reads; spec observability. */
+  private[graft] def pidBookOf(key: String): VecDB.PidBook = {
+    val e = entry(key)
+    pidBook(e, routedClusterCount(e))
   }
 
   /** Crash-window recovery for [[compactHnsw]]'s two-move swap: if `hnsw`
@@ -1425,9 +1498,11 @@ class VecDB(spark: SparkSession, root: String) {
     * runs no Spark job; the other arms are collected. Each winner's meta
     * comes from the driver-side part-file cache
     * ([[attachMeta]], [[metaParts]]), and the result is a local relation,
-    * so collecting it launches no Spark job. A search after an append reads
-    * only the appended part files' meta; a table whose packed meta exceeds
-    * the sidecar budget reloads the evicted files on a miss. Oversized
+    * so collecting it launches no Spark job. A `batchAdd` hands its rows'
+    * meta to that cache, so the search after it reads none; after an
+    * `addDataFrame` a search reads only the appended part files' meta; a
+    * table whose packed meta exceeds the sidecar budget reloads the
+    * evicted files on a miss. Oversized
     * batches take the declarative driver-unbounded shapes end to end,
     * metadata included (a distributed join against the table). */
   def searchBatch(key: String, queries: DataFrame, k: Int,
@@ -1443,8 +1518,9 @@ class VecDB(spark: SparkSession, root: String) {
     val e = servingEntry(key)
     val ub = upperBound.getOrElse(Double.PositiveInfinity)
     val listing = listingOf(e)
-    val data = cached.getOrElse(key, listing)
-    val filtered = data.filter(Search.metaPattern(pattern, col("meta")))
+    // only the arms that scan the table read it
+    lazy val filtered = cached.getOrElse(key, listing)
+      .filter(Search.metaPattern(pattern, col("meta")))
     val (serveable, gate) = queryBatchServeable(queries)
     if (!serveable) {
       val (hits, arm) = (ef, e.pq) match {
@@ -1456,7 +1532,7 @@ class VecDB(spark: SparkSession, root: String) {
           // distributed Dataset end to end ([[Hnsw.searchPinnedStream]] —
           // probe-pid explode + pid-exact shuffle + zip against the pinned
           // index); same ADC cost gate as the serving arms.
-          val idx = sidecarDf(hnswDir(e).toString, e)
+          val idx = hnswSidecar(e)
           val ck = Some(hnswKey(e))
           val usePq = efOpt.isDefined && pqInfo.isDefined &&
             VecDB.adcWalkEligible(e.dim, pqInfo.get.m, pinned = true)
@@ -1548,7 +1624,7 @@ class VecDB(spark: SparkSession, root: String) {
   /** The serving regime's dispatch matrix: the arm for (ef, PQ, HNSW, SQ/BQ,
     * IVF, pattern), its winners on the driver and its label. `withVecs`
     * asks the driver-resident HNSW arms for each winner's vector too. */
-  private def serve(key: String, e: TableEntry, filtered: DataFrame,
+  private def serve(key: String, e: TableEntry, filtered: => DataFrame,
       queries: DataFrame, k: Int, ef: Option[Int], ub: Double,
       pattern: Map[String, String], withVecs: Boolean): VecDB.Served = {
     // serving-shape broadcast paths for in-memory-sized tables, declarative
@@ -1739,7 +1815,8 @@ class VecDB(spark: SparkSession, root: String) {
     * from the sidecar cache, the missing files' `(id, meta)` read in one
     * job. Part files never change once written, so an entry is keyed by
     * its file and lives as long as the file: an append adds files and
-    * loads only those (append invalidation keeps these entries), a
+    * loads only those, or none when [[batchAdd]] put their entries here
+    * itself (append invalidation keeps these entries), a
     * delete's rewrite lists new files under a new version directory, and
     * a load drops the entries of files the listing no longer holds. Table
     * delete and index builds/clears purge them with the rest of the table's
@@ -1752,7 +1829,7 @@ class VecDB(spark: SparkSession, root: String) {
   private def metaParts(e: TableEntry, listing: DataFrame): Array[MetaPart] = {
     val files = listing.inputFiles
     val names = files.map(f => f.substring(f.lastIndexOf('/') + 1))
-    val keys = names.map(n => s"${Paths.get(dataDir(e), n)}$MetaStamp${e.created}")
+    val keys = names.map(metaKey(e, _))
     val parts = keys.map(k => sidecarCached.get(k).orNull.asInstanceOf[MetaPart])
     val missing = parts.indices.filter(parts(_) == null)
     if (missing.nonEmpty) {
@@ -1777,6 +1854,10 @@ class VecDB(spark: SparkSession, root: String) {
     }
     parts
   }
+
+  /** Sidecar-cache key of data part file `name`'s packed meta. */
+  private def metaKey(e: TableEntry, name: String): String =
+    s"${Paths.get(dataDir(e), name)}$MetaStamp${e.created}"
 
   /** Row bound for the broadcast-QUERIES flat paths (nothing table-sized is
     * materialized there — this is a plan choice, not a memory gate). */
@@ -1814,7 +1895,7 @@ class VecDB(spark: SparkSession, root: String) {
       ef: Option[Int], ub: Double, withVecs: Boolean,
       pq: Option[PqModel] = None): VecDB.Served = {
     def arm(placement: String) = if (pq.isEmpty) "hnsw" else s"knn_pq_$placement"
-    val idx = sidecarDf(hnswDir(e).toString, e)
+    val idx = hnswSidecar(e)
     val ck = Some(hnswKey(e))
     if (hnswEligible(e.nextId, e.dim) && !pq.exists(_.residual))
       VecDB.Served(Hnsw.residentRows(idx, queries, k, ef, e.dist,
@@ -1911,6 +1992,11 @@ object VecDB {
         Ordering.Tuple2(Ordering.Double.TotalOrdering, Ordering.Long))
       .map(r => (r._3, r._1))
       .toSeq
+
+  /** Pid bookkeeping of a table's HNSW sidecar: one more than its highest
+    * pid (0 when empty), and the count of delta pids and of their rows —
+    * the pids at or above the routing floor, every pid when unrouted. */
+  private[graft] final case class PidBook(next: Int, deltaPids: Long, deltaRows: Long)
 
   /** A catalog search ([[VecDB.dispatch]]) with the choices that produced
     * its frame: the serving `arm`, how the query-batch `gate` decided

@@ -3,7 +3,8 @@ package graft.operators
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
+import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType, IntegerType, LongType,
+  StructField, StructType}
 import graft.functions.PqKernel
 import graft.index.{HnswGraph, HnswGraphCache}
 
@@ -56,6 +57,18 @@ object Hnsw {
       dist: String = "l2sqr",
       m: Int = 16,
       efConstruction: Int = 200,
+      seed: Long = 42L): DataFrame =
+    buildCounting(base, null, dist, m, efConstruction, seed)
+
+  /** [[buildIndex]] that also adds the pid of every subgraph it builds to
+    * `built` (null: count nothing), so a caller learns the pids it wrote
+    * from the write job itself. */
+  private[graft] def buildCounting(
+      base: DataFrame,
+      built: org.apache.spark.util.CollectionAccumulator[Int],
+      dist: String = "l2sqr",
+      m: Int = 16,
+      efConstruction: Int = 200,
       seed: Long = 42L): DataFrame = {
     val spark = base.sparkSession
     import spark.implicits._
@@ -67,17 +80,49 @@ object Hnsw {
         if (rows.isEmpty) Iterator.empty
         else {
           val pid = TaskContext.getPartitionId()
-          val g = new HnswGraph(rows(0)._2.length, dist, m, efConstruction,
-            seed + pid)
-          rows.foreach(r => g.add(r._2))
-          Iterator.range(0, rows.length).map { i =>
-            val (vec, level, links) = g.exportNode(i)
-            (pid, i, rows(i)._1, vec, level, links)
-          }
+          if (built != null) built.add(pid)
+          buildSlice(rows, pid, dist, m, efConstruction, seed)
         }
       }
       .toDF("pid", "local_id", "id", "vec", "level", "links")
   }
+
+  /** One subgraph of [[buildIndex]]: `rows` inserted in order into a graph
+    * seeded `seed + pid`, exported as sidecar rows ascending by local id. */
+  private[graft] def buildSlice(rows: Array[(Long, Array[Float])], pid: Int,
+      dist: String, m: Int, efConstruction: Int, seed: Long): Iterator[IndexRow] = {
+    val g = new HnswGraph(rows(0)._2.length, dist, m, efConstruction, seed + pid)
+    rows.foreach(r => g.add(r._2))
+    Iterator.range(0, rows.length).map { i =>
+      val (vec, level, links) = g.exportNode(i)
+      (pid, i, rows(i)._1, vec, level, links)
+    }
+  }
+
+  /** [[buildIndex]] run on the driver over rows it already holds, split as
+    * `parallelize(rows, slices)` splits them: the same subgraphs, pids
+    * 0 until `slices`, built on [[ResidentIndex.parallel]]. */
+  private[graft] def buildLocal(rows: IndexedSeq[(Long, Array[Float])], slices: Int,
+      dist: String, m: Int = 16, efConstruction: Int = 200,
+      seed: Long = 42L): Array[Array[IndexRow]] = {
+    val out = new Array[Array[IndexRow]](slices)
+    ResidentIndex.parallel(slices) { s =>
+      val lo = (s.toLong * rows.length / slices).toInt
+      val hi = ((s + 1L) * rows.length / slices).toInt
+      out(s) = buildSlice(rows.slice(lo, hi).toArray, s, dist, m, efConstruction, seed).toArray
+    }
+    out
+  }
+
+  /** Stored schema of the sidecar [[buildIndex]] writes: reading with it
+    * skips the footer job that infers it. */
+  private[graft] val indexSchema: StructType = StructType(Seq(
+    StructField("pid", IntegerType, nullable = false),
+    StructField("local_id", IntegerType, nullable = false),
+    StructField("id", LongType, nullable = false),
+    StructField("vec", ArrayType(FloatType, containsNull = false)),
+    StructField("level", IntegerType, nullable = false),
+    StructField("links", ArrayType(ArrayType(IntegerType, containsNull = false)))))
 
   /** Apply the upper-bound filter only when one is actually set — an
     * always-true predicate still costs an evaluation per row (and can be
@@ -95,7 +140,7 @@ object Hnsw {
         col("hit.distance").as("distance"))
 
   /** Typed sidecar row: (pid, local_id, id, vec, level, links). */
-  private[operators] type IndexRow = (Int, Int, Long, Array[Float], Int, Array[Array[Int]])
+  private[graft] type IndexRow = (Int, Int, Long, Array[Float], Int, Array[Array[Int]])
 
   /** Driver-side LRU of PINNED index RDDs for [[searchPinned]]: the sidecar
     * exact-partitioned by `pid` (partition i ⇔ subgraph i — a hash
@@ -397,7 +442,7 @@ object Hnsw {
     * subgraph `ei` of `entries` into (ids, ds) ascending (distance, table
     * id) and returns its hit count. Ties at the k cut fall by table id, as
     * in the exact top-k, however the subgraph's local indices are ordered
-    * (a routed build groups a cluster's rows in shuffle order). Plain
+    * (a compaction rebuild inserts its merged rows in shuffle order). Plain
     * (`adc` null), the float SIMD walk ([[HnswGraph.searchInto]]); with
     * `adc`, the ADC-scored walk over `codes(ei)` with exact re-rank
     * ([[HnswGraph.searchFnInto]]). Plain codes share one LUT per query;
@@ -561,7 +606,10 @@ object Hnsw {
     if (qs.length.toLong * math.max(pinned.getNumPartitions, 1).toLong * k
         <= DriverMergeMaxRows) {
       val byQ = new java.util.HashMap[Long, TopKState]()
-      partial.collect().foreach { case (qid, id, d) =>
+      // every task has read the batch once the partials are collected: the
+      // driver merge below owns the broadcast and releases it here
+      val collected = try partial.collect() finally bc.destroy()
+      collected.foreach { case (qid, id, d) =>
         var s = byQ.get(qid)
         if (s == null) { s = new TopKState(k, withPayload = false); byQ.put(qid, s) }
         s.insert(id, d, null)
@@ -578,7 +626,10 @@ object Hnsw {
         while (j < s.size) { out += ((q, s.ids(j), s.dists(j))); j += 1 }
       }
       out.toSeq.toDF("query_id", "id", "distance")
-    } else merge(partial.toDF("query_id", "id", "distance"), k)
+    } else
+      // a lazy frame: its tasks read the batch whenever the caller runs it,
+      // so the broadcast lives as long as the frame (the ContextCleaner's)
+      merge(partial.toDF("query_id", "id", "distance"), k)
   }
 
   /** Driver-merge gate for [[pinnedSearchCore]]: max partial rows (Q·P·k)
@@ -644,6 +695,8 @@ object Hnsw {
     val exploded = route match {
       case Some((model, np0)) =>
         val np = math.max(1, np0)
+        // read by the lazy frame this returns, so it lives as long as the
+        // frame does and is left to the ContextCleaner
         val bcModel = spark.sparkContext.broadcast(model)
         val floor = model.centroids.length
         qRdd.flatMap { case (qid, qv) =>
@@ -696,9 +749,10 @@ object Hnsw {
     * ([[ResidentIndex]]) and the query batch is read and walked there, on
     * a JVM-wide pool of at most `availableProcessors` threads: a warm
     * search of a local query batch runs no Spark job. With `cacheKey`, a
-    * subgraph is identified by its sidecar part file, so after a catalog
-    * append only the new subgraph is read and built, while the graphs
-    * already resident in [[HnswGraphCache]] keep serving. The result is a
+    * subgraph is identified by its sidecar part file: a catalog append
+    * hands its new subgraph over ([[publishResident]]), any other new part
+    * file is read and built alone, and the graphs already resident in
+    * [[HnswGraphCache]] keep serving. The result is a
     * local relation of (query_id, id, distance), ascending (distance, id)
     * per query. For indexes too big for the driver, use [[searchPinned]].
     *
@@ -752,6 +806,17 @@ object Hnsw {
     residentWalk(queries, entries, k, upperBound, withVecs)(
       walker(entries, k, efq, adc, codes, null))
   }
+
+  /** Hand the subgraphs a catalog append has just written to the resident
+    * state of `cacheKey` ([[ResidentIndex.publish]]), so the next search
+    * reads none of it. `before` and `added` name the sidecar's part files
+    * before the write and the files it wrote; each slice holds one
+    * subgraph's rows ascending by local id. */
+  private[graft] def publishResident(cacheKey: String, before: Set[String],
+      added: Set[String], slices: Seq[Array[IndexRow]], dist: String,
+      m: Int = 16, efConstruction: Int = 200): Unit =
+    ResidentIndex.publish(cacheKey, before, added, slices.map(s =>
+      s(0)._1 -> s.map(r => (r._3, r._4, r._5, r._6))), dist, m, efConstruction)
 
   private val hitsSchema = StructType(Seq(
     StructField("query_id", LongType, nullable = false),

@@ -3,8 +3,6 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.index.HnswGraph
-
 /** IVF-routed HNSW — the composition that actually scales ANN serving past
   * one machine's memory. Neither parent structure alone survives 100 TB:
   * the reference's single HNSW graph (`/root/reference/src/index_algorithm/
@@ -103,14 +101,10 @@ object IvfHnsw {
       .as[(Int, Long, Array[Float])]
       .groupByKey(_._1)
       .flatMapGroups { (cl, it) =>
-        val rows = it.toArray
-        val g = new HnswGraph(rows(0)._3.length, dist, m, efConstruction,
-          seed + cl)
-        rows.foreach(r => g.add(r._3))
-        Iterator.range(0, rows.length).map { i =>
-          val (vec, level, links) = g.exportNode(i)
-          (cl, i, rows(i)._2, vec, level, links)
-        }
+        // inserted in id order, not shuffle order: the graph depends on
+        // the cluster's rows alone
+        Hnsw.buildSlice(it.map(r => (r._2, r._3)).toArray.sortBy(_._1), cl,
+          dist, m, efConstruction, seed)
       }
       .toDF("pid", "local_id", "id", "vec", "level", "links")
     (model, idx)

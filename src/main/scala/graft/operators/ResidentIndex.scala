@@ -25,13 +25,17 @@ import graft.index.{CacheStats, HnswGraph, HnswGraphCache}
   * whole frame.
   *
   * Parquet part files never change once written, so a sidecar's file
-  * listing is its content identity. Each search diffs the listing against
-  * the recorded one:
+  * listing is its content identity. A catalog `batchAdd` built its delta
+  * subgraph on the driver and hands it over ([[publish]] — the
+  * subgraph-union analog of `HNSWIndex::add` on a graph already in
+  * memory): its graph is cached under the current generation and its part
+  * file joins the recorded listing, so the next search reads nothing. Each
+  * search diffs the listing against the recorded one:
   *  - same files: serve the resident graphs;
-  *  - new files only (a catalog append's delta subgraph — the subgraph-union
-  *    analog of `HNSWIndex::add` on a graph already in memory): read just
-  *    those files and build only their pids — the generation and every
-  *    graph cached under it stay;
+  *  - new files only (an append that was not handed over: `addDataFrame`,
+  *    or a listing that moved meanwhile): read just those files and build
+  *    only their pids — the generation and every graph cached under it
+  *    stay;
   *  - a recorded file gone, or a new file repeating a recorded pid
   *    (compaction, clear+rebuild): reload everything under a fresh
   *    generation and evict the old generation's graphs.
@@ -45,7 +49,7 @@ import graft.index.{CacheStats, HnswGraph, HnswGraphCache}
 private[operators] object ResidentIndex {
 
   /** One subgraph's nodes ascending by local id: (id, vec, level, links). */
-  private type Nodes = Array[(Long, Array[Float], Int, Array[Array[Int]])]
+  type Nodes = Array[(Long, Array[Float], Int, Array[Array[Int]])]
 
   /** What a search walks: the graph-cache generation (null: uncached) and
     * every subgraph's graph, ascending pid. */
@@ -141,6 +145,37 @@ private[operators] object ResidentIndex {
     throw new IllegalStateException("unreachable")
   }
 
+  /** Record subgraphs a catalog append has just written as part of the
+    * state for `ck` and cache their graphs under its generation, so the
+    * next search reads none of them. Only when the recorded listing is
+    * exactly `before` (file names), no load of `ck` is in flight and no
+    * pid repeats; otherwise nothing changes and the next search diffs the
+    * listing. `added` names the files the append wrote, in the recorded
+    * files' directory. */
+  def publish(ck: String, before: Set[String], added: Set[String],
+      groups: Seq[(Int, Nodes)], dist: String, m: Int, efConstruction: Int): Unit = {
+    val latch = new CountDownLatch(1)
+    if (added.nonEmpty && loading.putIfAbsent(ck, latch) == null) try {
+      val cur = states.synchronized(Option(states.get(ck)))
+      cur.filter(st => st.files.nonEmpty && st.files.map(nameOf) == before &&
+          !groups.exists(g => st.pidFiles.contains(g._1))).foreach { st =>
+        val dir = st.files.head.substring(0, st.files.head.lastIndexOf('/') + 1)
+        val paths = added.map(dir + _)
+        groups.foreach { case (pid, nodes) =>
+          HnswGraphCache.get(st.gen, pid)(build(nodes, dist, m, efConstruction))
+        }
+        states.synchronized(states.put(ck, State(st.gen,
+          (st.pids ++ groups.map(_._1)).sorted, st.files ++ paths,
+          st.pidFiles ++ groups.map(_._1 -> paths))))
+      }
+    } finally {
+      loading.remove(ck, latch)
+      latch.countDown()
+    }
+  }
+
+  private def nameOf(f: String): String = f.substring(f.lastIndexOf('/') + 1)
+
   /** Drop every state whose cacheKey starts with `prefix` and evict its
     * graphs (the catalog's table delete / index clear). */
   def invalidate(prefix: String): Unit = {
@@ -192,7 +227,7 @@ private[operators] object ResidentIndex {
     val groups = rows.groupBy(_._1).toArray.sortBy(_._1).map { case (pid, rs) =>
       (pid, rs.sortBy(_._2).map(r => (r._3, r._4, r._5, r._6)))
     }
-    val byName = files.map(f => f.substring(f.lastIndexOf('/') + 1) -> f).toMap
+    val byName = files.map(f => nameOf(f) -> f).toMap
     val pidFiles =
       if (files.isEmpty) Map.empty[Int, Set[String]]
       else rows.groupBy(_._1).map { case (pid, rs) => pid -> rs.map(r => byName(r._7)).toSet }

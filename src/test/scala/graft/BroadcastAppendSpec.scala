@@ -15,10 +15,11 @@ object ShipGate {
   @volatile var release = new CountDownLatch(1)
 }
 
-/** The broadcast HNSW arm of a table taking appends: each append ships and
-  * rebuilds only its own subgraph, a rewritten sidecar (compaction,
-  * clear+rebuild, delete+recreate) reloads in full, and every answer equals
-  * the uncached path over the same sidecar, row for row. */
+/** The broadcast HNSW arm of a table taking appends: each `batchAdd` hands
+  * its subgraph to the resident state, so the next search ships and
+  * rebuilds nothing; a rewritten sidecar (compaction, clear+rebuild,
+  * delete+recreate) reloads in full, and every answer equals the uncached
+  * path over the same sidecar, row for row. */
 class BroadcastAppendSpec extends SparkTestBase {
   import spark.implicits._
 
@@ -85,8 +86,9 @@ class BroadcastAppendSpec extends SparkTestBase {
         val fresh = pids(root) -- before
         assert(fresh.nonEmpty, "append must land a delta subgraph")
         val (shipped, built) = searchChecked(db, root)
-        assert(shipped == 100, s"round $round shipped $shipped rows, not the append's 100")
-        assert(built == fresh.size, s"round $round rebuilt $built graphs for ${fresh.size} new")
+        // the append handed its subgraph over: the search reads nothing
+        assert(shipped == 0, s"round $round shipped $shipped rows after the hand-off")
+        assert(built == 0, s"round $round rebuilt $built graphs after the hand-off")
         // steady state: nothing ships or builds
         assert(searchChecked(db, root) == ((0L, 0L)))
       }
@@ -109,7 +111,7 @@ class BroadcastAppendSpec extends SparkTestBase {
         total += 5
         compacted = !before.subsetOf(pids(root))
         val (shipped, _) = searchChecked(db, root)
-        assert(shipped == (if (compacted) total else 5L),
+        assert(shipped == (if (compacted) total else 0L),
           s"round $round (compacted=$compacted) shipped $shipped of $total rows")
       }
 

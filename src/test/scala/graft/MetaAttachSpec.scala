@@ -8,8 +8,9 @@ import graft.index.CacheStats
 
 /** The serving metadata attach of [[VecDB.searchBatch]] answers from a
   * driver-side cache of packed part-file meta: every hit's meta must equal
-  * its row's meta through appends, deletes, recreation and eviction, and an
-  * append must load only the appended rows' meta. */
+  * its row's meta through appends, deletes, recreation and eviction. A
+  * `batchAdd` hands its rows' meta to the cache, so the next search loads
+  * none; an `addDataFrame` makes it load only the appended rows' meta. */
 class MetaAttachSpec extends SparkTestBase {
   import spark.implicits._
 
@@ -70,13 +71,14 @@ class MetaAttachSpec extends SparkTestBase {
     assert(searchChecked(db, base.take(4)) == 40) // cold: the whole table
     assert(searchChecked(db, base.slice(4, 8)) == 0) // warm: nothing
 
-    // batchAdd: exactly the appended rows load
+    // batchAdd hands the appended rows' meta to the cache: nothing loads
     val added = vecs(7, 2)
     db.batchAdd("t", added, added.indices.map(i => meta(40 + i)))
-    assert(searchChecked(db, added.take(5)) == 7)
+    assert(searchChecked(db, added.take(5)) == 0)
     assert(searchChecked(db, base.take(2) ++ added.takeRight(2)) == 0)
 
-    // addDataFrame, with and without a meta column
+    // addDataFrame, with and without a meta column: exactly the appended
+    // rows load
     val df1 = vecs(5, 3)
     db.addDataFrame("t", df1.zipWithIndex.map { case (v, i) =>
       (v, meta(47 + i)) }.toDF("vec", "meta"))
@@ -101,7 +103,7 @@ class MetaAttachSpec extends SparkTestBase {
     db.createTableIfNotExists("t", Dim, "l2sqr")
     val again = vecs(12, 5)
     db.batchAdd("t", again, again.indices.map(i => Map("again" -> i.toString)))
-    assert(searchChecked(db, again.take(4)) == 12)
+    assert(searchChecked(db, again.take(4)) == 0)
 
     // a budget too small to keep anything resident: answers unchanged
     val saved = VecDB.sidecarCacheMaxBytes
