@@ -746,11 +746,11 @@ class VecDB(spark: SparkSession, root: String) {
       val first = math.max(book.next, floor)
       val dir = hnswDir(e)
       val before = listPartFiles(dir)
-      val slices = local.map { case (rows, nSlices) =>
+      val localDelta = local.map { case (rows, nSlices) =>
         Hnsw.buildLocal(rows, nSlices, e.dist, efConstruction = e.efConstruction)
           .map(_.map(r => r.copy(_1 = r._1 + first))).toSeq
       }
-      val (newPids, next) = slices match {
+      val (newPids, next) = localDelta match {
         case Some(subgraphs) =>
           import spark.implicits._
           subgraphs.flatten.toDF(Hnsw.indexSchema.fieldNames.toIndexedSeq: _*)
@@ -771,7 +771,7 @@ class VecDB(spark: SparkSession, root: String) {
       val compacted = grown.deltaPids > deltaPidCeiling(floor, grown.deltaRows) &&
         compactHnsw(key)
       if (!compacted && !e.hnswRouted && hnswEligible(e.nextId + n, e.dim))
-        slices.foreach(Hnsw.publishResident(hnswBroadcastKey(e), before,
+        localDelta.foreach(Hnsw.publishResident(hnswBroadcastKey(e), before,
           listPartFiles(dir) -- before, _, e.dist, efConstruction = e.efConstruction))
       // the pinned/routed arms' key rotated with nextId: drop exactly the
       // superseded key's pinned RDD, graphs and codes (a prefix-wide

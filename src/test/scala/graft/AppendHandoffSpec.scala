@@ -10,7 +10,8 @@ import graft.operators.{Hnsw, IvfHnsw}
 /** Appends to an HNSW table run two Spark jobs (the data part and the
   * sidecar part) and hand what they wrote to the serving caches: on a
   * resident table the next search runs no job and reads nothing, with the
-  * answers of a fresh read of the sidecar. The pid book the appends keep
+  * answers of a fresh read of the sidecar. The delta a `batchAdd` builds on
+  * the driver is the distributed build's; the pid book the appends keep
   * equals a scan of the sidecar; a routed build does not depend on the
   * input's partitioning or order; a routed search leaves no query-batch
   * broadcast behind. */
@@ -142,6 +143,22 @@ class AppendHandoffSpec extends SparkTestBase {
       assert(db.pidBookOf("t") == scanned(root, 0))
       assert(scanned(root, 0).deltaRows == live + 12)
     } finally db.close()
+  }
+
+  test("the driver-built delta equals the distributed build over the same slices") {
+    val base = vecs(301, 12).zipWithIndex.map { case (v, i) => (1000L + i, v) }.toIndexedSeq
+    type Flat = (Int, Int, Long, Seq[Float], Int, Seq[Seq[Int]])
+    def flat(r: Hnsw.IndexRow): Flat =
+      (r._1, r._2, r._3, r._4.toSeq, r._5, r._6.map(_.toSeq).toSeq)
+    for (slices <- Seq(1, 3)) {
+      val local = Hnsw.buildLocal(base, slices, "l2sqr").toSeq.flatten.map(flat)
+      val distributed = Hnsw.buildIndex(
+          spark.sparkContext.parallelize(base, slices).toDF("id", "vec"), "l2sqr")
+        .as[(Int, Int, Long, Seq[Float], Int, Seq[Seq[Int]])].collect().toSeq
+        .sortBy(r => (r._1, r._2))
+      assert(local.map(_._1).distinct == (0 until slices))
+      assert(local == distributed, s"$slices slices")
+    }
   }
 
   test("a routed build does not depend on the input's partitioning or order") {
